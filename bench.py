@@ -160,6 +160,13 @@ def main() -> None:
                 pass
     cache_warm_s = round(time.time() - t_c, 3)
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def _compiles() -> int:
+        """Generated classes compiled so far in this JVM: the misses of
+        Spark's generated-code cache."""
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     def time_set(
         names: list[str], n_runs: int = 2
     ) -> tuple[dict[str, float], dict[str, float], dict[str, dict[str, float]]]:
@@ -175,7 +182,10 @@ def main() -> None:
         execution), reported for the run that achieved the min total — at
         sf0.1 the headline queries are overhead-bound (the r15 scaling block:
         8 cores beat 32), so without this split driver-side wins are
-        invisible in the wall-clock number."""
+        invisible in the wall-clock number. ``codegen_compiles`` counts the
+        generated classes that run compiled, read just outside the timed
+        window: a warm run compiles 0, so a generated-code cache too small
+        for the query mix shows as a non-zero count."""
         out: dict[str, float] = {}
         out2: dict[str, float] = {}
         split: dict[str, dict[str, float]] = {}
@@ -187,13 +197,16 @@ def main() -> None:
             fn = getattr(entrymod, f"q_{name}")
             runs = []
             builds = []
+            compiles = []
             for _ in range(n_runs):
+                c0 = _compiles()
                 t0 = time.time()
                 df = fn(spark, sf_dir)
                 t_built = time.time()
                 n = df.count()
                 runs.append(time.time() - t0)
                 builds.append(t_built - t0)
+                compiles.append(_compiles() - c0)
                 # each timed run owns its caches: no cross-run cache reuse
                 # (the doc'd no-caching methodology), no storage pile-up
                 release_staged(spark)
@@ -203,6 +216,7 @@ def main() -> None:
             split[name] = {
                 "build_s": round(builds[best], 3),
                 "exec_s": round(runs[best] - builds[best], 3),
+                "codegen_compiles": compiles[best],
             }
             print(
                 f"# {name}: {out[name]:.2f}s best-of-{len(runs)} ({n} rows)",

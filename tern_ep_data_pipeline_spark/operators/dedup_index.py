@@ -26,6 +26,7 @@ renames.
 from __future__ import annotations
 
 import contextlib
+import functools
 import itertools
 import json
 import os
@@ -300,7 +301,6 @@ def _match_frames(
         )
         .groupBy("doc_id")
         .agg(F.min("match_id").alias("match_id"))
-        .withColumn("status", F.lit("exact"))
     )
 
     # Exact-dedup the batch BEFORE banding: identical docs (the common
@@ -352,18 +352,13 @@ def _match_frames(
             )
         )
         cand = cand.where(agree / F.lit(num_hashes) >= min_est_jaccard)
-    near_hits = (
-        cand.groupBy("doc_id")
-        .agg(F.min("match_id").alias("match_id"))
-        .withColumn("status", F.lit("near"))
-    )
+    near_hits = cand.groupBy("doc_id").agg(F.min("match_id").alias("match_id"))
 
     # ---- intra-batch passes: a batch must also be deduped against itself
     batch_exact = (
         new_exact.join(canon, on="content_hash")
         .where(F.col("doc_id") != F.col("__canon"))
         .select("doc_id", F.col("__canon").alias("match_id"))
-        .withColumn("status", F.lit("exact"))
     )
 
     self_bands = new_bands
@@ -412,20 +407,32 @@ def _match_frames(
         batch_cand = batch_cand.where(
             bagree / F.lit(num_hashes) >= min_est_jaccard
         )
-    batch_near = (
-        batch_cand.groupBy("doc_id")
-        .agg(F.min("__ida").alias("match_id"))
-        .withColumn("status", F.lit("near"))
-    )
+    batch_near = batch_cand.groupBy("doc_id").agg(F.min("__ida").alias("match_id"))
 
-    # precedence: exact (index, then batch) over near (index, then batch)
-    classified = exact_hits
-    for extra in (batch_exact, near_hits, batch_near):
-        classified = classified.unionByName(
-            extra.join(
-                classified.select("doc_id"), on="doc_id", how="left_anti"
+    # precedence: exact (index, then batch) over near (index, then batch).
+    # Each hit set holds one row per doc, so one min over (rank, match_id)
+    # per doc picks the highest-precedence hit. A chain of left-anti joins
+    # against the growing union would read that union twice per level and
+    # double the plan at each one.
+    hits = functools.reduce(
+        DataFrame.unionByName,
+        [
+            frame.select("doc_id", F.lit(rank).alias("__rank"), "match_id")
+            for rank, frame in enumerate(
+                (exact_hits, batch_exact, near_hits, batch_near)
             )
-        )
+        ],
+    )
+    best = hits.groupBy("doc_id").agg(
+        F.min(F.struct("__rank", "match_id")).alias("__best")
+    )
+    classified = best.select(
+        "doc_id",
+        F.col("__best.match_id").alias("match_id"),
+        F.when(F.col("__best.__rank") <= 1, "exact")
+        .otherwise("near")
+        .alias("status"),
+    )
     fresh = (
         new_docs.select(F.col(id_col).alias("doc_id"))
         .join(classified.select("doc_id"), on="doc_id", how="left_anti")

@@ -4,6 +4,15 @@ Single place where engine-level performance knobs live, so local tests and the
 cluster deployment share one config story. Defaults are chosen for the
 100 TB design point (AQE on, skew-join handling, Arrow for the few
 pandas-interop edges) while remaining correct on ``local[*]``.
+
+Runtime-settable confs live in :data:`ENGINE_CONF`, which
+:func:`apply_engine_conf` can also apply to a live session. Static confs
+(fixed once the JVM-side session exists) are set on
+``SparkSession.builder`` in :func:`get_spark` only. The one that matters
+is the generated-code cache size (:data:`CODEGEN_CACHE_ENTRIES`): a
+session supplied by a host keeps Spark's 100-entry cache unless the host
+sets it, and then recompiles generated classes on every pass of a
+pipeline whose working set is larger.
 """
 
 from __future__ import annotations
@@ -36,6 +45,21 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
 }
 
+#: Entries of Spark's generated-code cache (static
+#: ``spark.sql.codegen.cache.maxEntries``, default 100). The cache is an
+#: LRU keyed on the generated source, so a pipeline whose working set is
+#: larger than the cache evicts each class before its next pass comes back
+#: to it, and nothing is ever reused. Working sets measured on local[4]
+#: with an unbounded cache (``perfbench`` workloads): a cold
+#: ``etl_conditioning`` pass compiles 107 distinct classes, a
+#: ``stream_dedup_append`` batch plus compaction 141, and a cold
+#: ``curation_batch`` pass 446. With the default cache every warm ETL
+#: pass recompiled 33 classes and every stream pass 162-167; at this
+#: size warm ETL passes compile 0 and stream passes after the first 0-32
+#: (new adaptive-plan variants only). The size keeps 4x headroom over the
+#: largest working set.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "tern-ep-spark",
@@ -59,6 +83,9 @@ def get_spark(
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+    builder = builder.config(
+        "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+    )
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)
     if extra_conf:
@@ -72,6 +99,11 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
 
     Used when a host harness hands us its own SparkSession: every conf in
     ``ENGINE_CONF`` is runtime-settable, so this is safe on a live session.
+    Static confs are set on ``SparkSession.builder`` in :func:`get_spark`
+    and cannot be applied here: a host session keeps Spark's 100-entry
+    generated-code cache unless the host sets
+    ``spark.sql.codegen.cache.maxEntries`` itself (see
+    :data:`CODEGEN_CACHE_ENTRIES`).
     """
     for k, v in ENGINE_CONF.items():
         try:

@@ -58,28 +58,32 @@ def _nanos_to_ntz(col: str) -> F.Column:
 _FANOUT_MIN_BYTES = 4 * 1024 * 1024
 _FANOUT_MAX_BYTES = 256 * 1024 * 1024
 
-#: (path, mtime) -> (row_groups, bytes) so repeated loads of one table read
-#: the parquet footer once per session, not once per query build.
-_SPLIT_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
+#: (path, version) -> (row_groups, bytes) so repeated loads of one table
+#: read the parquet footer once per session, not once per query build.
+_SPLIT_CACHE: dict[tuple[str, tuple], tuple[int, int]] = {}
 
 
-def _path_mtime(path: str) -> float:
-    """Change signal for a parquet file OR directory: the max mtime across
-    the contained ``.parquet`` files (a rewrite of an existing file inside
-    a directory does not reliably bump the directory's own mtime — ADVICE
-    r15), falling back to the path's mtime for plain files/empty dirs."""
+def _path_version(path: str) -> tuple:
+    """Change signal for a parquet file OR directory, used in cache keys:
+    (name, size, mtime) of every contained ``.parquet`` file, sorted by
+    name. A rewrite of an existing file inside a directory does not
+    reliably bump the directory's own mtime (ADVICE r15), and a max mtime
+    alone misses a deleted part file or one replaced by a file with an
+    older timestamp. Plain files and directories without parquet files
+    fall back to the path's own (size, mtime)."""
     try:
         if os.path.isdir(path):
-            mtimes = [
-                os.path.getmtime(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if mtimes:
-                return max(mtimes)
-        return os.path.getmtime(path)
+            parts = []
+            for f in sorted(os.listdir(path)):
+                if f.endswith(".parquet"):
+                    st = os.stat(os.path.join(path, f))
+                    parts.append((f, st.st_size, st.st_mtime))
+            if parts:
+                return tuple(parts)
+        st = os.stat(path)
+        return ((st.st_size, st.st_mtime),)
     except OSError:
-        return -1.0
+        return ()
 
 
 def _scan_splits(path: str) -> tuple[int, int] | None:
@@ -88,7 +92,7 @@ def _scan_splits(path: str) -> tuple[int, int] | None:
     Parquet scans split at ROW-GROUP boundaries, so row groups — not bytes
     — bound a scan's real parallelism."""
     try:
-        key = (path, _path_mtime(path))
+        key = (path, _path_version(path))
         hit = _SPLIT_CACHE.get(key)
         if hit is not None:
             return hit
@@ -133,7 +137,7 @@ def _fanout_if_split_deficient(spark: SparkSession, df: DataFrame, path: str) ->
     return df.repartition(n)
 
 
-#: (app_id, path, mtime) -> the loaded DataFrame (a LAZY logical plan, no
+#: (app_id, path, version) -> the loaded DataFrame (a LAZY logical plan, no
 #: data): every query build was re-running spark.read.parquet + the dtype
 #: normalisation for every table it touches — ~45 py4j round trips and a
 #: parquet-footer schema read per load, 0.1-0.15 s of serial driver wall
@@ -141,12 +145,13 @@ def _fanout_if_split_deficient(spark: SparkSession, df: DataFrame, path: str) ->
 #: immutable, so handing every caller the same plan object is semantics-
 #: free: each action still scans the parquet inputs from disk — nothing is
 #: persisted or precomputed (bench's no-result-caching contract intact).
-#: Keyed on the file set's max mtime so a rewritten input never false-hits.
-_LOAD_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+#: Keyed on the file set's names, sizes and mtimes (:func:`_path_version`)
+#: so a rewritten, added or deleted input file never false-hits.
+_LOAD_CACHE: dict[tuple[str, str, tuple], DataFrame] = {}
 
 
-#: (path, mtime) -> parquet metadata row count (footer read, no Spark job).
-_ROWS_CACHE: dict[tuple[str, float], int] = {}
+#: (path, version) -> parquet metadata row count (footer read, no Spark job).
+_ROWS_CACHE: dict[tuple[str, tuple], int] = {}
 
 
 def table_rows(sf_dir: str, name: str) -> int | None:
@@ -157,7 +162,7 @@ def table_rows(sf_dir: str, name: str) -> int | None:
     footprint cannot be inspected (non-local path, no pyarrow)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        key = (path, _path_mtime(path))
+        key = (path, _path_version(path))
         hit = _ROWS_CACHE.get(key)
         if hit is not None:
             return hit
@@ -178,7 +183,7 @@ def table_rows(sf_dir: str, name: str) -> int | None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with normalised timestamp types."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, path, _path_mtime(path))
+    key = (spark.sparkContext.applicationId, path, _path_version(path))
     hit = _LOAD_CACHE.get(key)
     if hit is not None:
         return hit

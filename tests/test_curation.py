@@ -953,6 +953,74 @@ def test_dedup_index_intra_batch(spark, tmp_path):
     assert got[33] == ("fresh", None)
 
 
+def test_dedup_index_match_precedence(spark, tmp_path):
+    """Docs that qualify for several categories at once take the first of
+    exact-index > exact-batch > near-index > near-batch, and the lowest
+    candidate id inside it, in both index layouts. Candidate ids are
+    chosen so that a plain min over match_id would pick a different row.
+    The optimized plan stays linear in the number of categories."""
+    import re
+
+    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+
+    def words(tag, swap=()):
+        return " ".join(
+            f"{tag}x{i}" if i in swap else f"{tag}{i}" for i in range(60)
+        )
+
+    corpus = spark.createDataFrame(
+        [
+            (100, words("a")),
+            (50, words("a", swap=(5,))),  # near 100, lower id
+            (200, words("b")),
+            (201, words("b", swap=(50,))),  # near 200
+        ],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, words("a")),  # exact 100, near 50
+            (11, words("a")),  # exact 100, batch-exact 10
+            (20, words("b", swap=(10,))),  # near 200 and 201
+            (21, words("b", swap=(12,))),  # near 200 and 201, batch-near 20
+            (30, words("c")),
+            (31, words("c", swap=(30,))),  # batch-near 30
+            (32, words("c")),  # batch-exact 30
+            (40, words("d")),
+        ],
+        "doc_id long, text string",
+    )
+    want = {
+        10: ("exact", 100),
+        11: ("exact", 100),
+        20: ("near", 200),
+        21: ("near", 200),
+        30: ("fresh", None),
+        31: ("near", 30),
+        32: ("exact", 30),
+        40: ("fresh", None),
+    }
+    path = str(tmp_path / "idx")
+    prefix = "prec_bkt_test"
+    for t in (f"{prefix}_exact", f"{prefix}_bands"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        di.build_dedup_index(corpus, path)
+        di.build_dedup_index_bucketed(corpus, prefix, n_buckets=4)
+        via_dir = di.match_against_index(spark, batch, path)
+        via_bkt = di.match_against_index_bucketed(spark, batch, prefix)
+        for out in (via_dir, via_bkt):
+            rows = out.collect()
+            assert len(rows) == len(want)
+            assert {r["doc_id"]: (r["status"], r["match_id"]) for r in rows} == want
+        plan = via_dir._jdf.queryExecution().optimizedPlan().toString()
+        joins = len(re.findall(r"^[\s:+\-]*Join\b", plan, re.M))
+        assert joins <= 20, joins
+    finally:
+        for t in (f"{prefix}_exact", f"{prefix}_bands"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_repetition_stats(spark):
     from tern_ep_data_pipeline_spark.operators.text import repetition_stats
 

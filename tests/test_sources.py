@@ -7,6 +7,7 @@ validation stamps, and minor-frame prefixes.
 
 from __future__ import annotations
 
+import os
 import struct
 
 import numpy as np
@@ -424,3 +425,24 @@ def test_checksummed_move(tmp_path):
         checksummed_move(str(src2), str(dest_dir))
     checksummed_move(str(src2), str(dest_dir), overwrite=True)
     assert not src2.exists()
+
+
+def test_load_cache_misses_after_part_file_delete(spark, tmp_path):
+    """The table-load and row-count caches key on the directory's part-file
+    set, so deleting one part file (which leaves the newest mtime in place)
+    is a miss, not a stale plan over files that no longer exist."""
+    from tern_ep_data_pipeline_spark.sources import tables
+
+    sf_dir = str(tmp_path)
+    path = os.path.join(sf_dir, "documents.parquet")
+    spark.range(0, 40, numPartitions=4).write.parquet(path)
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    newest = max(parts, key=lambda f: os.path.getmtime(os.path.join(path, f)))
+    df1 = tables.load_table(spark, sf_dir, "documents")
+    assert tables.load_table(spark, sf_dir, "documents") is df1
+    assert tables.table_rows(sf_dir, "documents") == 40
+    os.remove(os.path.join(path, next(f for f in parts if f != newest)))
+    df2 = tables.load_table(spark, sf_dir, "documents")
+    assert df2 is not df1
+    assert df2.count() == 30
+    assert tables.table_rows(sf_dir, "documents") == 30
