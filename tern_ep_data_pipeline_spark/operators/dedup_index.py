@@ -36,7 +36,7 @@ import socket
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bloom as bloom_ops
@@ -141,9 +141,10 @@ def match_against_index(
 ) -> DataFrame:
     """Classify a new batch against the index AND against itself.
 
-    Output: one row per new doc — (doc_id, status, match_id) with status
-    ``exact`` (content hash already indexed, or duplicated within the
-    batch — match_id is the indexed doc / the batch's min-id copy),
+    Output: one row per batch row (a doc_id repeated in the batch gets
+    one per copy) — (doc_id, match_id, status) with status ``exact``
+    (content hash already indexed, or duplicated within the batch —
+    match_id is the indexed doc / the batch's min-id copy),
     ``near`` (LSH band collision verified by signature agreement, vs the
     index or a lower-id batch doc), or ``fresh``. Without the intra-batch
     pass, two copies arriving in the same batch would both classify
@@ -175,11 +176,13 @@ def match_against_index(
     BROADCAST-THRESHOLD regime, where the joins would shuffle the
     corpus-sized index per batch — see :func:`_match_frames`.
     """
-    ex_idx = spark.read.parquet(os.path.join(path, "exact"))
-    band_idx = spark.read.parquet(os.path.join(path, "bands"))
     return _match_frames(
-        new_docs, ex_idx, band_idx, id_col, text_col, n, num_hashes,
-        bands, hash_mode, min_band_matches, min_est_jaccard, max_bucket,
+        *_batch_frames(
+            new_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+        ),
+        spark.read.parquet(os.path.join(path, "exact")),
+        spark.read.parquet(os.path.join(path, "bands")),
+        num_hashes, min_band_matches, min_est_jaccard, max_bucket,
         cap_stats, bloom_fpp, index_prune,
     )
 
@@ -206,16 +209,55 @@ def _broadcast_threshold_bytes(spark: SparkSession) -> int | None:
         return None
 
 
-def _match_frames(
-    new_docs: DataFrame,
-    ex_idx: DataFrame,
-    band_idx: DataFrame,
+def _batch_frames(
+    docs: DataFrame,
     id_col: str,
     text_col: str,
     n: int,
     num_hashes: int,
     bands: int,
     hash_mode: str,
+    stage: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch's two per-doc frames, the only place they are derived:
+
+    - ``rows``: (content_hash, doc_id, __canon), one per input row, with
+      ``__canon`` the lowest id sharing the row's content hash;
+    - ``bands``: (band, bh, doc_id, sig), :func:`_band_table` over the
+      canonical docs only.
+
+    The classifier reads both, and a sink appends its fresh docs' rows
+    straight from them. ``stage=True`` materialises each with
+    ``localCheckpoint`` (rows first, so the md5 pass runs once): a
+    Catalyst plan is a tree, and an unstaged frame read k times is
+    evaluated k times."""
+    rows = _exact_table(docs, id_col, text_col).withColumn(
+        "__canon", F.min("doc_id").over(Window.partitionBy("content_hash"))
+    )
+    if stage:
+        rows = rows.localCheckpoint()
+    # Exact-dedup the batch BEFORE banding: identical docs (the common
+    # degenerate case — boilerplate, empty docs) collapse to one canonical
+    # representative, so the intra-batch (band, bh) self-join cannot go
+    # quadratic on them. Non-canonical copies are classified by the cheap
+    # ``batch_exact`` pass and never need a signature at all.
+    canon_docs = docs.join(
+        rows.select(F.col("__canon").alias(id_col)), on=id_col, how="left_semi"
+    )
+    band_rows = _band_table(
+        canon_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+    )
+    if stage:
+        band_rows = band_rows.localCheckpoint()
+    return rows, band_rows
+
+
+def _match_frames(
+    rows: DataFrame,
+    new_bands: DataFrame,
+    ex_idx: DataFrame,
+    band_idx: DataFrame,
+    num_hashes: int,
     min_band_matches: int,
     min_est_jaccard: float | None,
     max_bucket: int | None,
@@ -223,9 +265,10 @@ def _match_frames(
     bloom_fpp: float | None = None,
     index_prune: str = "auto",
 ) -> DataFrame:
-    """Layout-independent core of :func:`match_against_index`: the index
-    arrives as two frames (parquet-dir scan or bucketed-table scan — the
-    latter joins with zero index-side Exchange).  ``bloom_fpp`` is a
+    """Layout-independent core of :func:`match_against_index`: the batch
+    arrives as the two frames of :func:`_batch_frames`, the index as two
+    frames (parquet-dir scan or bucketed-table scan — the latter joins
+    with zero index-side Exchange).  ``bloom_fpp`` is a
     RECORDED AUTO-DECLINE here (r13, closing the r12 wall-negative):
     unlike the gram/chunk/line consumers, this operator has no
     index-side pre-join aggregation for a prefilter to save — both
@@ -255,7 +298,7 @@ def _match_frames(
     no regime to rescue. The route lands on local property
     ``tern.match_prune``."""
     if bloom_fpp is not None:
-        new_docs.sparkSession.sparkContext.setLocalProperty(
+        rows.sparkSession.sparkContext.setLocalProperty(
             "tern.bloom_prune.match", "declined-no-index-preagg"
         )
         import warnings
@@ -274,7 +317,7 @@ def _match_frames(
             stacklevel=3,
         )
         bloom_fpp = None
-    spark = new_docs.sparkSession
+    spark = rows.sparkSession
     prune = False
     if index_prune == "auto":
         from .memguard import plan_size_estimate
@@ -287,45 +330,25 @@ def _match_frames(
     spark.sparkContext.setLocalProperty(
         "tern.match_prune", "semi" if prune else "direct"
     )
-    new_exact = _exact_table(new_docs, id_col, text_col)
     if prune:
         ex_idx = ex_idx.join(
-            F.broadcast(new_exact.select("content_hash").dropDuplicates()),
+            F.broadcast(rows.select("content_hash").dropDuplicates()),
             on="content_hash",
             how="left_semi",
         )
+        band_idx = band_idx.join(
+            F.broadcast(new_bands.select("band", "bh").dropDuplicates()),
+            on=["band", "bh"],
+            how="left_semi",
+        )
     exact_hits = (
-        new_exact.join(
+        rows.join(
             ex_idx.select("content_hash", F.col("doc_id").alias("match_id")),
             on="content_hash",
         )
         .groupBy("doc_id")
         .agg(F.min("match_id").alias("match_id"))
     )
-
-    # Exact-dedup the batch BEFORE banding: identical docs (the common
-    # degenerate case — boilerplate, empty docs) collapse to one canonical
-    # representative, so the intra-batch (band, bh) self-join below cannot
-    # go quadratic on them. Non-canonical copies are classified by the
-    # cheap ``batch_exact`` pass and never need a signature at all.
-    canon = new_exact.groupBy("content_hash").agg(
-        F.min("doc_id").alias("__canon")
-    )
-    canon_docs = new_docs.join(
-        canon.select(F.col("__canon").alias(id_col)), on=id_col, how="left_semi"
-    )
-    new_bands = _band_table(
-        canon_docs, id_col, text_col, n, num_hashes, bands, hash_mode
-    )
-    if prune:
-        # second evaluation of the batch signatures (the key frame) —
-        # the staging cost the r12 cell measured; here it buys dropping
-        # the O(index) shuffle, which is why the gate exists
-        band_idx = band_idx.join(
-            F.broadcast(new_bands.select("band", "bh").dropDuplicates()),
-            on=["band", "bh"],
-            how="left_semi",
-        )
     cand = (
         new_bands.join(
             band_idx.select(
@@ -355,10 +378,8 @@ def _match_frames(
     near_hits = cand.groupBy("doc_id").agg(F.min("match_id").alias("match_id"))
 
     # ---- intra-batch passes: a batch must also be deduped against itself
-    batch_exact = (
-        new_exact.join(canon, on="content_hash")
-        .where(F.col("doc_id") != F.col("__canon"))
-        .select("doc_id", F.col("__canon").alias("match_id"))
+    batch_exact = rows.where(F.col("doc_id") != F.col("__canon")).select(
+        "doc_id", F.col("__canon").alias("match_id")
     )
 
     self_bands = new_bands
@@ -369,8 +390,6 @@ def _match_frames(
         # hit and keeps the full table). Reported like the LSH cap
         # (VERDICT r9 #4): cap_stats fills eagerly from one O(batch)
         # aggregation.
-        from pyspark.sql import Window
-
         wb = Window.partitionBy("band", "bh")
         flagged = new_bands.withColumn("__bsz", F.count(F.lit(1)).over(wb))
         if cap_stats is not None:
@@ -426,25 +445,45 @@ def _match_frames(
     best = hits.groupBy("doc_id").agg(
         F.min(F.struct("__rank", "match_id")).alias("__best")
     )
-    classified = best.select(
-        "doc_id",
-        F.col("__best.match_id").alias("match_id"),
-        F.when(F.col("__best.__rank") <= 1, "exact")
-        .otherwise("near")
-        .alias("status"),
-    )
-    fresh = (
-        new_docs.select(F.col(id_col).alias("doc_id"))
-        .join(classified.select("doc_id"), on="doc_id", how="left_anti")
-        .withColumn(
-            # match_id must union cleanly with the classified rows, whose
-            # type is the caller's id type (string/UUID ids included)
-            "match_id",
-            F.lit(None).cast(new_docs.schema[id_col].dataType),
+    # one decision per input row: a left join keeps every batch row (a
+    # doc_id repeated in the batch gets one row per copy) and a row
+    # without a hit is fresh. The batch is read once, not once more for
+    # an anti-join whose result would be unioned back.
+    return (
+        rows.select("doc_id")
+        .join(best, on="doc_id", how="left")
+        .select(
+            "doc_id",
+            F.col("__best.match_id").alias("match_id"),
+            F.when(F.col("__best").isNull(), "fresh")
+            .when(F.col("__best.__rank") <= 1, "exact")
+            .otherwise("near")
+            .alias("status"),
         )
-        .withColumn("status", F.lit("fresh"))
     )
-    return classified.unionByName(fresh)
+
+
+def _append_index_rows(
+    rows: DataFrame,
+    leg: str,
+    path: str | None = None,
+    table_prefix: str | None = None,
+    n_buckets: int = 32,
+) -> None:
+    """Append precomputed ``exact`` or ``bands`` rows to one leg of the
+    match index: ``<path>/<leg>`` in the dir layout, or the bucketed
+    table ``<table_prefix>_<leg>``. The one write path of the public
+    ``append_*`` functions and :func:`match_dedup_batch`."""
+    if table_prefix is None:
+        rows.write.mode("append").parquet(os.path.join(path, leg))
+        return
+    from ..sources.lake import write_bucketed
+
+    keys = ["content_hash"] if leg == "exact" else ["band", "bh"]
+    write_bucketed(
+        rows, f"{table_prefix}_{leg}", keys,
+        n_buckets=n_buckets, sort_cols=keys, mode="append",
+    )
 
 
 def append_exact_to_index(
@@ -457,8 +496,8 @@ def append_exact_to_index(
     retrying caller can make EACH leg independently idempotent (ADVICE
     r13: the two legs are two separate write jobs — a crash between
     them must be healable per leg, not skipped whole)."""
-    _exact_table(accepted_docs, id_col, text_col).write.mode("append").parquet(
-        os.path.join(path, "exact")
+    _append_index_rows(
+        _exact_table(accepted_docs, id_col, text_col), "exact", path
     )
 
 
@@ -474,9 +513,13 @@ def append_bands_to_index(
 ) -> None:
     """The bands-table leg of :func:`append_to_index` (see
     :func:`append_exact_to_index` for why the legs are separable)."""
-    _band_table(
-        accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
-    ).write.mode("append").parquet(os.path.join(path, "bands"))
+    _append_index_rows(
+        _band_table(
+            accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+        ),
+        "bands",
+        path,
+    )
 
 
 def append_to_index(
@@ -2354,6 +2397,8 @@ def compact_match_index(
     a hole: a live batch holds only the exact lease, so a bands-only
     compactor could rewrite the bands dir out from under the batch's
     in-flight bands append, silently deleting it with the old dir."""
+    import pyarrow.parquet as pq
+
     _require_local_path(path)
     out: dict = {}
     with index_lease(os.path.join(path, "exact"), "compact", wait_s=wait_s):
@@ -2363,22 +2408,24 @@ def compact_match_index(
                 continue
             recover_interrupted_compaction(lp)
             snapshot = _dir_bytes(lp)
-            before = spark.read.parquet(lp)
-            rows = before.count()
             files_before = sum(
                 1 for f in os.listdir(lp) if f.endswith(".parquet")
             )
             _rewrite_parquet_dir(
-                before, lp,
+                spark.read.parquet(lp), lp,
                 _compact_partitions(spark, lp, 1.0),
                 snapshot_bytes=snapshot,
             )
+            # rows and files of what the rewrite wrote, from the parquet
+            # footers: no count job, and it checks the output, not the input
+            written = [f for f in os.listdir(lp) if f.endswith(".parquet")]
             out[leg] = {
-                "rows": rows,
-                "files_before": files_before,
-                "files_after": sum(
-                    1 for f in os.listdir(lp) if f.endswith(".parquet")
+                "rows": sum(
+                    pq.read_metadata(os.path.join(lp, f)).num_rows
+                    for f in written
                 ),
+                "files_before": files_before,
+                "files_after": len(written),
             }
     return out
 
@@ -3054,12 +3101,13 @@ def match_against_index_bucketed(
     prune stays OFF here — a bucketed scan never shuffles index-side,
     so there is no broadcast-threshold regime to rescue)."""
     return _match_frames(
-        new_docs,
+        *_batch_frames(
+            new_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+        ),
         spark.table(table_prefix + "_exact"),
         spark.table(table_prefix + "_bands"),
-        id_col, text_col, n, num_hashes, bands, hash_mode,
-        min_band_matches, min_est_jaccard, max_bucket, cap_stats,
-        bloom_fpp, index_prune="off",
+        num_hashes, min_band_matches, min_est_jaccard, max_bucket,
+        cap_stats, bloom_fpp, index_prune="off",
     )
 
 
@@ -3072,12 +3120,9 @@ def append_exact_to_index_bucketed(
 ) -> None:
     """Exact-table leg of :func:`append_to_index_bucketed` — separable
     for per-leg idempotent retries (see :func:`append_exact_to_index`)."""
-    from ..sources.lake import write_bucketed
-
-    write_bucketed(
-        _exact_table(accepted_docs, id_col, text_col),
-        table_prefix + "_exact", ["content_hash"],
-        n_buckets=n_buckets, sort_cols=["content_hash"], mode="append",
+    _append_index_rows(
+        _exact_table(accepted_docs, id_col, text_col), "exact",
+        table_prefix=table_prefix, n_buckets=n_buckets,
     )
 
 
@@ -3093,14 +3138,13 @@ def append_bands_to_index_bucketed(
     n_buckets: int = 32,
 ) -> None:
     """Bands-table leg of :func:`append_to_index_bucketed`."""
-    from ..sources.lake import write_bucketed
-
-    write_bucketed(
+    _append_index_rows(
         _band_table(
             accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
         ),
-        table_prefix + "_bands", ["band", "bh"],
-        n_buckets=n_buckets, sort_cols=["band", "bh"], mode="append",
+        "bands",
+        table_prefix=table_prefix,
+        n_buckets=n_buckets,
     )
 
 

@@ -260,8 +260,8 @@ def match_dedup_batch(
     O(1)-per-key index lookups), and the index accumulates so later
     batches see every earlier accepted document. Output: one row per
     batch doc — (doc_id, status, match_id) with ``exact``/``near``/
-    ``fresh`` exactly like ``dedup_index.match_against_index`` (which
-    does the classifying, including the intra-batch self pass).
+    ``fresh`` exactly like ``dedup_index.match_against_index`` (whose
+    core does the classifying, including the intra-batch self pass).
 
     Effectively-once under foreachBatch's at-least-once delivery, by
     two rules rather than external state:
@@ -291,22 +291,26 @@ def match_dedup_batch(
       anti-joins entirely (r14 verdict #1 — the index's doc_id columns
       are not even scanned on the steady-state path).
 
+    The batch is staged once: its exact rows and band rows (hashes and
+    MinHash signatures) are materialised with ``localCheckpoint`` under
+    the lease, before classifying. The classifier and both append legs
+    read those staged rows, so the md5 and MinHash pipelines run once
+    per batch, and the appends neither re-derive them nor read the batch
+    source again.
+
     The whole span runs under the index lease — the exact table's dir
     (dir layout) or the prefix's ``_table_lease`` (bucketed layout,
     selected by ``index_table`` = the table prefix, like the span
     sink's option) — serialising against maintenance either way.
     """
     from ..operators.dedup_index import (
+        _append_index_rows,
+        _batch_frames,
+        _match_frames,
         _table_lease,
-        append_bands_to_index,
-        append_bands_to_index_bucketed,
-        append_exact_to_index,
-        append_exact_to_index_bucketed,
         build_dedup_index,
         build_dedup_index_bucketed,
         index_lease,
-        match_against_index,
-        match_against_index_bucketed,
     )
 
     spark = batch.sparkSession
@@ -325,12 +329,8 @@ def match_dedup_batch(
                     n=n, num_hashes=num_hashes, bands=bands,
                     hash_mode=hash_mode, n_buckets=n_buckets,
                 )
-            matches = match_against_index_bucketed(
-                spark, batch, index_table, id_col, text_col,
-                n=n, num_hashes=num_hashes, bands=bands,
-                hash_mode=hash_mode, min_band_matches=min_band_matches,
-                min_est_jaccard=min_est_jaccard, max_bucket=max_bucket,
-            )
+            ex_idx = spark.table(f"{index_table}_exact")
+            bd_idx = spark.table(f"{index_table}_bands")
         else:
             if not _dir_exists(spark, f"{index_path}/exact"):
                 # bootstrap: an EMPTY index makes batch 0 a pure
@@ -340,16 +340,42 @@ def match_dedup_batch(
                     n=n, num_hashes=num_hashes, bands=bands,
                     hash_mode=hash_mode,
                 )
-            matches = match_against_index(
-                spark, batch, index_path, id_col, text_col,
-                n=n, num_hashes=num_hashes, bands=bands,
-                hash_mode=hash_mode, min_band_matches=min_band_matches,
-                min_est_jaccard=min_est_jaccard, max_bucket=max_bucket,
-            )
+            ex_idx = spark.read.parquet(f"{index_path}/exact")
+            bd_idx = spark.read.parquet(f"{index_path}/bands")
+        rows, band_rows = _batch_frames(
+            batch, id_col, text_col, n, num_hashes, bands, hash_mode,
+            stage=True,
+        )
+        matches = _match_frames(
+            rows, band_rows, ex_idx, bd_idx, num_hashes, min_band_matches,
+            min_est_jaccard, max_bucket,
+            # the bucketed scans never shuffle index-side: no prune regime
+            index_prune="off" if index_table is not None else "auto",
+        )
         self_hit = (F.col("status") != "fresh") & (
             F.col("match_id") == F.col("doc_id")
         )
-        raw = matches.localCheckpoint()  # decide BEFORE the index moves
+        # The self-hit and fresh counts (the fast path below) ride on
+        # the decisions' checkpoint job as named observed metrics, read
+        # from that plan's QueryExecution. Not a pyspark ``Observation``:
+        # it starts the session's ObservationManager, which cannot be
+        # serialized, and from then on every task closure capturing the
+        # session fails (pyspark.ml model transforms do). count_if,
+        # unlike sum, reads 0 on an empty batch, not null.
+        counts = [
+            F.count_if(self_hit).alias("n_self"),
+            F.count_if(self_hit | (F.col("status") == "fresh")).alias(
+                "n_fresh"
+            ),
+        ]
+        observed = matches.observe("match_sink_counts", *counts)
+        raw = observed.localCheckpoint()  # decide BEFORE the index moves
+        seen = observed._jdf.queryExecution().observedMetrics()
+        if seen.contains("match_sink_counts"):
+            row = seen.apply("match_sink_counts")
+            st = {"n_self": row.getLong(0), "n_fresh": row.getLong(1)}
+        else:  # the optimizer pruned the metrics node: count instead
+            st = raw.agg(*counts).first()
         out = raw.select(
             "doc_id",
             F.when(self_hit, F.lit("fresh")).otherwise(F.col("status")).alias(
@@ -368,50 +394,40 @@ def match_dedup_batch(
         # can only match ITSELF (ids are unique and monotonic per the
         # index contract), and the exact leg commits before the bands
         # leg, so absence from exact implies absence from bands. Zero
-        # self-hits therefore PROVES both anti-joins are vacuous —
-        # new_exact == new_bands == fresh — and the fast path appends
-        # directly, touching the index not at all. Any self-hit (a
-        # retried batch, however it tore) falls back to the per-leg
-        # anti-join heal, unchanged. The count is a cheap agg over the
-        # just-checkpointed decisions.
-        st = raw.agg(
-            F.sum(F.when(self_hit, 1).otherwise(0)).alias("n_self"),
-            F.sum(
-                F.when(
-                    self_hit | (F.col("status") == "fresh"), 1
-                ).otherwise(0)
-            ).alias("n_fresh"),
-        ).collect()[0]
+        # self-hits therefore PROVES both anti-joins are vacuous, and
+        # the fast path appends the staged rows directly, touching the
+        # index not at all. Any self-hit (a retried batch, however it
+        # tore) falls back to the per-leg anti-join heal, unchanged.
         # the route taken lands on a local property (the bloom gates'
         # observability pattern) so tests and bench cells can pin it
         _route = spark.sparkContext.setLocalProperty
         if not st["n_fresh"]:
             _route("tern.match_sink.append_route", "no-fresh-docs")
             return out  # nothing accepted: no appends, no index IO
-        fresh = batch.join(
+        # Fresh docs are always canonical: a non-canonical copy always
+        # has a batch_exact hit, and since it was never appended it
+        # cannot self-hit on a replay either. So the staged band rows
+        # (canonical docs only) cover every fresh doc.
+        # (the ids join on an expression, not on=, which would move
+        # doc_id to the front of the appended rows)
+        fresh_ids = F.broadcast(
             out.where(F.col("status") == "fresh").select(
-                F.col("doc_id").alias(id_col)
-            ),
-            on=id_col,
-            how="left_semi",
+                F.col("doc_id").alias("__id")
+            )
         )
+        is_id = F.col("doc_id") == F.col("__id")
+        new_exact = rows.select("content_hash", "doc_id").join(
+            fresh_ids, is_id, "left_semi"
+        )
+        new_bands = band_rows.join(fresh_ids, is_id, "left_semi")
         if not st["n_self"]:
+            # first attempt: both legs append the staged rows of exactly
+            # the fresh docs. They read only checkpointed frames, never
+            # the batch source or the index tables, so no checkpoint of
+            # their own is needed.
             _route("tern.match_sink.append_route", "first-attempt-fast")
-            # first attempt: both legs append exactly the fresh docs.
-            # One checkpoint feeds both appends (fresh references only
-            # the batch and the checkpointed decisions — never the
-            # index tables — so re-evaluation-against-own-appends
-            # cannot occur; the checkpoint just pins a streaming
-            # batch's source once instead of twice).
-            new_exact = new_bands = fresh.localCheckpoint()
         else:
             _route("tern.match_sink.append_route", "replay-per-leg-heal")
-            if index_table is not None:
-                ex_idx = spark.table(f"{index_table}_exact")
-                bd_idx = spark.table(f"{index_table}_bands")
-            else:
-                ex_idx = spark.read.parquet(f"{index_path}/exact")
-                bd_idx = spark.read.parquet(f"{index_path}/bands")
             # Per-leg idempotent appends (docstring rule 2): EACH leg
             # anti-joins its OWN table, and BOTH frames materialise
             # before either write — a lazy frame would re-evaluate
@@ -420,43 +436,30 @@ def match_dedup_batch(
             # parquet-dir read only dodges this because
             # spark.read.parquet pins its file listing eagerly). The
             # anti-joins' RIGHT sides are first broadcast-SEMI-pruned
-            # by the batch's ids: an anti-join match can only carry an
+            # by the fresh ids: an anti-join match can only carry an
             # id present in the batch, so the prune is
             # decision-identical, and it keeps the right side O(batch)
             # — broadcastable — instead of shuffling a corpus-sized id
             # column per batch once the index outgrows the broadcast
             # threshold (the regime BLOOM_r14 measured on the
             # classifier joins).
-            fresh_ids = F.broadcast(fresh.select(id_col))
-            ex_ids = ex_idx.select(F.col("doc_id").alias(id_col)).join(
-                fresh_ids, on=id_col, how="left_semi"
+            ex_ids = ex_idx.select(F.col("doc_id").alias("__id")).join(
+                fresh_ids, on="__id", how="left_semi"
             )
-            bd_ids = bd_idx.select(F.col("doc_id").alias(id_col)).join(
-                fresh_ids, on=id_col, how="left_semi"
+            bd_ids = bd_idx.select(F.col("doc_id").alias("__id")).join(
+                fresh_ids, on="__id", how="left_semi"
             )
-            new_exact = fresh.join(
-                ex_ids, on=id_col, how="left_anti"
+            new_exact = new_exact.join(
+                ex_ids, is_id, "left_anti"
             ).localCheckpoint()
-            new_bands = fresh.join(
-                bd_ids, on=id_col, how="left_anti"
+            new_bands = new_bands.join(
+                bd_ids, is_id, "left_anti"
             ).localCheckpoint()
-        if index_table is not None:
-            append_exact_to_index_bucketed(
-                new_exact, index_table, id_col, text_col,
-                n_buckets=n_buckets,
-            )
-            append_bands_to_index_bucketed(
-                new_bands, index_table, id_col, text_col,
-                n=n, num_hashes=num_hashes, bands=bands,
-                hash_mode=hash_mode, n_buckets=n_buckets,
-            )
-        else:
-            append_exact_to_index(new_exact, index_path, id_col, text_col)
-            append_bands_to_index(
-                new_bands, index_path, id_col, text_col,
-                n=n, num_hashes=num_hashes, bands=bands,
-                hash_mode=hash_mode,
-            )
+        legs = {"path": index_path} if index_table is None else {
+            "table_prefix": index_table, "n_buckets": n_buckets
+        }
+        _append_index_rows(new_exact, "exact", **legs)
+        _append_index_rows(new_bands, "bands", **legs)
         return out
 
 

@@ -1751,29 +1751,26 @@ def test_match_sink_kill_restart_exactly_once(
     assert expected[11] == ("exact", 1) and expected[12] == ("near", 1)
     assert expected[13][0] == "fresh"
 
-    real_exact = di.append_exact_to_index
-    real_bands = di.append_bands_to_index
+    real_append = di._append_index_rows
     state = {"n": 0}
 
     # exact leg writes first; count batches on it. before_append: crash
     # with NOTHING written; between_legs: exact committed, bands not;
     # after_append: both committed, sink write never happens.
-    def faulty_exact(frame, path, *a, **k):
-        state["n"] += 1
-        if state["n"] == 2 and crash_mode == "before_append":
-            raise RuntimeError("injected mid-batch crash")
-        return real_exact(frame, path, *a, **k)
-
-    def faulty_bands(frame, path, *a, **k):
+    def faulty_append(frame, leg, *a, **k):
+        if leg == "exact":
+            state["n"] += 1
+            if state["n"] == 2 and crash_mode == "before_append":
+                raise RuntimeError("injected mid-batch crash")
+            return real_append(frame, leg, *a, **k)
         if state["n"] == 2:
             if crash_mode == "between_legs":
                 raise RuntimeError("injected mid-batch crash")
-            real_bands(frame, path, *a, **k)
+            real_append(frame, leg, *a, **k)
             raise RuntimeError("injected mid-batch crash")
-        return real_bands(frame, path, *a, **k)
+        return real_append(frame, leg, *a, **k)
 
-    monkeypatch.setattr(di, "append_exact_to_index", faulty_exact)
-    monkeypatch.setattr(di, "append_bands_to_index", faulty_bands)
+    monkeypatch.setattr(di, "_append_index_rows", faulty_append)
     q = start("cr")
     with pytest.raises(Exception, match="injected mid-batch crash"):
         q.awaitTermination(180)
@@ -1781,8 +1778,7 @@ def test_match_sink_kill_restart_exactly_once(
             raise q.exception()
     assert len(globmod.glob(str(tmp_path / "out_cr") + "/batch_id=*")) == 1
 
-    monkeypatch.setattr(di, "append_exact_to_index", real_exact)
-    monkeypatch.setattr(di, "append_bands_to_index", real_bands)
+    monkeypatch.setattr(di, "_append_index_rows", real_append)
     q2 = start("cr")
     q2.awaitTermination(180)
     assert q2.exception() is None
@@ -1860,16 +1856,14 @@ def test_match_dedup_batch_heals_torn_append(
     idx = str(tmp_path / "midx")
     b1 = spark.createDataFrame([(1, base)], ["doc_id", "text"])
 
-    def boom(*a, **k):
-        raise RuntimeError("injected between-legs crash")
+    real = di._append_index_rows
 
-    patched = (
-        "append_bands_to_index_bucketed"
-        if layout == "bucketed"
-        else "append_bands_to_index"
-    )
-    real = getattr(di, patched)
-    monkeypatch.setattr(di, patched, boom)
+    def boom(frame, leg, *a, **k):
+        if leg == "bands":
+            raise RuntimeError("injected between-legs crash")
+        return real(frame, leg, *a, **k)
+
+    monkeypatch.setattr(di, "_append_index_rows", boom)
     with pytest.raises(RuntimeError, match="between-legs"):
         match_dedup_batch(b1, idx, **kw)
 
@@ -1888,7 +1882,7 @@ def test_match_dedup_batch_heals_torn_append(
     ex, bd = tables()
     assert ex.count() == 1 and bd.count() == 0
 
-    monkeypatch.setattr(di, patched, real)
+    monkeypatch.setattr(di, "_append_index_rows", real)
     out_retry = {r["doc_id"]: r["status"]
                  for r in match_dedup_batch(b1, idx, **kw).collect()}
     assert out_retry == {1: "fresh"}  # self-replay reclassification
@@ -1957,6 +1951,61 @@ def test_match_dedup_first_attempt_fast_path(spark, tmp_path):
     assert spark.read.parquet(idx + "/exact").count() == 2
     bands = spark.read.parquet(idx + "/bands")
     assert bands.count() == bands.dropDuplicates().count()
+    # the decision counts must not leave the session unserializable: a
+    # pyspark Observation does, and then every task closure capturing
+    # the session (pyspark.ml model transforms) fails
+    jvm = spark._jvm
+    jvm.java.io.ObjectOutputStream(
+        jvm.java.io.ByteArrayOutputStream()
+    ).writeObject(spark._jsparkSession)
+
+
+def test_match_dedup_batch_stages_batch_once(spark, tmp_path, monkeypatch):
+    """One micro-batch derives its band rows once: the classifier and
+    both append legs read the staged rows, so ``_band_table`` is built
+    once and the classifier's optimized plan holds no Generate (the
+    shingle and band explodes ran in the staging checkpoint)."""
+    import re
+
+    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        match_dedup_batch,
+    )
+
+    base = " ".join(f"so{i}" for i in range(30))
+    idx = str(tmp_path / "midx")
+    di.build_dedup_index(
+        spark.createDataFrame([(1, base)], ["doc_id", "text"]), idx
+    )
+    real_bands, real_match = di._band_table, di._match_frames
+    built, classifiers = [], []
+
+    def counted_bands(*a, **k):
+        built.append(1)
+        return real_bands(*a, **k)
+
+    def kept_match(*a, **k):
+        classifiers.append(real_match(*a, **k))
+        return classifiers[-1]
+
+    monkeypatch.setattr(di, "_band_table", counted_bands)
+    monkeypatch.setattr(di, "_match_frames", kept_match)
+    batch = spark.createDataFrame(
+        [(10, base),
+         (11, base.rsplit(" ", 2)[0] + " zz98 zz99"),
+         (12, "a novel body of words"),
+         (13, "a novel body of words")],
+        ["doc_id", "text"],
+    )
+    got = {r["doc_id"]: (r["status"], r["match_id"])
+           for r in match_dedup_batch(batch, idx).collect()}
+    assert got == {10: ("exact", 1), 11: ("near", 1),
+                   12: ("fresh", None), 13: ("exact", 12)}
+    assert len(built) == 1
+    plan = classifiers[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"^[\s:+\-]*Generate\b", plan, re.M), plan
+    assert {r["doc_id"] for r in
+            spark.read.parquet(idx + "/bands").collect()} == {1, 12}
 
 
 @pytest.mark.parametrize("layout", ["dir", "bucketed"])
@@ -2024,6 +2073,10 @@ def test_match_index_compaction_decision_preserving(
         nf = len([f for f in _os.listdir(idx + "/exact")
                   if f.endswith(".parquet")])
         stats = compact_match_index(spark, idx)
+        for leg in ("exact", "bands"):
+            assert stats[leg]["rows"] == spark.read.parquet(
+                f"{idx}/{leg}"
+            ).count()
         assert stats["exact"]["files_before"] == nf
         assert stats["exact"]["files_after"] < nf
         assert stats["bands"]["files_after"] < stats["bands"]["files_before"]
