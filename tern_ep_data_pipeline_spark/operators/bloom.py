@@ -4,8 +4,7 @@ The incremental match/clean operators (`operators.dedup_index`) join a
 small ingest batch against a corpus-sized index.  The join itself is
 O(batch) rows OUT, but the index side still feeds *every* index row
 into the pre-join aggregation (``groupBy gram_hash`` / ``distinct`` /
-``groupBy line_hash``) — an O(index) shuffle per batch on the
-parquet-dir layout, and an O(index) probe even on the bucketed layout.
+``groupBy line_hash``) — an O(index) shuffle per batch.
 At corpus scale (the 100 TB target) that per-batch index pass is the
 dominant cost.
 
@@ -50,7 +49,7 @@ byte-heavy index rows are probed through a key-only projection with a
 JVM semi-join back, so payload bytes never cross the Arrow boundary;
 and a consumer whose index scan feeds a JOIN with no pre-aggregation
 (``match_against_index`` — the join probe already drops non-matching
-rows for free) records an auto-decline instead of pruning at a loss.
+rows for free) takes no prefilter at all.
 
 Reference parity: the incremental-ingest contract this accelerates is
 the reference's append-only concatenation model

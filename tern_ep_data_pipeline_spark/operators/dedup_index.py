@@ -13,14 +13,12 @@ MinHash signature agreement; everything else is fresh. Appending the
 accepted batch's rows keeps the index current — each ingest batch costs
 O(batch), not O(corpus).
 
-The index lives as plain parquet directories by default. At cluster
-scale, the batch-vs-index joins should co-locate WITHOUT shuffling the
-index side: every table ships a bucketed-table twin (``*_bucketed``
-functions — gram-first bucketed by gram_hash with zero index-side
-Exchange per batch, measured in SPILL_r08; exact by content_hash;
-bands by (band, bh); chunks by chunk_hash; lines by line_hash), with
-metastore-swap compaction where the plain layout uses directory
-renames.
+Every table is a plain parquet directory: a reader needs no catalog
+entry, so an index survives a session restart as its files. Compaction
+swaps directories with local renames; once a batch's index scan would
+pass the broadcast threshold, the match classifier semi-joins the index
+by the batch's own keys so only O(batch) rows shuffle (see
+:func:`_match_frames`).
 """
 
 from __future__ import annotations
@@ -136,8 +134,6 @@ def match_against_index(
     min_est_jaccard: float | None = 0.5,
     max_bucket: int | None = 100_000,
     cap_stats: dict | None = None,
-    bloom_fpp: float | None = None,
-    index_prune: str = "auto",
 ) -> DataFrame:
     """Classify a new batch against the index AND against itself.
 
@@ -159,22 +155,14 @@ def match_against_index(
     any text access (pass ``None`` to accept every band collision).
     ``match_id`` is the lowest-id surviving match.
 
-    ``bloom_fpp`` is accepted for interface parity with the other
-    incremental consumers but AUTO-DECLINES (r13): this operator has no
-    index-side pre-join aggregation for a prefilter to save — both
-    index scans stream straight into batch-keyed joins, which already
-    drop non-matching index rows during the probe at zero extra cost,
-    and the r12 measurement showed the prune paying staging plus a
-    second index evaluation for nothing (BLOOM_r12 match cell: wall
-    6.0→8.5 s, shuffle UP 3.2→12.6 MB). The decline is recorded on
-    SparkContext local property ``tern.bloom_prune.match``; output and
-    plan equal the default path exactly. Wide-payload indexes that DO
-    pre-aggregate get the key-only two-phase probe instead
-    (``bloom.WIDE_PAYLOAD_BYTES``).
-
-    ``index_prune='auto'`` (r14) additionally rescues the PAST-
-    BROADCAST-THRESHOLD regime, where the joins would shuffle the
-    corpus-sized index per batch — see :func:`_match_frames`.
+    There is no Bloom prefilter here: this operator has no index-side
+    pre-join aggregation for one to save — both index scans stream
+    straight into batch-keyed joins, which already drop non-matching
+    index rows during the probe (BLOOM_r12 match cell: the prune cost
+    wall 6.0→8.5 s and raised shuffle 3.2→12.6 MB). Past the broadcast
+    threshold, where the joins would shuffle the corpus-sized index per
+    batch, an exact semi-join prune engages instead — see
+    :func:`_match_frames`.
     """
     return _match_frames(
         *_batch_frames(
@@ -183,7 +171,7 @@ def match_against_index(
         spark.read.parquet(os.path.join(path, "exact")),
         spark.read.parquet(os.path.join(path, "bands")),
         num_hashes, min_band_matches, min_est_jaccard, max_bucket,
-        cap_stats, bloom_fpp, index_prune,
+        cap_stats,
     )
 
 
@@ -262,71 +250,29 @@ def _match_frames(
     min_est_jaccard: float | None,
     max_bucket: int | None,
     cap_stats: dict | None = None,
-    bloom_fpp: float | None = None,
-    index_prune: str = "auto",
 ) -> DataFrame:
-    """Layout-independent core of :func:`match_against_index`: the batch
-    arrives as the two frames of :func:`_batch_frames`, the index as two
-    frames (parquet-dir scan or bucketed-table scan — the latter joins
-    with zero index-side Exchange).  ``bloom_fpp`` is a
-    RECORDED AUTO-DECLINE here (r13, closing the r12 wall-negative):
-    unlike the gram/chunk/line consumers, this operator has no
-    index-side pre-join aggregation for a prefilter to save — both
-    index frames stream straight into batch-keyed joins, which already
-    drop non-matching index rows during the probe at zero extra cost,
-    so a prune pays staging plus a second index evaluation for nothing
-    (BLOOM_r12 match cell: 6.0→8.5 s wall, shuffle UP 3.2→12.6 MB).
-    The decline is published as SparkContext local property
-    ``tern.bloom_prune.match`` for sinks and benches to record, and the
-    plan is EXACTLY the default path's.
+    """The core of :func:`match_against_index`: the batch arrives as the
+    two frames of :func:`_batch_frames`, the index as its two parquet
+    scans.
 
-    ``index_prune`` (r14) is a DIFFERENT, regime-gated optimisation the
-    r12 measurement does not cover: past the broadcast threshold the
-    batch-keyed joins stop streaming the index through a broadcast
-    probe and SHUFFLE the corpus-sized index per batch instead
-    (measured: 223 MB/batch at a 150k-doc index, BLOOM_r14
-    match_sink_cells — the r12 cell ran in the broadcast regime where
-    there was nothing to save). ``'auto'`` engages an EXACT broadcast
-    left-semi prune of both index frames by the batch's own keys
-    (content hashes / (band, bh) — always O(batch), always
-    broadcastable) when Catalyst's index estimate exceeds the session's
-    autoBroadcastJoinThreshold; the prune is map-side, so the
-    downstream joins shuffle O(batch) survivors instead of the index.
-    Decision-identical by construction: a left-semi on the join keys
-    keeps every row that could join. ``'off'`` (the bucketed layout)
-    skips it — a bucketed scan never shuffles index-side, so there is
-    no regime to rescue. The route lands on local property
-    ``tern.match_prune``."""
-    if bloom_fpp is not None:
-        rows.sparkSession.sparkContext.setLocalProperty(
-            "tern.bloom_prune.match", "declined-no-index-preagg"
-        )
-        import warnings
+    Regime gate (r14): past the broadcast threshold the batch-keyed
+    joins stop streaming the index through a broadcast probe and
+    SHUFFLE the corpus-sized index per batch instead (measured:
+    223 MB/batch at a 150k-doc index, BLOOM_r14 match_sink_cells).
+    When Catalyst's index estimate exceeds the session's
+    autoBroadcastJoinThreshold, both index frames are first pruned by
+    an EXACT broadcast left-semi join on the batch's own keys (content
+    hashes / (band, bh) — always O(batch), always broadcastable); the
+    prune is map-side, so the downstream joins shuffle O(batch)
+    survivors instead of the index. Decision-identical by construction:
+    a left-semi on the join keys keeps every row that could join. The
+    route lands on local property ``tern.match_prune``."""
+    from .memguard import plan_size_estimate
 
-        # visible, not just a local property (ADVICE r13): the kwarg is
-        # accepted for interface parity but INERT here — callers whose
-        # bottleneck is index-scan I/O (not shuffle) should know their
-        # opt-in did nothing rather than discover it in a trace
-        warnings.warn(
-            "match_against_index declines bloom_fpp: it has no index-side "
-            "pre-join aggregation for a prefilter to save (the batch-keyed "
-            "joins already drop non-matching index rows during the probe; "
-            "measured r12: the prune paid staging + a second index "
-            "evaluation for nothing). The default plan runs unchanged.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-        bloom_fpp = None
     spark = rows.sparkSession
-    prune = False
-    if index_prune == "auto":
-        from .memguard import plan_size_estimate
-
-        est = plan_size_estimate(band_idx)
-        thr = _broadcast_threshold_bytes(spark)
-        prune = est is not None and thr is not None and est > thr
-    elif index_prune not in ("off",):
-        raise ValueError(f"unknown index_prune {index_prune!r}")
+    est = plan_size_estimate(band_idx)
+    thr = _broadcast_threshold_bytes(spark)
+    prune = est is not None and thr is not None and est > thr
     spark.sparkContext.setLocalProperty(
         "tern.match_prune", "semi" if prune else "direct"
     )
@@ -463,27 +409,11 @@ def _match_frames(
     )
 
 
-def _append_index_rows(
-    rows: DataFrame,
-    leg: str,
-    path: str | None = None,
-    table_prefix: str | None = None,
-    n_buckets: int = 32,
-) -> None:
-    """Append precomputed ``exact`` or ``bands`` rows to one leg of the
-    match index: ``<path>/<leg>`` in the dir layout, or the bucketed
-    table ``<table_prefix>_<leg>``. The one write path of the public
+def _append_index_rows(rows: DataFrame, leg: str, path: str) -> None:
+    """Append precomputed ``exact`` or ``bands`` rows to ``<path>/<leg>``,
+    one leg of the match index. The one write path of the public
     ``append_*`` functions and :func:`match_dedup_batch`."""
-    if table_prefix is None:
-        rows.write.mode("append").parquet(os.path.join(path, leg))
-        return
-    from ..sources.lake import write_bucketed
-
-    keys = ["content_hash"] if leg == "exact" else ["band", "bh"]
-    write_bucketed(
-        rows, f"{table_prefix}_{leg}", keys,
-        n_buckets=n_buckets, sort_cols=keys, mode="append",
-    )
+    rows.write.mode("append").parquet(os.path.join(path, leg))
 
 
 def append_exact_to_index(
@@ -610,7 +540,7 @@ def chunk_stats_against_index(
     if bloom_fpp is not None:
         # the core Bloom-prunes ``raw`` by the batch's chunk hashes BEFORE
         # the distinct — that distinct is the O(index) shuffle the
-        # prefilter exists to remove (``bloom_fpp`` doc: match_against_index)
+        # prefilter exists to remove (mechanics: bloom.prune_index_by_keys)
         return _chunk_stats_core(
             new_docs, raw, id_col, text_col, chunk_tokens, bloom_fpp
         )
@@ -631,10 +561,9 @@ def _chunk_stats_core(
     chunk_tokens: int,
     bloom_fpp: float | None = None,
 ) -> DataFrame:
-    """Layout-independent core of the incremental chunk stats: ``indexed``
-    is a distinct (__h, __indexed=True) membership frame from either the
-    parquet-dir scan (shuffle-hash hinted) or the bucketed-table scan
-    (joins on its own bucket distribution).  With ``bloom_fpp`` set,
+    """Core of the incremental chunk stats: ``indexed`` is a distinct
+    (__h, __indexed=True) membership frame from the parquet-dir scan
+    (shuffle-hash hinted).  With ``bloom_fpp`` set,
     ``indexed`` arrives RAW (one __h column, not yet distinct) and is
     Bloom-pruned by the batch's occurrence hashes before the distinct —
     which then shuffles ~O(batch) candidate hashes instead of the whole
@@ -804,7 +733,7 @@ def clean_against_line_index(
 
     ``bloom_fpp`` Bloom-prunes the index scan by the batch's line hashes
     before the count sum (one extra O(batch) line pass; bit-identical
-    output — ``bloom_fpp`` doc: :func:`match_against_index`).
+    output — mechanics: :func:`bloom.prune_index_by_keys`).
     """
     # project the count columns FIRST: on a keep_text (wide-twin)
     # layout the payload must never be read for cleaning — the
@@ -1226,6 +1155,48 @@ def _build_gram_index_chunked(
     )
 
 
+def _validate_gram_ids(
+    spark: SparkSession, new_docs: DataFrame, id_col: str, text_col: str, meta
+) -> None:
+    """The id-monotonicity check (see :func:`clean_against_gram_index`
+    for the contract): ``meta`` is a list of (min, max, kind,
+    fingerprint) rows. The replay carve-out requires the batch content
+    fingerprint to MATCH the recorded append's when one was recorded —
+    an exact-range id reuse with different documents is rejected, not
+    mistaken for an at-least-once retry (ADVICE r7 #1). Rows from a
+    pre-fingerprint meta layout carry ``None`` and keep the lenient
+    range-only carve-out."""
+    meta = [(lo, hi, k, fp) for (lo, hi, k, fp) in meta if hi is not None]
+    if not meta:
+        return
+    lo, hi, fp = new_docs.agg(
+        F.min(F.col(id_col).cast("long")),
+        F.max(F.col(id_col).cast("long")),
+        F.bit_xor(F.xxhash64(F.col(id_col).cast("long"), F.col(text_col))),
+    ).collect()[0]
+    others = [
+        (m_lo, m_hi)
+        for (m_lo, m_hi, m_kind, m_fp) in meta
+        if not (
+            m_kind == "append"
+            and (m_lo, m_hi) == (lo, hi)
+            and (m_fp is None or m_fp == fp)
+        )
+    ]
+    indexed_max = max((m[1] for m in others), default=None)
+    if lo is not None and indexed_max is not None and lo <= indexed_max:
+        raise ValueError(
+            "clean_against_gram_index id-monotonicity violation: "
+            f"batch min {id_col}={lo} <= max indexed id {indexed_max}. "
+            "Occurrence keys pack as id*max_doc_tokens+pos, so reused or "
+            "lower batch ids silently mis-order span firsts; renumber the "
+            "batch above the watermark (or pass validate_ids=False if id "
+            "ranges are guaranteed disjoint out-of-band). An exact "
+            "(min,max)-range replay of a prior append with matching "
+            "content is allowed (foreachBatch retry)."
+        )
+
+
 def clean_against_gram_index(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -1292,8 +1263,8 @@ def clean_against_gram_index(
     if bloom_fpp is not None:
         # hand the RAW scan to the operator: it prunes by its own staged
         # batch gram-firsts frame (no second gram pass) and min-combines
-        # only the ~O(batch) survivors (``bloom_fpp`` doc:
-        # match_against_index; mechanics: dedup.substring_dedup)
+        # only the ~O(batch) survivors (mechanics:
+        # dedup.substring_dedup)
         return dedup_ops.substring_dedup(
             new_docs,
             id_col,
@@ -1359,15 +1330,13 @@ def _require_local_path(path: str) -> None:
     """The plain-parquet compactors swap DIRECTORIES with local-filesystem
     renames; a scheme-qualified path (hdfs://, s3a://) would write its
     Spark temp dir fine and then die on ``os.rename``, killing a stream
-    mid-compaction. Refuse up front with the alternatives named."""
+    mid-compaction. Refuse up front with the alternative named."""
     if "://" in path:
         raise NotImplementedError(
             f"compact_*_index swaps directories with local-fs renames; "
-            f"{path!r} is not a local path. On a cluster store, either use "
-            "the bucketed-table layout (compact_gram_index_bucketed swaps "
-            "tables through the metastore) or run the equivalent rewrite "
-            "through the lake's table format (Delta OPTIMIZE / Iceberg "
-            "rewrite_data_files)."
+            f"{path!r} is not a local path. On a cluster store, run the "
+            "equivalent rewrite through the lake's table format (Delta "
+            "OPTIMIZE / Iceberg rewrite_data_files)."
         )
 
 
@@ -1439,8 +1408,8 @@ def index_lease(path: str, role: str, wait_s: float | None = None):
     whose holder pid is dead (crash between acquire and release — the
     data itself is crash-safe via :func:`recover_interrupted_compaction`,
     the lock must not wedge the table forever). Non-local paths
-    (``://``) no-op: the plain-parquet swap layout is local-only, and
-    the bucketed-table layout serialises through the metastore instead.
+    (``://``) no-op: the directory-swap compactors are local-only, so
+    there is no swap to exclude there.
 
     Re-entrant WITHIN a thread: a composite holder (the streaming
     batch's heal -> clean -> append span) keeps the lease while the
@@ -2427,988 +2396,4 @@ def compact_match_index(
                 "files_before": files_before,
                 "files_after": len(written),
             }
-    return out
-
-
-# ----------------------------------------- bucketed gram-index layout
-#
-# The plain-parquet layout above re-SHUFFLES the corpus-sized gram table
-# on every batch: the min-combine groupBy and the first-key join both
-# hash-partition the index by gram_hash, and a directory of parquet
-# files carries no partitioning guarantee, so Spark exchanges the whole
-# index per micro-batch — the dominant per-batch cost once the index
-# dwarfs the batch. Storing the index as a BUCKETED table (bucketBy
-# gram_hash, sortBy gram_hash) makes the scan itself hash-distributed:
-# the groupBy and the join reuse the bucket layout with ZERO index-side
-# Exchange, and only the O(batch) side shuffles — the join co-location
-# this module's header promised for the band table, delivered for the
-# hot (gram) table. Appends preserve the spec (Spark enforces it), so
-# the property survives the whole ingest lifecycle.
-
-def build_gram_index_bucketed(
-    docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    max_doc_tokens: int = 1 << 24,
-    n_buckets: int = 32,
-    memory_guard: bool = True,
-    passes: int | None = None,
-) -> int:
-    """Bucketed-table twin of :func:`build_gram_index`. Same
-    id-monotonicity contract; the watermark log lives in ``<table>_meta``
-    (tiny, unbucketed). ``n_buckets`` sizes the fixed bucket count —
-    pick it for the TARGET corpus (buckets are the index's permanent
-    unit of join parallelism; at 100 TB use thousands).
-
-    ``memory_guard``/``passes`` (r13): the same plan-time sizing and
-    id-range-slice degrade as the dir-layout build, under the BUCKETED
-    coefficient (``memguard.GRAM_BUILD_RESIDENT_PER_TEXT_BYTE_BUCKETED``
-    — the sort-within-bucket write stacks sorter state on the
-    aggregate+writer buffers, measured needing 4 passes where the dir
-    layout needs 3 at 2 GiB/sf10, SPILL_r13); the read-side ``min``
-    combine across appends makes the sliced build decision-identical
-    here too."""
-    spark = docs.sparkSession
-    if passes is None:
-        passes = 1
-        from .memguard import incremental_span_floor_decidable
-
-        if memory_guard and incremental_span_floor_decidable(spark):
-            from .memguard import gram_build_passes
-
-            text_bytes = docs.agg(
-                F.sum(F.octet_length(F.col(text_col)))
-            ).collect()[0][0]
-            passes, floor_msg = gram_build_passes(
-                spark, text_bytes, bucketed=True
-            )
-            if floor_msg is not None:
-                from ..plans.curation import CurationMemoryError
-
-                raise CurationMemoryError(floor_msg)
-    if passes > 1:
-        numeric = dict(docs.dtypes).get(id_col) in (
-            "tinyint", "smallint", "int", "bigint", "float", "double",
-        )
-        if not numeric:
-            import warnings
-
-            warnings.warn(
-                f"bucketed gram-index build wants {passes} id-range "
-                f"passes but {id_col!r} is not numeric — falling back "
-                "to the single-pass build (expect heap pressure)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        else:
-            qs = [i / passes for i in range(1, passes)]
-            cuts = sorted({
-                int(c) for c in docs.stat.approxQuantile(id_col, qs, 0.001)
-            })
-            bounds = [None, *cuts, None]
-            first = True
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                part = docs
-                if lo is not None:
-                    part = part.where(F.col(id_col) >= F.lit(lo))
-                if hi is not None:
-                    part = part.where(F.col(id_col) < F.lit(hi))
-                if part.limit(1).count() == 0:
-                    continue
-                if first:
-                    build_gram_index_bucketed(
-                        part, table, id_col, text_col, min_tokens,
-                        max_doc_tokens, n_buckets, passes=1,
-                    )
-                    first = False
-                else:
-                    append_to_gram_index_bucketed(
-                        part, table, id_col, text_col,
-                        min_tokens=min_tokens,
-                        max_doc_tokens=max_doc_tokens,
-                        n_buckets=n_buckets,
-                    )
-            return (
-                spark.table(table)
-                .select("gram_hash")
-                .distinct()
-                .count()
-            )
-    from ..sources.lake import write_bucketed
-
-    grams = _gram_first_table(docs, id_col, text_col, min_tokens, max_doc_tokens)
-    write_bucketed(
-        grams, table, ["gram_hash"], n_buckets=n_buckets,
-        sort_cols=["gram_hash"], mode="overwrite",
-    )
-    _meta_row(docs, id_col, text_col, "build").write.mode("overwrite").saveAsTable(
-        table + "_meta"
-    )
-    return spark.table(table).count()
-
-
-def append_to_gram_index_bucketed(
-    accepted_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    max_doc_tokens: int = 1 << 24,
-    n_buckets: int = 32,
-) -> None:
-    """Append a batch's per-gram first keys into the bucketed layout
-    (``n_buckets`` must match the build — Spark rejects a mismatched
-    spec, so drift fails loudly). Takes the table's lease so a
-    concurrent :func:`compact_gram_index_bucketed` cannot DROP this
-    append with the pre-compaction table (VERDICT r10 #5)."""
-    from ..sources.lake import write_bucketed
-
-    grams = _gram_first_table(
-        accepted_docs, id_col, text_col, min_tokens, max_doc_tokens
-    )
-    spark = accepted_docs.sparkSession
-    with _table_lease(spark, table, "append"):
-        write_bucketed(
-            grams, table, ["gram_hash"], n_buckets=n_buckets,
-            sort_cols=["gram_hash"], mode="append",
-        )
-        row = _meta_row(accepted_docs, id_col, text_col, "append")
-        if spark.catalog.tableExists(table + "_meta"):
-            # a metastore append REJECTS extra columns (unlike a parquet
-            # dir, which just unions schemas) — a _meta table built before
-            # the fingerprint/kind columns existed must keep its own
-            # schema, and its rows stay on the lenient range-only
-            # carve-out
-            existing = spark.table(table + "_meta").columns
-            # select in the TABLE's column order: v1 saveAsTable append
-            # resolves by position
-            row = row.select(*[c for c in existing if c in row.columns])
-        row.write.mode("append").saveAsTable(table + "_meta")
-
-
-def _validate_gram_ids(
-    spark: SparkSession, new_docs: DataFrame, id_col: str, text_col: str, meta
-) -> None:
-    """Shared id-monotonicity check (see :func:`clean_against_gram_index`
-    for the contract): ``meta`` is a list of (min, max, kind,
-    fingerprint) rows. The replay carve-out requires the batch content
-    fingerprint to MATCH the recorded append's when one was recorded —
-    an exact-range id reuse with different documents is rejected, not
-    mistaken for an at-least-once retry (ADVICE r7 #1). Rows from a
-    pre-fingerprint meta layout carry ``None`` and keep the lenient
-    range-only carve-out."""
-    meta = [(lo, hi, k, fp) for (lo, hi, k, fp) in meta if hi is not None]
-    if not meta:
-        return
-    lo, hi, fp = new_docs.agg(
-        F.min(F.col(id_col).cast("long")),
-        F.max(F.col(id_col).cast("long")),
-        F.bit_xor(F.xxhash64(F.col(id_col).cast("long"), F.col(text_col))),
-    ).collect()[0]
-    others = [
-        (m_lo, m_hi)
-        for (m_lo, m_hi, m_kind, m_fp) in meta
-        if not (
-            m_kind == "append"
-            and (m_lo, m_hi) == (lo, hi)
-            and (m_fp is None or m_fp == fp)
-        )
-    ]
-    indexed_max = max((m[1] for m in others), default=None)
-    if lo is not None and indexed_max is not None and lo <= indexed_max:
-        raise ValueError(
-            "clean_against_gram_index id-monotonicity violation: "
-            f"batch min {id_col}={lo} <= max indexed id {indexed_max}. "
-            "Occurrence keys pack as id*max_doc_tokens+pos, so reused or "
-            "lower batch ids silently mis-order span firsts; renumber the "
-            "batch above the watermark (or pass validate_ids=False if id "
-            "ranges are guaranteed disjoint out-of-band). An exact "
-            "(min,max)-range replay of a prior append with matching "
-            "content is allowed (foreachBatch retry)."
-        )
-
-
-def clean_against_gram_index_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    max_doc_tokens: int = 1 << 24,
-    validate_ids: bool = True,
-    staged: bool = False,
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """Bucketed-table twin of :func:`clean_against_gram_index` — same
-    output, same contract, but the index-side min-combine and first-key
-    join run WITHOUT exchanging the index: the bucketed scan is already
-    hash-distributed on gram_hash, so only the O(batch) gram frame
-    shuffles. This is what keeps the per-batch plan O(batch + index
-    SCAN) rather than O(index shuffle) once the corpus dwarfs the batch.
-
-    ``staged=True`` deliberately re-introduces the index-side exchange
-    (one ``repartition`` on gram_hash before the min-combine). That
-    costs the O(index) shuffle back, but un-fuses the scan + aggregate +
-    join pipeline into exchange-separated, independently-spillable
-    stages — the dir layout's shape, measured completing at index sizes
-    where the fused plan heap-OOMs (SPILL_r08: fused 1-of-2 OOM at a
-    531 MiB index under 3g/32; staged/dir passing to 845 MiB). The
-    streaming guard (``streaming.curation.span_dedup_batch``) picks it
-    automatically when the fused resident model exceeds the heap but
-    the staged model fits.
-    """
-    recover_interrupted_table_compaction(spark, table)
-    if validate_ids:
-        try:
-            mdf = spark.table(table + "_meta")
-            # pre-kind / pre-fingerprint meta layouts: default the missing
-            # columns (lenient append carve-out) rather than letting the
-            # KeyError fall into the except below and silently SKIP the
-            # whole monotonicity check — which is what happened before
-            # this defaulting existed
-            if "kind" not in mdf.columns:
-                mdf = mdf.withColumn("kind", F.lit("append"))
-            if "fingerprint" not in mdf.columns:
-                mdf = mdf.withColumn("fingerprint", F.lit(None).cast("long"))
-            meta = [
-                (r["min_doc_id"], r["max_doc_id"], r["kind"], r["fingerprint"])
-                for r in mdf.collect()
-            ]
-        except Exception:
-            meta = []
-        _validate_gram_ids(spark, new_docs, id_col, text_col, meta)
-    scan = spark.table(table)
-    if bloom_fpp is not None:
-        # the prune drops the bucketed scan's output partitioning (semi
-        # join output keeps it, the Arrow probe does not), so the
-        # min-combine may re-shuffle — but only the ~O(batch) surviving
-        # rows, the cheaper trade once corpus ≫ batch. ``staged`` is
-        # moot on the pruned frame (nothing left worth un-fusing).
-        return dedup_ops.substring_dedup(
-            new_docs,
-            id_col,
-            text_col,
-            min_tokens=min_tokens,
-            max_doc_tokens=max_doc_tokens,
-            index_raw=scan,
-            index_prune_fpp=bloom_fpp,
-        )
-    if staged:
-        # explicit partition count, chosen != the table's bucket count:
-        # a count-less repartition("gram_hash") is elided by AQE's
-        # redundant-repartition rule (the bucketed scan already satisfies
-        # the clustering), silently restoring the fused plan (measured —
-        # the final adaptive plan kept SelectedBucketsCount and dropped
-        # the Exchange). A mismatched explicit count cannot be elided.
-        n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        nb = _table_n_buckets(spark, table) or 0
-        scan = scan.repartition(
-            n_shuf if n_shuf != nb else 2 * n_shuf, "gram_hash"
-        )
-    idx = (
-        scan
-        .groupBy("gram_hash")
-        .agg(F.min("first_key").alias("first_key"))
-    )
-    return dedup_ops.substring_dedup(
-        new_docs,
-        id_col,
-        text_col,
-        min_tokens=min_tokens,
-        max_doc_tokens=max_doc_tokens,
-        index_firsts=idx,
-    )
-
-
-def _table_n_buckets(spark: SparkSession, table: str) -> int | None:
-    """The table's bucket count from the catalog (DESCRIBE EXTENDED), or
-    None when unreadable. Compactors use this so a rewrite keeps the spec
-    the table was built with — a caller-supplied default would silently
-    degrade a thousands-of-buckets production index to 32 and break the
-    next append with a spec-mismatch error."""
-    try:
-        for row in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-            if str(row[0]).strip().lower() == "num buckets":
-                return int(str(row[1]).strip())
-    except Exception:
-        return None
-    return None
-
-
-def recover_interrupted_table_compaction(
-    spark: SparkSession, table: str
-) -> bool:
-    """Heal a metastore-swap compaction that died between DROP and
-    RENAME: the live table is gone but ``<table>_compact_tmp`` holds the
-    full compacted data — rename it into place. Called automatically by
-    every bucketed compactor and reader; the table-layout analogue of
-    :func:`recover_interrupted_compaction`. Returns True on recovery."""
-    tmp = table + "_compact_tmp"
-    if not spark.catalog.tableExists(table) and spark.catalog.tableExists(tmp):
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-        return True
-    return False
-
-
-def _table_lease(
-    spark: SparkSession, table: str, role: str, wait_s: float | None = None
-):
-    """The bucketed-table analogue of the dir layout's :func:`index_lease`
-    (VERDICT r10 #5): the metastore swap (DROP + RENAME) is atomic for
-    READERS (plus :func:`recover_interrupted_table_compaction` for the
-    crash window), but an APPEND landing between a compactor's read and
-    its DROP would be silently dropped with the old table — a lost-gram
-    corruption, not an error. On a local warehouse the same lock-file
-    lease serialises them, keyed as a SIBLING of the table's warehouse
-    dir (stable across the swap — the tmp table renames INTO this name).
-    On an object-store warehouse (``://``) the lease no-ops as always:
-    there, writer exclusion must come from the lake's transactional
-    table format (Delta/Iceberg commit protocol), which this plain
-    saveAsTable layout deliberately does not reimplement.
-
-    The lock path is derived from the NORMALISED identifier (ADVICE
-    r11 #3): catalog/database qualifiers are resolved so ``grams``,
-    ``default.grams`` and ``spark_catalog.default.grams`` all key the
-    SAME lock, and a non-default database keys ``wh/<db>.db/<tbl>`` —
-    beside the real table dir. Tables with a custom LOCATION are still
-    keyed off the warehouse-derived path: what a lock needs is that
-    every participant computes the SAME key, and the warehouse key is
-    the only one stable across the DROP+RENAME swap window (resolving
-    the live location mid-swap would fail or diverge).
-
-    Upgrade note (r13): pre-r12 code keyed the lock on the RAW
-    spelling (``wh/<identifier>``), and r12 co-acquired that legacy key
-    alongside the normalised one for one release of rolling-upgrade
-    coexistence. Every writer now keys the normalised path only — but a
-    mixed-version window is DETECTED, not just documented (ADVICE r13):
-    when the raw-spelling lock file exists with a LIVE holder pid, the
-    acquire raises RuntimeError (a pre-r12 writer is mid-write on this
-    table right now and the normalised lock cannot exclude it — carrying
-    on risks concurrent append/compact corruption); a dead-holder legacy
-    lock only warns (stale crash debris from the old fleet)."""
-    lock_path = _table_lock_path(spark, table)
-    legacy = os.path.join(_warehouse_dir(spark), table)
-    if os.path.abspath(legacy) != os.path.abspath(lock_path):
-        holder = _lock_holder(legacy + ".lock")
-        if holder is not None:
-            pid, alive = holder
-            if alive:
-                raise RuntimeError(
-                    f"legacy (pre-r12) lock {legacy + '.lock'!r} is HELD by "
-                    f"live pid {pid}: an old writer keyed on the raw table "
-                    f"spelling is active on {table!r} and the normalised "
-                    "lock cannot exclude it — upgrade or stop that writer "
-                    "before touching this table. (Liveness is probed "
-                    "HOST-LOCALLY: on a shared filesystem this pid may "
-                    "belong to an unrelated local process while the real "
-                    "holder ran elsewhere — check before removing.)"
-                )
-            import warnings
-
-            warnings.warn(
-                f"stale legacy (pre-r12) lock {legacy + '.lock'!r} found "
-                f"(holder pid {pid} is dead): this table was written by an "
-                "old fleet — remove the file once no pre-r12 writers remain."
-                " (Dead-by-local-probe: on a shared filesystem a live "
-                "pre-r12 writer on ANOTHER machine looks identical — "
-                "confirm fleet-wide before trusting this verdict.)",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-    return index_lease(lock_path, role, wait_s=wait_s)
-
-
-def _lock_holder(lock_file: str) -> tuple[int | None, bool] | None:
-    """(holder pid, alive?) for an existing lock file, None when the
-    file is absent. An unreadable/contentless lock reports (None,
-    False) — old layouts wrote the payload non-atomically.
-
-    HOST-LOCAL limitation (ADVICE r14): ``os.kill(pid, 0)`` can only
-    probe pids of THIS machine. A payload that names a different
-    hostname (written by a post-r14 writer on another machine sharing
-    the filesystem) therefore reports alive=True unconditionally — the
-    conservative reading, since a live foreign writer misread as dead
-    would defeat the mixed-version detection in :func:`_table_lease`.
-    Payloads WITHOUT a host field (pre-r15 writers) are probed locally
-    as before; on a shared filesystem that probe can misread a live
-    foreign pre-r15 writer as dead (ESRCH) or an unrelated local pid
-    as the holder — callers' messages note this residual ambiguity."""
-    try:
-        with open(lock_file) as fh:
-            payload = json.load(fh)
-        pid = int(payload.get("pid"))
-    except FileNotFoundError:
-        return None
-    except Exception:
-        return (None, False)
-    host = payload.get("host")
-    if host is not None and host != _HOSTNAME:
-        return (pid, True)  # foreign host: cannot probe — assume live
-    try:
-        os.kill(pid, 0)
-        return (pid, True)
-    except ProcessLookupError:
-        return (pid, False)
-    except PermissionError:
-        return (pid, True)
-    except Exception:
-        return (pid, False)
-
-
-def _split_identifier(table: str) -> list[str]:
-    """Split a (possibly qualified) identifier on dots that are OUTSIDE
-    backtick quoting — ``` `my.table` ``` is ONE part named
-    ``my.table``, not a db/table pair (review r12). A doubled backtick
-    inside quotes is the SQL escape for a literal one."""
-    parts: list[str] = []
-    buf: list[str] = []
-    quoted = False
-    i, n = 0, len(table)
-    while i < n:
-        c = table[i]
-        if c == "`":
-            if quoted and i + 1 < n and table[i + 1] == "`":
-                buf.append("`")
-                i += 2
-                continue
-            quoted = not quoted
-        elif c == "." and not quoted:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(c)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip().lower() for p in parts if p.strip()]
-
-
-def _warehouse_dir(spark: SparkSession) -> str:
-    try:
-        wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    except Exception:
-        wh = "spark-warehouse"
-    if wh.startswith("file:"):
-        wh = wh[len("file:"):]
-    return wh
-
-
-def _table_lock_path(spark: SparkSession, table: str) -> str:
-    """Deterministic lock-file key for a (possibly qualified) table
-    identifier — see :func:`_table_lease`. Metastore identifiers are
-    case-insensitive and the warehouse dirs are lowercase."""
-    wh = _warehouse_dir(spark)
-    parts = _split_identifier(table)
-    tbl = parts[-1] if parts else table.lower()
-    if len(parts) >= 2:
-        db = parts[-2]  # a 3-part name's head is the catalog — ignored
-    else:
-        try:
-            db = (spark.catalog.currentDatabase() or "default").lower()
-        except Exception:
-            db = "default"
-    if db == "default":
-        return os.path.join(wh, tbl)
-    return os.path.join(wh, db + ".db", tbl)
-
-
-def _table_data_bytes(spark: SparkSession, table: str) -> int:
-    """On-disk bytes of a catalog table's location (0 = unknown; the
-    Catalyst estimate is useless — an un-ANALYZEd saveAsTable reports
-    defaultSizeInBytes). Local filesystems only; elsewhere returns 0 so
-    byte-gated callers degrade to always-compact."""
-    try:
-        loc = None
-        for row in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-            if str(row[0]).strip().lower() == "location":
-                loc = str(row[1]).strip()
-                break
-        if not loc:
-            return 0
-        if loc.startswith("file:"):
-            loc = loc[len("file:"):]
-        if "://" in loc:
-            return 0
-        return _dir_bytes(loc)
-    except Exception:
-        return 0
-
-
-def _table_clean_bytes(spark: SparkSession, table: str) -> int:
-    """The table's byte size recorded at its last compaction (a table
-    property, so it survives the metastore swap); 0 = never recorded."""
-    try:
-        rows = spark.sql(
-            f"SHOW TBLPROPERTIES {table}('spark_graft.clean_bytes')"
-        ).collect()
-        return int(rows[0]["value"])
-    except Exception:
-        return 0
-
-
-def _compact_bucketed(
-    spark: SparkSession,
-    table: str,
-    bucket_col: str,
-    agg_fn,
-    n_buckets: int | None,
-    dirty_threshold: float = 0.0,
-    wait_s: float | None = None,
-) -> dict:
-    """Shared bucketed-compaction protocol: heal any interrupted prior
-    swap, rewrite ``agg_fn(table)`` into a fresh bucketed tmp table with
-    the SAME bucket spec (read from the catalog unless explicitly
-    overridden), then swap through the metastore (DROP + RENAME — the
-    flip a lake table format makes atomic; the crash window between the
-    two statements is healed by the recovery above, so the data always
-    exists under ``table`` or ``table_compact_tmp``). Bucket-local:
-    every key's rows share a bucket, so the aggregation itself needs no
-    exchange.
-
-    ``dirty_threshold`` > 0 gates the rewrite on the table's raw-append
-    fraction (bytes now vs the ``spark_graft.clean_bytes`` property
-    stamped at the last compaction): a metastore swap cannot be scoped
-    to sub-table units the way the ranged dir layout is, but a
-    scheduled compactor (the streaming sink's ``compact_every`` hook)
-    must still not pay O(table) when barely-dirty — the r10 dirty-cost
-    principle applied at table granularity."""
-    from ..sources.lake import write_bucketed
-
-    # the lease spans read -> swap: an append landing between the
-    # compactor's table read and its DROP would otherwise be silently
-    # dropped with the old table (VERDICT r10 #5)
-    with _table_lease(spark, table, "compact", wait_s=wait_s):
-        recover_interrupted_table_compaction(spark, table)
-        if dirty_threshold > 0:
-            cur = _table_data_bytes(spark, table)
-            clean = _table_clean_bytes(spark, table)
-            if cur and clean and (cur - clean) / cur <= dirty_threshold:
-                return {
-                    "skipped": True,
-                    "bytes_total": cur,
-                    "bytes_clean": clean,
-                    "dirty_threshold": dirty_threshold,
-                }
-        resolved = n_buckets or _table_n_buckets(spark, table) or 32
-        before = spark.table(table)
-        rows_before = before.count()
-        tmp = table + "_compact_tmp"
-        cols = (
-            [bucket_col] if isinstance(bucket_col, str) else list(bucket_col)
-        )
-        write_bucketed(
-            agg_fn(before), tmp, cols, n_buckets=resolved,
-            sort_cols=cols, mode="overwrite",
-        )
-        spark.sql(f"DROP TABLE {table}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-        new_bytes = _table_data_bytes(spark, table)
-        if new_bytes:
-            spark.sql(
-                f"ALTER TABLE {table} SET TBLPROPERTIES "
-                f"('spark_graft.clean_bytes'='{new_bytes}')"
-            )
-        return {
-            "rows_before": rows_before,
-            "rows_after": spark.table(table).count(),
-        }
-
-
-def compact_gram_index_bucketed(
-    spark: SparkSession,
-    table: str,
-    n_buckets: int | None = None,
-    dirty_threshold: float = 0.0,
-    wait_s: float | None = None,
-) -> dict:
-    """Compact the bucketed gram index: min(first_key) per gram rewritten
-    into a fresh bucketed table that replaces the old one through the
-    metastore (see :func:`_compact_bucketed` for the swap/recovery
-    protocol; the bucket spec is read from the catalog so the rewrite
-    cannot silently change it). The ``<table>_meta`` watermark log is
-    untouched."""
-    return _compact_bucketed(
-        spark,
-        table,
-        "gram_hash",
-        lambda df: df.groupBy("gram_hash").agg(
-            F.min("first_key").alias("first_key")
-        ),
-        n_buckets,
-        dirty_threshold,
-        wait_s=wait_s,
-    )
-
-
-def build_dedup_index_bucketed(
-    docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_mode: str = "fast",
-    n_buckets: int = 32,
-) -> dict:
-    """Bucketed-table twin of :func:`build_dedup_index`: the exact table
-    bucketed by content_hash (``<prefix>_exact``), the band table by
-    (band, bh) (``<prefix>_bands``) — the band-table co-location the
-    module header calls for, so every later batch's exact semi-join and
-    LSH candidate join read the corpus-sized index without exchanging
-    it."""
-    from ..sources.lake import write_bucketed
-
-    write_bucketed(
-        _exact_table(docs, id_col, text_col),
-        table_prefix + "_exact", ["content_hash"],
-        n_buckets=n_buckets, sort_cols=["content_hash"], mode="overwrite",
-    )
-    write_bucketed(
-        _band_table(docs, id_col, text_col, n, num_hashes, bands, hash_mode),
-        table_prefix + "_bands", ["band", "bh"],
-        n_buckets=n_buckets, sort_cols=["band", "bh"], mode="overwrite",
-    )
-    spark = docs.sparkSession
-    return {
-        "exact_rows": spark.table(table_prefix + "_exact").count(),
-        "band_rows": spark.table(table_prefix + "_bands").count(),
-    }
-
-
-def match_against_index_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_mode: str = "fast",
-    min_band_matches: int = 1,
-    min_est_jaccard: float | None = 0.5,
-    max_bucket: int | None = 100_000,
-    cap_stats: dict | None = None,
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """Bucketed-table twin of :func:`match_against_index` — identical
-    classification, but both batch-vs-index joins consume the bucketed
-    scans' hash distribution instead of shuffling the index per batch
-    (``bloom_fpp``: see :func:`match_against_index`; the r14 regime
-    prune stays OFF here — a bucketed scan never shuffles index-side,
-    so there is no broadcast-threshold regime to rescue)."""
-    return _match_frames(
-        *_batch_frames(
-            new_docs, id_col, text_col, n, num_hashes, bands, hash_mode
-        ),
-        spark.table(table_prefix + "_exact"),
-        spark.table(table_prefix + "_bands"),
-        num_hashes, min_band_matches, min_est_jaccard, max_bucket,
-        cap_stats, bloom_fpp, index_prune="off",
-    )
-
-
-def append_exact_to_index_bucketed(
-    accepted_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 32,
-) -> None:
-    """Exact-table leg of :func:`append_to_index_bucketed` — separable
-    for per-leg idempotent retries (see :func:`append_exact_to_index`)."""
-    _append_index_rows(
-        _exact_table(accepted_docs, id_col, text_col), "exact",
-        table_prefix=table_prefix, n_buckets=n_buckets,
-    )
-
-
-def append_bands_to_index_bucketed(
-    accepted_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_mode: str = "fast",
-    n_buckets: int = 32,
-) -> None:
-    """Bands-table leg of :func:`append_to_index_bucketed`."""
-    _append_index_rows(
-        _band_table(
-            accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
-        ),
-        "bands",
-        table_prefix=table_prefix,
-        n_buckets=n_buckets,
-    )
-
-
-def append_to_index_bucketed(
-    accepted_docs: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    hash_mode: str = "fast",
-    n_buckets: int = 32,
-) -> None:
-    """Append accepted docs' rows into the bucketed layout (spec must
-    match the build — Spark rejects drift loudly)."""
-    append_exact_to_index_bucketed(
-        accepted_docs, table_prefix, id_col, text_col, n_buckets=n_buckets
-    )
-    append_bands_to_index_bucketed(
-        accepted_docs, table_prefix, id_col, text_col,
-        n=n, num_hashes=num_hashes, bands=bands, hash_mode=hash_mode,
-        n_buckets=n_buckets,
-    )
-
-
-def build_chunk_index_bucketed(
-    docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 10,
-    n_buckets: int = 32,
-) -> int:
-    """Bucketed-table twin of :func:`build_chunk_index` (bucketBy
-    chunk_hash): the per-batch membership join reads the corpus-sized
-    chunk set without exchanging it."""
-    from ..sources.lake import write_bucketed
-
-    write_bucketed(
-        _chunk_table(docs, id_col, text_col, chunk_tokens),
-        table, ["chunk_hash"],
-        n_buckets=n_buckets, sort_cols=["chunk_hash"], mode="overwrite",
-    )
-    return docs.sparkSession.table(table).count()
-
-
-def chunk_stats_against_index_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 10,
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """Bucketed twin of :func:`chunk_stats_against_index` — identical
-    output; the distinct + left join consume the bucketed scan's hash
-    distribution instead of shuffling the index per batch.  With
-    ``bloom_fpp`` the core Bloom-prunes the raw scan first (the pruned
-    distinct re-shuffles, but only ~O(batch) surviving hashes)."""
-    recover_interrupted_table_compaction(spark, table)
-    raw = spark.table(table).select(F.col("chunk_hash").alias("__h"))
-    if bloom_fpp is not None:
-        return _chunk_stats_core(
-            new_docs, raw, id_col, text_col, chunk_tokens, bloom_fpp
-        )
-    indexed = raw.distinct().withColumn("__indexed", F.lit(True))
-    return _chunk_stats_core(new_docs, indexed, id_col, text_col, chunk_tokens)
-
-
-def append_to_chunk_index_bucketed(
-    accepted_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 10,
-    n_buckets: int = 32,
-) -> None:
-    """Append accepted docs' distinct chunk hashes into the bucketed
-    layout (distinct within the append only — reads distinct again, and
-    :func:`compact_chunk_index_bucketed` makes it durable). Leased
-    against a concurrent bucketed compaction (VERDICT r10 #5)."""
-    from ..sources.lake import write_bucketed
-
-    with _table_lease(accepted_docs.sparkSession, table, "append"):
-        write_bucketed(
-            _chunk_table(accepted_docs, id_col, text_col, chunk_tokens),
-            table, ["chunk_hash"],
-            n_buckets=n_buckets, sort_cols=["chunk_hash"], mode="append",
-        )
-
-
-def compact_chunk_index_bucketed(
-    spark: SparkSession,
-    table: str,
-    n_buckets: int | None = None,
-    dirty_threshold: float = 0.0,
-    wait_s: float | None = None,
-) -> dict:
-    """Distinct-rewrite of the bucketed chunk table via the shared
-    metastore-swap protocol (:func:`_compact_bucketed` — catalog-derived
-    bucket spec, interrupted-swap recovery)."""
-    return _compact_bucketed(
-        spark, table, "chunk_hash", lambda df: df.distinct(), n_buckets,
-        dirty_threshold, wait_s=wait_s,
-    )
-
-
-def build_line_index_bucketed(
-    docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-    min_line_chars: int = 1,
-    n_buckets: int = 32,
-) -> int:
-    """Bucketed-table twin of :func:`build_line_index` (bucketBy
-    line_hash): the per-batch count join reads the corpus line counts
-    without exchanging them."""
-    from ..sources.lake import write_bucketed
-
-    write_bucketed(
-        _line_count_table(docs, id_col, text_col, delimiter, min_line_chars),
-        table, ["line_hash"],
-        n_buckets=n_buckets, sort_cols=["line_hash"], mode="overwrite",
-    )
-    return docs.sparkSession.table(table).count()
-
-
-def clean_against_line_index_bucketed(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    min_line_chars: int = 1,
-    delimiter: str = "\n",
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """Bucketed twin of :func:`clean_against_line_index` — identical
-    output; the per-hash count sum runs on the bucketed scan's own
-    distribution (Bloom-pruned first when ``bloom_fpp`` is set — the
-    pruned sum re-shuffles, but only ~O(batch) surviving hashes)."""
-    recover_interrupted_table_compaction(spark, table)
-    scan = spark.table(table)
-    if bloom_fpp is not None:
-        from .memguard import plan_size_estimate
-
-        # batch-scan byte hint, same rationale as the dir-layout twin
-        scan = _bloom_pruned(
-            scan,
-            ["line_hash"],
-            _line_count_table(
-                new_docs, id_col, text_col, delimiter, min_line_chars
-            ),
-            bloom_fpp,
-            size_hint=plan_size_estimate(new_docs),
-        )
-    idx = (
-        scan
-        .groupBy("line_hash")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
-    return dedup_ops.line_dedup_frame(
-        new_docs,
-        id_col,
-        text_col,
-        min_docs=min_docs,
-        min_line_chars=min_line_chars,
-        delimiter=delimiter,
-        index_counts=idx,
-    )
-
-
-def append_to_line_index_bucketed(
-    accepted_docs: DataFrame,
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delimiter: str = "\n",
-    min_line_chars: int = 1,
-    n_buckets: int = 32,
-) -> None:
-    """Append this batch's per-line distinct-doc counts (doc-disjoint
-    batches sum to true corpus counts on read;
-    :func:`compact_line_index_bucketed` makes the sum durable). Leased
-    against a concurrent bucketed compaction (VERDICT r10 #5)."""
-    from ..sources.lake import write_bucketed
-
-    with _table_lease(accepted_docs.sparkSession, table, "append"):
-        write_bucketed(
-            _line_count_table(
-                accepted_docs, id_col, text_col, delimiter, min_line_chars
-            ),
-            table, ["line_hash"],
-            n_buckets=n_buckets, sort_cols=["line_hash"], mode="append",
-        )
-
-
-def compact_line_index_bucketed(
-    spark: SparkSession,
-    table: str,
-    n_buckets: int | None = None,
-    dirty_threshold: float = 0.0,
-    wait_s: float | None = None,
-) -> dict:
-    """Sum-rewrite of the bucketed line-count table via the shared
-    metastore-swap protocol (:func:`_compact_bucketed`)."""
-    return _compact_bucketed(
-        spark,
-        table,
-        "line_hash",
-        lambda df: df.groupBy("line_hash").agg(F.sum("n_docs").alias("n_docs")),
-        n_buckets,
-        dirty_threshold,
-        wait_s=wait_s,
-    )
-
-
-def compact_match_index_bucketed(
-    spark: SparkSession,
-    table_prefix: str,
-    n_buckets: int | None = None,
-    dirty_threshold: float = 0.0,
-    wait_s: float | None = None,
-) -> dict:
-    """Identity rewrite of BOTH legs of the bucketed match index
-    (``<prefix>_exact`` bucketed by content_hash, ``<prefix>_bands`` by
-    (band, bh)) through the shared metastore-swap protocol — the
-    bucketed twin of :func:`compact_match_index`. No aggregation
-    applies (rows are unique across doc-disjoint appends); the rewrite
-    exists to collapse per-micro-batch append FILE SETS back to one
-    file set per bucket. BLOOM_r15 measured why: each bucketed append
-    lands ~n_buckets files per leg, so a 1000-doc-batch stream's
-    classifier scan degrades linearly in BATCH COUNT (33 s/batch after
-    100 batches at a 150k-doc index) until compaction resets it.
-    ``dirty_threshold`` gates on the raw-append byte fraction exactly
-    like the other bucketed compactors, so a scheduled run is cheap
-    when the table is mostly clean.
-
-    LEASE PROTOCOL: both legs rewrite under the EXACT table's lease —
-    the one lease ``match_dedup_batch`` holds across its whole span
-    (see :func:`compact_match_index` for the per-leg hole this
-    closes); the inner per-table acquisitions are same-thread
-    re-entrant no-ops for exact and harmless extras for bands."""
-    out: dict = {}
-    with _table_lease(spark, f"{table_prefix}_exact", "compact",
-                      wait_s=wait_s):
-        for leg, cols in (
-            ("exact", "content_hash"), ("bands", ["band", "bh"])
-        ):
-            table = f"{table_prefix}_{leg}"
-            if not spark.catalog.tableExists(table):
-                continue
-            out[leg] = _compact_bucketed(
-                spark,
-                table,
-                cols,
-                lambda df: df,
-                n_buckets,
-                dirty_threshold,
-                wait_s=wait_s,
-            )
     return out

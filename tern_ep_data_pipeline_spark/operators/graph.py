@@ -334,7 +334,13 @@ def dedup_clusters(
     declares no ``corpus_rows`` keeps the loud ``max_edges`` guard as the
     last-resort backstop against silently building a huge single-task
     table.
+
+    Null edges: a pair with a null endpoint carries no cluster
+    information and is dropped before routing, so every route returns
+    the same rows (neither endpoint of a null pair appears unless a
+    non-null pair names it).
     """
+    pairs = pairs.where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
     if lazy_small and corpus_rows is not None:
         if corpus_rows > lazy_rows_cap:
             lazy_small = False  # big graph: distributed loop, not one task
@@ -378,18 +384,6 @@ def dedup_clusters(
 
         n = 0
         for pdf in batches:
-            # drop null edges up front (ADVICE r15): a null id would
-            # TypeError inside the comparisons below, and nulls carry no
-            # cluster information (the expr-path equi-joins drop them too)
-            pdf = pdf.dropna(subset=["a", "b"])
-            for c in ("a", "b"):
-                # a batch that HELD nulls arrives float64 (pandas'
-                # nullable-int coercion); restore exact ints for the
-                # union-find's ordering (ids <= 2^53 survive the float
-                # round-trip exactly — null edges are out-of-contract
-                # input, tolerated, not precision-guaranteed)
-                if t in _INT_WIDTH and pdf[c].dtype.kind == "f":
-                    pdf[c] = pdf[c].astype("int64")
             n += len(pdf)
             if max_edges is not None and n > max_edges:
                 raise RuntimeError(
@@ -405,10 +399,8 @@ def dedup_clusters(
                     if rb < ra:
                         ra, rb = rb, ra
                     parent[rb] = ra
-        # build from the accumulated PYTHON values (exact ints — never a
-        # pandas dtype carried from a batch, which coerces to float64 when
-        # any batch held nulls and corrupts large ids; ADVICE r15): Arrow
-        # casts to the declared integral schema exactly
+        # build from the accumulated Python values: Arrow casts them to
+        # the declared integral schema exactly
         yield pd.DataFrame(
             {
                 "node": list(parent),

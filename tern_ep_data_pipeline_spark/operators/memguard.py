@@ -159,30 +159,6 @@ SPAN_RESIDENT_PER_BATCH_BYTE = 80
 SPAN_RESIDENT_PER_INDEX_BYTE = 1.0
 SPAN_RESIDENT_PER_CORE = 16 << 20
 
-#: Index coefficient for the BUCKETED-table layout's fused plan. The
-#: zero-exchange min-combine (``clean_against_gram_index_bucketed``)
-#: fuses index scan + hash aggregate + first-key join into ONE stage, so
-#: peak per-task memory concentrates instead of spreading across
-#: exchange-separated, independently-spillable stages — the dir layout's
-#: 1.0x is optimistic there. Calibrated on THREE observed 3g/32 cells,
-#: all at the r8 bucketed runs' true batch size (~7.1 MiB text/batch —
-#: 148.8 MB sf10 corpus over 20 batches; an earlier 2.25 value was
-#: solved against r7's 14.9 MiB batches by mistake, which inflated the
-#: batch term by ~570 MiB and pushed the computed fire point to a
-#: 752 MiB index, past BOTH observed OOMs — the guard never derated and
-#: the JVM died raw at batch 14): (a) one of the SPILL_r08 run-6/7 pair
-#: heap-OOM'd processing the batch whose guard-visible index was
-#: 531 MiB while its twin completed — a stochastic cell must classify
-#: as FAILING; (b) the guarded derate probe OOM'd at a 574 MiB start
-#: index after completing 531 MiB fused; (c) both runs were healthy
-#: through a 488 MiB index. Classifying (a) needs c >= 3.19; 3.25 puts
-#: the 3g/32 fire point at a ~521 MiB index for 7.1 MiB batches —
-#: between the healthy band and the stochastic-OOM cell. When the fused
-#: model fires but the dir model passes, the streaming guard DERATES to
-#: the staged plan (index-side exchange restored) instead of refusing —
-#: measured passing to 845 MiB raw index at 3g/32 (SPILL_r08 runs 0-4).
-SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED = 3.25
-
 
 #: Gram-index BUILD resident model (r12 verdict #2 — the one remaining
 #: hard-OOM path). A corpus-wide ``build_gram_index`` explodes every
@@ -202,18 +178,6 @@ SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED = 3.25
 #: with zero spill), and leaves any 8 GiB build single-pass.
 GRAM_BUILD_RESIDENT_PER_TEXT_BYTE = 20.0
 
-#: Bucketed-layout build coefficient — higher than the dir layout's
-#: for the same reason the span model's bucketed index coefficient is
-#: (3.25x vs 1.0x): the bucketed write sorts within buckets, stacking
-#: sorter state on top of the aggregate and writer buffers in ONE
-#: stage. r13 2 GiB/32 calibration cells: the dir-sized 3-pass split
-#: (47 MB text/pass) killed the SparkContext mid-build, the 4-pass
-#: split (35 MB/pass) completed in 97.4 s with the distinct-gram count
-#: byte-equal to every other build — so the coefficient must classify
-#: 47 MB/pass as over a 1228 MB budget (c > 26) and 35 MB/pass as
-#: under (c < 34.6); 28 also keeps the 42.6 MB sf3 corpus single-pass.
-GRAM_BUILD_RESIDENT_PER_TEXT_BYTE_BUCKETED = 28.0
-
 #: Upper bound on build passes — past this, the corpus:executor-memory
 #: ratio is a sizing error, not something to paper over with thousands
 #: of sequential appends.
@@ -221,7 +185,7 @@ GRAM_BUILD_MAX_PASSES = 64
 
 
 def gram_build_passes(
-    spark: SparkSession, text_bytes: int | None, bucketed: bool = False
+    spark: SparkSession, text_bytes: int | None
 ) -> tuple[int, str | None]:
     """Plan-time pass count for a corpus gram-index build:
     ``(passes, floor_msg)``. ``passes`` = how many sequential id-range
@@ -263,12 +227,9 @@ def gram_build_passes(
         )
     import math
 
-    coef = (
-        GRAM_BUILD_RESIDENT_PER_TEXT_BYTE_BUCKETED
-        if bucketed
-        else GRAM_BUILD_RESIDENT_PER_TEXT_BYTE
+    passes = max(
+        1, math.ceil(GRAM_BUILD_RESIDENT_PER_TEXT_BYTE * text_bytes / budget)
     )
-    passes = max(1, math.ceil(coef * text_bytes / budget))
     if passes > GRAM_BUILD_MAX_PASSES:
         return passes, (
             "gram-index build sizing invariant violated: "
@@ -276,7 +237,7 @@ def gram_build_passes(
             f"{passes} sequential build passes to fit a "
             f"{heap / 2**30:.1f} GiB executor (budget "
             f"{budget / 2**20:.0f} MiB/pass at "
-            f"{coef:g} resident bytes per "
+            f"{GRAM_BUILD_RESIDENT_PER_TEXT_BYTE:g} resident bytes per "
             f"text byte) — past the {GRAM_BUILD_MAX_PASSES}-pass bound "
             "this is an executor sizing error. Raise executor memory "
             "or build from a pre-partitioned corpus."
@@ -304,7 +265,6 @@ def incremental_span_floor_message(
     spark: SparkSession,
     batch_bytes: int | None,
     index_bytes: int,
-    bucketed: bool = False,
 ) -> str | None:
     """Plan-time sizing check for the INCREMENTAL ExactSubstr path
     (``streaming.curation.span_dedup_batch``): the batch operator's
@@ -313,12 +273,8 @@ def incremental_span_floor_message(
     with the micro-batch plus the growing gram index — at 2g/32 it dies
     with a RAW executor heap OOM in the per-doc coverage-window stage
     (SPILL_r07, batch 1) instead of a classified error.
-    ``batch_bytes`` = raw text bytes of the micro-batch. ``bucketed``
-    selects the fused zero-exchange plan's index coefficient
-    (:data:`SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED`) — the bucketed
-    layout concentrates the index working set in one stage, so its
-    floor sits lower than the dir layout's at the same sizes. Returns
-    the violation message naming the invariant, or None when sized OK /
+    ``batch_bytes`` = raw text bytes of the micro-batch. Returns the
+    violation message naming the invariant, or None when sized OK /
     undecidable (unknown batch size; cluster mode without executor
     confs).
     """
@@ -338,27 +294,21 @@ def incremental_span_floor_message(
         heap = _parse_executor_memory(exec_mem)
         cores = int(exec_cores)
     avail = max(0, heap - _JVM_RESERVED)
-    per_index = (
-        SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED
-        if bucketed
-        else SPAN_RESIDENT_PER_INDEX_BYTE
-    )
     resident = int(
         SPAN_RESIDENT_PER_BATCH_BYTE * batch_bytes
-        + per_index * index_bytes
+        + SPAN_RESIDENT_PER_INDEX_BYTE * index_bytes
         + SPAN_RESIDENT_PER_CORE * cores
     )
     if resident <= avail:
         return None
     need = resident + _JVM_RESERVED
-    layout = "bucketed fused-plan" if bucketed else "parquet-dir"
     return (
         "incremental span-dedup sizing invariant violated: estimated "
         f"resident working set ~{resident / 2**20:.0f} MiB "
         f"(~{SPAN_RESIDENT_PER_BATCH_BYTE}x the {batch_bytes / 2**20:.1f} MiB "
         f"of micro-batch text for the per-document coverage windows + "
-        f"{per_index:g}x the {index_bytes / 2**20:.0f} MiB "
-        f"gram index [{layout}] + {SPAN_RESIDENT_PER_CORE >> 20} MiB x "
+        f"{SPAN_RESIDENT_PER_INDEX_BYTE:g}x the {index_bytes / 2**20:.0f} MiB "
+        f"gram index + {SPAN_RESIDENT_PER_CORE >> 20} MiB x "
         f"{cores} cores) "
         f"exceeds the ~{avail / 2**20:.0f} MiB usable heap of a "
         f"{heap / 2**30:.1f} GiB executor. Below this floor the JVM "

@@ -183,7 +183,7 @@ def publish_artifact_version(spark, base: str, writer, keep: int = 2) -> int:
     # through index_lease's "://" no-op (two local publishers would
     # race to the same version number); true object-store schemes
     # still no-op — there, refresh cadence is one scheduled task per
-    # artifact by construction (the bucketed-table layout's stance)
+    # artifact by construction
     fs, jvm = _fs(spark, base)
     juri = jvm.org.apache.hadoop.fs.Path(base).toUri()
     scheme = juri.getScheme()

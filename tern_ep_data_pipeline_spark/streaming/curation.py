@@ -250,8 +250,6 @@ def match_dedup_batch(
     min_band_matches: int = 1,
     min_est_jaccard: float | None = 0.5,
     max_bucket: int | None = 100_000,
-    index_table: str | None = None,
-    n_buckets: int = 32,
 ) -> DataFrame:
     """One micro-batch of incremental exact+near (MinHash) dedup against
     the persistent match index (r13) — the bounded-state streaming form
@@ -298,50 +296,34 @@ def match_dedup_batch(
     per batch, and the appends neither re-derive them nor read the batch
     source again.
 
-    The whole span runs under the index lease — the exact table's dir
-    (dir layout) or the prefix's ``_table_lease`` (bucketed layout,
-    selected by ``index_table`` = the table prefix, like the span
-    sink's option) — serialising against maintenance either way.
+    The whole span runs under the lease of the index's exact table dir,
+    serialising against maintenance.
     """
     from ..operators.dedup_index import (
         _append_index_rows,
         _batch_frames,
         _match_frames,
-        _table_lease,
         build_dedup_index,
-        build_dedup_index_bucketed,
         index_lease,
     )
 
     spark = batch.sparkSession
-    if index_table is not None:
-        lease = _table_lease(spark, f"{index_table}_exact", "batch")
-    elif "://" not in index_path:
+    if "://" not in index_path:
         lease = index_lease(f"{index_path}/exact", "batch")
     else:
         lease = contextlib.nullcontext()
     with lease:
-        bootstrap = batch.limit(0).select(id_col, text_col)
-        if index_table is not None:
-            if not spark.catalog.tableExists(f"{index_table}_exact"):
-                build_dedup_index_bucketed(
-                    bootstrap, index_table, id_col, text_col,
-                    n=n, num_hashes=num_hashes, bands=bands,
-                    hash_mode=hash_mode, n_buckets=n_buckets,
-                )
-            ex_idx = spark.table(f"{index_table}_exact")
-            bd_idx = spark.table(f"{index_table}_bands")
-        else:
-            if not _dir_exists(spark, f"{index_path}/exact"):
-                # bootstrap: an EMPTY index makes batch 0 a pure
-                # intra-batch classification through the same code path
-                build_dedup_index(
-                    bootstrap, index_path, id_col, text_col,
-                    n=n, num_hashes=num_hashes, bands=bands,
-                    hash_mode=hash_mode,
-                )
-            ex_idx = spark.read.parquet(f"{index_path}/exact")
-            bd_idx = spark.read.parquet(f"{index_path}/bands")
+        if not _dir_exists(spark, f"{index_path}/exact"):
+            # bootstrap: an EMPTY index makes batch 0 a pure
+            # intra-batch classification through the same code path
+            build_dedup_index(
+                batch.limit(0).select(id_col, text_col), index_path,
+                id_col, text_col,
+                n=n, num_hashes=num_hashes, bands=bands,
+                hash_mode=hash_mode,
+            )
+        ex_idx = spark.read.parquet(f"{index_path}/exact")
+        bd_idx = spark.read.parquet(f"{index_path}/bands")
         rows, band_rows = _batch_frames(
             batch, id_col, text_col, n, num_hashes, bands, hash_mode,
             stage=True,
@@ -349,8 +331,6 @@ def match_dedup_batch(
         matches = _match_frames(
             rows, band_rows, ex_idx, bd_idx, num_hashes, min_band_matches,
             min_est_jaccard, max_bucket,
-            # the bucketed scans never shuffle index-side: no prune regime
-            index_prune="off" if index_table is not None else "auto",
         )
         self_hit = (F.col("status") != "fresh") & (
             F.col("match_id") == F.col("doc_id")
@@ -455,11 +435,8 @@ def match_dedup_batch(
             new_bands = new_bands.join(
                 bd_ids, is_id, "left_anti"
             ).localCheckpoint()
-        legs = {"path": index_path} if index_table is None else {
-            "table_prefix": index_table, "n_buckets": n_buckets
-        }
-        _append_index_rows(new_exact, "exact", **legs)
-        _append_index_rows(new_bands, "bands", **legs)
+        _append_index_rows(new_exact, "exact", index_path)
+        _append_index_rows(new_bands, "bands", index_path)
         return out
 
 
@@ -481,11 +458,11 @@ def match_deduped_stream_sink(
     of the batch operator's replay-safe index rules.
 
     ``compact_every=N`` compacts the index after every N-th batch
-    (identity rewrite — ``compact_match_index``/``_bucketed``): each
-    append lands a file set per leg, so small batches degrade the
-    classifier scan linearly in BATCH COUNT until compaction resets it
-    (BLOOM_r15 measured 1000-doc bucketed batches drifting to
-    ~33 s/batch over 100 uncompacted appends). Runs inside foreachBatch
+    (identity rewrite — ``compact_match_index``): each append lands a
+    file set per leg, so small batches degrade the classifier scan
+    linearly in BATCH COUNT until compaction resets it (BLOOM_r15
+    measured 1000-doc batches drifting to ~33 s/batch over 100
+    uncompacted appends). Runs inside foreachBatch
     AFTER the batch's own lease span, so it serialises with the
     stream's own appends by construction."""
 
@@ -494,17 +471,9 @@ def match_deduped_stream_sink(
             batch, index_path, id_col, text_col, **match_kwargs
         ).write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
-            from ..operators.dedup_index import (
-                compact_match_index,
-                compact_match_index_bucketed,
-            )
+            from ..operators.dedup_index import compact_match_index
 
-            if match_kwargs.get("index_table") is not None:
-                compact_match_index_bucketed(
-                    batch.sparkSession, match_kwargs["index_table"]
-                )
-            else:
-                compact_match_index(batch.sparkSession, index_path)
+            compact_match_index(batch.sparkSession, index_path)
 
     return (
         stream.writeStream.foreachBatch(_process)
@@ -1362,27 +1331,6 @@ def _dir_bytes(spark, path: str) -> int:
     return int(fs.getContentSummary(jpath).getLength())
 
 
-def _table_bytes(spark, table: str) -> int:
-    """On-disk byte size of a catalog table, via the filesystem of its
-    location. The Catalyst plan estimate is USELESS here: a saveAsTable
-    table without ANALYZE stats reports ``spark.sql.defaultSizeInBytes``
-    (Long.MaxValue) — measured r8: ``plan_size_estimate`` rejected it as
-    absurd, the memory guard saw ``index_bytes=0``, and the bucketed
-    fused plan ran unguarded into the very OOM the guard exists to
-    classify (SPILL_r08 run 6)."""
-    try:
-        loc = None
-        for row in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-            if str(row[0]).strip().lower() == "location":
-                loc = str(row[1]).strip()
-                break
-        if not loc:
-            return 0
-        return _dir_bytes(spark, loc)
-    except Exception:
-        return 0
-
-
 def span_dedup_batch(
     batch: DataFrame,
     index_path: str,
@@ -1391,22 +1339,18 @@ def span_dedup_batch(
     min_tokens: int = 8,
     max_doc_tokens: int = 1 << 24,
     memory_guard: bool = True,
-    index_table: str | None = None,
-    n_buckets: int = 32,
     bloom_fpp: float | str | None = None,
 ) -> DataFrame:
     """One micro-batch of incremental ExactSubstr span dedup: clean the
     batch against the gram index, then append the batch's ORIGINAL grams.
 
     The WHOLE span — crash heal, index read/clean, append — runs under
-    the table's lease (ADVICE r10 #1): without it, the pre-batch heal
-    would misread a LIVE standalone compaction's scratch dirs as crash
-    debris and delete its in-flight tmp (or rename old back mid-swap),
-    and the batch's index read could land inside the live swap's
-    missing-dir window (dir layout: the two renames; bucketed layout:
-    DROP before RENAME) and silently bootstrap-reset the dedup state.
-    Dir layout takes ``index_lease`` on the grams dir; the bucketed
-    layout takes the matching ``_table_lease``. Holding it, a concurrent
+    ``index_lease`` on the grams dir (ADVICE r10 #1): without it, the
+    pre-batch heal would misread a LIVE standalone compaction's scratch
+    dirs as crash debris and delete its in-flight tmp (or rename old
+    back mid-swap), and the batch's index read could land inside the
+    live swap's missing-dir window between its two renames and silently
+    bootstrap-reset the dedup state. Holding it, a concurrent
     ``compact_dedup_indexes`` serialises against the batch at
     acquisition; the append inside re-takes the lease re-entrantly.
 
@@ -1437,24 +1381,11 @@ def span_dedup_batch(
     BEFORE the stage launches, matching the batch operators' failure
     quality.
 
-    With ``index_table`` (bucketed layout) the guard is LAYOUT-AWARE and
-    degrades in two steps rather than one: the fused zero-exchange plan
-    concentrates the index working set in a single stage (coefficient
-    ``SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED``, calibrated on the
-    SPILL_r08 1-of-2 OOM cell), so when the fused model exceeds the
-    heap but the dir-shaped model still fits, the batch runs the STAGED
-    plan (``clean_against_gram_index_bucketed(staged=True)`` — index
-    exchange restored, spillable) instead of raising; only past the
-    staged model too does it refuse classified. The chosen plan is
-    published thread-locally as SparkContext local property
-    ``tern.span_dedup.plan`` (``bucketed-fused`` / ``bucketed-staged`` /
-    ``dir`` / ``bootstrap``) for sinks and benches to record.
+    The plan taken is published thread-locally as SparkContext local
+    property ``tern.span_dedup.plan`` (``dir`` / ``bootstrap``) for
+    sinks and benches to record.
     """
-    if index_table is not None:
-        from ..operators.dedup_index import _table_lease
-
-        lease = _table_lease(batch.sparkSession, index_table, "batch")
-    elif "://" not in index_path:
+    if "://" not in index_path:
         from ..operators.dedup_index import index_lease
 
         lease = index_lease(f"{index_path}/grams", "batch")
@@ -1463,8 +1394,7 @@ def span_dedup_batch(
     with lease:
         return _span_dedup_batch_impl(
             batch, index_path, id_col, text_col, min_tokens,
-            max_doc_tokens, memory_guard, index_table, n_buckets,
-            bloom_fpp,
+            max_doc_tokens, memory_guard, bloom_fpp,
         )
 
 
@@ -1476,16 +1406,12 @@ def _span_dedup_batch_impl(
     min_tokens: int,
     max_doc_tokens: int,
     memory_guard: bool,
-    index_table: str | None,
-    n_buckets: int,
     bloom_fpp: float | str | None = None,
 ) -> DataFrame:
     from ..operators.dedup import release_staged, substring_dedup
     from ..operators.dedup_index import (
         append_to_gram_index,
-        append_to_gram_index_bucketed,
         clean_against_gram_index,
-        clean_against_gram_index_bucketed,
     )
     from ..operators.memguard import (
         incremental_span_floor_decidable,
@@ -1493,36 +1419,26 @@ def _span_dedup_batch_impl(
     )
 
     spark = batch.sparkSession
-    if index_table is not None:
+    if "://" not in index_path:
         from ..operators.dedup_index import (
-            recover_interrupted_table_compaction,
+            _read_layout,
+            _recover_gram_partitions,
+            recover_interrupted_compaction,
         )
 
-        # heal a metastore swap that died between DROP and RENAME — the
-        # table-layout analogue of the parquet-dir recovery below
-        recover_interrupted_table_compaction(spark, index_table)
-        have_index = spark.catalog.tableExists(index_table)
-    else:
-        if "://" not in index_path:
-            from ..operators.dedup_index import (
-                _read_layout,
-                _recover_gram_partitions,
-                recover_interrupted_compaction,
-            )
-
-            # heal a compaction swap that died between its renames —
-            # otherwise this batch would see NO index and silently reset
-            # the dedup state (the .compact-old survivor holds the data).
-            # MUST run before this batch's append: an append recreating
-            # a swap-window dir would otherwise strand the survivor
-            # (r10 review finding 2) — the heal merges it instead.
-            gp = f"{index_path}/grams"
-            recover_interrupted_compaction(gp)
-            if os.path.isdir(gp) and _read_layout(gp).get("range_partitions"):
-                _recover_gram_partitions(gp)
-        have_index = _dir_exists(spark, f"{index_path}/grams")
+        # heal a compaction swap that died between its renames —
+        # otherwise this batch would see NO index and silently reset
+        # the dedup state (the .compact-old survivor holds the data).
+        # MUST run before this batch's append: an append recreating
+        # a swap-window dir would otherwise strand the survivor
+        # (r10 review finding 2) — the heal merges it instead.
+        gp = f"{index_path}/grams"
+        recover_interrupted_compaction(gp)
+        if os.path.isdir(gp) and _read_layout(gp).get("range_partitions"):
+            _recover_gram_partitions(gp)
+    have_index = _dir_exists(spark, f"{index_path}/grams")
     if bloom_fpp == "auto":
-        # regime gate (r14, the match classifier's index_prune rule
+        # regime gate (r14, the match classifier's semi-prune rule
         # applied to the gram consumer): engage the measured default
         # prune only when the index is past the session's broadcast
         # threshold — the regime where the pre-join O(index)
@@ -1538,11 +1454,7 @@ def _span_dedup_batch_impl(
         if not have_index or thr is None:
             bloom_fpp = None
         else:
-            idx_b = (
-                _table_bytes(spark, index_table)
-                if index_table is not None
-                else _dir_bytes(spark, f"{index_path}/grams")
-            )
+            idx_b = _dir_bytes(spark, f"{index_path}/grams")
             bloom_fpp = 0.01 if idx_b > max(thr, 0) else None
         spark.sparkContext.setLocalProperty(
             "tern.span_dedup.bloom",
@@ -1553,14 +1465,10 @@ def _span_dedup_batch_impl(
     # decidability FIRST: on a cluster without executor mem/core confs the
     # floor model can never fire, and the batch-bytes aggregate below is a
     # full extra scan of the micro-batch — don't pay it for a no-op check
-    staged = False
     if memory_guard and incremental_span_floor_decidable(spark):
-        if not have_index:
-            index_bytes = 0
-        elif index_table is not None:
-            index_bytes = _table_bytes(spark, index_table)
-        else:
-            index_bytes = _dir_bytes(spark, f"{index_path}/grams")
+        index_bytes = (
+            _dir_bytes(spark, f"{index_path}/grams") if have_index else 0
+        )
         # raw text bytes via a map-only aggregate: a streaming micro-batch
         # frame carries no usable Catalyst size estimate (measured r8 —
         # the plan-stats path silently skipped the guard and the JVM died
@@ -1569,39 +1477,17 @@ def _span_dedup_batch_impl(
         batch_bytes = batch.agg(
             F.sum(F.octet_length(F.col(text_col)))
         ).collect()[0][0]
-        bucketed = index_table is not None and have_index
         floor_msg = incremental_span_floor_message(
-            batch.sparkSession, batch_bytes, index_bytes, bucketed=bucketed
+            batch.sparkSession, batch_bytes, index_bytes
         )
-        if floor_msg is not None and bucketed:
-            # the fused zero-exchange plan is over the floor — before
-            # refusing, try the STAGED plan (index-side exchange
-            # restored): the dir layout's resident shape, measured
-            # passing at index sizes where the fused plan OOMs
-            # (SPILL_r08). Slower by one O(index) shuffle, completes.
-            if incremental_span_floor_message(
-                batch.sparkSession, batch_bytes, index_bytes, bucketed=False
-            ) is None:
-                staged = True
-                floor_msg = None
         if floor_msg is not None:
             from ..plans.curation import CurationMemoryError
 
             raise CurationMemoryError(floor_msg)
-    plan = (
-        "bootstrap" if not have_index
-        else "dir" if index_table is None
-        else "bucketed-staged" if staged
-        else "bucketed-fused"
+    spark.sparkContext.setLocalProperty(
+        "tern.span_dedup.plan", "dir" if have_index else "bootstrap"
     )
-    spark.sparkContext.setLocalProperty("tern.span_dedup.plan", plan)
-    if have_index and index_table is not None:
-        cleaned = clean_against_gram_index_bucketed(
-            spark, batch, index_table, id_col, text_col,
-            min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
-            staged=staged, bloom_fpp=bloom_fpp,
-        )
-    elif have_index:
+    if have_index:
         cleaned = clean_against_gram_index(
             spark,
             batch,
@@ -1621,21 +1507,10 @@ def _span_dedup_batch_impl(
     # the operator stages its token table per call; a long-running stream
     # must not accumulate one persisted frame per micro-batch
     release_staged(spark)
-    if index_table is not None:
-        # append-mode creates the table on the first batch, and tags the
-        # meta row 'append' — a foreachBatch retry of batch 0 must pass
-        # the watermark carve-out (build tags are for batch bootstraps
-        # the streaming engine never re-delivers)
-        append_to_gram_index_bucketed(
-            batch, index_table, id_col, text_col,
-            min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
-            n_buckets=n_buckets,
-        )
-    else:
-        append_to_gram_index(
-            batch, index_path, id_col, text_col,
-            min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
-        )
+    append_to_gram_index(
+        batch, index_path, id_col, text_col,
+        min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
+    )
     return out
 
 
@@ -1650,8 +1525,6 @@ def span_deduped_stream_sink(
     max_doc_tokens: int = 1 << 24,
     compact_every: int | None = None,
     memory_guard: bool = True,
-    index_table: str | None = None,
-    n_buckets: int = 32,
     bloom_fpp: float | str | None = "auto",
 ):
     """Streaming ExactSubstr span dedup via ``foreachBatch``: each
@@ -1678,14 +1551,6 @@ def span_deduped_stream_sink(
     compacted files, which the same min absorbs — so the
     effectively-once story is unchanged.
 
-    ``index_table=NAME`` stores the index as a BUCKETED table (bucketBy
-    gram_hash, ``n_buckets``) instead of the ``index_path`` parquet dir:
-    the per-batch min-combine and first-key join then run with zero
-    index-side Exchange — only the O(batch) side shuffles — which is
-    the layout a 100 TB ingest should run (SPILL_r08 measures both).
-    The first micro-batch creates the table; every meta row is
-    append-tagged so batch-0 retries validate.
-
     ``bloom_fpp`` turns on the batch-keyed Bloom prefilter on the
     per-batch index scan (``dedup_index.clean_against_gram_index``
     docs): decisions are bit-identical, the index-side pre-join
@@ -1704,47 +1569,29 @@ def span_deduped_stream_sink(
             batch, index_path, id_col, text_col,
             min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
             memory_guard=memory_guard,
-            index_table=index_table, n_buckets=n_buckets,
             bloom_fpp=bloom_fpp,
         ).write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
-            if index_table is not None:
-                from ..operators.dedup_index import (
-                    compact_gram_index_bucketed,
-                )
+            from ..operators.dedup_index import (
+                _part_dirty_fraction,
+                _read_layout,
+                _write_part_meta,
+                compact_gram_index,
+            )
 
-                # n_buckets=None deliberately: compaction re-reads the
-                # bucket spec from the catalog (_table_n_buckets) — the
-                # sink's own n_buckets parameter sizes NEW appends and
-                # must not override the spec the table was built with
-                # (ADVICE r8 #5). dirty_threshold: a scheduled rewrite
-                # must not pay O(table) when the appends since the last
-                # compaction are a small fraction of it (r10)
-                compact_gram_index_bucketed(
-                    batch.sparkSession, index_table, n_buckets=None,
-                    dirty_threshold=0.2,
-                )
+            gp2 = f"{index_path}/grams"
+            if _read_layout(gp2).get("range_partitions"):
+                # per-partition dirty gate lives inside the compactor
+                compact_gram_index(batch.sparkSession, index_path)
             else:
-                from ..operators.dedup_index import (
-                    _part_dirty_fraction,
-                    _read_layout,
-                    _write_part_meta,
-                    compact_gram_index,
-                )
-
-                gp2 = f"{index_path}/grams"
-                if _read_layout(gp2).get("range_partitions"):
-                    # per-partition dirty gate lives inside the compactor
+                # flat layout: explicit compaction is unconditional
+                # BY DESIGN, so the scheduled hook carries its own
+                # byte watermark — an O(index) rewrite only once the
+                # appends since the last one exceed 20% (r10)
+                frac, _cur, clean = _part_dirty_fraction(gp2)
+                if clean == 0 or frac > 0.2:
                     compact_gram_index(batch.sparkSession, index_path)
-                else:
-                    # flat layout: explicit compaction is unconditional
-                    # BY DESIGN, so the scheduled hook carries its own
-                    # byte watermark — an O(index) rewrite only once the
-                    # appends since the last one exceed 20% (r10)
-                    frac, _cur, clean = _part_dirty_fraction(gp2)
-                    if clean == 0 or frac > 0.2:
-                        compact_gram_index(batch.sparkSession, index_path)
-                        _write_part_meta(gp2)
+                    _write_part_meta(gp2)
 
     return (
         stream.writeStream.foreachBatch(_process)

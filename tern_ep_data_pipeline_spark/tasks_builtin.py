@@ -126,10 +126,10 @@ def compact_dedup_indexes(spark: SparkSession, site: str) -> dict:
     off-ingest-path maintenance the index docstrings defer to): for the
     index root at ``$SPARK_GRAFT_INDEX_DIR`` (default ``<out>/dedup_index/
     site=<site>``), rewrite whichever of the grams/chunks/lines tables
-    exist to their canonical aggregates (``dedup_index.compact_*_index``).
-    Bucketed-table indexes compact through their own ``*_bucketed``
-    functions on the lake's catalog, not this task. Returns per-table
-    row counts before/after; tables absent from the root are skipped.
+    exist to their canonical aggregates (``dedup_index.compact_*_index``),
+    and the match index's exact/bands legs by an identity rewrite.
+    Returns per-table row counts before/after; tables absent from the
+    root are skipped.
 
     EXCLUSIVE ACCESS ENFORCED: each table's compactor and appender take
     the same lock-file lease (``dedup_index.index_lease``), so this task

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from tern_ep_data_pipeline_spark.operators import bloom
@@ -93,35 +92,6 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_match_against_index_bloom_identical(spark, tmp_path):
-    """r13: bloom_fpp on match_against_index is a RECORDED AUTO-DECLINE
-    (no index-side pre-aggregation to save) — identical output AND an
-    identical optimized plan, with the decline published as a local
-    property."""
-    corpus = _corpus(spark)
-    rows = corpus.collect()
-    path = str(tmp_path / "idx")
-    di.build_dedup_index(corpus, path, num_hashes=16, bands=8)
-    batch = _batch(spark, rows)
-    plain = di.match_against_index(spark, batch, path, num_hashes=16, bands=8)
-    with pytest.warns(RuntimeWarning, match="declines bloom_fpp"):
-        pruned = di.match_against_index(
-            spark, batch, path, num_hashes=16, bands=8, bloom_fpp=0.01
-        )
-    assert _sorted_rows(plain) == _sorted_rows(pruned)
-    assert (
-        spark.sparkContext.getLocalProperty("tern.bloom_prune.match")
-        == "declined-no-index-preagg"
-    )
-    p1 = plain._jdf.queryExecution().optimizedPlan().toString()
-    p2 = pruned._jdf.queryExecution().optimizedPlan().toString()
-    import re as _re
-
-    # normalise expr ids (#123L) and lambda-var counters (x_10)
-    strip = lambda s: _re.sub(r"#\d+L?|_\d+", "#", s)
-    assert strip(p1) == strip(p2), "declined plan must equal the default"
-
-
 def test_gram_index_bloom_identical(spark, tmp_path):
     corpus = _corpus(spark)
     rows = corpus.collect()
@@ -173,33 +143,6 @@ def test_line_index_bloom_identical(spark, tmp_path):
         spark, batch, path, min_docs=2, min_line_chars=3, bloom_fpp=0.01
     )
     assert _sorted_rows(plain) == _sorted_rows(pruned)
-
-
-def test_bucketed_twins_bloom_identical(spark, tmp_path):
-    """The bucketed layouts accept the same flag and stay bit-identical
-    (the probe drops bucket distribution, so the pruned side re-shuffles
-    — correctness must not care)."""
-    corpus = _corpus(spark, n=25, seed=11)
-    rows = corpus.collect()
-    batch = _batch(spark, rows)
-
-    di.build_dedup_index_bucketed(corpus, "blm_m", n_buckets=4, num_hashes=16, bands=8)
-    plain = di.match_against_index_bucketed(
-        spark, batch, "blm_m", num_hashes=16, bands=8
-    )
-    pruned = di.match_against_index_bucketed(
-        spark, batch, "blm_m", num_hashes=16, bands=8, bloom_fpp=0.01
-    )
-    assert _sorted_rows(plain) == _sorted_rows(pruned)
-
-    di.build_gram_index_bucketed(corpus, "blm_g", n_buckets=4, min_tokens=8)
-    gplain = di.clean_against_gram_index_bucketed(
-        spark, batch, "blm_g", min_tokens=8
-    )
-    gpruned = di.clean_against_gram_index_bucketed(
-        spark, batch, "blm_g", min_tokens=8, bloom_fpp=0.01
-    )
-    assert _sorted_rows(gplain) == _sorted_rows(gpruned)
 
 
 def test_bloom_prune_actually_prunes(spark, tmp_path):
@@ -518,10 +461,10 @@ def test_two_phase_property_resets_on_narrow_payload(spark):
 def test_match_index_semi_prune_regime_gate(spark, tmp_path):
     """r14: past the broadcast threshold the match joins would shuffle
     the corpus-sized index per batch (BLOOM_r14 measured 223 MB/batch
-    at a 150k-doc index); index_prune='auto' then broadcast-semi-prunes
+    at a 150k-doc index); the regime gate then broadcast-semi-prunes
     both index frames by the batch's own keys — decision-identical,
     map-side, O(batch) survivors. Below the threshold the gate stays
-    direct and the plan is the untouched default."""
+    direct."""
     corpus = _corpus(spark)
     rows = corpus.collect()
     path = str(tmp_path / "pidx")
@@ -529,18 +472,10 @@ def test_match_index_semi_prune_regime_gate(spark, tmp_path):
     batch = _batch(spark, rows)
     sc = spark.sparkContext
 
-    # small index, default threshold -> direct, same plan as prune-off
+    # small index, default threshold -> direct
     direct = di.match_against_index(spark, batch, path, num_hashes=16, bands=8)
     got_direct = _sorted_rows(direct)
     assert sc.getLocalProperty("tern.match_prune") == "direct"
-    off = di.match_against_index(
-        spark, batch, path, num_hashes=16, bands=8, index_prune="off"
-    )
-    import re as _re
-
-    strip = lambda s: _re.sub(r"#\d+L?|_\d+", "#", s)
-    assert strip(direct._jdf.queryExecution().optimizedPlan().toString()) == \
-        strip(off._jdf.queryExecution().optimizedPlan().toString())
 
     # force the shuffle regime: threshold below the index estimate
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -556,25 +491,3 @@ def test_match_index_semi_prune_regime_gate(spark, tmp_path):
         assert got_pruned == got_direct  # decisions identical
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    with pytest.raises(ValueError, match="unknown index_prune"):
-        di.match_against_index(
-            spark, batch, path, num_hashes=16, bands=8, index_prune="maybe"
-        )
-
-    # the bucketed twin keeps the prune off (no index-side shuffle to
-    # rescue) and still classifies identically
-    di.build_dedup_index_bucketed(corpus, "prune_gate_bkt", num_hashes=16,
-                                  bands=8, n_buckets=4)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        bkt = di.match_against_index_bucketed(
-            spark, batch, "prune_gate_bkt", num_hashes=16, bands=8
-        )
-        got_bkt = _sorted_rows(bkt)
-        assert sc.getLocalProperty("tern.match_prune") == "direct"
-        assert got_bkt == got_direct
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS prune_gate_bkt_exact")
-        spark.sql("DROP TABLE IF EXISTS prune_gate_bkt_bands")

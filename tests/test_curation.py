@@ -128,7 +128,9 @@ def test_dedup_clusters_lazy_routing_scale_safe(spark):
 
 def test_dedup_clusters_lazy_null_edges_and_mixed_types(spark):
     """ADVICE r15: null edges are dropped (not a TypeError), and int/bigint
-    edge columns widen to the common type in the declared schema."""
+    edge columns widen to the common type in the declared schema. The
+    lazy and eager routes give the same exact rows for a batch holding a
+    null edge and ids above 2^53 (no float64 round trip)."""
     df = spark.createDataFrame(
         [(1, 2), (None, 3), (4, None), (2, 5)], "id_a int, id_b bigint"
     )
@@ -136,6 +138,16 @@ def test_dedup_clusters_lazy_null_edges_and_mixed_types(spark):
     assert dict(out.dtypes) == {"node": "bigint", "component": "bigint"}
     got = sorted(map(tuple, out.collect()))
     assert got == [(1, 1), (2, 1), (5, 1)]
+
+    big = 2**53
+    df = spark.createDataFrame(
+        [(1, 2), (None, 3), (4, None), (2, 5), (big + 3, big + 1)],
+        "id_a bigint, id_b bigint",
+    )
+    want = [(1, 1), (2, 1), (5, 1), (big + 1, big + 1), (big + 3, big + 1)]
+    for lazy in (True, False):
+        got = sorted(map(tuple, dedup_clusters(df, lazy_small=lazy).collect()))
+        assert got == want, lazy
 
 
 # ------------------------------------------------------------- sampling
@@ -956,7 +968,7 @@ def test_dedup_index_intra_batch(spark, tmp_path):
 def test_dedup_index_match_precedence(spark, tmp_path):
     """Docs that qualify for several categories at once take the first of
     exact-index > exact-batch > near-index > near-batch, and the lowest
-    candidate id inside it, in both index layouts. Candidate ids are
+    candidate id inside it. Candidate ids are
     chosen so that a plain min over match_id would pick a different row.
     The optimized plan stays linear in the number of categories."""
     import re
@@ -1001,24 +1013,14 @@ def test_dedup_index_match_precedence(spark, tmp_path):
         40: ("fresh", None),
     }
     path = str(tmp_path / "idx")
-    prefix = "prec_bkt_test"
-    for t in (f"{prefix}_exact", f"{prefix}_bands"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    try:
-        di.build_dedup_index(corpus, path)
-        di.build_dedup_index_bucketed(corpus, prefix, n_buckets=4)
-        via_dir = di.match_against_index(spark, batch, path)
-        via_bkt = di.match_against_index_bucketed(spark, batch, prefix)
-        for out in (via_dir, via_bkt):
-            rows = out.collect()
-            assert len(rows) == len(want)
-            assert {r["doc_id"]: (r["status"], r["match_id"]) for r in rows} == want
-        plan = via_dir._jdf.queryExecution().optimizedPlan().toString()
-        joins = len(re.findall(r"^[\s:+\-]*Join\b", plan, re.M))
-        assert joins <= 9, joins
-    finally:
-        for t in (f"{prefix}_exact", f"{prefix}_bands"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    di.build_dedup_index(corpus, path)
+    out = di.match_against_index(spark, batch, path)
+    rows = out.collect()
+    assert len(rows) == len(want)
+    assert {r["doc_id"]: (r["status"], r["match_id"]) for r in rows} == want
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    joins = len(re.findall(r"^[\s:+\-]*Join\b", plan, re.M))
+    assert joins <= 9, joins
 
 
 def test_dedup_index_one_decision_per_input_row(spark, tmp_path):
@@ -2348,50 +2350,6 @@ def test_gram_build_chunked_identical(spark, tmp_path):
     assert a[0][2] > 0  # the indexed phrase was actually cut
 
 
-def test_gram_build_chunked_identical_bucketed(spark, tmp_path):
-    """The bucketed twin of the memory-derated build: sequential
-    id-range slices into the bucketed table (slice 0 creates, later
-    slices append) decide identically to the one-shot bucketed build."""
-    import random
-
-    from tern_ep_data_pipeline_spark.operators import dedup
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        build_gram_index_bucketed,
-        clean_against_gram_index_bucketed,
-    )
-
-    rng = random.Random(22)
-    words = "ash oak elm fir yew birch cedar maple pine lime".split()
-    phrase = " ".join(f"bq{i}" for i in range(10))
-    rows = [
-        (i, " ".join(rng.choice(words) for _ in range(25))
-            + (f" {phrase} tail" if i % 6 == 0 else ""))
-        for i in range(48)
-    ]
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
-    n_flat = build_gram_index_bucketed(corpus, "gb_flat", n_buckets=4)
-    n_chunk = build_gram_index_bucketed(
-        corpus, "gb_chunk", n_buckets=4, passes=3
-    )
-    assert n_flat == n_chunk
-    meta = spark.table("gb_chunk_meta").collect()
-    assert sorted(r["kind"] for r in meta) == ["append", "append", "build"]
-
-    batch = spark.createDataFrame(
-        [(100, f"fresh framing {phrase} and trailing body words"),
-         (101, "entirely novel unrelated document with private words")],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, clean_against_gram_index_bucketed(
-        spark, batch, "gb_flat").collect()))
-    dedup.release_staged(spark)
-    b = sorted(map(tuple, clean_against_gram_index_bucketed(
-        spark, batch, "gb_chunk").collect()))
-    dedup.release_staged(spark)
-    assert a == b
-    assert a[0][2] > 0
-
-
 def test_gram_build_guard_plan_time(spark, tmp_path, monkeypatch):
     """The build guard classifies at PLAN time: an impossible sizing
     raises CurationMemoryError BEFORE any file is written, and the
@@ -2407,18 +2365,6 @@ def test_gram_build_guard_plan_time(spark, tmp_path, monkeypatch):
     assert memguard.gram_build_passes(spark, 0) == (1, None)
     p, msg = memguard.gram_build_passes(spark, 1 << 45)
     assert msg is not None and "sizing invariant" in msg
-    # the bucketed coefficient is strictly heavier (sort-within-bucket
-    # stacks sorter state per pass), so at a byte count big enough to
-    # slice, bucketed needs at least as many passes — and more at the
-    # calibrated 2 GiB/sf10 point (28 vs 20 resident bytes/text byte)
-    some = 200 << 20
-    p_dir, _ = memguard.gram_build_passes(spark, some)
-    p_bkt, _ = memguard.gram_build_passes(spark, some, bucketed=True)
-    assert p_bkt >= p_dir
-    assert (
-        memguard.GRAM_BUILD_RESIDENT_PER_TEXT_BYTE_BUCKETED
-        > memguard.GRAM_BUILD_RESIDENT_PER_TEXT_BYTE
-    )
 
     docs = spark.createDataFrame(
         [(1, " ".join(f"a{i}" for i in range(12))),
@@ -2735,7 +2681,6 @@ def test_lease_foreign_host_lock_never_reclaimed(tmp_path, monkeypatch):
 
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         IndexLockError,
-        _lock_holder,
         index_lease,
     )
 
@@ -2749,7 +2694,6 @@ def test_lease_foreign_host_lock_never_reclaimed(tmp_path, monkeypatch):
             {"pid": dead_pid, "host": "some-other-executor", "role": "append"},
             fh,
         )
-    assert _lock_holder(lock) == (dead_pid, True)
     with pytest.raises(IndexLockError, match="some-other-executor"):
         with index_lease(gp, "compact", wait_s=0.3):
             pass
@@ -2763,7 +2707,6 @@ def test_lease_foreign_host_lock_never_reclaimed(tmp_path, monkeypatch):
             {"pid": dead_pid, "host": _socket.gethostname(), "role": "append"},
             fh,
         )
-    assert _lock_holder(lock) == (dead_pid, False)
     with index_lease(gp, "compact", wait_s=5.0):
         with open(lock) as fh:
             payload = json.load(fh)
@@ -2774,7 +2717,6 @@ def test_lease_foreign_host_lock_never_reclaimed(tmp_path, monkeypatch):
     # pre-r15 payload (no host field): local probe governs — reclaimed
     with open(lock, "w") as fh:
         json.dump({"pid": dead_pid, "role": "append"}, fh)
-    assert _lock_holder(lock) == (dead_pid, False)
     with index_lease(gp, "compact", wait_s=5.0):
         pass
     assert not os.path.exists(lock)
@@ -2838,91 +2780,6 @@ def test_two_waiter_stale_reclaim_race(tmp_path, monkeypatch):
     assert not errors, f"reclaim race raised: {errors}"
     assert sorted(acquired) == list(range(n))  # every waiter got through
     assert not os.path.exists(lock)  # released by the last holder
-
-
-def test_table_lock_path_normalises_identifiers(spark):
-    """ADVICE r11 #3: two spellings of one table must key ONE lock —
-    'grams', 'default.grams' and 'spark_catalog.default.grams' (and
-    backticked/odd-cased forms) all resolve to the same path, and a
-    database-qualified name lands the lock beside the real
-    wh/<db>.db/<tbl> dir rather than at wh/<db>.<tbl>."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _table_lock_path,
-    )
-
-    base = _table_lock_path(spark, "grams")
-    assert _table_lock_path(spark, "default.grams") == base
-    assert _table_lock_path(spark, "spark_catalog.default.grams") == base
-    assert _table_lock_path(spark, "`default`.`GRAMS`") == base
-
-    qualified = _table_lock_path(spark, "mydb.grams")
-    assert qualified != base
-    assert qualified.endswith(os.path.join("mydb.db", "grams"))
-    assert _table_lock_path(spark, "spark_catalog.mydb.grams") == qualified
-
-    # a backticked identifier CONTAINING a dot is one name, not a
-    # db/table pair (review r12) — both spellings key the same lock
-    dotted = _table_lock_path(spark, "`my.table`")
-    assert dotted.endswith(os.path.join("my.table"))
-    assert "my.db" not in dotted
-
-    # r13: the r12 rolling-upgrade co-acquire of the legacy
-    # raw-spelling key is retired — a qualified identifier takes
-    # EXACTLY ONE lock, the normalised one (the old raw-spelling path
-    # stays untouched, so lock traffic is back to one file per table)
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _table_lease,
-        _warehouse_dir,
-    )
-
-    legacy = os.path.join(_warehouse_dir(spark), "default.grams")
-    assert legacy != base
-    with _table_lease(spark, "default.grams", "append"):
-        assert os.path.exists(base + ".lock")
-        assert not os.path.exists(legacy + ".lock")
-    assert not os.path.exists(base + ".lock")
-
-
-def test_table_lease_detects_legacy_lock(spark, tmp_path):
-    """ADVICE r13: a mixed-version fleet window is detected at acquire
-    time, not just documented — a legacy raw-spelling lock HELD by a
-    live pid raises (the normalised lock cannot exclude that writer);
-    a dead-holder legacy lock warns and proceeds."""
-    import json as _json
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _table_lease,
-        _warehouse_dir,
-    )
-
-    legacy = os.path.join(_warehouse_dir(spark), "default.lgcy") + ".lock"
-    os.makedirs(os.path.dirname(os.path.abspath(legacy)), exist_ok=True)
-    try:
-        # live holder (this very process) -> hard failure
-        with open(legacy, "w") as fh:
-            _json.dump({"pid": os.getpid(), "role": "append"}, fh)
-        with pytest.raises(RuntimeError, match="legacy .* HELD by live pid"):
-            with _table_lease(spark, "default.lgcy", "append"):
-                pass
-
-        # dead holder -> loud warning, lease proceeds on the new key
-        with open(legacy, "w") as fh:
-            _json.dump({"pid": 2 ** 22 + 1, "role": "append"}, fh)
-        with pytest.warns(RuntimeWarning, match="stale legacy"):
-            with _table_lease(spark, "default.lgcy", "append"):
-                pass
-
-        # unqualified spelling in the default db keys the SAME path as
-        # the legacy one — no probe, no false alarm
-        os.remove(legacy)
-        with _table_lease(spark, "lgcy", "append"):
-            pass
-    finally:
-        if os.path.exists(legacy):
-            os.remove(legacy)
 
 
 def test_compactor_wait_outlasts_batch_lease(spark, tmp_path):
@@ -3006,31 +2863,10 @@ def test_incremental_span_floor_calibration():
     assert resident(87 << 20) > avail_2g                # batch 1 OOM'd
     assert resident(894 << 20) <= avail_3g              # 3g completed
 
-    # bucketed fused-plan coefficient, calibrated on the SPILL_r08 runs
-    # at their TRUE batch size: the r8 bucketed runs split the 148.8 MB
-    # sf10 corpus into 20 batches (~7.1 MiB text each — NOT r7's 14.9
-    # MiB/10-batch size; solving against the wrong batch size inflated
-    # the batch term by ~570 MiB and left the guard silent past both
-    # observed OOMs). Observed 3g/32 cells: one of the run-6/7 pair
-    # heap-OOM'd processing the batch whose guard-visible index was
-    # 531 MiB (its twin finished — a stochastic cell must classify as
-    # FAILING); the guarded derate probe OOM'd at a 574 MiB start index
-    # after completing 531 MiB fused; both runs healthy through a
-    # 488 MiB index. The staged/dir-shaped model must keep passing the
-    # measured-passing dir cells up to the 845 MiB raw-append index of
-    # runs 0-4 so the derate window is non-empty.
-    from tern_ep_data_pipeline_spark.operators.memguard import (
-        SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED,
-    )
-
+    # SPILL_r08 at its true batch size (the 148.8 MB sf10 corpus over 20
+    # batches, ~7.1 MiB text each): 3g/32 completed with the raw-append
+    # index at 845 MiB
     batch_r8 = int(148.8 * 10**6 / 20)
-
-    def resident_bkt(index_bytes):
-        return (
-            SPAN_RESIDENT_PER_BATCH_BYTE * batch_r8
-            + SPAN_RESIDENT_PER_INDEX_BYTE_BUCKETED * index_bytes
-            + SPAN_RESIDENT_PER_CORE * cores
-        )
 
     def resident_r8(index_bytes):
         return (
@@ -3039,14 +2875,7 @@ def test_incremental_span_floor_calibration():
             + SPAN_RESIDENT_PER_CORE * cores
         )
 
-    assert resident_bkt(531 << 20) > avail_3g           # fused 1-of-2 OOM cell
-    assert resident_bkt(574 << 20) > avail_3g           # derate-probe OOM cell
-    assert resident_bkt(488 << 20) <= avail_3g          # fused healthy band
-    assert resident_r8(845 << 20) <= avail_3g           # staged/dir passing
-    # so the derate window (fused fires, staged fits) is non-empty: the
-    # guard stages rather than refuses at both OOM cells
-    assert resident_r8(531 << 20) <= avail_3g
-    assert resident_r8(574 << 20) <= avail_3g
+    assert resident_r8(845 << 20) <= avail_3g
 
 
 def test_span_dedup_batch_memory_guard(spark, tmp_path, monkeypatch):
@@ -3066,7 +2895,7 @@ def test_span_dedup_batch_memory_guard(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         memguard,
         "incremental_span_floor_message",
-        lambda spark, b, i, **kw: "incremental span-dedup sizing invariant violated (test)",
+        lambda spark, b, i: "incremental span-dedup sizing invariant violated (test)",
     )
     with pytest.raises(CurationMemoryError, match="sizing invariant"):
         span_dedup_batch(batch, idx, "doc_id", "text")
@@ -3081,7 +2910,7 @@ def test_span_dedup_batch_memory_guard(spark, tmp_path, monkeypatch):
 
     # sized-OK path: the real estimator returns None/OK on this session
     monkeypatch.setattr(
-        memguard, "incremental_span_floor_message", lambda spark, b, i, **kw: None
+        memguard, "incremental_span_floor_message", lambda spark, b, i: None
     )
     out2 = span_dedup_batch(
         batch.withColumn("doc_id", batch.doc_id + 1), idx, "doc_id", "text"
@@ -3122,370 +2951,6 @@ def test_cc_concurrent_tight_runs_refcount(spark, monkeypatch):
     # last run out cleans up
     leftover = [f for _, _, fs in os.walk(d) for f in fs]
     assert leftover == []
-
-
-def test_bucketed_gram_index_equivalence(spark, tmp_path):
-    """The bucketed-table gram index is a pure layout change: identical
-    clean decisions to the parquet-dir layout, with FEWER shuffle
-    exchanges in the per-batch plan (the bucketed scan is already
-    hash-distributed on gram_hash, so the index side needs no Exchange
-    for the min-combine or the first-key join)."""
-    from tern_ep_data_pipeline_spark.operators import dedup
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_gram_index_bucketed,
-        build_gram_index,
-        build_gram_index_bucketed,
-        clean_against_gram_index,
-        clean_against_gram_index_bucketed,
-        compact_gram_index_bucketed,
-    )
-    from tern_ep_data_pipeline_spark.sources import lake
-
-    phrase = " ".join(f"bk{i}" for i in range(10))
-    corpus = spark.createDataFrame(
-        [(1, f"corpus owner copy {phrase} ending words"),
-         (2, "unrelated corpus document body here")],
-        ["doc_id", "text"],
-    )
-    path = str(tmp_path / "gidx_dir")
-    table = "gidx_bkt_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-    try:
-        build_gram_index(corpus, path)
-        assert build_gram_index_bucketed(corpus, table, n_buckets=4) > 0
-
-        batch = spark.createDataFrame(
-            [(10, f"late arrival {phrase} fresh tail content"),
-             (11, "totally novel batch document only")],
-            ["doc_id", "text"],
-        )
-        key = lambda rows: sorted(map(tuple, rows))
-        via_dir = clean_against_gram_index(spark, batch, path)
-        via_bkt = clean_against_gram_index_bucketed(spark, batch, table)
-        rows_dir = key(via_dir.collect())
-        dedup.release_staged(spark)
-        rows_bkt = key(via_bkt.collect())
-        assert rows_dir == rows_bkt
-        # index-side co-location: the bucketed plan carries strictly fewer
-        # shuffle exchanges than the directory plan
-        n_dir = lake.exchange_count(via_dir)
-        n_bkt = lake.exchange_count(via_bkt)
-        dedup.release_staged(spark)
-        assert n_bkt < n_dir, (n_bkt, n_dir)
-
-        # appends preserve the spec; compaction preserves decisions and
-        # the append-replay carve-out
-        append_to_gram_index_bucketed(batch, table, n_buckets=4)
-        probe = spark.createDataFrame(
-            [(20, f"probe repeats {phrase} and also totally novel batch "
-                  "document only plus fresh text")],
-            ["doc_id", "text"],
-        )
-        before = key(
-            clean_against_gram_index_bucketed(spark, probe, table).collect()
-        )
-        dedup.release_staged(spark)
-        stats = compact_gram_index_bucketed(spark, table, n_buckets=4)
-        assert stats["rows_after"] <= stats["rows_before"]
-        after = key(
-            clean_against_gram_index_bucketed(spark, probe, table).collect()
-        )
-        dedup.release_staged(spark)
-        assert before == after
-        # the table-level dirty gate (r10): the compaction above stamped
-        # clean_bytes, so a barely-dirty scheduled re-run SKIPS the
-        # O(table) rewrite; the unconditional default still compacts
-        gated = compact_gram_index_bucketed(
-            spark, table, n_buckets=4, dirty_threshold=0.2
-        )
-        assert gated.get("skipped") is True
-        ungated = compact_gram_index_bucketed(spark, table, n_buckets=4)
-        assert "rows_after" in ungated  # default: compact unconditionally
-        # retry of the (10,11) append still passes after compaction;
-        # build-range (1,2) reuse is still rejected
-        assert clean_against_gram_index_bucketed(spark, batch, table).count() == 2
-        dedup.release_staged(spark)
-        with pytest.raises(ValueError, match="id-monotonicity"):
-            clean_against_gram_index_bucketed(spark, corpus, table).collect()
-        # an exact (10,11) range carrying different documents is id reuse,
-        # not a retry — the append fingerprint must match (ADVICE r7 #1)
-        imposter = spark.createDataFrame(
-            [(10, "not the appended text at all"),
-             (11, "and neither is this one")],
-            ["doc_id", "text"],
-        )
-        with pytest.raises(ValueError, match="id-monotonicity"):
-            clean_against_gram_index_bucketed(spark, imposter, table).collect()
-        dedup.release_staged(spark)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compact_tmp")
-
-
-def test_bucketed_gram_index_staged_plan(spark, tmp_path, monkeypatch):
-    """The memory-derated STAGED plan (index-side exchange restored) is
-    decision-identical to the fused plan, carries MORE exchanges (that's
-    the point — exchange-separated stages spill independently), and
-    span_dedup_batch picks it automatically when the fused floor model
-    fires while the dir-shaped model passes (SPILL_r08 derate window)."""
-    from tern_ep_data_pipeline_spark.operators import dedup, memguard
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        build_gram_index_bucketed,
-        clean_against_gram_index_bucketed,
-    )
-    from tern_ep_data_pipeline_spark.sources import lake
-    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
-
-    phrase = " ".join(f"st{i}" for i in range(10))
-    corpus = spark.createDataFrame(
-        [(1, f"corpus holds {phrase} first occurrence"),
-         (2, "independent corpus filler document")],
-        ["doc_id", "text"],
-    )
-    table = "gidx_staged_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-    try:
-        build_gram_index_bucketed(corpus, table, n_buckets=4)
-        batch = spark.createDataFrame(
-            [(10, f"batch repeats {phrase} plus novel tail"),
-             (11, "entirely new material here only")],
-            ["doc_id", "text"],
-        )
-        key = lambda rows: sorted(map(tuple, rows))
-        fused = clean_against_gram_index_bucketed(spark, batch, table)
-        staged = clean_against_gram_index_bucketed(
-            spark, batch, table, staged=True
-        )
-        rows_f = key(fused.collect())
-        dedup.release_staged(spark)
-        rows_s = key(staged.collect())
-        assert rows_f == rows_s
-        # the staged plan inserts the index-side repartition Exchange
-        # directly above the bucketed scan (the un-fusing boundary); the
-        # fused plan consumes the bucketed distribution with none. Total
-        # exchange counts can tie — the join may re-exchange the fused
-        # index side anyway — so pin the boundary, not the total.
-        plan_f = fused._jdf.queryExecution().executedPlan().toString()
-        plan_s = staged._jdf.queryExecution().executedPlan().toString()
-        dedup.release_staged(spark)
-        assert "REPARTITION_BY_NUM" not in plan_f
-        assert "REPARTITION_BY_NUM" in plan_s
-        assert lake.exchange_count(staged) >= lake.exchange_count(fused)
-
-        # derate window: fused model fires, dir model passes -> the
-        # streaming guard stages instead of raising, publishes the plan
-        def fake_floor(spark_, b, i, bucketed=False):
-            return "over the fused floor (test)" if bucketed else None
-
-        monkeypatch.setattr(
-            memguard, "incremental_span_floor_message", fake_floor
-        )
-        probe = spark.createDataFrame(
-            [(20, f"probe sees {phrase} again plus fresh words")],
-            ["doc_id", "text"],
-        )
-        out = span_dedup_batch(probe, str(tmp_path / "unused"), "doc_id",
-                               "text", index_table=table, n_buckets=4)
-        assert out.count() == 1
-        assert (
-            spark.sparkContext.getLocalProperty("tern.span_dedup.plan")
-            == "bucketed-staged"
-        )
-        dedup.release_staged(spark)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compact_tmp")
-
-
-def test_bucketed_guard_sees_index_bytes(spark, tmp_path, monkeypatch):
-    """The memory guard must measure the bucketed index's ON-DISK size:
-    the Catalyst plan estimate of a saveAsTable table without ANALYZE
-    stats is defaultSizeInBytes (Long.MaxValue), which plan_size_estimate
-    rejects — so the guard silently saw index_bytes=0 and the fused plan
-    ran unguarded into the OOM it exists to classify (SPILL_r08 run 6)."""
-    from tern_ep_data_pipeline_spark.operators import dedup, memguard
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        build_gram_index_bucketed,
-    )
-    from tern_ep_data_pipeline_spark.streaming import curation as sc
-    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
-
-    table = "gidx_guard_sz_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-    try:
-        corpus = spark.createDataFrame(
-            [(1, " ".join(f"gw{j}" for j in range(30))),
-             (2, "other corpus text body words here")],
-            ["doc_id", "text"],
-        )
-        build_gram_index_bucketed(corpus, table, n_buckets=4)
-        # the direct helper sees real bytes
-        assert sc._table_bytes(spark, table) > 0
-
-        seen = {}
-
-        def capture(spark_, b, i, bucketed=False):
-            seen["index_bytes"] = i
-            seen["bucketed"] = bucketed
-            return None
-
-        monkeypatch.setattr(
-            memguard, "incremental_span_floor_message", capture
-        )
-        batch = spark.createDataFrame(
-            [(10, "fresh batch words entirely new")], ["doc_id", "text"]
-        )
-        span_dedup_batch(batch, str(tmp_path / "unused"), "doc_id", "text",
-                         index_table=table, n_buckets=4)
-        dedup.release_staged(spark)
-        assert seen["bucketed"] is True
-        assert seen["index_bytes"] > 0, (
-            "guard measured a zero-byte index for an existing bucketed "
-            "table — the floor model is blind again"
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compact_tmp")
-
-
-def test_bucketed_meta_append_onto_pre_fingerprint_table(spark):
-    """Appending onto a _meta table built BEFORE the fingerprint column
-    existed must not throw (a metastore append rejects extra columns,
-    unlike a parquet dir) — the old table keeps its schema and its rows
-    stay on the lenient range-only replay carve-out."""
-    from tern_ep_data_pipeline_spark.operators import dedup
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_gram_index_bucketed,
-        build_gram_index_bucketed,
-        clean_against_gram_index_bucketed,
-    )
-
-    table = "gidx_oldmeta_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-    try:
-        corpus = spark.createDataFrame(
-            [(1, "corpus words for the old layout body"),
-             (2, "second corpus document text here")],
-            ["doc_id", "text"],
-        )
-        build_gram_index_bucketed(corpus, table, n_buckets=4)
-        # rebuild _meta in the pre-fingerprint (and pre-kind) shape
-        old = spark.table(table + "_meta").select("min_doc_id", "max_doc_id")
-        old_rows = old.collect()
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.createDataFrame(
-            old_rows, "min_doc_id long, max_doc_id long"
-        ).write.saveAsTable(table + "_meta")
-
-        batch = spark.createDataFrame(
-            [(10, "a fresh appended document body"),
-             (11, "another appended document text")],
-            ["doc_id", "text"],
-        )
-        append_to_gram_index_bucketed(batch, table, n_buckets=4)  # no throw
-        assert spark.table(table + "_meta").columns == [
-            "min_doc_id", "max_doc_id"
-        ]
-        # lenient carve-out still applies to the schema-less rows: an
-        # exact-range replay of the append passes, a lower id is rejected
-        assert clean_against_gram_index_bucketed(spark, batch, table).count() == 2
-        dedup.release_staged(spark)
-        with pytest.raises(ValueError, match="id-monotonicity"):
-            clean_against_gram_index_bucketed(
-                spark,
-                spark.createDataFrame([(5, "reused id body")], ["doc_id", "text"]),
-                table,
-            ).collect()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compact_tmp")
-
-
-def test_bucketed_dedup_index_equivalence(spark, tmp_path):
-    """The bucketed exact/band dedup index classifies identically to the
-    parquet-dir layout with fewer shuffle exchanges (both batch-vs-index
-    joins consume the bucketed scans' distribution)."""
-    from tern_ep_data_pipeline_spark.operators import dedup
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_index,
-        append_to_index_bucketed,
-        build_dedup_index,
-        build_dedup_index_bucketed,
-        match_against_index,
-        match_against_index_bucketed,
-    )
-    from tern_ep_data_pipeline_spark.sources import lake
-
-    base = " ".join(f"w{i}" for i in range(30))
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "entirely different corpus text body here")],
-        ["doc_id", "text"],
-    )
-    path = str(tmp_path / "didx_dir")
-    prefix = "didx_bkt_test"
-    for t in (f"{prefix}_exact", f"{prefix}_bands"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    try:
-        build_dedup_index(corpus, path)
-        stats = build_dedup_index_bucketed(corpus, prefix, n_buckets=4)
-        assert stats["exact_rows"] == 2 and stats["band_rows"] > 0
-
-        near = base.replace("w3 ", "w3x ")  # 1-token change: near dup
-        batch = spark.createDataFrame(
-            [(10, base),            # exact dup of doc 1
-             (11, near),            # near dup of doc 1
-             (12, "a wholly fresh document with new words only")],
-            ["doc_id", "text"],
-        )
-        via_dir = match_against_index(spark, batch, path)
-        via_bkt = match_against_index_bucketed(spark, batch, prefix)
-        rows_dir = sorted(map(tuple, via_dir.collect()))
-        dedup.release_staged(spark)
-        rows_bkt = sorted(map(tuple, via_bkt.collect()))
-        assert rows_dir == rows_bkt
-        by_id = {r[0]: r for r in rows_bkt}
-        assert by_id[10][-1] == "exact" or by_id[10][1:] == (1, "exact")
-        # plan shape: with broadcast off (fixture-sized frames broadcast
-        # in BOTH layouts, hiding the difference; a corpus-sized index
-        # never broadcasts), the bucketed index joins without exchanging
-        # the index side
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            n_dir = lake.exchange_count(match_against_index(spark, batch, path))
-            n_bkt = lake.exchange_count(
-                match_against_index_bucketed(spark, batch, prefix)
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        dedup.release_staged(spark)
-        assert n_bkt < n_dir, (n_bkt, n_dir)
-
-        # appends preserve the spec and later matches agree across layouts
-        fresh = batch.where("doc_id = 12")
-        append_to_index(fresh, path)
-        append_to_index_bucketed(fresh, prefix, n_buckets=4)
-        b2 = spark.createDataFrame(
-            [(20, "a wholly fresh document with new words only")],
-            ["doc_id", "text"],
-        )
-        r_dir = sorted(map(tuple, match_against_index(spark, b2, path).collect()))
-        dedup.release_staged(spark)
-        r_bkt = sorted(map(tuple, match_against_index_bucketed(spark, b2, prefix).collect()))
-        dedup.release_staged(spark)
-        assert r_dir == r_bkt
-        assert r_bkt[0][2] == "exact"  # doc 12's text now indexed
-    finally:
-        for t in (f"{prefix}_exact", f"{prefix}_bands"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_compaction_swap_recovery_and_scheme_guard(spark, tmp_path):
@@ -3534,128 +2999,6 @@ def test_compaction_swap_recovery_and_scheme_guard(spark, tmp_path):
 
     with pytest.raises(NotImplementedError, match="local"):
         compact_gram_index(spark, "s3a://bucket/gidx")
-
-
-def test_bucketed_chunk_and_line_index_equivalence(spark, tmp_path):
-    """Bucketed chunk/line index twins: identical per-batch results to
-    the parquet-dir layouts, with compaction swaps through the
-    metastore."""
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_chunk_index,
-        append_to_chunk_index_bucketed,
-        append_to_line_index,
-        append_to_line_index_bucketed,
-        build_chunk_index,
-        build_chunk_index_bucketed,
-        build_line_index,
-        build_line_index_bucketed,
-        chunk_stats_against_index,
-        chunk_stats_against_index_bucketed,
-        clean_against_line_index,
-        clean_against_line_index_bucketed,
-        compact_chunk_index_bucketed,
-        compact_line_index_bucketed,
-    )
-
-    mk = lambda rows: spark.createDataFrame(rows, ["doc_id", "text"])
-    base = mk([(1, " ".join(f"bc{i}" for i in range(20)))])
-    lines_corpus = mk([(1, "common line\nalpha tail"), (2, "common line\nbeta tail")])
-    cpath, lpath = str(tmp_path / "cidx_d"), str(tmp_path / "lidx_d")
-    ctab, ltab = "cidx_bkt_test", "lidx_bkt_test"
-    for t in (ctab, ltab):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    try:
-        build_chunk_index(base, cpath, chunk_tokens=5)
-        build_chunk_index_bucketed(base, ctab, chunk_tokens=5, n_buckets=4)
-        build_line_index(lines_corpus, lpath)
-        build_line_index_bucketed(lines_corpus, ltab, n_buckets=4)
-        # duplicated appends in both layouts
-        more = base.withColumn("doc_id", base.doc_id + 10)
-        append_to_chunk_index(more, cpath, chunk_tokens=5)
-        append_to_chunk_index_bucketed(more, ctab, chunk_tokens=5, n_buckets=4)
-        late = mk([(11, "common line\ngamma tail")])
-        append_to_line_index(late, lpath)
-        append_to_line_index_bucketed(late, ltab, n_buckets=4)
-
-        from tern_ep_data_pipeline_spark.operators import dedup
-        from tern_ep_data_pipeline_spark.sources import lake
-
-        probe_c = mk([(50, " ".join(f"bc{i}" for i in range(10)) + " novel tail")])
-        probe_l = mk([(60, "common line\ndelta tail")])
-        key = lambda rows: sorted(map(tuple, rows))
-        dir_c = key(chunk_stats_against_index(
-            spark, probe_c, cpath, chunk_tokens=5).collect())
-        dedup.release_staged(spark)
-        bkt_c = key(chunk_stats_against_index_bucketed(
-            spark, probe_c, ctab, chunk_tokens=5).collect())
-        dedup.release_staged(spark)
-        assert dir_c == bkt_c
-        dir_l = key(clean_against_line_index(
-            spark, probe_l, lpath, min_docs=2).collect())
-        dedup.release_staged(spark)
-        bkt_l = key(clean_against_line_index_bucketed(
-            spark, probe_l, ltab, min_docs=2).collect())
-        dedup.release_staged(spark)
-        assert dir_l == bkt_l
-        # index-side co-location: with broadcast disabled (fixture-sized
-        # indexes broadcast in both layouts, hiding the difference), the
-        # bucketed plans carry strictly fewer shuffle exchanges
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            assert lake.exchange_count(
-                chunk_stats_against_index_bucketed(
-                    spark, probe_c, ctab, chunk_tokens=5)
-            ) < lake.exchange_count(
-                chunk_stats_against_index(
-                    spark, probe_c, cpath, chunk_tokens=5)
-            )
-            assert lake.exchange_count(
-                clean_against_line_index_bucketed(
-                    spark, probe_l, ltab, min_docs=2)
-            ) < lake.exchange_count(
-                clean_against_line_index(
-                    spark, probe_l, lpath, min_docs=2)
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        dedup.release_staged(spark)
-
-        sc = compact_chunk_index_bucketed(spark, ctab)
-        sl = compact_line_index_bucketed(spark, ltab)
-        assert sc["rows_after"] < sc["rows_before"]
-        assert sl["rows_after"] < sl["rows_before"]
-        # compaction read the 4-bucket spec from the catalog, not a default
-        from tern_ep_data_pipeline_spark.operators.dedup_index import (
-            _table_n_buckets,
-        )
-
-        assert _table_n_buckets(spark, ctab) == 4
-        assert _table_n_buckets(spark, ltab) == 4
-        assert key(chunk_stats_against_index_bucketed(
-            spark, probe_c, ctab, chunk_tokens=5).collect()) == bkt_c
-        dedup.release_staged(spark)
-        assert key(clean_against_line_index_bucketed(
-            spark, probe_l, ltab, min_docs=2).collect()) == bkt_l
-        dedup.release_staged(spark)
-
-        # a swap killed between DROP and RENAME is healed by the next read
-        from tern_ep_data_pipeline_spark.operators.dedup_index import (
-            recover_interrupted_table_compaction,
-        )
-
-        spark.sql(f"ALTER TABLE {ltab} RENAME TO {ltab}_compact_tmp")
-        assert key(clean_against_line_index_bucketed(
-            spark, probe_l, ltab, min_docs=2).collect()) == bkt_l
-        dedup.release_staged(spark)
-        assert recover_interrupted_table_compaction(spark, ltab) is False
-        # appends still carry the original spec after compaction
-        append_to_line_index_bucketed(
-            mk([(21, "common line\nepsilon tail")]), ltab, n_buckets=4
-        )
-    finally:
-        for t in (ctab, ltab, ctab + "_compact_tmp", ltab + "_compact_tmp"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_ranged_gram_index_partition_scoped_compaction(spark, tmp_path):
@@ -4363,179 +3706,6 @@ def test_compaction_salted_output_realises_file_counts(
     # and the fold is unchanged by the fan-out
     n = spark.read.parquet(gp).groupBy("gram_hash").count()
     assert n.where("count > 1").count() == 0
-
-
-def test_bucketed_append_vs_compact_concurrency(spark, tmp_path):
-    """VERDICT r10 #5: the bucketed (metastore) layout's append-vs-
-    compaction race, driven for real with threads. Without the table
-    lease, an append landing between the compactor's read and its DROP
-    is silently dropped with the old table (lost grams); with it, the
-    interleaving serialises and every appended gram survives, with a
-    single table identity at the end (no orphaned _compact_tmp)."""
-    import threading
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_gram_index_bucketed,
-        build_gram_index_bucketed,
-        compact_gram_index_bucketed,
-    )
-
-    table = "gidx_conc_bkt_test"
-    for t in (table, table + "_meta", table + "_compact_tmp", "gidx_conc_ref",
-              "gidx_conc_ref_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    seed = spark.createDataFrame(
-        [(i, f"seed doc {i} " + " ".join(f"s{i}w{j}" for j in range(15)))
-         for i in range(10)],
-        ["doc_id", "text"],
-    )
-    batches = [
-        spark.createDataFrame(
-            [(100 + k, f"appended doc {k} "
-              + " ".join(f"a{k}b{j}" for j in range(12)))],
-            ["doc_id", "text"],
-        )
-        for k in range(5)
-    ]
-    build_gram_index_bucketed(seed, table, n_buckets=4)
-
-    errors: list = []
-
-    def appender():
-        try:
-            for b in batches:
-                append_to_gram_index_bucketed(b, table, n_buckets=4)
-        except Exception as exc:  # surfaced below — a loud failure is a bug
-            errors.append(exc)
-
-    def compactor():
-        try:
-            for _ in range(4):
-                compact_gram_index_bucketed(spark, table)
-        except Exception as exc:
-            errors.append(exc)
-
-    ts = [threading.Thread(target=appender), threading.Thread(target=compactor)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(timeout=300)
-    assert not any(t.is_alive() for t in ts), "threads wedged"
-    assert not errors, f"concurrent append/compact raised: {errors}"
-
-    # single surviving table identity
-    assert spark.catalog.tableExists(table)
-    assert not spark.catalog.tableExists(table + "_compact_tmp")
-
-    # no lost grams: the concurrent run's min-view equals a serial twin
-    build_gram_index_bucketed(seed, "gidx_conc_ref", n_buckets=4)
-    for b in batches:
-        append_to_gram_index_bucketed(b, "gidx_conc_ref", n_buckets=4)
-
-    def view(t):
-        return sorted(
-            map(
-                tuple,
-                spark.table(t)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("fk"))
-                .collect(),
-            )
-        )
-
-    assert view(table) == view("gidx_conc_ref")
-    for t in (table, table + "_meta", "gidx_conc_ref", "gidx_conc_ref_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_bucketed_heal_waits_for_live_compactor(spark, tmp_path):
-    """VERDICT r11 #6: the bucketed-layout mirror of the dir-layout
-    heal-vs-compactor exclusion — a streaming batch's pre-batch heal
-    racing a live compactor that is INSIDE the metastore swap window
-    (live table DROPPED, _compact_tmp holds the data) must wait at the
-    table lease rather than misread the swap as crash debris: healing
-    it mid-swap would rename the tmp out from under the compactor's
-    rename (wedging it), and reading on would see no table and
-    silently bootstrap-reset the dedup state."""
-    import threading
-    import time
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _table_lease,
-        build_gram_index_bucketed,
-    )
-    from tern_ep_data_pipeline_spark.streaming.curation import (
-        span_dedup_batch,
-    )
-
-    table = "gidx_heal_vs_compact"
-    for t in (table, table + "_meta", table + "_compact_tmp"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    body = "shared corpus body " + " ".join(f"w{i}" for i in range(30))
-    seed = spark.createDataFrame([(1, body)], ["doc_id", "text"])
-    build_gram_index_bucketed(seed, table, n_buckets=2)
-
-    in_window = threading.Event()
-    errors: list = []
-
-    def compactor():
-        try:
-            from tern_ep_data_pipeline_spark.sources.lake import (
-                write_bucketed,
-            )
-
-            with _table_lease(spark, table, "compact"):
-                # simulate the mid-swap window for real: tmp carries the
-                # data (same bucket spec, as the real compactor writes
-                # it), the live identity is gone
-                write_bucketed(
-                    spark.table(table), table + "_compact_tmp",
-                    ["gram_hash"], n_buckets=2,
-                    sort_cols=["gram_hash"], mode="overwrite",
-                )
-                spark.sql(f"DROP TABLE {table}")
-                in_window.set()
-                time.sleep(3.0)  # the batch must be waiting at the lease
-                spark.sql(
-                    f"ALTER TABLE {table}_compact_tmp RENAME TO {table}"
-                )
-        except Exception as exc:
-            errors.append(exc)
-
-    t = threading.Thread(target=compactor)
-    t.start()
-    try:
-        assert in_window.wait(timeout=60)
-        # a later batch repeats the seed doc: against the INTACT index it
-        # cleans to empty; a bootstrap-reset would keep it
-        batch = spark.createDataFrame([(2, body)], ["doc_id", "text"])
-        out = span_dedup_batch(
-            batch,
-            index_path=str(tmp_path / "unused"),
-            index_table=table,
-            min_tokens=8,
-            memory_guard=False,
-            n_buckets=2,
-        )
-        rows = out.collect()
-    finally:
-        t.join(timeout=60)
-    assert not t.is_alive(), "compactor wedged"
-    assert not errors, f"live compactor broken by the racing heal: {errors}"
-    # the batch waited: it cleaned against the full index (plan was NOT
-    # bootstrap) and the swap survived with a single table identity
-    assert spark.sparkContext.getLocalProperty("tern.span_dedup.plan") in (
-        "bucketed-fused",
-        "bucketed-staged",
-    )
-    removed = {r["doc_id"]: r["n_removed_tokens"] for r in rows}
-    assert removed.get(2, 0) > 0  # the seed's grams DID cover the repeat
-    assert spark.catalog.tableExists(table)
-    assert not spark.catalog.tableExists(table + "_compact_tmp")
-    for t2 in (table, table + "_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t2}")
 
 
 @pytest.mark.parametrize("seed,run_cap,merge_frac", [

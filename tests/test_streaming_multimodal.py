@@ -1084,85 +1084,6 @@ def test_span_dedup_stream_sink_with_compaction(spark, tmp_path):
     assert grams.count() == grams.select("gram_hash").distinct().count()
 
 
-def test_span_dedup_stream_sink_bucketed_index(spark, tmp_path):
-    """index_table= switches the sink to the bucketed gram-index layout
-    (zero index-side Exchange per batch): identical cleaned output to
-    the parquet-dir sink, batch-0 retry-compatible meta (append-tagged),
-    and the every-N compaction runs its bucketed form."""
-    from tern_ep_data_pipeline_spark.operators.dedup import release_staged
-    from tern_ep_data_pipeline_spark.streaming.curation import (
-        span_deduped_stream_sink,
-    )
-
-    phrase = " ".join(f"bs{i}" for i in range(10))
-    texts = [
-        (1, f"first holder doc {phrase} original ending content words"),
-        (2, "plain novel doc nothing shared with any other"),
-        (11, f"late copier piece {phrase} different framing entirely now"),
-        (12, "another plain novel doc all unique tokens again"),
-    ]
-    docs = spark.createDataFrame(texts, ["doc_id", "text"])
-    table = "gidx_sink_bkt_test"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-
-    def run(tag, **sink_kwargs):
-        src = str(tmp_path / f"src_{tag}")
-        docs.where("doc_id < 10").coalesce(1).write.parquet(f"{src}/b0")
-        docs.where("doc_id >= 10").coalesce(1).write.parquet(f"{src}/b1")
-        import glob as globmod
-        import os as osmod
-        import time as timemod
-
-        for k, sub in enumerate(("b0", "b1")):
-            t = timemod.time() - (2 - k) * 10
-            for f in globmod.glob(f"{src}/{sub}/*"):
-                osmod.utime(f, (t, t))
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/b*")
-        )
-        out = str(tmp_path / f"out_{tag}")
-        q = (
-            span_deduped_stream_sink(
-                stream,
-                str(tmp_path / f"gidx_{tag}"),
-                out,
-                str(tmp_path / f"ckpt_{tag}"),
-                **sink_kwargs,
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        release_staged(spark)
-        return {
-            r["doc_id"]: (r["clean_text"], r["n_removed_tokens"])
-            for r in spark.read.parquet(out).collect()
-        }
-
-    try:
-        plain = run("dirmode")
-        bucketed = run(
-            "bktmode", index_table=table, n_buckets=4, compact_every=1
-        )
-        assert bucketed == plain
-        assert bucketed[11][1] == 10  # cross-batch span cut via the table
-        # batch-0's meta row is append-tagged (retryable), never 'build'
-        kinds = {r["kind"] for r in spark.table(f"{table}_meta").collect()}
-        assert kinds == {"append"}
-        # compaction kept one live row per gram
-        grams = spark.table(table)
-        assert grams.count() == grams.select("gram_hash").distinct().count()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {table}_compact_tmp")
-
-
-# ---------------------------------- round-7: binding cross-decode pins
-
 def _require_pillow():
     from tern_ep_data_pipeline_spark.operators import codec_bindings
 
@@ -1425,9 +1346,8 @@ def test_extract_features_records_decoder(spark, monkeypatch):
         mm.extract_features(vid, use_fake_encoder=False)
 
 
-# --- shared kill/restart harness (both layouts drive the same
-# choreography: 3 staggered source batches -> availableNow stream ->
-# crash mid-batch -> restart from the same checkpoint) ---------------
+# --- kill/restart harness (3 staggered source batches -> availableNow
+# stream -> crash mid-batch -> restart from the same checkpoint) -----
 
 
 def _kr_write_source(docs, src):
@@ -1448,7 +1368,7 @@ def _kr_write_source(docs, src):
             osmod.utime(f, (t, t))
 
 
-def _kr_start(spark, tmp_path, tag, index_table=None):
+def _kr_start(spark, tmp_path, tag):
     from tern_ep_data_pipeline_spark.streaming.curation import (
         span_deduped_stream_sink,
     )
@@ -1458,14 +1378,12 @@ def _kr_start(spark, tmp_path, tag, index_table=None):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(tmp_path / f"src_{tag}") + "/b*")
     )
-    kwargs = {} if index_table is None else {"index_table": index_table}
     return (
         span_deduped_stream_sink(
             stream,
             str(tmp_path / f"gidx_{tag}"),
             str(tmp_path / f"out_{tag}"),
             str(tmp_path / f"ckpt_{tag}"),
-            **kwargs,
         )
         .trigger(availableNow=True)
         .start()
@@ -1563,89 +1481,6 @@ def test_span_sink_checkpoint_kill_restart_exactly_once(
     # and both cross-batch spans were cut through the restarted index
     assert got[11][1] == 10 and got[21][1] == 10
 
-
-def test_span_sink_checkpoint_kill_restart_bucketed(spark, tmp_path, monkeypatch):
-    """The kill/restart exactly-once contract on the BUCKETED (metastore)
-    layout: crash after the index append but before the output write,
-    restart from the same checkpoint — the foreachBatch retry re-appends
-    the same per-gram minima (absorbed by the min fold; duplicate ROWS
-    are expected, duplicate DECISIONS are not), the meta fingerprint
-    carve-out admits the replay, and the sink equals a crash-free twin."""
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-    from tern_ep_data_pipeline_spark.operators.dedup import release_staged
-
-    for t in ("gidx_kr_bkt", "gidx_kr_bkt_meta", "gidx_kr_twin",
-              "gidx_kr_twin_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    phrase = " ".join(f"kb{i}" for i in range(10))
-    texts = [
-        (1, f"first holder doc {phrase} original ending content words"),
-        (2, "plain novel doc nothing shared with any other"),
-        (11, f"mid copier piece {phrase} different framing entirely now"),
-        (12, "another plain novel doc all unique tokens again"),
-        (21, f"late copier too {phrase} yet another unique framing here"),
-    ]
-    docs = spark.createDataFrame(texts, ["doc_id", "text"])
-
-    def start(tag, table):
-        return _kr_start(spark, tmp_path, tag, index_table=table)
-
-    def collect(tag):
-        return _kr_collect(spark, tmp_path, tag)
-
-    _kr_write_source(docs, str(tmp_path / "src_ktwin"))
-    q = start("ktwin", "gidx_kr_twin")
-    q.awaitTermination(180)
-    release_staged(spark)
-    expected = collect("ktwin")
-
-    _kr_write_source(docs, str(tmp_path / "src_kbkt"))
-    real_append = di.append_to_gram_index_bucketed
-    state = {"calls": 0}
-
-    def faulty(frame, table, *a, **k):
-        state["calls"] += 1
-        if state["calls"] == 2:  # batch 1, after batch 0 committed
-            real_append(frame, table, *a, **k)  # append lands, THEN crash
-            raise RuntimeError("injected bucketed mid-batch crash")
-        return real_append(frame, table, *a, **k)
-
-    monkeypatch.setattr(di, "append_to_gram_index_bucketed", faulty)
-    q = start("kbkt", "gidx_kr_bkt")
-    with pytest.raises(Exception, match="injected bucketed mid-batch crash"):
-        q.awaitTermination(180)
-        if q.exception() is not None:
-            raise q.exception()
-    release_staged(spark)
-
-    monkeypatch.setattr(di, "append_to_gram_index_bucketed", real_append)
-    q2 = start("kbkt", "gidx_kr_bkt")
-    q2.awaitTermination(180)
-    assert q2.exception() is None
-    release_staged(spark)
-
-    got = collect("kbkt")
-    assert got == expected
-    assert got[11][1] == 10 and got[21][1] == 10
-    # the retried append duplicated ROWS, never DECISIONS: min-fold view
-    # of the crashed-and-restarted table equals the twin's
-    def view(t):
-        return sorted(
-            map(
-                tuple,
-                spark.table(t).groupBy("gram_hash")
-                .agg(F.min("first_key").alias("fk")).collect(),
-            )
-        )
-
-    assert view("gidx_kr_bkt") == view("gidx_kr_twin")
-    for t in ("gidx_kr_bkt", "gidx_kr_bkt_meta", "gidx_kr_twin",
-              "gidx_kr_twin_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-# ------------------------------------------- incremental match dedup (r13)
 
 def test_match_dedup_batch_incremental(spark, tmp_path):
     """Sequential micro-batches against the persistent match index:
@@ -1798,44 +1633,7 @@ def test_match_sink_kill_restart_exactly_once(
     }
 
 
-def test_match_dedup_batch_bucketed_twin(spark, tmp_path):
-    """index_table= selects the bucketed match layout (like the span
-    sink's option): identical decisions to the dir layout across two
-    sequential batches, including the bootstrap-from-empty case."""
-    from tern_ep_data_pipeline_spark.streaming.curation import (
-        match_dedup_batch,
-    )
-
-    base = " ".join(f"bt{i}" for i in range(30))
-    b1 = spark.createDataFrame(
-        [(1, base), (2, "unique first content body"), (3, base)],
-        ["doc_id", "text"],
-    )
-    near = base.rsplit(" ", 2)[0] + " vv98 vv99"
-    b2 = spark.createDataFrame(
-        [(10, base), (11, near), (12, "second batch fresh body words")],
-        ["doc_id", "text"],
-    )
-    outs = {}
-    for tag in ("dir", "bkt"):
-        kw = (
-            {"index_table": "mdx_twin", "n_buckets": 4}
-            if tag == "bkt"
-            else {}
-        )
-        idx = str(tmp_path / f"midx_{tag}")
-        r1 = sorted(map(tuple, match_dedup_batch(b1, idx, **kw).collect()))
-        r2 = sorted(map(tuple, match_dedup_batch(b2, idx, **kw).collect()))
-        outs[tag] = (r1, r2)
-    assert outs["dir"] == outs["bkt"]
-    ids = {r["doc_id"] for r in spark.table("mdx_twin_exact").collect()}
-    assert ids == {1, 2, 12}
-
-
-@pytest.mark.parametrize("layout", ["dir", "bucketed"])
-def test_match_dedup_batch_heals_torn_append(
-    spark, tmp_path, monkeypatch, layout
-):
+def test_match_dedup_batch_heals_torn_append(spark, tmp_path, monkeypatch):
     """The ADVICE r13 failure scenario, end to end: attempt 1 of a batch
     crashes BETWEEN the exact and bands writes, the foreachBatch retry
     must re-append the missing band rows (per-leg anti-join), and a
@@ -1848,11 +1646,6 @@ def test_match_dedup_batch_heals_torn_append(
     )
 
     base = " ".join(f"tw{i}" for i in range(30))
-    kw = (
-        {"index_table": f"mdx_torn_{layout}", "n_buckets": 4}
-        if layout == "bucketed"
-        else {}
-    )
     idx = str(tmp_path / "midx")
     b1 = spark.createDataFrame([(1, base)], ["doc_id", "text"])
 
@@ -1865,14 +1658,9 @@ def test_match_dedup_batch_heals_torn_append(
 
     monkeypatch.setattr(di, "_append_index_rows", boom)
     with pytest.raises(RuntimeError, match="between-legs"):
-        match_dedup_batch(b1, idx, **kw)
+        match_dedup_batch(b1, idx)
 
     def tables():  # re-read: spark.read.parquet pins file listings
-        if layout == "bucketed":
-            return (
-                spark.table(f"mdx_torn_{layout}_exact"),
-                spark.table(f"mdx_torn_{layout}_bands"),
-            )
         return (
             spark.read.parquet(idx + "/exact"),
             spark.read.parquet(idx + "/bands"),
@@ -1884,7 +1672,7 @@ def test_match_dedup_batch_heals_torn_append(
 
     monkeypatch.setattr(di, "_append_index_rows", real)
     out_retry = {r["doc_id"]: r["status"]
-                 for r in match_dedup_batch(b1, idx, **kw).collect()}
+                 for r in match_dedup_batch(b1, idx).collect()}
     assert out_retry == {1: "fresh"}  # self-replay reclassification
     ex, bd = tables()
     assert bd.where("doc_id = 1").count() > 0  # bands leg healed
@@ -1893,7 +1681,7 @@ def test_match_dedup_batch_heals_torn_append(
     near = base.rsplit(" ", 2)[0] + " hz98 hz99"
     b2 = spark.createDataFrame([(20, near)], ["doc_id", "text"])
     out2 = {r["doc_id"]: (r["status"], r["match_id"])
-            for r in match_dedup_batch(b2, idx, **kw).collect()}
+            for r in match_dedup_batch(b2, idx).collect()}
     assert out2[20] == ("near", 1)
 
 
@@ -2008,20 +1796,16 @@ def test_match_dedup_batch_stages_batch_once(spark, tmp_path, monkeypatch):
             spark.read.parquet(idx + "/bands").collect()} == {1, 12}
 
 
-@pytest.mark.parametrize("layout", ["dir", "bucketed"])
-def test_match_index_compaction_decision_preserving(
-    spark, tmp_path, layout
-):
-    """r15 (r14 verdict #1): the match-index compactors undo per-batch
+def test_match_index_compaction_decision_preserving(spark, tmp_path):
+    """r15 (r14 verdict #1): the match-index compactor undoes per-batch
     append file explosion without changing a single decision — an
     identity rewrite (no aggregation exists for these tables). Pins:
-    file count shrinks (dir layout), row sets byte-identical, and a
-    post-compaction batch classifies exactly like an uncompacted twin."""
+    file count shrinks, row sets byte-identical, and a post-compaction
+    batch classifies exactly like an uncompacted twin."""
     import os as _os
 
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         compact_match_index,
-        compact_match_index_bucketed,
     )
     from tern_ep_data_pipeline_spark.streaming.curation import (
         match_dedup_batch,
@@ -2030,16 +1814,6 @@ def test_match_index_compaction_decision_preserving(
     base = " ".join(f"cm{i}" for i in range(30))
     idx = str(tmp_path / "midx")
     twin = str(tmp_path / "midx_twin")
-    kw = (
-        {"index_table": f"cmp_midx_{layout}", "n_buckets": 4}
-        if layout == "bucketed"
-        else {}
-    )
-    kw_twin = (
-        {"index_table": f"cmp_twin_{layout}", "n_buckets": 4}
-        if layout == "bucketed"
-        else {}
-    )
     batches = [
         spark.createDataFrame(
             [(b * 10 + i, f"doc {b} {i} " + base + f" tail{b * 10 + i}")
@@ -2049,38 +1823,27 @@ def test_match_index_compaction_decision_preserving(
         for b in range(4)
     ]
     for b in batches:
-        match_dedup_batch(b, idx, **kw)
-        match_dedup_batch(b, twin, **kw_twin)
+        match_dedup_batch(b, idx)
+        match_dedup_batch(b, twin)
 
-    def rows(path, table_kw):
-        if table_kw:
-            ex = spark.table(f"{table_kw['index_table']}_exact")
-            bd = spark.table(f"{table_kw['index_table']}_bands")
-        else:
-            ex = spark.read.parquet(path + "/exact")
-            bd = spark.read.parquet(path + "/bands")
+    def rows(path):
+        ex = spark.read.parquet(path + "/exact")
+        bd = spark.read.parquet(path + "/bands")
         return (sorted(map(tuple, ex.collect())),
                 sorted(map(tuple, bd.collect())))
 
-    before = rows(idx, kw)
-    if layout == "bucketed":
-        stats = compact_match_index_bucketed(spark, kw["index_table"])
-        assert set(stats) == {"exact", "bands"}
-        assert all(
-            s["rows_before"] == s["rows_after"] for s in stats.values()
-        )
-    else:
-        nf = len([f for f in _os.listdir(idx + "/exact")
-                  if f.endswith(".parquet")])
-        stats = compact_match_index(spark, idx)
-        for leg in ("exact", "bands"):
-            assert stats[leg]["rows"] == spark.read.parquet(
-                f"{idx}/{leg}"
-            ).count()
-        assert stats["exact"]["files_before"] == nf
-        assert stats["exact"]["files_after"] < nf
-        assert stats["bands"]["files_after"] < stats["bands"]["files_before"]
-    assert rows(idx, kw) == before  # identity rewrite
+    before = rows(idx)
+    nf = len([f for f in _os.listdir(idx + "/exact")
+              if f.endswith(".parquet")])
+    stats = compact_match_index(spark, idx)
+    for leg in ("exact", "bands"):
+        assert stats[leg]["rows"] == spark.read.parquet(
+            f"{idx}/{leg}"
+        ).count()
+    assert stats["exact"]["files_before"] == nf
+    assert stats["exact"]["files_after"] < nf
+    assert stats["bands"]["files_after"] < stats["bands"]["files_before"]
+    assert rows(idx) == before  # identity rewrite
 
     # a post-compaction batch decides exactly like the uncompacted twin
     probe = spark.createDataFrame(
@@ -2088,14 +1851,9 @@ def test_match_index_compaction_decision_preserving(
          (101, base + " novel probe body zz1")],   # fresh
         ["doc_id", "text"],
     )
-    got = sorted(map(tuple, match_dedup_batch(probe, idx, **kw).collect()))
-    exp = sorted(map(tuple,
-                     match_dedup_batch(probe, twin, **kw_twin).collect()))
+    got = sorted(map(tuple, match_dedup_batch(probe, idx).collect()))
+    exp = sorted(map(tuple, match_dedup_batch(probe, twin).collect()))
     assert got == exp
-    if layout == "bucketed":
-        for t in ("cmp_midx", "cmp_twin"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}_{layout}_exact")
-            spark.sql(f"DROP TABLE IF EXISTS {t}_{layout}_bands")
 
 
 def test_span_dedup_batch_auto_bloom_regime_gate(spark, tmp_path):

@@ -98,7 +98,7 @@ def main() -> None:
     ap.add_argument("--fpp", type=float, default=0.01)
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--ops", nargs="+", default=None,
-                    help="subset of gram_clean chunk_stats line_clean match "
+                    help="subset of gram_clean chunk_stats line_clean "
                          "streaming")
     ap.add_argument("--stream-batches", type=int, default=3)
     ap.add_argument("--scratch", default=None)
@@ -123,9 +123,9 @@ def main() -> None:
     n_corpus, n_batch = corpus.count(), batch.count()
 
     wanted = set(args.ops or (
-        "gram_clean", "chunk_stats", "line_clean", "match", "streaming"
+        "gram_clean", "chunk_stats", "line_clean", "streaming"
     ))
-    paths = {k: os.path.join(scratch, k) for k in ("gram", "chunk", "line", "match")}
+    paths = {k: os.path.join(scratch, k) for k in ("gram", "chunk", "line")}
     t0 = time.monotonic()
     if wanted & {"gram_clean", "streaming"}:
         di.build_gram_index(corpus, paths["gram"], min_tokens=8)
@@ -133,8 +133,6 @@ def main() -> None:
         di.build_chunk_index(corpus, paths["chunk"], chunk_tokens=10)
     if "line_clean" in wanted:
         di.build_line_index(corpus, paths["line"], min_line_chars=3)
-    if "match" in wanted:
-        di.build_dedup_index(corpus, paths["match"], num_hashes=16, bands=8)
     build_s = time.monotonic() - t0
 
     ops = {
@@ -146,9 +144,6 @@ def main() -> None:
         ),
         "line_clean": lambda fpp: di.clean_against_line_index(
             spark, batch, paths["line"], min_line_chars=3, bloom_fpp=fpp
-        ),
-        "match": lambda fpp: di.match_against_index(
-            spark, batch, paths["match"], num_hashes=16, bands=8, bloom_fpp=fpp
         ),
     }
 
@@ -244,11 +239,6 @@ def main() -> None:
         cells[name] = {
             "off_s": round(best_off[0], 3),
             "on_s": round(best_on[0], 3),
-            **(
-                {"declined": spark.sparkContext.getLocalProperty(
-                    "tern.bloom_prune.match")}
-                if name == "match" else {}
-            ),
             "off_shuffle_mb": round(best_off[1] / 1e6, 1),
             "on_shuffle_mb": round(best_on[1] / 1e6, 1),
             "off_spill_mb": round(best_off[2] / 1e6, 1),

@@ -56,38 +56,6 @@ HEAVY = [
 ]
 
 
-def _setup_clean_gram_bucketed(spark, d: str):
-    """r10 scaling kernel: per-batch incremental span dedup against the
-    BUCKETED gram index. Setup (untimed): index the first 70% of the
-    corpus into a bucketed table; the timed thunk cleans the remaining
-    30% batch against it — the recurring per-ingest cost whose scale
-    claim (O(batch + index scan), no index-side exchange) the curve
-    backs."""
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-
-    docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
-    n = docs.count()
-    cut = int(n * 0.7)
-    base = docs.where(f"doc_id < {cut}")
-    batch = docs.where(f"doc_id >= {cut}")
-    table = "bench_gidx_scaling"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
-    di.build_gram_index_bucketed(base, table, n_buckets=32)
-
-    def run() -> int:
-        return di.clean_against_gram_index_bucketed(spark, batch, table).count()
-
-    return run
-
-
-#: Kernels that need untimed per-dir setup (index builds); the setup
-#: returns the thunk whose wall clock the curve records.
-CUSTOM_SETUP = {
-    "clean_gram_bucketed": _setup_clean_gram_bucketed,
-}
-
-
 def check_manifest(d: str) -> None:
     """Refuse to bench data whose provenance doesn't match the current
     generator: a curve measured on drifted data would silently stand behind
@@ -170,16 +138,14 @@ def main() -> None:
     out: dict[str, dict] = {}
     flagged: list[str] = []
     for name in args.queries:
-        setup = CUSTOM_SETUP.get(name)
-        fn = None if setup else getattr(entrymod, f"q_{name}")
+        fn = getattr(entrymod, f"q_{name}")
         secs: list[float] = []
         rows: list[int] = []
         for d in args.dirs:
-            thunk = setup(spark, d) if setup else None
             runs = []
             for _ in range(args.runs):
                 t0 = time.time()
-                n = thunk() if thunk else fn(spark, d).count()
+                n = fn(spark, d).count()
                 runs.append(time.time() - t0)
                 release_staged(spark)
             secs.append(round(min(runs), 3))

@@ -7,9 +7,7 @@ correctness and exactly-once tests but, unlike the span sink, no
 BLOOM/SPILL-style per-micro-batch evidence. This tool seeds the match
 index from a corpus prefix, then drives sequential micro-batches with a
 configurable duplicate fraction and records per batch: wall, shuffle
-bytes, classification counts, append route, index growth — on BOTH
-layouts (parquet dir and bucketed table), asserting the decisions
-identical in-run.
+bytes, classification counts, append route, index growth.
 
 Two modes:
 
@@ -17,16 +15,15 @@ Two modes:
   BLOOM cells; used per-seed for the streaming octave), plus the DSIR
   scorer cells.
 - ``--sweep 1000,10000,100000 --stream-docs 100000``: the SAME stream
-  of documents is driven through every batch size on both layouts
-  (duplicate construction keys on doc_id alone, so the stream content
-  is batch-size independent) — the r14 verdict #1 sweep. Reports
-  docs/s and per-batch wall so the fixed per-batch overhead is
-  visible against the scaling part. Decision pins, in decreasing
-  strength: (a) HARD — at each batch size the two layouts decide
-  identically; (b) HARD — the harness-constructed duplicates (exact
-  copies and unique-mate nears, chain-free by construction) decide
-  identically across every cell; (c) REPORTED — the full decision
-  sets across batch sizes, with a counted divergence. (c) cannot be a
+  of documents is driven through every batch size (duplicate
+  construction keys on doc_id alone, so the stream content is
+  batch-size independent) — the r14 verdict #1 sweep. Reports docs/s
+  and per-batch wall so the fixed per-batch overhead is visible
+  against the scaling part. Decision pins, in decreasing strength:
+  (a) HARD — the harness-constructed duplicates (exact copies and
+  unique-mate nears, chain-free by construction) decide identically
+  across every cell; (b) REPORTED — the full decision sets across
+  batch sizes, with a counted divergence. (b) cannot be a
   hard equality on this corpus BY THE OPERATOR'S OWN SEMANTICS: the
   intra-batch pass deliberately matches a doc against lower-id
   batch-mates that themselves classified as duplicates (catching
@@ -155,39 +152,23 @@ def _make_stream(docs, seed, lo: int, total: int, dup_frac: float):
     )
 
 
-def _build_index(spark, seed, layout: str, work: str, tag: str):
-    """Fresh index from the seed; returns (index_path, match kwargs,
-    build seconds, cleanup fn)."""
+def _build_index(spark, seed, work: str, tag: str):
+    """Fresh index from the seed; returns (index_path, build seconds)."""
     from tern_ep_data_pipeline_spark.operators.dedup import release_staged
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         build_dedup_index,
-        build_dedup_index_bucketed,
     )
 
     idx = os.path.join(work, f"midx_{tag}")
-    kw: dict = {}
     t0 = time.time()
-    if layout == "bucketed":
-        table = f"bench_midx_{tag}"
-        kw = {"index_table": table, "n_buckets": 32}
-        build_dedup_index_bucketed(seed, table)
-
-        def cleanup():
-            spark.sql(f"DROP TABLE IF EXISTS {table}_exact")
-            spark.sql(f"DROP TABLE IF EXISTS {table}_bands")
-    else:
-        build_dedup_index(seed, idx)
-
-        def cleanup():
-            shutil.rmtree(idx, ignore_errors=True)
+    build_dedup_index(seed, idx)
     build_s = round(time.time() - t0, 3)
     release_staged(spark)
-    return idx, kw, build_s, cleanup
+    return idx, build_s
 
 
 def _drive_batches(spark, stream, lo: int, total: int, batch: int,
-                   idx: str, kw: dict, tag: str,
-                   compact_every: int = 0):
+                   idx: str, tag: str, compact_every: int = 0):
     """Run the stream through the sink in `batch`-sized slices.
     Returns (per-batch cells, decisions dict doc_id -> (status,
     match_id), route counts). ``compact_every=N`` runs the match-index
@@ -198,7 +179,6 @@ def _drive_batches(spark, stream, lo: int, total: int, batch: int,
     from tern_ep_data_pipeline_spark.operators.dedup import release_staged
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         compact_match_index,
-        compact_match_index_bucketed,
     )
     from tern_ep_data_pipeline_spark.streaming.curation import (
         match_dedup_batch,
@@ -217,7 +197,7 @@ def _drive_batches(spark, stream, lo: int, total: int, batch: int,
         _drain(spark)
         m0, d0, s0 = stage_spill_totals(spark)
         t0 = time.time()
-        out = match_dedup_batch(part, idx, **kw)
+        out = match_dedup_batch(part, idx)
         rows = sorted(map(tuple, out.collect()))
         wall = round(time.time() - t0, 3)
         route = sc.getLocalProperty("tern.match_sink.append_route")
@@ -242,10 +222,7 @@ def _drive_batches(spark, stream, lo: int, total: int, batch: int,
         )
         if compact_every and (b + 1) % compact_every == 0:
             t0 = time.time()
-            if kw.get("index_table") is not None:
-                compact_match_index_bucketed(spark, kw["index_table"])
-            else:
-                compact_match_index(spark, idx)
+            compact_match_index(spark, idx)
             cells[-1]["compact_s"] = round(time.time() - t0, 3)
         if b < 5 or b == n_batches - 1 or "compact_s" in cells[-1]:
             print(f"# {tag} b{b}: {cells[-1]}", file=sys.stderr)
@@ -442,8 +419,8 @@ def main() -> None:
     ap.add_argument(
         "--sweep", default=None,
         help="comma-separated batch sizes; drives the SAME --stream-docs "
-        "stream through every size on both layouts and pins decisions "
-        "identical (r14 verdict #1)",
+        "stream through every size and pins the constructed duplicates' "
+        "decisions identical (r14 verdict #1)",
     )
     ap.add_argument("--stream-docs", type=int, default=100_000)
     ap.add_argument("--skip-dsir", action="store_true")
@@ -465,7 +442,6 @@ def main() -> None:
             # cells, making later diffs (and their mean) drift negative —
             # keep every stage resident for the life of the run
             "spark.ui.retainedStages": "100000",
-            "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         },
     )
     docs = spark.read.parquet(
@@ -473,7 +449,6 @@ def main() -> None:
     ).select("doc_id", "text")
     seed = _dedup_seed(docs, args.seed_docs)
     n_seed = seed.count()
-    cleanups = []
 
     result: dict = {
         "metric": "streaming_match_dedup_and_dsir_scorer",
@@ -492,7 +467,7 @@ def main() -> None:
         )
         n_stream = stream.count()
         # the harness-CONSTRUCTED duplicates (chain-free by
-        # construction — module docstring pin (b)): exact-branch docs
+        # construction — module docstring pin (a)): exact-branch docs
         # (every DUP_MOD key has a seed representative at these seed
         # sizes) and near-branch docs whose unique seed mate survived
         # the seed's exact-dedup
@@ -505,62 +480,48 @@ def main() -> None:
         ]
         sweep_cells = []
         all_dec: dict = {}
-        for layout in ("dir", "bucketed"):
-            for bs in sizes:
-                tag = f"{layout}_bs{bs}"
-                idx, kw, build_s, cleanup = _build_index(
-                    spark, seed, layout, work, tag
-                )
-                cleanups.append(cleanup)
-                t0 = time.time()
-                cells, decisions, routes = _drive_batches(
-                    spark, stream, args.seed_docs, total, bs, idx, kw, tag,
-                    compact_every=args.compact_every,
-                )
-                total_wall = round(time.time() - t0, 3)
-                walls = [c["wall_s"] for c in cells]
-                all_dec[(layout, bs)] = decisions
-                sweep_cells.append(
-                    {
-                        "layout": layout,
-                        "batch_docs": bs,
-                        "n_batches": len(cells),
-                        "stream_docs": n_stream,
-                        "seed_build_s": build_s,
-                        "total_wall_s": total_wall,
-                        "docs_per_s": round(n_stream / total_wall),
-                        "batch_wall_mean_s": round(
-                            sum(walls) / len(walls), 3
-                        ),
-                        "batch_wall_min_s": min(walls),
-                        "batch_wall_max_s": max(walls),
-                        "shuffle_mb_mean": round(
-                            sum(c["shuffle_mb"] for c in cells)
-                            / len(cells), 1,
-                        ),
-                        "append_routes": routes,
-                        "decisions_digest": _digest(decisions),
-                    }
-                )
-                print(f"# sweep {tag}: {sweep_cells[-1]}", file=sys.stderr)
-        # pin (a): layouts identical at each size — HARD
-        layouts_identical = all(
-            all_dec[("dir", bs)] == all_dec[("bucketed", bs)]
-            for bs in sizes
-        )
-        assert layouts_identical, "layout decisions diverged"
-        # pin (b): constructed (chain-free) dups identical — HARD
+        for bs in sizes:
+            tag = f"bs{bs}"
+            idx, build_s = _build_index(spark, seed, work, tag)
+            t0 = time.time()
+            cells, decisions, routes = _drive_batches(
+                spark, stream, args.seed_docs, total, bs, idx, tag,
+                compact_every=args.compact_every,
+            )
+            total_wall = round(time.time() - t0, 3)
+            walls = [c["wall_s"] for c in cells]
+            all_dec[bs] = decisions
+            sweep_cells.append(
+                {
+                    "batch_docs": bs,
+                    "n_batches": len(cells),
+                    "stream_docs": n_stream,
+                    "seed_build_s": build_s,
+                    "total_wall_s": total_wall,
+                    "docs_per_s": round(n_stream / total_wall),
+                    "batch_wall_mean_s": round(sum(walls) / len(walls), 3),
+                    "batch_wall_min_s": min(walls),
+                    "batch_wall_max_s": max(walls),
+                    "shuffle_mb_mean": round(
+                        sum(c["shuffle_mb"] for c in cells) / len(cells), 1,
+                    ),
+                    "append_routes": routes,
+                    "decisions_digest": _digest(decisions),
+                }
+            )
+            print(f"# sweep {tag}: {sweep_cells[-1]}", file=sys.stderr)
+        # pin (a): constructed (chain-free) dups identical — HARD
         con_digests = {
             _digest({d: dec[d] for d in constructed if d in dec})
             for dec in all_dec.values()
         }
         assert len(con_digests) == 1, "constructed-dup decisions diverged"
-        # pin (c): cross-size divergence counted and bounded to the
+        # pin (b): cross-size divergence counted and bounded to the
         # corpus's near-chain tail (module docstring)
-        base_dec = all_dec[("dir", sizes[0])]
+        base_dec = all_dec[sizes[0]]
         divergence = {}
         for bs in sizes[1:]:
-            other = all_dec[("dir", bs)]
+            other = all_dec[bs]
             n_diff = sum(
                 1 for d, v in base_dec.items() if other.get(d) != v
             )
@@ -572,39 +533,25 @@ def main() -> None:
         result["batch_size_sweep"] = {
             "sizes": sizes,
             "cells": sweep_cells,
-            "layouts_identical_per_size": layouts_identical,
             "constructed_dup_decisions_identical": len(con_digests) == 1,
             "n_constructed_dups": len(constructed),
             "cross_size_divergence_chain_tail": divergence,
         }
     else:
-        layouts = {}
         total = args.batches * args.batch
         stream = _make_stream(
             docs, seed, args.seed_docs, total, args.dup_frac
         )
-        all_decisions = []
-        for layout in ("dir", "bucketed"):
-            idx, kw, build_s, cleanup = _build_index(
-                spark, seed, layout, work, layout
-            )
-            cleanups.append(cleanup)
-            cells, decisions, routes = _drive_batches(
-                spark, stream, args.seed_docs, total, args.batch, idx, kw,
-                layout, compact_every=args.compact_every,
-            )
-            layouts[layout] = {
-                "seed_build_s": build_s,
-                "batches": cells,
-                "append_routes": routes,
-                "decisions_digest": _digest(decisions),
-            }
-            all_decisions.append(decisions)
-        result["batch_docs"] = args.batch
-        result["layouts"] = layouts
-        result["decisions_identical_across_layouts"] = (
-            all_decisions[0] == all_decisions[1]
+        idx, build_s = _build_index(spark, seed, work, "batches")
+        cells, decisions, routes = _drive_batches(
+            spark, stream, args.seed_docs, total, args.batch, idx,
+            "batches", compact_every=args.compact_every,
         )
+        result["batch_docs"] = args.batch
+        result["seed_build_s"] = build_s
+        result["batches"] = cells
+        result["append_routes"] = routes
+        result["decisions_digest"] = _digest(decisions)
 
     if not args.skip_dsir:
         result["dsir_scorer"] = run_dsir_cells(spark, docs, seed, work, args)
@@ -616,8 +563,6 @@ def main() -> None:
             fh.write(line + "\n")
     print(line)
     shutil.rmtree(work, ignore_errors=True)
-    for cleanup in cleanups:
-        cleanup()
 
 
 if __name__ == "__main__":

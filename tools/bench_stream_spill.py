@@ -76,13 +76,6 @@ def main() -> None:
         "the raw failure mode the guard classifies)",
     )
     ap.add_argument(
-        "--bucketed",
-        action="store_true",
-        help="store the gram index as a bucketed table (bucketBy "
-        "gram_hash) instead of a parquet dir — the index-side min-combine "
-        "and first-key join then run with ZERO index Exchange per batch",
-    )
-    ap.add_argument(
         "--dup-frac",
         type=float,
         default=0.0,
@@ -96,10 +89,7 @@ def main() -> None:
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="stream-spill-")
-    spark = get_spark(
-        "stream-spill",
-        extra_conf={"spark.sql.warehouse.dir": os.path.join(work, "warehouse")},
-    )
+    spark = get_spark("stream-spill")
     heap_conf = os.environ.get("SPARK_DRIVER_MEMORY", "(default)")
     src_dir = os.path.join(work, "source")
     index = os.path.join(work, "gram_index")
@@ -148,13 +138,10 @@ def main() -> None:
 
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         compact_gram_index,
-        compact_gram_index_bucketed,
     )
     from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
 
     batch_stats: list[dict] = []
-
-    index_table = "stream_spill_gidx" if args.bucketed else None
 
     def _process(batch, batch_id: int) -> None:
         # identical to span_deduped_stream_sink's foreachBatch body
@@ -163,33 +150,22 @@ def main() -> None:
         span_dedup_batch(
             batch, index, "doc_id", "text", min_tokens=args.min_tokens,
             memory_guard=not args.no_memory_guard,
-            index_table=index_table,
         ).write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
         sec = round(time.time() - t0, 3)
         compact = None
         if args.compact_every and (batch_id + 1) % args.compact_every == 0:
             tc = time.time()
-            if index_table is not None:
-                compact = compact_gram_index_bucketed(
-                    batch.sparkSession, index_table
-                )
-            else:
-                compact = compact_gram_index(batch.sparkSession, index)
+            compact = compact_gram_index(batch.sparkSession, index)
             compact["sec"] = round(time.time() - tc, 3)
         sc = batch.sparkSession.sparkContext
-        if index_table is not None:
-            idx_bytes, idx_files = dir_bytes(
-                os.path.join(work, "warehouse", index_table)
-            )
-        else:
-            idx_bytes, idx_files = dir_bytes(os.path.join(index, "grams"))
+        idx_bytes, idx_files = dir_bytes(os.path.join(index, "grams"))
         batch_stats.append(
             {
                 "batch_id": int(batch_id),
                 "rows": batch.count(),
                 "sec": sec,
-                # span_dedup_batch publishes the plan it chose (fused vs
-                # memory-derated staged) thread-locally — same thread here
+                # span_dedup_batch publishes the plan it chose (dir vs
+                # bootstrap) thread-locally — same thread here
                 "plan": sc.getLocalProperty("tern.span_dedup.plan"),
                 "index_bytes": idx_bytes,
                 "index_files": idx_files,
@@ -235,7 +211,6 @@ def main() -> None:
         "compact_every": args.compact_every or None,
         "memory_guard": not args.no_memory_guard,
         "dup_frac": args.dup_frac,
-        "bucketed": args.bucketed,
         "batches": batch_stats,
         "out_rows": out_rows,
         **({"error": error} if error else {}),
