@@ -513,12 +513,6 @@ SELECT s.user_id, s.min_delta_s, m.mode_delta_s, s.n_deltas FROM s JOIN m USING 
 """
 
 
-def q_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3: global gaps longer than 10 minutes with bounds."""
-    ev = _t(spark, sf_dir, "events")
-    return gaps.gap_report(ev, "ts", 600)
-
-
 ORACLE_GAP_REPORT = """
 WITH dist AS (SELECT DISTINCT ts FROM events),
 d AS (SELECT lag(ts) OVER (ORDER BY ts) AS prev_ts, ts FROM dist)
@@ -542,12 +536,6 @@ SELECT user_id, min(ts) AS start_ts, max(ts) AS end_ts, COUNT(*) AS n_actual,
         / (CAST(date_diff('microsecond', min(ts), max(ts)) // 1000000 // 3600 AS BIGINT) + 1), 6) AS pct_missing
 FROM events GROUP BY user_id
 """
-
-
-def q_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3/A9: histogram of global gap sizes in 5-minute units."""
-    ev = _t(spark, sf_dir, "events")
-    return gaps.gap_histogram(ev, "ts", 300)
 
 
 ORACLE_GAP_HISTOGRAM = """
@@ -576,103 +564,6 @@ ORACLE_RANGE_MASK = """
 SELECT event_id,
   CASE WHEN value >= 10.0 AND value <= 400.0 THEN value END AS value_masked,
   CAST(CASE WHEN value >= 10.0 AND value <= 400.0 THEN 0 ELSE 1 END AS BIGINT) AS qc_flag
-FROM events
-"""
-
-
-def q_unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.8 conversion suite as one fused projection (all exact arithmetic)."""
-    ev = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    return ev.select(
-        "event_id",
-        cv.convert_co2_flux(v).alias("co2_flux_umol"),
-        cv.convert_co2_density(v).alias("co2_density_mg"),
-        cv.convert_temperature(v).alias("temp_c"),
-        cv.convert_pressure(v, "Pa").alias("press_kpa"),
-        cv.convert_rh(v).alias("rh_pct"),
-        cv.convert_sws(v).alias("sws_frac"),
-        cv.convert_precipitation(v, 0.2).alias("precip_mm"),
-        cv.convert_h2o_density(v, "mmol/m^3").alias("h2o_density_g"),
-        cv.convert_variance_to_stdev(v).alias("stdev"),
-        cv.convert_diagnostic(v, 18000).alias("diag_invalid"),
-    )
-
-
-ORACLE_UNIT_CONV = """
-SELECT event_id,
-  value * 1000.0 / 44.0 AS co2_flux_umol,
-  value * 44.0 AS co2_density_mg,
-  value - 273.15 AS temp_c,
-  value / 1000.0 AS press_kpa,
-  value * 100.0 AS rh_pct,
-  value / 100.0 AS sws_frac,
-  value * 0.2 AS precip_mm,
-  value * 18.0 / 1000.0 AS h2o_density_g,
-  sqrt(value) AS stdev,
-  18000 - value AS diag_invalid
-FROM events
-"""
-
-
-def q_met_derivations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Met calculation chain (Buck es/e, VPD, dew point, AH) rounded to 6."""
-    ev = _t(spark, sf_dir, "events")
-    Ta = F.col("value") / 10.0
-    # clamp RH to (0, 100]: value can be 0.0, and ln(e=0) in the dew-point
-    # chain is an error in strict engines
-    RH = F.least(F.greatest(F.col("value") / 5.0, F.lit(0.1)), F.lit(100.0))
-    ps = F.lit(95.0) + F.col("value") / 100.0
-    return ev.select(
-        "event_id",
-        F.round(met.calculate_es(Ta), 6).alias("es_kpa"),
-        F.round(met.calculate_e(Ta, RH), 6).alias("e_kpa"),
-        F.round(met.calculate_VPD(Ta, RH), 6).alias("vpd_kpa"),
-        F.round(met.calculate_dew_point(Ta, RH), 6).alias("dew_point_c"),
-        F.round(met.calculate_AH_from_RH(Ta, RH, ps), 6).alias("ah_gm3"),
-        F.round(met.calculate_molar_density(Ta, ps), 6).alias("molar_density"),
-    )
-
-
-ORACLE_MET = """
-WITH base AS (
-  SELECT event_id, value / 10.0 AS ta,
-         least(greatest(value / 5.0, 0.1), 100.0) AS rh,
-         95.0 + value / 100.0 AS ps
-  FROM events
-), es AS (
-  SELECT *, 0.61121 * exp((18.678 - ta / 234.5) * (ta / (257.14 + ta))) AS es_v FROM base
-), e AS (
-  SELECT *, es_v * rh / 100.0 AS e_v FROM es
-)
-SELECT event_id,
-  round(es_v, 6) AS es_kpa,
-  round(e_v, 6) AS e_kpa,
-  round(es_v - e_v, 6) AS vpd_kpa,
-  round(243.5 * ln(e_v / 0.61121) / (17.502 - ln(e_v / 0.61121)), 6) AS dew_point_c,
-  round(e_v / ps * (ps * 1000.0 / ((ta + 273.15) * 8.3143)) * 18.0, 6) AS ah_gm3,
-  round(ps * 1000.0 / ((ta + 273.15) * 8.3143), 6) AS molar_density
-FROM e
-"""
-
-
-def q_variance_stdev_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variance<->stdev conversions incl. the unit-aware composed form."""
-    ev = _t(spark, sf_dir, "events")
-    v = F.col("value")
-    return ev.select(
-        "event_id",
-        F.round(cv.convert_variance_to_stdev(v), 6).alias("stdev"),
-        F.round(cv.convert_stdev_to_variance(cv.convert_variance_to_stdev(v)), 6).alias("roundtrip"),
-        F.round(cv.convert_variance(v, cv.convert_co2_flux), 6).alias("variance_converted"),
-    )
-
-
-ORACLE_VAR_STDEV = """
-SELECT event_id,
-  round(sqrt(value), 6) AS stdev,
-  round(sqrt(value) * sqrt(value), 6) AS roundtrip,
-  round((sqrt(value) * 1000.0 / 44.0) * (sqrt(value) * 1000.0 / 44.0), 6) AS variance_converted
 FROM events
 """
 
@@ -959,22 +850,6 @@ def q_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PIVOT = """
-SELECT date_trunc('day', ts) AS day,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) FILTER (WHERE event_type = 'click') AS DOUBLE)
-    / COUNT(*) FILTER (WHERE event_type = 'click') AS click,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) FILTER (WHERE event_type = 'error') AS DOUBLE)
-    / COUNT(*) FILTER (WHERE event_type = 'error') AS error,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) FILTER (WHERE event_type = 'purchase') AS DOUBLE)
-    / COUNT(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) FILTER (WHERE event_type = 'signup') AS DOUBLE)
-    / COUNT(*) FILTER (WHERE event_type = 'signup') AS signup,
-  CAST(SUM(CAST(value AS DECIMAL(12,2))) FILTER (WHERE event_type = 'view') AS DOUBLE)
-    / COUNT(*) FILTER (WHERE event_type = 'view') AS view
-FROM events GROUP BY 1
-"""
-
-
 def q_height_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R3+R4: two measured heights -> linear interpolation to targets, plus
     broadcast of one column across the height axis (profile prep shapes)."""
@@ -1027,28 +902,6 @@ FROM events GROUP BY 1, 2
 # Training-data operators: text analysis, dedup, similarity
 # --------------------------------------------------------------------------
 
-def q_doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    out = text.token_stats(docs, "doc_id", "text")
-    return out.select(
-        "doc_id",
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        "avg_token_len",
-    )
-
-
-ORACLE_TOKEN_STATS = """
-SELECT doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens,
-  round(CASE WHEN length(trim(text)) > 0
-    THEN CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE)
-         / len(string_split_regex(trim(text), '\\s+')) END, 6) AS avg_token_len
-FROM documents
-"""
-
-
 def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     out = text.quality_scores(docs, "doc_id", "text")
@@ -1061,130 +914,6 @@ def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "digit_ratio",
         "upper_ratio",
     )
-
-
-ORACLE_QUALITY = """
-SELECT doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\\s+')) END AS BIGINT) AS n_tokens,
-  round(CASE WHEN length(trim(text)) > 0
-    THEN CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-         x -> x IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE)
-         / len(string_split_regex(trim(text), '\\s+')) ELSE 0.0 END, 6) AS stopword_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS punct_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS digit_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS upper_ratio
-FROM documents
-"""
-
-
-#: The qf_* branch of the fused doc_profile suite: the quality model's
-#: feature frame (``q_quality_filter`` stays bench-only because L-BFGS float
-#: iteration is not SQL-reproducible, but ``heuristic_feature_frame`` is pure
-#: arithmetic — the six signals the logistic model trains and scores on — so
-#: gating it verifies the model pipeline's entire deterministic input
-#: surface).
-ORACLE_QUALITY_FEATURES = """
-WITH t AS (
-  SELECT doc_id, text,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(text), '\\s+')) END AS n_tok
-  FROM documents
-)
-SELECT doc_id,
-  round(CASE WHEN n_tok > 0
-    THEN CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-         x -> x IN ('the','a','an','and','or','of','to','in','is','it'))) AS DOUBLE) / n_tok
-    ELSE 0.0 END, 6) AS stopword_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS punct_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS digit_ratio,
-  round(CASE WHEN length(text) > 0
-    THEN CAST(length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS DOUBLE) / length(text)
-    ELSE 0.0 END, 6) AS upper_ratio,
-  CAST(n_tok AS DOUBLE) AS n_tokens,
-  CASE WHEN n_tok > 0
-    THEN round(CAST(length(regexp_replace(trim(text), '\\s+', '', 'g')) AS DOUBLE) / n_tok, 6)
-    ELSE NULL END AS avg_token_len
-FROM t
-"""
-
-
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    out = text.lang_id(docs, "doc_id", "text")
-    casts = [F.col(f"n_{lang}").cast("bigint").alias(f"n_{lang}") for lang in text.LANG_MARKERS]
-    return out.select("doc_id", *casts, "pred_lang")
-
-
-def _lang_count_sql(words: tuple[str, ...]) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return (
-        "CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), "
-        f"x -> x IN ({lst}))) AS BIGINT)"
-    )
-
-
-ORACLE_LANG_ID = f"""
-WITH c AS (
-  SELECT doc_id,
-    {_lang_count_sql(text.LANG_MARKERS['en'])} AS n_en,
-    {_lang_count_sql(text.LANG_MARKERS['de'])} AS n_de,
-    {_lang_count_sql(text.LANG_MARKERS['fr'])} AS n_fr,
-    {_lang_count_sql(text.LANG_MARKERS['es'])} AS n_es,
-    {_lang_count_sql(text.LANG_MARKERS['zh'])} AS n_zh
-  FROM documents
-)
-SELECT doc_id, n_en, n_de, n_fr, n_es, n_zh,
-  CASE WHEN greatest(n_en, n_de, n_fr, n_es, n_zh) = 0 THEN 'und'
-       WHEN n_en = greatest(n_en, n_de, n_fr, n_es, n_zh) THEN 'en'
-       WHEN n_de = greatest(n_en, n_de, n_fr, n_es, n_zh) THEN 'de'
-       WHEN n_fr = greatest(n_en, n_de, n_fr, n_es, n_zh) THEN 'fr'
-       WHEN n_es = greatest(n_en, n_de, n_fr, n_es, n_zh) THEN 'es'
-       ELSE 'zh' END AS pred_lang
-FROM c
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return text.fingerprint(docs, "doc_id", "text").select("doc_id", "fingerprint_md5")
-
-
-ORACLE_FINGERPRINT = """
-SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint_md5
-FROM documents
-"""
-
-
-def q_doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish token counting via the GPT-2-style pretokenise regex."""
-    docs = _t(spark, sf_dir, "documents")
-    return text.bpe_token_stats(docs, "doc_id", "text")
-
-
-ORACLE_BPE_TOKENS = r"""
-WITH c AS (
-  SELECT doc_id,
-    CASE WHEN length(trim(text)) = 0 THEN 0
-         ELSE len(string_split_regex(trim(text), '\s+')) END AS n_ws_tokens,
-    len(regexp_extract_all(text, '''[sdmt]|''ll|''re|''ve| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')) AS n_bpe_tokens,
-    length(text) AS n_chars
-  FROM documents
-)
-SELECT doc_id, n_ws_tokens, n_bpe_tokens,
-  round(CASE WHEN n_bpe_tokens > 0 THEN CAST(n_chars AS DOUBLE) / n_bpe_tokens ELSE 0.0 END, 6) AS chars_per_bpe_token
-FROM c
-"""
 
 
 def q_doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1302,13 +1031,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup.exact_dedup_groups(docs, "doc_id", "text")
-
-
-ORACLE_EXACT_DEDUP = """
-SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS content_hash,
-  min(doc_id) AS canonical_id, COUNT(*) AS n_copies
-FROM documents GROUP BY 1
-"""
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,34 +1548,6 @@ FROM u GROUP BY source
 """
 
 
-def q_first_last_record(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O4/U2: per-user first and last event (deterministic first-wins via
-    min_by/max_by on (ts, event_id))."""
-    ev = _t(spark, sf_dir, "events")
-    key = F.struct(F.col("ts"), F.col("event_id"))
-    return ev.groupBy("user_id").agg(
-        F.min_by("event_id", key).alias("first_event_id"),
-        F.max_by("event_id", key).alias("last_event_id"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-    )
-
-
-ORACLE_FIRST_LAST = """
-WITH f AS (
-  SELECT user_id, event_id AS first_event_id FROM events
-  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) = 1
-),
-l AS (
-  SELECT user_id, event_id AS last_event_id FROM events
-  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-),
-s AS (SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts FROM events GROUP BY 1)
-SELECT s.user_id, f.first_event_id, l.last_event_id, s.first_ts, s.last_ts
-FROM s JOIN f USING (user_id) JOIN l USING (user_id)
-"""
-
-
 def q_priority_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 interval coalescing: consecutive same-priority orders per customer
     collapsed into (priority, start, end, n) runs (gaps-and-islands)."""
@@ -2300,42 +1994,6 @@ ORACLE_PROFILE = _profile_oracle()
 
 
 # --------------------------------------------------------------------------
-# Multimodal plumbing
-# --------------------------------------------------------------------------
-
-def q_asset_content_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-asset byte stats over documents-as-assets (dedup keys)."""
-    docs = _t(spark, sf_dir, "documents")
-    assets = multimodal.assets_from_documents(docs)
-    return multimodal.content_stats(assets).select(
-        "asset_id", "modality", "n_bytes", "content_md5"
-    )
-
-
-ORACLE_ASSET_STATS = """
-SELECT doc_id AS asset_id, 'text' AS modality,
-  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-  md5(text) AS content_md5
-FROM documents
-"""
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched feature extraction plumbing (deterministic fake encoder
-    — rows-only check by design)."""
-    docs = _t(spark, sf_dir, "documents")
-    assets = multimodal.assets_from_documents(docs)
-    feats = multimodal.extract_features(assets, dim=16)
-    return feats.select(
-        "asset_id",
-        F.size("feature").alias("feature_dim"),
-        F.round(
-            F.sqrt(F.aggregate(F.col("feature"), F.lit(0.0), lambda a, x: a + x * x)), 6
-        ).alias("feature_norm"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Fused driver-gate suites
 #
 # The round-1 driver verified exactly the FIRST 50 ``queries()`` entries (the
@@ -2609,16 +2267,15 @@ def q_doc_profile_a(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the five row-local operators (token stats, quality ratios, lang ID,
     # fingerprint, BPE counts) stack into ONE map-only projection via their
-    # column builders — zero joins where the r6 fused suite had five.
-    # SQL-twin strings (r16): one selectExpr parse instead of ~1100 py4j
-    # round trips; plan-equal to the Column form (tests/test_sqltwins.py)
+    # SQL builders — zero joins where the r6 fused suite had five, and one
+    # selectExpr parse instead of ~1100 py4j round trips
     row = docs.selectExpr(
         "doc_id",
-        *text.token_stat_sqls("text"),
-        *text.quality_ratio_sqls("text"),
+        *text.token_stat_sqls("text", micro=True),
+        *text.quality_ratio_sqls("text", micro=True),
         *text.lang_id_sqls("text", "bigint"),
         *text.fingerprint_sqls("text"),
-        *text.bpe_stat_sqls("text"),
+        *text.bpe_stat_sqls("text", micro=True),
     )
     d = dedup.exact_dedup_groups(docs, "doc_id", "text")
     ch = dedup.chunk_dedup_stats(docs, "doc_id", "text", chunk_tokens=10, micro=True)
@@ -3475,8 +3132,6 @@ def q_llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     def _b_pii() -> list[DataFrame]:
-        # SQL-twin strings (r16 build batching): plan-equal to the Column
-        # form (tests/test_sqltwins.py pins the scrub/hits twins)
         injected = (
             "concat('contact u', CAST(doc_id AS STRING), "
             "'@ex.com or call 555-123-4567 ', text)"

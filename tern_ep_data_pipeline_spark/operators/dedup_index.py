@@ -48,27 +48,6 @@ def _exact_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _bloom_pruned(
-    index_frame: DataFrame,
-    key_cols: list[str],
-    batch_keys: DataFrame,
-    fpp: float,
-    strategy: str = "auto",
-    size_hint: int | None = None,
-) -> DataFrame:
-    """Batch-key index-scan prune — thin wrapper over
-    :func:`bloom.prune_index_by_keys` (exact broadcast semi join for
-    small key sets, Arrow Bloom probe past that; both decision-
-    preserving, pinned bit-identical to the unpruned path and to each
-    other in test_bloom_prefilter).  Worth it when batch ≪ index (the
-    incremental-ingest contract): the O(index) pre-join aggregation
-    shrinks to ~O(batch)."""
-    return bloom_ops.prune_index_by_keys(
-        index_frame, key_cols, batch_keys, fpp=fpp, strategy=strategy,
-        size_hint=size_hint,
-    )
-
-
 def _band_table(
     df: DataFrame,
     id_col: str,
@@ -587,8 +566,8 @@ def _chunk_stats_core(
         # batch scan's bytes are a safe over-estimate of the chunk-hash
         # key set (one 32-hex hash per ~10 tokens of text)
         indexed = (
-            _bloom_pruned(
-                indexed, ["__h"], occ, bloom_fpp,
+            bloom_ops.prune_index_by_keys(
+                indexed, ["__h"], occ, fpp=bloom_fpp,
                 size_hint=plan_size_estimate(new_docs),
             )
             .distinct()
@@ -750,13 +729,13 @@ def clean_against_line_index(
         # unreliable, and docs bytes safely over-estimate the line-hash
         # key set — which also lets the bloom path size its bitmap for
         # the requested fpp instead of the fixed default geometry
-        scan = _bloom_pruned(
+        scan = bloom_ops.prune_index_by_keys(
             scan,
             ["line_hash"],
             _line_count_table(
                 new_docs, id_col, text_col, delimiter, min_line_chars
             ),
-            bloom_fpp,
+            fpp=bloom_fpp,
             size_hint=plan_size_estimate(new_docs),
         )
     idx = (
@@ -850,11 +829,11 @@ def boilerplate_lines_report(
     if bloom_fpp is not None:
         from .memguard import plan_size_estimate
 
-        scan = _bloom_pruned(
+        scan = bloom_ops.prune_index_by_keys(
             scan,
             ["line_hash"],
             batch.select("line_hash"),
-            bloom_fpp,
+            fpp=bloom_fpp,
             strategy=prune_strategy,
             size_hint=plan_size_estimate(new_docs),
         )

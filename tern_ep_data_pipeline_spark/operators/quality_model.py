@@ -42,8 +42,6 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import quality_scores, token_stats
-
 _log = logging.getLogger(__name__)
 
 #: Conservative upper bound on stored bytes per document row, used to
@@ -81,23 +79,17 @@ def heuristic_feature_frame(
     stays on the RAW builders deliberately: it is the portable integer
     contract hash-pinned against the DuckDB oracle SQL, whose expressions
     carry the same NULL semantics."""
-    from .text import (
-        _sql_token_count,
-        quality_ratio_sqls,
-        token_stat_sqls,
-    )
+    from .text import _sql_ident, quality_ratio_sqls, token_stat_sqls
 
     if micro:
-        # SQL-twin strings (r16): one selectExpr parse instead of ~550 py4j
-        # round trips; plan-equal to the Column form (tests/test_sqltwins.py)
+        t = _sql_ident(text_col)
         return df.selectExpr(
-            id_col,
-            *quality_ratio_sqls(text_col),
-            f"CAST({_sql_token_count(text_col)} AS BIGINT) AS n_tokens",
-            # avg_token_len_micro is token_stat_sqls' third builder
-            token_stat_sqls(text_col)[2],
+            _sql_ident(id_col),
+            *quality_ratio_sqls(t, micro=True),
+            # n_tokens and avg_token_len_micro
+            *token_stat_sqls(t, micro=True)[1:],
         )
-    return df.select(F.col(id_col), *_feature_exprs(F.col(text_col)))
+    return df.select(F.col(id_col), *_feature_exprs(text_col))
 
 
 def heuristic_pipeline(label_col: str = "label") -> Pipeline:
@@ -209,9 +201,9 @@ def quality_filter(
     return df.join(keep, on=id_col, how="left_semi")
 
 
-def _feature_exprs(t) -> list:
-    """The HEURISTIC_FEATURES as raw column expressions over a text
-    column, in registry order — composable into fused projections and
+def _feature_exprs(text_col: str) -> list:
+    """The HEURISTIC_FEATURES as column expressions over the text column
+    ``text_col``, in registry order — composable into fused projections and
     filter predicates without materialising a feature frame.
 
     Every expression coalesces to 0.0: null / empty / whitespace-only
@@ -222,16 +214,26 @@ def _feature_exprs(t) -> list:
     ``VectorAssembler(handleInvalid='keep')``; the folded-expression
     paths get the same tolerance here, with 0.0 as the defined value
     (a no-signal document scores as all-zero features)."""
-    from .text import quality_ratio_cols, token_count, token_stat_cols
+    from .text import (
+        _sql_double,
+        _sql_ident,
+        _sql_token_count,
+        quality_ratio_sqls,
+        token_stat_sqls,
+    )
 
-    raw = [
-        *quality_ratio_cols(t),
-        token_count(t).cast("double").alias("n_tokens"),
-        token_stat_cols(t)[2],
+    t = _sql_ident(text_col)
+    named = [
+        *quality_ratio_sqls(t),
+        f"CAST({_sql_token_count(t)} AS DOUBLE) AS n_tokens",
+        token_stat_sqls(t)[2],
     ]
+    zero = _sql_double(0.0)
     return [
-        F.coalesce(e, F.lit(0.0)).alias(name)
-        for e, name in zip(raw, HEURISTIC_FEATURES)
+        # each builder string ends in " AS <name>"; the body is re-aliased
+        # to the registry name around the coalesce
+        F.expr(f"coalesce({sql.rsplit(' AS ', 1)[0]}, {zero}) AS {name}")
+        for sql, name in zip(named, HEURISTIC_FEATURES)
     ]
 
 
@@ -271,7 +273,7 @@ def collect_feature_sample(
     base = df.select(
         *[F.col(c) for c in lead_cols],
         F.xxhash64(F.col(id_col)).alias("__h"),
-        *_feature_exprs(F.col(text_col)),
+        *_feature_exprs(text_col),
     )
     out_cols = [*lead_cols, *HEURISTIC_FEATURES]
     est = scan_rows_lower_bound(df, _TEXT_ROW_BYTES_UPPER)
@@ -400,7 +402,7 @@ def quality_prob_expr(weights: dict, text_col: str):
             f"HEURISTIC_FEATURES: {weights['cols']!r} — the inline "
             "expression zip is positional"
         )
-    exprs = _feature_exprs(F.col(text_col))
+    exprs = _feature_exprs(text_col)
     z = F.lit(weights["b"])
     for e, m, s, wc in zip(exprs, weights["mean"], weights["std"], weights["w"]):
         z = z + F.lit(wc) * ((e - F.lit(m)) / F.lit(s))

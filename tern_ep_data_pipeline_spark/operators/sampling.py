@@ -411,18 +411,19 @@ def _dsir_grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     at sf0.1, twice per ``importance_resample`` call). Counts are exact
     integers, so the result is partition-independent."""
     from .dedup import _fanout
-    from .text import _sql_tokens
+    from .text import _sql_ident, _sql_tokens
 
-    # SQL-twin strings (r16): plan-equal to the r15 Column form, pinned in
+    # SQL strings: plan-equal to the r15 Column form, pinned in
     # tests/test_sqltwins.py; one selectExpr parse per projection.
+    idq = _sql_ident(id_col)
     toks = _fanout(df, id_col).selectExpr(
-        id_col, f"{_sql_tokens(text_col)} AS __t"
+        idq, f"{_sql_tokens(_sql_ident(text_col))} AS __t"
     )
     bigrams = (
         "transform(slice(__t, 1, greatest(size(__t) - 1, 0)), "
         "(__x, __i) -> concat_ws(' ', __x, element_at(__t, __i + 2)))"
     )
-    return toks.selectExpr(id_col, f"explode(concat(__t, {bigrams})) AS __g")
+    return toks.selectExpr(idq, f"explode(concat(__t, {bigrams})) AS __g")
 
 
 def dsir_logratio(
@@ -546,10 +547,11 @@ def importance_resample(
     """
     from .dedup import _stage
     from .sketch import portable_hash_sql
-    from .text import _sql_double, _sql_half_away_div
+    from .text import _sql_double, _sql_half_away_div, _sql_ident
 
-    # Expressions ride as SQL-twin strings (r16 build batching): plan-equal
-    # to the r15 Column form, pinned in tests/test_sqltwins.py.
+    # Expressions ride as SQL strings (r16 build batching): plan-equal to
+    # the r15 Column form, pinned in tests/test_sqltwins.py.
+    idq = _sql_ident(id_col)
     bucket_sql = f"({portable_hash_sql('__g', salt)} % {buckets}) AS bucket"
     # staged: ONE gram-bucket occurrence frame feeds the ratio table's
     # raw marginal, the subset target marginal, and the per-document
@@ -561,7 +563,7 @@ def importance_resample(
     # actually combines.  Σ_b c_b·lr_b == Σ_occurrences lr_bucket(occ),
     # so summing per occurrence is the same exact integer.
     gb = _stage(
-        _dsir_grams(raw, id_col, text_col).selectExpr(id_col, bucket_sql)
+        _dsir_grams(raw, id_col, text_col).selectExpr(idq, bucket_sql)
     )
     raw_b = gb.groupBy("bucket").agg(F.expr("count(1) AS __cr"))
     if target_subset_of_raw:
@@ -588,7 +590,7 @@ def importance_resample(
         .agg(F.expr("sum(CAST(lr_pico AS DECIMAL(38,0))) AS __s"))
     )
     u = (
-        f"(({portable_hash_sql(id_col, f'{salt}-g')} + 0.5D) / "
+        f"(({portable_hash_sql(idq, f'{salt}-g')} + 0.5D) / "
         f"{_sql_double(float(1 << 60))})"
     )
     g_pico = (
@@ -605,7 +607,7 @@ def importance_resample(
         keyed.orderBy(F.col("__key").desc(), F.col(id_col))
         .limit(k)
         .selectExpr(
-            id_col,
+            idq,
             f"{_sql_half_away_div('__s', mega)} AS logweight_micro",
             f"{_sql_half_away_div('__key', mega)} AS key_micro",
         )

@@ -26,21 +26,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
-def tokens(col: Column) -> Column:
-    return F.split(F.trim(col), r"\s+")
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count (0 for empty text)."""
-    return F.when(F.length(F.trim(col)) == 0, F.lit(0)).otherwise(F.size(tokens(col)))
-
-
-def count_in_set(col: Column, words: tuple[str, ...]) -> Column:
-    """How many tokens fall in a fixed word set (array filter, no UDF)."""
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(arr, t)))
-
-
 def half_away_div(num: Column, den: Column) -> Column:
     """``round_half_away(num / den)`` as BIGINT for any-sign ``num`` and
     positive ``den``, computed WHOLLY in integral arithmetic (Spark's
@@ -62,166 +47,25 @@ def micro_ratio(n: Column, d: Column) -> Column:
     return F.when(d64 > 0, half_away_div(F.lit(1_000_000).cast("bigint") * n64, d64))
 
 
-def token_stat_cols(t: Column, micro: bool = False) -> list[Column]:
-    """Column builders for :func:`token_stats` — exposed so fused per-doc
-    profiles can stack several row-local operators into ONE projection
-    (zero joins) instead of joining their frames."""
-    n_tok = token_count(t)
-    nonws = F.length(F.regexp_replace(F.trim(t), r"\s+", ""))
-    if micro:
-        return [
-            F.length(t).cast("bigint").alias("n_chars"),
-            n_tok.cast("bigint").alias("n_tokens"),
-            micro_ratio(nonws, n_tok).alias("avg_token_len_micro"),
-        ]
-    return [
-        F.length(t).alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        F.round(F.when(n_tok > 0, nonws / n_tok), 6).alias("avg_token_len"),
-    ]
-
-
-def token_stats(
-    df: DataFrame, id_col: str, text_col: str, micro: bool = False
-) -> DataFrame:
-    """Per-document token statistics. ``micro=True`` swaps the double ratio
-    for an exact integer micro-unit column (``avg_token_len_micro``) for
-    engine-portable gate contracts (no DOUBLE anywhere in the output)."""
-    return df.select(F.col(id_col), *token_stat_cols(F.col(text_col), micro))
-
-
-def quality_ratio_cols(t: Column, micro: bool = False) -> list[Column]:
-    """The four quality ratios as column builders (no id/count columns —
-    composable into a fused projection without name collisions)."""
-    n_chars = F.length(t)
-    n_tok = token_count(t)
-    n_stop = count_in_set(t, STOPWORDS_EN)
-    n_punct = n_chars - F.length(F.regexp_replace(t, r"[.,;:!?'\"()]", ""))
-    n_digit = n_chars - F.length(F.regexp_replace(t, r"[0-9]", ""))
-    n_upper = n_chars - F.length(F.regexp_replace(t, r"[A-Z]", ""))
-    if micro:
-        zero = F.lit(0).cast("bigint")
-        return [
-            F.coalesce(micro_ratio(n_stop, n_tok), zero).alias("stopword_ratio_micro"),
-            F.coalesce(micro_ratio(n_punct, n_chars), zero).alias("punct_ratio_micro"),
-            F.coalesce(micro_ratio(n_digit, n_chars), zero).alias("digit_ratio_micro"),
-            F.coalesce(micro_ratio(n_upper, n_chars), zero).alias("upper_ratio_micro"),
-        ]
-    return [
-        F.round(F.when(n_tok > 0, n_stop / n_tok).otherwise(F.lit(0.0)), 6).alias("stopword_ratio"),
-        F.round(F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0)), 6).alias("punct_ratio"),
-        F.round(F.when(n_chars > 0, n_digit / n_chars).otherwise(F.lit(0.0)), 6).alias("digit_ratio"),
-        F.round(F.when(n_chars > 0, n_upper / n_chars).otherwise(F.lit(0.0)), 6).alias("upper_ratio"),
-    ]
-
-
-def quality_scores(
-    df: DataFrame, id_col: str, text_col: str, micro: bool = False
-) -> DataFrame:
-    """Heuristic quality features: length, stopword ratio, punctuation ratio,
-    digit ratio, uppercase ratio — the standard pretraining-filter features.
-    ``micro=True`` emits the ratios as exact integer micro-units
-    (``*_ratio_micro`` BIGINT, 0 when the denominator is 0) for
-    engine-portable gate contracts."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_tok = token_count(t)
-    counts = (
-        [n_chars.cast("bigint").alias("n_chars"), n_tok.cast("bigint").alias("n_tokens")]
-        if micro
-        else [n_chars.alias("n_chars"), n_tok.alias("n_tokens")]
-    )
-    return df.select(F.col(id_col), *counts, *quality_ratio_cols(t, micro))
-
-
-def lang_id_cols(t: Column, counts_cast: str | None = None) -> list[Column]:
-    """Column builders for :func:`lang_id` (``counts_cast='bigint'`` for the
-    integer gate contract)."""
-    counts = {lang: count_in_set(t, words) for lang, words in LANG_MARKERS.items()}
-    best = F.greatest(*counts.values())
-    pred = F.lit("und")
-    for lang in reversed(list(LANG_MARKERS)):  # earlier langs overwrite later on ties
-        pred = F.when(counts[lang] == best, F.lit(lang)).otherwise(pred)
-    pred = F.when(best > 0, pred).otherwise(F.lit("und"))
-    cols = [
-        (counts[lang].cast(counts_cast) if counts_cast else counts[lang]).alias(f"n_{lang}")
-        for lang in LANG_MARKERS
-    ]
-    cols.append(pred.alias("pred_lang"))
-    return cols
-
-
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Marker-word language ID with deterministic tie-break (first language
-    in LANG_MARKERS order wins ties)."""
-    return df.select(F.col(id_col), *lang_id_cols(F.col(text_col)))
-
-
-def fingerprint_cols(t: Column) -> list[Column]:
-    norm = F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
-    return [
-        F.md5(norm).alias("fingerprint_md5"),
-        F.xxhash64(norm).alias("fingerprint64"),
-    ]
-
-
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Document fingerprint: md5 of the normalised text (exact-dup key) plus
-    a 64-bit content hash for compact storage."""
-    return df.select(F.col(id_col), *fingerprint_cols(F.col(text_col)))
-
-
-#: GPT-2-style pretokeniser, restricted to syntax Java regex and RE2 share
-#: (no lookaheads): contraction suffixes, space-prefixed letter runs, digit
-#: runs, punctuation runs, whitespace runs. Leftmost-first alternation
-#: semantics agree between the two engines.
-BPE_SPLIT_PATTERN = r"'[sdmt]|'ll|'re|'ve| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
-
-
-def bpe_stat_cols(t: Column, micro: bool = False) -> list[Column]:
-    n_ws = token_count(t)
-    n_bpe = F.regexp_count(t, F.lit(BPE_SPLIT_PATTERN))
-    if micro:
-        return [
-            n_ws.cast("bigint").alias("n_ws_tokens"),
-            n_bpe.cast("bigint").alias("n_bpe_tokens"),
-            F.coalesce(
-                micro_ratio(F.length(t), n_bpe), F.lit(0).cast("bigint")
-            ).alias("chars_per_bpe_micro"),
-        ]
-    return [
-        n_ws.alias("n_ws_tokens"),
-        n_bpe.alias("n_bpe_tokens"),
-        F.round(F.when(n_bpe > 0, F.length(t) / n_bpe).otherwise(F.lit(0.0)), 6).alias(
-            "chars_per_bpe_token"
-        ),
-    ]
-
-
-def bpe_token_stats(
-    df: DataFrame, id_col: str, text_col: str, micro: bool = False
-) -> DataFrame:
-    """Token counting, BPE-ish: segments per the GPT-2-style pretokenise
-    regex (the count every byte-pair encoder starts from) next to the
-    whitespace count, plus chars-per-BPE-segment as a compression proxy
-    (``micro=True``: exact integer micro-units, BIGINT)."""
-    return df.select(F.col(id_col), *bpe_stat_cols(F.col(text_col), micro))
-
-
-# --------------------------------------------------- SQL-string twins (r16)
+# ------------------------------------------- per-document text expressions
 #
-# Driver-side plan construction is real wall time on every query (~8.7 s of
-# the ~33 s all-query bench total measured at round-16 start), and it is
-# dominated by py4j round trips: every Column method call is one JVM round
-# trip, so a builder like ``quality_ratio_cols`` pays ~400 calls per use.
-# These twins emit the SAME expressions as SQL strings — one ``selectExpr``
-# parse replaces hundreds of round trips (the idiom ``minhash_signatures``
-# already uses). Each twin is pinned PLAN-EQUAL to its Column form in
-# tests/test_sqltwins.py via Catalyst's own ``sameResult`` (canonicalized
-# plan equality), so the physical plan — and therefore the result — cannot
-# drift between the two forms.
+# Each per-document text expression is defined once, as a SQL string, and
+# every caller builds its projection with ONE ``selectExpr`` parse (or wraps
+# a string in ``F.expr`` where it needs a Column). Driver-side plan
+# construction is real wall time on every query, and it is dominated by py4j
+# round trips: every Column method call is one JVM round trip, so the same
+# expressions built as Column chains cost ~400 calls per quality-ratio set.
+# The DataFrame API and SQL compile to the same logical plan, so the string
+# form loses nothing. ``t`` in these builders is a SQL expression; callers
+# holding a column NAME pass it through :func:`_sql_ident`.
 
 _SQL_WS = r"'\\s+'"
+
+
+def _sql_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, so names with
+    spaces or punctuation resolve as they do through ``F.col``."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _sql_str(s: str) -> str:
@@ -230,7 +74,8 @@ def _sql_str(s: str) -> str:
 
 
 def _sql_double(x: float) -> str:
-    """A SQL DOUBLE literal bit-identical to ``F.lit(float(x))``."""
+    """A SQL DOUBLE literal bit-identical to ``F.lit(float(x))`` (a bare
+    ``0.0`` would parse as DECIMAL)."""
     return repr(float(x)) + "D"
 
 
@@ -239,6 +84,7 @@ def _sql_tokens(t: str) -> str:
 
 
 def _sql_token_count(t: str) -> str:
+    """Whitespace token count (0 for empty text)."""
     return (
         f"(CASE WHEN length(trim({t})) = 0 THEN 0 "
         f"ELSE size({_sql_tokens(t)}) END)"
@@ -246,9 +92,9 @@ def _sql_token_count(t: str) -> str:
 
 
 def _sql_half_away_div(num: str, den: str) -> str:
-    """SQL twin of :func:`half_away_div` — operands MUST be parenthesized
-    (or atomic) expressions; the CASE branches reproduce the Column form's
-    tree exactly (unary minus placement matters for plan equality)."""
+    """SQL form of :func:`half_away_div` — operands MUST be parenthesized
+    (or atomic) expressions; the CASE branches build the same tree as the
+    Column form (unary minus placement matters for plan equality)."""
     two = "CAST(2 AS BIGINT)"
     return (
         f"CAST((CASE WHEN {num} >= 0 "
@@ -264,55 +110,105 @@ def _sql_micro_ratio(n: str, d: str) -> str:
     return f"(CASE WHEN {d64} > 0 THEN {_sql_half_away_div(num, d64)} END)"
 
 
+def _sql_ratio6(n: str, d: str) -> str:
+    """``n / d`` as a DOUBLE rounded to 6 places, 0.0 when ``d <= 0``."""
+    return (
+        f"round(CASE WHEN {d} > 0 THEN {n} / {d} "
+        f"ELSE {_sql_double(0.0)} END, 6)"
+    )
+
+
 def _sql_count_in_set(t: str, words: tuple[str, ...]) -> str:
+    """How many tokens fall in a fixed word set (array filter, no UDF)."""
     arr = "array(" + ", ".join(f"'{w}'" for w in words) + ")"
     return f"size(filter({_sql_tokens(t)}, __t -> array_contains({arr}, __t)))"
 
 
-def token_stat_sqls(t: str) -> list[str]:
-    """SQL twin of ``token_stat_cols(F.col(t), micro=True)``."""
+def token_stat_sqls(t: str, micro: bool = False) -> list[str]:
+    """``n_chars``, ``n_tokens`` and the average token length. ``micro=True``
+    swaps the double ratio for an exact integer micro-unit column
+    (``avg_token_len_micro``) and casts the counts to BIGINT."""
     n_tok = _sql_token_count(t)
     nonws = rf"length(regexp_replace(trim({t}), {_SQL_WS}, ''))"
+    if micro:
+        return [
+            f"CAST(length({t}) AS BIGINT) AS n_chars",
+            f"CAST({n_tok} AS BIGINT) AS n_tokens",
+            f"{_sql_micro_ratio(nonws, n_tok)} AS avg_token_len_micro",
+        ]
     return [
-        f"CAST(length({t}) AS BIGINT) AS n_chars",
-        f"CAST({n_tok} AS BIGINT) AS n_tokens",
-        f"{_sql_micro_ratio(nonws, n_tok)} AS avg_token_len_micro",
+        f"length({t}) AS n_chars",
+        f"{n_tok} AS n_tokens",
+        f"round(CASE WHEN {n_tok} > 0 THEN {nonws} / {n_tok} END, 6)"
+        " AS avg_token_len",
     ]
 
 
-def quality_ratio_sqls(t: str) -> list[str]:
-    """SQL twin of ``quality_ratio_cols(F.col(t), micro=True)``."""
+def token_stats(
+    df: DataFrame, id_col: str, text_col: str, micro: bool = False
+) -> DataFrame:
+    """Per-document token statistics. ``micro=True`` swaps the double ratio
+    for an exact integer micro-unit column (``avg_token_len_micro``) for
+    engine-portable gate contracts (no DOUBLE anywhere in the output)."""
+    return df.selectExpr(
+        _sql_ident(id_col), *token_stat_sqls(_sql_ident(text_col), micro)
+    )
+
+
+def quality_ratio_sqls(t: str, micro: bool = False) -> list[str]:
+    """The four quality ratios (no id/count columns — composable into a
+    fused projection without name collisions). ``micro=True`` emits exact
+    integer micro-units (``*_ratio_micro`` BIGINT, 0 when the denominator
+    is 0)."""
     n_chars = f"length({t})"
     n_tok = _sql_token_count(t)
     n_stop = _sql_count_in_set(t, STOPWORDS_EN)
-    # the Column form's punct pattern r"[.,;:!?'\"()]" contains a LITERAL
-    # backslash before the double-quote (harmless in Java regex); it must
-    # be byte-identical here for plan equality: \' -> ' and \\ -> \
+    # the class is r"[.,;:!?'\"()]": Java regex reads the backslash as
+    # escaping the double-quote, so it matches the oracle's [.,;:!?'"()]
     punct_pat = "'[.,;:!?\\'\\\\\"()]'"
     n_punct = f"({n_chars} - length(regexp_replace({t}, {punct_pat}, '')))"
     n_digit = f"({n_chars} - length(regexp_replace({t}, '[0-9]', '')))"
     n_upper = f"({n_chars} - length(regexp_replace({t}, '[A-Z]', '')))"
-    zero = "CAST(0 AS BIGINT)"
-    return [
-        f"coalesce({_sql_micro_ratio(n_stop, n_tok)}, {zero})"
-        " AS stopword_ratio_micro",
-        f"coalesce({_sql_micro_ratio(n_punct, n_chars)}, {zero})"
-        " AS punct_ratio_micro",
-        f"coalesce({_sql_micro_ratio(n_digit, n_chars)}, {zero})"
-        " AS digit_ratio_micro",
-        f"coalesce({_sql_micro_ratio(n_upper, n_chars)}, {zero})"
-        " AS upper_ratio_micro",
-    ]
+    pairs = {
+        "stopword_ratio": (n_stop, n_tok),
+        "punct_ratio": (n_punct, n_chars),
+        "digit_ratio": (n_digit, n_chars),
+        "upper_ratio": (n_upper, n_chars),
+    }
+    if micro:
+        zero = "CAST(0 AS BIGINT)"
+        return [
+            f"coalesce({_sql_micro_ratio(n, d)}, {zero}) AS {name}_micro"
+            for name, (n, d) in pairs.items()
+        ]
+    return [f"{_sql_ratio6(n, d)} AS {name}" for name, (n, d) in pairs.items()]
+
+
+def quality_scores(
+    df: DataFrame, id_col: str, text_col: str, micro: bool = False
+) -> DataFrame:
+    """Heuristic quality features: length, stopword ratio, punctuation ratio,
+    digit ratio, uppercase ratio — the standard pretraining-filter features.
+    ``micro=True`` emits the ratios as exact integer micro-units
+    (``*_ratio_micro`` BIGINT, 0 when the denominator is 0) for
+    engine-portable gate contracts."""
+    t = _sql_ident(text_col)
+    return df.selectExpr(
+        _sql_ident(id_col),
+        *token_stat_sqls(t, micro)[:2],  # n_chars, n_tokens
+        *quality_ratio_sqls(t, micro),
+    )
 
 
 def lang_id_sqls(t: str, counts_cast: str | None = None) -> list[str]:
-    """SQL twin of ``lang_id_cols(F.col(t), counts_cast)``."""
+    """Per-language marker counts ``n_<lang>`` plus ``pred_lang``
+    (``counts_cast='bigint'`` for the integer gate contract)."""
     counts = {
         lang: _sql_count_in_set(t, words) for lang, words in LANG_MARKERS.items()
     }
     best = "greatest(" + ", ".join(counts.values()) + ")"
     pred = "'und'"
-    for lang in reversed(list(LANG_MARKERS)):
+    for lang in reversed(list(LANG_MARKERS)):  # earlier langs overwrite later on ties
         pred = f"(CASE WHEN {counts[lang]} = {best} THEN '{lang}' ELSE {pred} END)"
     pred = f"(CASE WHEN {best} > 0 THEN {pred} ELSE 'und' END)"
     cols = [
@@ -327,8 +223,13 @@ def lang_id_sqls(t: str, counts_cast: str | None = None) -> list[str]:
     return cols
 
 
+def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Marker-word language ID with deterministic tie-break (first language
+    in LANG_MARKERS order wins ties)."""
+    return df.selectExpr(_sql_ident(id_col), *lang_id_sqls(_sql_ident(text_col)))
+
+
 def fingerprint_sqls(t: str) -> list[str]:
-    """SQL twin of ``fingerprint_cols(F.col(t))``."""
     norm = f"regexp_replace(lower(trim({t})), {_SQL_WS}, ' ')"
     return [
         f"md5({norm}) AS fingerprint_md5",
@@ -336,18 +237,51 @@ def fingerprint_sqls(t: str) -> list[str]:
     ]
 
 
-def bpe_stat_sqls(t: str) -> list[str]:
-    """SQL twin of ``bpe_stat_cols(F.col(t), micro=True)``."""
+def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Document fingerprint: md5 of the normalised text (exact-dup key) plus
+    a 64-bit content hash for compact storage."""
+    return df.selectExpr(
+        _sql_ident(id_col), *fingerprint_sqls(_sql_ident(text_col))
+    )
+
+
+#: GPT-2-style pretokeniser, restricted to syntax Java regex and RE2 share
+#: (no lookaheads): contraction suffixes, space-prefixed letter runs, digit
+#: runs, punctuation runs, whitespace runs. Leftmost-first alternation
+#: semantics agree between the two engines.
+BPE_SPLIT_PATTERN = r"'[sdmt]|'ll|'re|'ve| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+"
+
+
+def bpe_stat_sqls(t: str, micro: bool = False) -> list[str]:
+    """Whitespace and BPE-segment counts plus chars per BPE segment
+    (``micro=True``: exact integer micro-units, BIGINT)."""
     n_ws = _sql_token_count(t)
-    pat = BPE_SPLIT_PATTERN.replace("\\", "\\\\").replace("'", "\\'")
-    n_bpe = f"regexp_count({t}, '{pat}')"
-    zero = "CAST(0 AS BIGINT)"
+    n_bpe = f"regexp_count({t}, {_sql_str(BPE_SPLIT_PATTERN)})"
+    if micro:
+        zero = "CAST(0 AS BIGINT)"
+        return [
+            f"CAST({n_ws} AS BIGINT) AS n_ws_tokens",
+            f"CAST({n_bpe} AS BIGINT) AS n_bpe_tokens",
+            f"coalesce({_sql_micro_ratio(f'length({t})', n_bpe)}, {zero})"
+            " AS chars_per_bpe_micro",
+        ]
     return [
-        f"CAST({n_ws} AS BIGINT) AS n_ws_tokens",
-        f"CAST({n_bpe} AS BIGINT) AS n_bpe_tokens",
-        f"coalesce({_sql_micro_ratio(f'length({t})', n_bpe)}, {zero})"
-        " AS chars_per_bpe_micro",
+        f"{n_ws} AS n_ws_tokens",
+        f"{n_bpe} AS n_bpe_tokens",
+        f"{_sql_ratio6(f'length({t})', n_bpe)} AS chars_per_bpe_token",
     ]
+
+
+def bpe_token_stats(
+    df: DataFrame, id_col: str, text_col: str, micro: bool = False
+) -> DataFrame:
+    """Token counting, BPE-ish: segments per the GPT-2-style pretokenise
+    regex (the count every byte-pair encoder starts from) next to the
+    whitespace count, plus chars-per-BPE-segment as a compression proxy
+    (``micro=True``: exact integer micro-units, BIGINT)."""
+    return df.selectExpr(
+        _sql_ident(id_col), *bpe_stat_sqls(_sql_ident(text_col), micro)
+    )
 
 
 def winnowing_fingerprints(
@@ -434,7 +368,7 @@ def _winnow_arrow(
     # Build the output schema from the input id type so callers keep their
     # id column type unchanged.
     id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, fingerprint bigint"
+    schema = f"{_sql_ident(id_col)} {id_type}, fingerprint bigint"
 
     def run(batches):
         import pandas as pd
@@ -487,7 +421,7 @@ def _winnow_arrow_fast(
     import re as _re
 
     id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, fingerprint bigint"
+    schema = f"{_sql_ident(id_col)} {id_type}, fingerprint bigint"
     ws_re = _re.compile(r"\s+")
 
     def doc_fingerprints(raw) -> "np.ndarray":
@@ -545,29 +479,12 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 )
 
 
-def scrub_pii(col: Column) -> Column:
-    """Redact emails, IPv4 addresses, and phone-shaped numbers — chained
-    ``regexp_replace`` (JVM regex, whole-stage codegen; replaces ALL
-    occurrences). The pattern set is deliberately conservative: a
-    curation pipeline scrubs wide and audits with ``pii_hits``."""
-    out = col
-    for pat, token in PII_PATTERNS:
-        out = F.regexp_replace(out, pat, token)
-    return out
-
-
-def pii_hits(col: Column) -> Column:
-    """Total redactions :func:`scrub_pii` would make (audit metric)."""
-    hits = F.lit(0)
-    scrubbed = col
-    for pat, token in PII_PATTERNS:
-        hits = hits + F.size(F.regexp_extract_all(scrubbed, F.lit(pat), F.lit(0)))
-        scrubbed = F.regexp_replace(scrubbed, pat, token)
-    return hits
-
-
 def scrub_pii_sql(t: str) -> str:
-    """SQL twin of :func:`scrub_pii` (plan-equal; tests/test_sqltwins.py)."""
+    """Redact emails, IPv4 addresses, and phone-shaped numbers in the SQL
+    expression ``t`` — chained ``regexp_replace`` (JVM regex, whole-stage
+    codegen; replaces ALL occurrences). The pattern set is deliberately
+    conservative: a curation pipeline scrubs wide and audits with
+    :func:`pii_hits_sql`."""
     out = t
     for pat, token in PII_PATTERNS:
         out = f"regexp_replace({out}, {_sql_str(pat)}, '{token}')"
@@ -575,7 +492,7 @@ def scrub_pii_sql(t: str) -> str:
 
 
 def pii_hits_sql(t: str) -> str:
-    """SQL twin of :func:`pii_hits` (plan-equal; tests/test_sqltwins.py)."""
+    """Total redactions :func:`scrub_pii_sql` would make (audit metric)."""
     hits = "0"
     scrubbed = t
     for pat, token in PII_PATTERNS:
@@ -604,11 +521,12 @@ def tfidf_top_terms(
     """
     from .dedup import _fanout
 
-    # SQL-twin strings (r16): plan-equal to the r15 Column form, pinned in
+    # SQL strings: plan-equal to the r15 Column form, pinned in
     # tests/test_sqltwins.py; ~200 py4j round trips collapse to a handful.
+    idq = _sql_ident(id_col)
     toks = (
         _fanout(df, id_col)
-        .selectExpr(id_col, f"explode({_sql_tokens(text_col)}) AS term")
+        .selectExpr(idq, f"explode({_sql_tokens(_sql_ident(text_col))}) AS term")
         .where(F.col("term") != "")
     )
     tf = toks.groupBy(id_col, "term").agg(F.expr("count(1) AS tf"))
@@ -618,7 +536,7 @@ def tfidf_top_terms(
     # now share the same underlying exchange (ReuseExchange) instead of
     # tokenising the corpus twice.
     dfreq = tf.groupBy("term").agg(F.expr("count(1) AS df"))
-    n_docs = df.selectExpr(f"count(DISTINCT {id_col}) AS n")
+    n_docs = df.selectExpr(f"count(DISTINCT {idq}) AS n")
     from pyspark.sql import Window
 
     w = Window.partitionBy(id_col).orderBy(
@@ -630,7 +548,7 @@ def tfidf_top_terms(
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .selectExpr(
-            id_col,
+            idq,
             "term",
             "round(tf * ln(n / df), 6) AS tfidf",
             "rank",
@@ -717,7 +635,7 @@ def gram_hash_frame(
 
     df = _fanout(df, id_col)
     id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, gh bigint"
+    schema = f"{_sql_ident(id_col)} {id_type}, gh bigint"
 
     def run(batches):
         import numpy as np
@@ -803,7 +721,7 @@ def repetition_stats(
 
         id_type = df.schema[id_col].dataType.simpleString()
         schema = (
-            f"{id_col} {id_type}, __ctop bigint, __ttop bigint,"
+            f"{_sql_ident(id_col)} {id_type}, __ctop bigint, __ttop bigint,"
             " __cdup bigint, __tdup bigint"
         )
 
@@ -945,15 +863,17 @@ def unigram_logprob(
     splits the hot stopwords) and averages per document. All constants
     (T, V) ride in as broadcast one-row frames, no collect.
     """
-    # Expressions ride as SQL-twin strings (r16): one selectExpr parse per
-    # projection instead of ~390 py4j round trips per build; plan-equal to
-    # the r15 Column form (pinned in tests/test_sqltwins.py).
+    # Expressions ride as SQL strings: one selectExpr parse per projection
+    # instead of ~390 py4j round trips per build; plan-equal to the r15
+    # Column form (pinned in tests/test_sqltwins.py).
     #
     # NOT fanned out (r15, measured): the token explodes here feed joins
     # and aggregations whose own exchanges already redistribute the work;
     # adding repartitions cost more stage barriers than the serial explode
     # they fixed (doc_profile_b min-of-4 2.27 s -> 2.99 s with them in).
-    occ = df.selectExpr(id_col, f"explode({_sql_tokens(text_col)}) AS __t")
+    idq = _sql_ident(id_col)
+    toks = _sql_tokens(_sql_ident(text_col))
+    occ = df.selectExpr(idq, f"explode({toks}) AS __t")
 
     # Every derived frame below is built from a FRESH projection: reusing one
     # plan object on both sides of a join (vocab + vocab.agg, or occ + its
@@ -961,7 +881,7 @@ def unigram_logprob(
     # reports the shared columns as ambiguous references.
     def fresh_tokens(name: str) -> DataFrame:
         src = model_df if model_df is not None else df
-        return src.selectExpr(f"explode({_sql_tokens(text_col)}) AS {name}")
+        return src.selectExpr(f"explode({toks}) AS {name}")
 
     vocab = fresh_tokens("__t").groupBy("__t").agg(F.expr("count(1) AS __c"))
     totals = fresh_tokens("__ta").agg(
@@ -992,7 +912,7 @@ def unigram_logprob(
     scored = (
         occ.join(vocab_lp.hint("shuffle_hash"), on="__t", how="left")
         .crossJoin(F.broadcast(unseen))
-        .selectExpr(id_col, "coalesce(__lp, __lp0) AS __lp")
+        .selectExpr(idq, "coalesce(__lp, __lp0) AS __lp")
     )
     # Order-independent aggregation: double `avg` is not associative, so the
     # 6th decimal of a document sitting ~1e-11 from a rounding boundary can
@@ -1027,63 +947,6 @@ def unigram_logprob(
     )
 
 
-def _winnow_pair_counts_kernel(id_type: str):
-    """Per-task kernel for ``winnow_containment_pairs(pair_mode='arrow')``:
-    turns each fingerprint bucket's SORTED id array into its id pairs via
-    vectorised upper-triangle indexing (arrays grouped by length so each
-    group is one numpy matrix op), then pre-counts duplicate pairs locally
-    (lexsort + run-length) so the Arrow transfer and the downstream
-    aggregation carry one row per DISTINCT pair per task, not one per
-    shared fingerprint."""
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            by_len: dict[int, list] = {}
-            for a in pdf["__ids"]:
-                if len(a) >= 2:
-                    by_len.setdefault(len(a), []).append(a)
-            outs_a, outs_b = [], []
-            for m, group in by_len.items():
-                mat = np.asarray(group)
-                iu, ju = np.triu_indices(m, k=1)
-                outs_a.append(mat[:, iu].ravel())
-                outs_b.append(mat[:, ju].ravel())
-            if not outs_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": pd.Series([], dtype="int64"),
-                        "id_b": pd.Series([], dtype="int64"),
-                        "__c": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            a = np.concatenate(outs_a)
-            b = np.concatenate(outs_b)
-            # arrays are sorted ascending, so i<j gives id_a <= id_b; a
-            # duplicate id inside one bucket (out-of-contract input) would
-            # yield an equal pair — drop it like the join's strict <
-            keep = a < b
-            a, b = a[keep], b[keep]
-            order = np.lexsort((b, a))
-            a, b = a[order], b[order]
-            change = np.empty(len(a), dtype=bool)
-            if len(a):
-                change[0] = True
-                np.logical_or(
-                    a[1:] != a[:-1], b[1:] != b[:-1], out=change[1:]
-                )
-            starts = np.nonzero(change)[0]
-            counts = np.diff(np.append(starts, len(a)))
-            yield pd.DataFrame(
-                {"id_a": a[starts], "id_b": b[starts], "__c": counts}
-            )
-
-    return run
-
-
 def winnow_containment_pairs(
     fps: DataFrame,
     id_col: str = "doc_id",
@@ -1091,16 +954,7 @@ def winnow_containment_pairs(
     min_shared: int = 2,
     max_bucket: int | None = 100_000,
     cap_stats: dict | None = None,
-    pair_mode: str = "join",
 ) -> DataFrame:
-    # pair_mode='arrow' (r16, VERDICT r15 #6 — measured and DECLINED as the
-    # default): replaces the fp self-join with sorted-id bucket arrays + a
-    # numpy upper-triangle pair kernel with per-task pre-counting. Pair set
-    # pinned identical (67,294 pairs at sf0.1); interleaved min-of-4 A/B on
-    # the full suite shape measured join 2.009 s vs arrow 2.044 s — the fp
-    # join is NOT the bottleneck at bench scale (the staged fp table is
-    # persisted, so the join's two probe reads are cheap). Kept as a tested
-    # option for corpora where the two-sided pair shuffle dominates.
     """Pairwise overlap scoring from winnowing fingerprints — the MOSS
     consumer (Schleimer et al. '03 §5): two documents' shared selected
     fingerprints estimate how much text they have in common, and
@@ -1147,39 +1001,15 @@ def winnow_containment_pairs(
     else:
         base = _stage(base)
     totals = base.groupBy("__id").agg(F.count(F.lit(1)).alias("__total"))
-    if pair_mode == "arrow":
-        # r16 (VERDICT r15 #6): the fp self-join materialised every shared
-        # fingerprint as a join row (~8M at sf0.1) through two probe-side
-        # reads plus a corpus-wide (id_a, id_b) aggregation. Collect each
-        # bucket's sorted id array instead (reusing the cap window's
-        # fp-keyed exchange), emit pairs in one numpy pass, and pre-count
-        # per task so the pair aggregation combines pre-shrunk partials.
-        # n_shared is IDENTICAL by construction: per bucket, the join
-        # yields each (a<b) pair once, exactly the upper triangle of the
-        # sorted array.
-        id_type = fps.schema[id_col].dataType.simpleString()
-        buckets = base.groupBy("__fp").agg(
-            F.sort_array(F.collect_list("__id")).alias("__ids")
-        )
-        pair_counts = buckets.select("__ids").mapInPandas(
-            _winnow_pair_counts_kernel(id_type),
-            schema=f"id_a {id_type}, id_b {id_type}, __c bigint",
-        )
-        shared = (
-            pair_counts.groupBy("id_a", "id_b")
-            .agg(F.sum("__c").alias("n_shared"))
-            .where(F.col("n_shared") >= min_shared)
-        )
-    else:
-        a = base.select(F.col("__id").alias("id_a"), "__fp")
-        b = base.select(F.col("__id").alias("id_b"), "__fp")
-        shared = (
-            a.join(b, on="__fp")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .where(F.col("n_shared") >= min_shared)
-        )
+    a = base.select(F.col("__id").alias("id_a"), "__fp")
+    b = base.select(F.col("__id").alias("id_b"), "__fp")
+    shared = (
+        a.join(b, on="__fp")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= min_shared)
+    )
     ta = totals.select(F.col("__id").alias("id_a"), F.col("__total").alias("__ta"))
     tb = totals.select(F.col("__id").alias("id_b"), F.col("__total").alias("__tb"))
     return (

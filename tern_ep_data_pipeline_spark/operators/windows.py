@@ -92,40 +92,6 @@ def tumbling_bucket(ts_col: str, minutes: int) -> Column:
     )
 
 
-def block_reference(
-    df: DataFrame,
-    ts_col: str,
-    minutes: int,
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W6: per-block (start, end, n_recs) reference table
-    (ref fast_file_io.py:471-519)."""
-    return (
-        df.withColumn("block_start", tumbling_bucket(ts_col, minutes))
-        .groupBy(*partition_cols, "block_start")
-        .agg(
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-            F.count(F.lit(1)).alias("n_recs"),
-        )
-    )
-
-
-def diel_mean(
-    df: DataFrame,
-    ts_col: str,
-    value_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """A4: mean by time-of-day (hour, minute) across all days."""
-    aggs = [F.avg(c).alias(f"{c}_mean") for c in value_cols]
-    return df.groupBy(
-        *partition_cols,
-        F.hour(ts_col).alias("hour"),
-        F.minute(ts_col).alias("minute"),
-    ).agg(*aggs)
-
-
 def trailing_validity_fraction(
     df: DataFrame,
     ts_col: str,

@@ -396,7 +396,9 @@ def curate_corpus(
             "quality_model",
         )
     if scrub:
-        kept = kept.withColumn(text_col, text.scrub_pii(F.col(text_col)))
+        kept = kept.withColumn(
+            text_col, F.expr(text.scrub_pii_sql(text._sql_ident(text_col)))
+        )
 
     # 6. deterministic domain mixing — fixed fractions, temperature-
     # derived cuts, or DSIR target-matching selection (arguments

@@ -221,21 +221,6 @@ def energy_balance_residual(
     )
 
 
-def available_energy(
-    soil_hf_list: Sequence[str], soil_t_list: Sequence[str] | None = None
-) -> RtmcExpr:
-    """Rn - G (rtmc_xml_parser.py:905-935)."""
-    rn = net_radiation()
-    soil = (
-        corrected_soil_heat_flux(soil_hf_list, soil_t_list)
-        if soil_t_list
-        else soil_heat_flux(soil_hf_list)
-    )
-    return _merge(
-        [rn, soil], f"({rn.expression})-\n(\n{soil.expression}\n)"
-    )
-
-
 class RtmcProject:
     """Edit a ``.rtmc2`` project file in place.
 

@@ -48,21 +48,6 @@ def _nanos_to_ntz(col: str) -> F.Column:
     return F.expr(f"timestampadd(MICROSECOND, {col} div 1000, {_EPOCH_NTZ})")
 
 
-#: Scan-fanout window: tables between these sizes qualify for the
-#: split-deficit repartition below. The ceiling keeps any real lake table
-#: (many files, many row groups) untouched; the floor keeps dim tables and
-#: small fact tables out — for those the added exchange costs more wall
-#: than the serial scan it parallelises (measured r15: only the ~11 MB
-#: lineitem cleared break-even at sf0.1; orders/events queries are
-#: window/join bound, not scan bound).
-_FANOUT_MIN_BYTES = 4 * 1024 * 1024
-_FANOUT_MAX_BYTES = 256 * 1024 * 1024
-
-#: (path, version) -> (row_groups, bytes) so repeated loads of one table
-#: read the parquet footer once per session, not once per query build.
-_SPLIT_CACHE: dict[tuple[str, tuple], tuple[int, int]] = {}
-
-
 def _path_version(path: str) -> tuple:
     """Change signal for a parquet file OR directory, used in cache keys:
     (name, size, mtime) of every contained ``.parquet`` file, sorted by
@@ -84,57 +69,6 @@ def _path_version(path: str) -> tuple:
         return ((st.st_size, st.st_mtime),)
     except OSError:
         return ()
-
-
-def _scan_splits(path: str) -> tuple[int, int] | None:
-    """(row_groups, total_bytes) for a local parquet file/dir, or None when
-    the footprint cannot be inspected cheaply (non-local path, no pyarrow).
-    Parquet scans split at ROW-GROUP boundaries, so row groups — not bytes
-    — bound a scan's real parallelism."""
-    try:
-        key = (path, _path_version(path))
-        hit = _SPLIT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        import pyarrow.parquet as pq
-
-        files = (
-            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        groups = 0
-        nbytes = 0
-        for f in files:
-            groups += pq.ParquetFile(f).metadata.num_row_groups
-            nbytes += os.path.getsize(f)
-        _SPLIT_CACHE[key] = (groups, nbytes)
-        return groups, nbytes
-    except Exception:
-        return None
-
-
-def _fanout_if_split_deficient(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Scale-adaptive scan fanout (r15, guide §2.5 "input skew"): a parquet
-    file with one row group is UNSPLITTABLE — every stage fused onto its
-    scan runs on one task no matter the cluster size. When the table's
-    row-group count is below half the default parallelism AND the table is
-    small (``_FANOUT_MAX_BYTES``), append an explicit round-robin
-    repartition so downstream filters/aggregations parallelise. Catalyst
-    still pushes filters and column pruning THROUGH the repartition to the
-    scan, every aggregate in the suite is an exact decimal/integer (so the
-    result is partition-independent), and ``sortBeforeRepartition`` keeps
-    the row->partition assignment deterministic under retries. At real
-    lake scale no table passes the bounds, so production plans are
-    byte-identical to r14."""
-    n = spark.sparkContext.defaultParallelism
-    info = _scan_splits(path)
-    if info is None:
-        return df
-    groups, nbytes = info
-    if groups * 2 >= n or not (_FANOUT_MIN_BYTES <= nbytes <= _FANOUT_MAX_BYTES):
-        return df
-    return df.repartition(n)
 
 
 #: (app_id, path, version) -> the loaded DataFrame (a LAZY logical plan, no
@@ -196,14 +130,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in _NANO_TS_COLS.get(name, ()):
         if dtypes.get(c) == "bigint":
             df = df.withColumn(c, _nanos_to_ntz(c))
-    # NOT wired to _fanout_if_split_deficient (r15, measured BOTH ways):
-    # the split-deficit repartition won +12% on the lineitem family in a
-    # healthy-box interleaved A/B (pricing_summary 1.154 -> 1.018 s
-    # min-of-4) but LOST 40% under host-degraded IO (1.222 -> 1.746 s,
-    # same data, same code, hours apart) — the extra exchange's cost
-    # tracks box health while the serial-scan cost it removes does not.
-    # A coin-flip dependent on the bench host's state is not a win;
-    # the helper stays for callers that KNOW their environment.
+    # No split-deficit repartition of single-row-group tables (r15,
+    # measured both ways): +12% on pricing_summary on a healthy box
+    # (1.154 -> 1.018 s) but -40% under degraded IO (1.222 -> 1.746 s);
+    # the extra exchange's cost tracks host health, the serial scan's not.
     if len(_LOAD_CACHE) > 256:  # bound: long-lived sessions over many dirs
         _LOAD_CACHE.clear()
     _LOAD_CACHE[key] = df

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import normalise_text
 from ..operators.sampling import hash_bucket
-from ..operators.text import scrub_pii
+from ..operators.text import _sql_ident, scrub_pii_sql
 
 
 def curated_document_stream(
@@ -85,7 +85,7 @@ def curated_document_stream(
         cut = int(round(sample_fraction * 10_000))
         s = s.where(hash_bucket(F.col(id_col), salt) < cut)
     if scrub:
-        s = s.withColumn(text_col, scrub_pii(F.col(text_col)))
+        s = s.withColumn(text_col, F.expr(scrub_pii_sql(_sql_ident(text_col))))
     if quality_model_path is not None:
         # before the dedup so cut documents never consume dedup state;
         # pure whole-stage-codegen expression (quality_scored_stream)

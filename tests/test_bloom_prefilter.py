@@ -158,7 +158,7 @@ def test_bloom_prune_actually_prunes(spark, tmp_path):
         "doc_id long, text string",
     )
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
-    kept = di._bloom_pruned(scan, ["gram_hash"], keys, 0.01).count()
+    kept = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01).count()
     assert kept < 0.1 * total, (kept, total)
 
 
@@ -205,15 +205,15 @@ def test_prune_strategies_agree(spark, tmp_path):
     batch = _batch(spark, corpus.collect(), start_id=9000)
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
 
-    semi = di._bloom_pruned(scan, ["gram_hash"], keys, 0.01, strategy="semi")
-    blm = di._bloom_pruned(scan, ["gram_hash"], keys, 0.01, strategy="bloom")
+    semi = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01, strategy="semi")
+    blm = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01, strategy="bloom")
     semi_keys = {r["gram_hash"] for r in semi.select("gram_hash").distinct().collect()}
     bloom_keys = {r["gram_hash"] for r in blm.select("gram_hash").distinct().collect()}
     assert semi_keys <= bloom_keys, "bloom must be a superset (no false negatives)"
 
     # end-to-end decisions equal under either forced strategy — force at
     # the ONE shared chokepoint (bloom.prune_index_by_keys), which every
-    # consumer path routes through (dedup_index._bloom_pruned AND
+    # consumer path routes through (the dedup_index consumers AND
     # substring_dedup's index_raw prune)
     plain = _sorted_rows(di.clean_against_gram_index(spark, batch, path, min_tokens=8))
     orig = bloom.prune_index_by_keys

@@ -1,10 +1,12 @@
-"""Plan-equality pins for the r16 SQL-string builder twins.
+"""Plan-equality pins for operators rebuilt from SQL strings.
 
-Driver-side build batching (VERDICT r15 #1) replaces Column-chain builders
-with single selectExpr strings. Each twin must produce the IDENTICAL
-analyzed plan — checked with Catalyst's own ``sameResult`` (canonicalized
-plan equality, the engine's definition of "same computation"), which is
-strictly stronger than value equality on any finite dataset.
+Driver-side build batching (VERDICT r15 #1) rebuilt these operators from
+Column chains into ``selectExpr`` strings. Each test keeps the r15 Column
+form as a frozen reference and checks that the live operator builds the
+IDENTICAL analyzed plan — with Catalyst's own ``sameResult``
+(canonicalized plan equality, the engine's definition of "same
+computation"), which is strictly stronger than value equality on any
+finite dataset.
 """
 
 from __future__ import annotations
@@ -13,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tern_ep_data_pipeline_spark.operators import text
-from tern_ep_data_pipeline_spark.operators import quality_model as qm
 
 
 @pytest.fixture(scope="module")
@@ -28,68 +29,6 @@ def _same(d1, d2) -> bool:
     return d1._jdf.queryExecution().analyzed().sameResult(
         d2._jdf.queryExecution().analyzed()
     )
-
-
-def test_token_stat_sqls_plan_equal(docs):
-    t = F.col("text")
-    assert _same(
-        docs.select("doc_id", *text.token_stat_cols(t, micro=True)),
-        docs.selectExpr("doc_id", *text.token_stat_sqls("text")),
-    )
-
-
-def test_quality_ratio_sqls_plan_equal(docs):
-    t = F.col("text")
-    assert _same(
-        docs.select("doc_id", *text.quality_ratio_cols(t, micro=True)),
-        docs.selectExpr("doc_id", *text.quality_ratio_sqls("text")),
-    )
-
-
-def test_lang_id_sqls_plan_equal(docs):
-    t = F.col("text")
-    assert _same(
-        docs.select("doc_id", *text.lang_id_cols(t, counts_cast="bigint")),
-        docs.selectExpr("doc_id", *text.lang_id_sqls("text", "bigint")),
-    )
-    assert _same(
-        docs.select("doc_id", *text.lang_id_cols(t)),
-        docs.selectExpr("doc_id", *text.lang_id_sqls("text")),
-    )
-
-
-def test_fingerprint_bpe_sqls_plan_equal(docs):
-    t = F.col("text")
-    assert _same(
-        docs.select(
-            "doc_id", *text.fingerprint_cols(t), *text.bpe_stat_cols(t, micro=True)
-        ),
-        docs.selectExpr(
-            "doc_id", *text.fingerprint_sqls("text"), *text.bpe_stat_sqls("text")
-        ),
-    )
-
-
-def test_doc_profile_row_projection_plan_equal(docs):
-    """The fused doc_profile_a row projection — the actual call site."""
-    t = F.col("text")
-    old = docs.select(
-        "doc_id",
-        *text.token_stat_cols(t, micro=True),
-        *text.quality_ratio_cols(t, micro=True),
-        *text.lang_id_cols(t, counts_cast="bigint"),
-        *text.fingerprint_cols(t),
-        *text.bpe_stat_cols(t, micro=True),
-    )
-    new = docs.selectExpr(
-        "doc_id",
-        *text.token_stat_sqls("text"),
-        *text.quality_ratio_sqls("text"),
-        *text.lang_id_sqls("text", "bigint"),
-        *text.fingerprint_sqls("text"),
-        *text.bpe_stat_sqls("text"),
-    )
-    assert _same(old, new)
 
 
 def _ref_unigram_logprob_micro(df, id_col, text_col, smoothing=0.5):
@@ -287,18 +226,6 @@ def test_tfidf_top_terms_plan_equal(docs):
     )
 
 
-def test_pii_sql_twins_plan_equal(docs):
-    t = F.col("text")
-    old = docs.select(
-        F.md5(text.scrub_pii(t)).alias("v"), text.pii_hits(t).alias("h")
-    )
-    new = docs.selectExpr(
-        f"md5({text.scrub_pii_sql('text')}) AS v",
-        f"{text.pii_hits_sql('text')} AS h",
-    )
-    assert _same(old, new)
-
-
 def test_portable_hash_sql_plan_equal(docs):
     from tern_ep_data_pipeline_spark.operators.sketch import (
         portable_hash,
@@ -309,16 +236,3 @@ def test_portable_hash_sql_plan_equal(docs):
         docs.select(portable_hash(F.col("doc_id"), "dsir").alias("h")),
         docs.selectExpr(f"{portable_hash_sql('doc_id', 'dsir')} AS h"),
     )
-
-
-def test_heuristic_feature_frame_plan_equal(docs):
-    """The micro branch of heuristic_feature_frame switched to the SQL
-    twins (r16); the Column form is rebuilt here as the reference."""
-    t = F.col("text")
-    ref = docs.select(
-        F.col("doc_id"),
-        *text.quality_ratio_cols(t, micro=True),
-        text.token_count(t).cast("bigint").alias("n_tokens"),
-        text.token_stat_cols(t, micro=True)[2],
-    )
-    assert _same(ref, qm.heuristic_feature_frame(docs, "doc_id", "text", micro=True))

@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 import numpy as np
 
+from tern_ep_data_pipeline_spark.operators import bloom
 from tern_ep_data_pipeline_spark.operators import dedup_index as di
 from tern_ep_data_pipeline_spark.operators.dedup import release_staged
 from tern_ep_data_pipeline_spark.session import get_spark
@@ -154,7 +155,7 @@ def main() -> None:
         gk = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
         survive["gram"] = {
             "index_rows": gram_scan.count(),
-            "kept_rows": di._bloom_pruned(
+            "kept_rows": bloom.prune_index_by_keys(
                 gram_scan, ["gram_hash"], gk, args.fpp
             ).count(),
         }
@@ -163,7 +164,7 @@ def main() -> None:
         lk = di._line_count_table(batch, "doc_id", "text", "\n", 3)
         survive["line"] = {
             "index_rows": line_scan.count(),
-            "kept_rows": di._bloom_pruned(
+            "kept_rows": bloom.prune_index_by_keys(
                 line_scan, ["line_hash"], lk, args.fpp
             ).count(),
         }
