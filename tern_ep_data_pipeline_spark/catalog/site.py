@@ -70,8 +70,10 @@ def to_site_time(ts_col, utc_offset_hours: float):
     stripped — a constant offset per site)."""
     from pyspark.sql import functions as F
 
+    from ..operators.text import _sql_ident
+
     minutes = int(round(utc_offset_hours * 60))
-    return F.expr(f"timestampadd(MINUTE, {minutes}, {ts_col})")
+    return F.expr(f"timestampadd(MINUTE, {minutes}, {_sql_ident(ts_col)})")
 
 
 def samples_per_interval(freq_hz: int, time_step_minutes: int) -> int:

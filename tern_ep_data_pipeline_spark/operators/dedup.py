@@ -429,8 +429,8 @@ def py_tokens(raw: str | None) -> list[str]:
     - Java ``\\s`` is ASCII ``[ \\t\\n\\x0B\\f\\r]`` — NBSP/ideographic
       spaces do not split.
 
-    Every Arrow kernel that tokenises in Python (shingle arrow mode, gram
-    hashing, streaming decontamination) MUST use this instead of
+    Every Arrow kernel that tokenises in Python (gram hashing, winnowing,
+    DSIR scoring) MUST use this instead of
     ``str.split()``, whose Unicode-whitespace + implicit-trim semantics
     silently produce different gram equality classes on scraped text.
     """
@@ -474,57 +474,20 @@ def shingles_of(tok_col: Column, n: int = 3) -> Column:
 
 
 def shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, mode: str = "expr"
+    df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
     """``(__id, __sh)`` distinct-shingle table, fanned out across the
     cluster before the expensive stage.
 
-    ``mode='expr'`` (default) is the pure-JVM higher-order-function form.
-    ``mode='arrow'`` builds the SAME strings in a Python batch loop —
-    pinned value-equal in tests — and was benched as the would-be fast
-    path, but LOST: A/B at sf0.1 put the arrow suite at 5.8 s vs 4.8 s
-    expr, because shipping 260k shingle strings back through Arrow (and
-    repacking them as arrays) costs more than the interpreted lambda
-    does once the table is staged and reused. Kept as the escape hatch
-    for corpora where per-element interpretation dominates (much longer
-    documents); measure before switching.
+    The token array is staged as a column, then shingled by the
+    higher-order-function form. An Arrow batch loop building the same
+    strings lost its A/B at sf0.1 (5.8 s vs 4.8 s): shipping 260k shingle
+    strings back through Arrow costs more than the interpreted lambda.
     """
-    if mode == "expr":
-        staged = _fanout(df, id_col).select(
-            F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__toks")
-        )
-        return staged.select(
-            "__id", shingles_of(F.col("__toks"), n).alias("__sh")
-        )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"__id {id_type}, __sh array<string>"
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            shs = []
-            for raw in pdf[text_col]:
-                toks = py_tokens(raw)
-                if len(toks) <= n:
-                    shs.append([" ".join(toks)])
-                else:
-                    shs.append(
-                        list(
-                            dict.fromkeys(
-                                " ".join(toks[i : i + n])
-                                for i in range(len(toks) - n + 1)
-                            )
-                        )
-                    )
-            yield pd.DataFrame({"__id": pdf[id_col], "__sh": shs})
-
-    return (
-        _fanout(df, id_col)
-        .select(F.col(id_col), F.col(text_col))
-        .mapInPandas(run, schema=schema)
+    staged = _fanout(df, id_col).select(
+        F.col(id_col).alias("__id"), tokens(F.col(text_col)).alias("__toks")
     )
+    return staged.select("__id", shingles_of(F.col("__toks"), n).alias("__sh"))
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -945,18 +908,17 @@ def simhash64(
     """64-bit SimHash fingerprint per document (60-bit in portable mode).
 
     ``fast`` (the 100 TB path) is the zero-shuffle numpy Arrow kernel
-    (:func:`_simhash_arrow_fast`). ``portable``/``jvm`` use the expression
-    form: explode tokens -> per-bit signed sums -> recombine, all built-in
+    (:func:`_simhash_arrow_fast`). ``portable`` uses the expression form:
+    explode tokens -> per-bit signed sums -> recombine, all built-in
     expressions, shuffling on the id.
     """
+    if hash_mode not in ("fast", "portable"):
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
     if hash_mode == "fast":
         return _simhash_arrow_fast(df, id_col, text_col)
-    if hash_mode == "jvm":
-        token_hash = F.xxhash64("__tok")
-    else:
-        token_hash = F.conv(
-            F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10
-        ).cast("bigint")
+    token_hash = F.conv(
+        F.substring(F.md5(F.col("__tok")), 1, 15), 16, 10
+    ).cast("bigint")
     toks = _fanout(df, id_col).select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__tok")
     ).withColumn("__h", token_hash)

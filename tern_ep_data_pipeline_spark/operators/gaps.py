@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 
 def missing_record_stats(
     df: DataFrame,
@@ -128,7 +130,9 @@ def gap_report_from_lagged(
     return (
         lagged.withColumn(
             "gap_seconds",
-            F.expr(f"timestampdiff(MICROSECOND, prev_ts, {ts_col}) div 1000000"),
+            F.expr(
+                f"timestampdiff(MICROSECOND, prev_ts, {_sql_ident(ts_col)}) div 1000000"
+            ),
         )
         .filter(F.col("gap_seconds") > min_gap_seconds)
         .select(
@@ -162,7 +166,8 @@ def gap_histogram_from_lagged(
     gaps = lagged.withColumn(
         "n_intervals",
         F.expr(
-            f"timestampdiff(MICROSECOND, prev_ts, {ts_col}) div 1000000 div {interval_seconds}"
+            f"timestampdiff(MICROSECOND, prev_ts, {_sql_ident(ts_col)}) "
+            f"div 1000000 div {interval_seconds}"
         ),
     ).filter(F.col("n_intervals") > 1)
     return gaps.groupBy(*partition_cols, "n_intervals").agg(

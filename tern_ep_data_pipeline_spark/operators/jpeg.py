@@ -23,11 +23,12 @@ stream is pre-scanned once with numpy (bulk 0xFF classification:
 unstuffing, restart segmentation, terminator location) and each Huffman
 symbol then resolves with ONE 16-bit-window LUT probe plus one shift for
 its magnitude bits, replacing the former per-bit accumulate/dict-probe
-loop (measured >=5x on the checked-in micro-bench,
-``tools/bench_jpeg_decode.py``). The remaining per-symbol Python loop is
-irreducible without a native binding; a production 100 TB image pipeline
-would swap ``decode_jpeg`` for a libjpeg-turbo binding behind the same
-``multimodal.decode_image`` dispatch; nothing Spark-side changes.
+loop (measured >=5x in r10 by a micro-bench that timed both decoders on
+identical payloads; the script is in git history). The remaining
+per-symbol Python loop is irreducible without a native binding; a
+production 100 TB image pipeline would swap ``decode_jpeg`` for a
+libjpeg-turbo binding behind the same ``multimodal.decode_image``
+dispatch; nothing Spark-side changes.
 """
 
 from __future__ import annotations

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 
 def infer_interval_seconds(df: DataFrame, ts_col: str, partition_cols: Sequence[str] = ()) -> DataFrame:
     """A1: per-partition (min, modal) successive-delta in seconds.
@@ -39,7 +41,9 @@ def infer_interval_seconds(df: DataFrame, ts_col: str, partition_cols: Sequence[
         _lagged(df, ts_col, partition_cols)
         .withColumn(
             "__delta_s",
-            F.expr(f"timestampdiff(MICROSECOND, prev_ts, {ts_col}) div 1000000"),
+            F.expr(
+                f"timestampdiff(MICROSECOND, prev_ts, {_sql_ident(ts_col)}) div 1000000"
+            ),
         )
         .filter(F.col("__delta_s").isNotNull())
     )
@@ -66,7 +70,8 @@ def time_grid(
     ``truncate_to`` optionally date_truncs the bounds first (e.g. 'hour').
     Returns a single-column DataFrame named ``ts_col``.
     """
-    lo, hi = f"min({ts_col})", f"max({ts_col})"
+    ts = _sql_ident(ts_col)
+    lo, hi = f"min({ts})", f"max({ts})"
     if truncate_to:
         lo, hi = f"date_trunc('{truncate_to}', {lo})", f"date_trunc('{truncate_to}', {hi})"
     bounds = spark_df.select(

@@ -23,8 +23,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _memo_stage
-
 _log = logging.getLogger(__name__)
 
 
@@ -151,10 +149,11 @@ def ann_lsh_topk(
 
 
 def _near_dup_pairs_kernel(threshold: float):
-    """Per-block pandas kernel for :func:`embedding_near_dup_pairs`
-    (``mode='arrow'``): all-pairs cosine with the EXACT floating-point
-    semantics of the JVM expression form, so the two modes are
-    value-identical by construction, not by luck —
+    """Per-block pandas kernel for :func:`embedding_near_dup_pairs`:
+    all-pairs cosine with the EXACT floating-point semantics of the JVM
+    expression form (:func:`_near_dup_expr_pairs`, which takes the
+    oversized blocks), so the two routes are value-identical by
+    construction, not by luck —
 
     - elements widen to float64 first (``x.cast("double")``),
     - the dot/norm accumulate SEQUENTIALLY over dims in ascending order
@@ -228,10 +227,11 @@ def _near_dup_pairs_kernel(threshold: float):
 
 def _near_dup_expr_pairs(base: DataFrame) -> DataFrame:
     """Within-block all-pairs raw cosine of a ``(__block, __id, __v, __n)``
-    frame via the JVM self-join/fold — the expression form both near-dup
-    modes share (``mode='expr'`` and the arrow mode's oversized-block
-    fallback). Emits (id_a, id_b, __raw); the caller applies the exact
-    ``round(_, 6) >= threshold`` filter."""
+    frame via the JVM self-join/fold — the route
+    :func:`embedding_near_dup_pairs` sends blocks past ``max_block_rows``
+    through, because it streams and spills where the per-block kernel
+    holds a whole block in memory. Emits (id_a, id_b, __raw); the caller
+    applies the exact ``round(_, 6) >= threshold`` filter."""
     a = base.select(
         F.col("__block"), F.col("__id").alias("id_a"),
         F.col("__v").alias("va"), F.col("__n").alias("na"),
@@ -251,7 +251,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     block_col: str | None = None,
     threshold: float = 0.95,
-    mode: str = "arrow",
     max_block_rows: int | None | str = "auto",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >= t).
@@ -260,30 +259,25 @@ def embedding_near_dup_pairs(
     unblocked run is refused implicitly by requiring ``block_col`` for
     big inputs).
 
-    ``mode='arrow'`` (default, r15): one ``applyInPandas`` per block runs
-    the all-pairs cosine as vectorised numpy with the JVM expression
-    form's exact float semantics (see :func:`_near_dup_pairs_kernel`) —
-    the interpreted ``aggregate``/``zip_with`` lambda paid ~D interpreted
-    expression evaluations PER PAIR (measured r15: 2.3-3.4 s at sf0.1 =
-    ~13M lambda steps), and the self-join shipped every vector twice.
-    The kernel ships each vector once (no staged persist, no self-join
-    exchanges) and pays native flops. ``mode='expr'`` keeps the pure-JVM
-    form; both modes are pinned value-identical in tests.
+    One ``applyInPandas`` per block runs the all-pairs cosine as
+    vectorised numpy with the JVM expression form's exact float
+    semantics (see :func:`_near_dup_pairs_kernel`). It replaced a
+    whole-frame ``aggregate``/``zip_with`` self-join, which paid ~D
+    interpreted expression evaluations PER PAIR (measured r15: 2.3-3.4 s
+    at sf0.1 = ~13M lambda steps) and shipped every vector twice.
 
-    Degenerate inputs behave IDENTICALLY in both modes (r16, aligning the
-    r15 drift): rows with a NULL block key pair with nothing (the expr
-    equi-join's semantics, now enforced in arrow mode too), NULL ids and
-    NULL vectors are dropped, and zero-norm vectors are filtered before
-    pairing in BOTH modes (cosine is undefined for them; the expr fold
-    previously raised ANSI DIVIDE_BY_ZERO where the kernel dropped NaN).
+    Degenerate inputs: rows with a NULL block key pair with nothing (the
+    equi-join's semantics, enforced in the kernel route too), NULL ids
+    and NULL vectors are dropped, and zero-norm vectors are filtered
+    before pairing (cosine is undefined for them).
 
-    ``max_block_rows`` (r16, VERDICT r15 #4) bounds the arrow kernel's
-    per-task memory on skewed blocks: a NARROW per-block count (only the
-    block column is scanned) finds oversized block keys, which broadcast
-    to an anti/semi split — blocks past the cap route through the
-    expression self-join (which streams and spills) instead of
-    materialising the whole block in one pandas group, the same
-    oversized-bucket guard MinHash applies. Both branches produce the
+    ``max_block_rows`` (r16, VERDICT r15 #4) bounds the kernel's per-task
+    memory on skewed blocks: a NARROW per-block count (only the block
+    column is scanned) finds oversized block keys, which broadcast to an
+    anti/semi split — blocks past the cap route through the expression
+    self-join (:func:`_near_dup_expr_pairs`, which streams and spills)
+    instead of materialising the whole block in one pandas group, the
+    same oversized-bucket guard MinHash applies. Both routes produce the
     identical pair set (the kernel replays the fold's float semantics),
     so the split is invisible in the result (pinned in tests).
 
@@ -293,77 +287,53 @@ def embedding_near_dup_pairs(
     is noise — so the guard engages at 65,536 rows per block only when
     Catalyst's plan-time size estimate for the input exceeds 1 GiB (or
     is unavailable — unknown size fails toward memory safety), and
-    stays out of small plans entirely. Pass an int to force the cap, or
-    ``None`` to disable (single-group semantics, the r15 shape).
+    stays out of small plans entirely. Pass an int to force the cap
+    (``0`` sends every block through the expression route), or ``None``
+    to disable (kernel only).
     """
-    if mode == "arrow" and max_block_rows == "auto":
+    if max_block_rows == "auto":
         from .memguard import plan_size_estimate
 
         est = plan_size_estimate(df)
         max_block_rows = 65536 if (est is None or est > (1 << 30)) else None
-    if mode == "arrow":
-        base = df.select(
-            (F.col(block_col) if block_col else F.lit(0)).alias("__block"),
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
+    base = df.select(
+        (F.col(block_col) if block_col else F.lit(0)).alias("__block"),
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).alias("__v"),
+    )
+    if block_col:
+        # the expression route's equi-join drops null block keys; groupBy
+        # would keep a null group and silently pair those rows (ADVICE r15)
+        base = base.where(F.col("__block").isNotNull())
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"id_a {id_type}, id_b {id_type}, __raw double"
+    kern = _near_dup_pairs_kernel(threshold)
+    if max_block_rows is None:
+        out = base.groupBy("__block").applyInPandas(kern, schema=schema)
+    else:
+        # oversized-block keys via a NARROW count (only the block
+        # column is scanned — column pruning reaches the parquet
+        # scan), broadcast to an anti/semi split of the vector rows:
+        # the vectors themselves are never shuffled or sorted for the
+        # routing decision, only for the kernel's own group exchange
+        over = (
+            base.groupBy("__block")
+            .agg(F.expr("count(1) AS __bn"))
+            .where(F.col("__bn") > max_block_rows)
+            .select("__block")
         )
-        if block_col:
-            # expr's equi-join drops null block keys; groupBy would keep
-            # a null group and silently pair those rows (ADVICE r15)
-            base = base.where(F.col("__block").isNotNull())
-        id_type = df.schema[id_col].dataType.simpleString()
-        schema = f"id_a {id_type}, id_b {id_type}, __raw double"
-        kern = _near_dup_pairs_kernel(threshold)
-        if max_block_rows is None:
-            out = base.groupBy("__block").applyInPandas(kern, schema=schema)
-        else:
-            # oversized-block keys via a NARROW count (only the block
-            # column is scanned — column pruning reaches the parquet
-            # scan), broadcast to an anti/semi split of the vector rows:
-            # the vectors themselves are never shuffled or sorted for the
-            # routing decision, only for the kernel's own group exchange
-            over = (
-                base.groupBy("__block")
-                .agg(F.expr("count(1) AS __bn"))
-                .where(F.col("__bn") > max_block_rows)
-                .select("__block")
-            )
-            small = base.join(F.broadcast(over), on="__block", how="left_anti")
-            out = small.groupBy("__block").applyInPandas(kern, schema=schema)
-            big = (
-                base.join(F.broadcast(over), on="__block", how="left_semi")
-                .where(F.col("__v").isNotNull() & F.col("__id").isNotNull())
-                .withColumn("__n", norm(F.col("__v")))
-                .where(F.col("__n") != 0.0)
-            )
-            out = out.unionByName(_near_dup_expr_pairs(big))
-        return (
-            out.withColumn("cosine_sim", F.round(F.col("__raw"), 6))
-            .where(F.col("cosine_sim") >= threshold)
-            .select("id_a", "id_b", "cosine_sim")
+        small = base.join(F.broadcast(over), on="__block", how="left_anti")
+        out = small.groupBy("__block").applyInPandas(kern, schema=schema)
+        big = (
+            base.join(F.broadcast(over), on="__block", how="left_semi")
+            .where(F.col("__v").isNotNull() & F.col("__id").isNotNull())
+            .withColumn("__n", norm(F.col("__v")))
+            .where(F.col("__n") != 0.0)
         )
-
-    def build() -> DataFrame:
-        return df.select(
-            *(
-                [F.col(block_col).alias("__block")]
-                if block_col
-                else [F.lit(0).alias("__block")]
-            ),
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__v"),
-            norm(F.col(vec_col)).alias("__n"),
-        ).where(F.col("__n") != 0.0)
-
-    # stage (persist+register): the self-join reads vectors+norms from both
-    # aliased sides, and same-session callers with different thresholds (a
-    # pair listing + a semantic-dedup pass) share one staged base; release
-    # with dedup.release_staged(spark)
-    base = _memo_stage(df, "embnd-base", (id_col, vec_col, block_col or ""), build)
+        out = out.unionByName(_near_dup_expr_pairs(big))
     return (
-        _near_dup_expr_pairs(base)
-        .withColumn("cosine_sim", F.round(F.col("__raw"), 6))
-        .filter(F.col("cosine_sim") >= threshold)
+        out.withColumn("cosine_sim", F.round(F.col("__raw"), 6))
+        .where(F.col("cosine_sim") >= threshold)
         .select("id_a", "id_b", "cosine_sim")
     )
 
@@ -403,9 +373,9 @@ def semantic_dedup(
     representative policy).
 
     100 TB shape: cluster count must grow ~sqrt(N) (the SemDeDup recipe) so
-    per-cluster membership stays bounded; the self-join inherits the staged
-    persist + within-block join from :func:`embedding_near_dup_pairs`, and
-    centroids come from the tree-aggregated :func:`label_centroids` (no xD
+    per-cluster membership stays bounded; the pairing is the per-cluster
+    kernel of :func:`embedding_near_dup_pairs` (its ``max_block_rows``
+    guard bounds an oversized cluster's memory), and centroids come from the tree-aggregated :func:`label_centroids` (no xD
     explode), broadcast back for the similarity projection.
     """
     if pairs is None:

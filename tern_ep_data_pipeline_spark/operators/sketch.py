@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 #: Hash domain: first 15 hex chars of md5 = 60 bits.
 _KMV_DOMAIN = float(1 << 60)
 
@@ -117,7 +119,7 @@ def sampled_quantiles(
     cut = int(round(fraction * 10_000))
     sampled = df.where((portable_hash(key, salt) % 10_000) < cut)
     aggs = [
-        F.expr(f"percentile({value_col}, {q})").alias(
+        F.expr(f"percentile({_sql_ident(value_col)}, {q})").alias(
             f"q_{str(q).replace('.', '_')}"
         )
         for q in quantiles

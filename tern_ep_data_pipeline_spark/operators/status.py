@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 
 def last_valid_stats(
     df: DataFrame,
@@ -34,10 +36,11 @@ def last_valid_stats(
     """
     df = df.withColumn("__valid", valid)
     gb = df.groupBy(*partition_cols) if partition_cols else df.groupBy()
+    ts, value = _sql_ident(ts_col), _sql_ident(value_col)
     out = gb.agg(
         F.max(ts_col).alias("last_ts"),
-        F.expr(f"max_by({value_col}, {ts_col}) FILTER (WHERE __valid)").alias("last_valid_value"),
-        F.expr(f"max({ts_col}) FILTER (WHERE __valid)").alias("last_valid_ts"),
+        F.expr(f"max_by({value}, {ts}) FILTER (WHERE __valid)").alias("last_valid_value"),
+        F.expr(f"max({ts}) FILTER (WHERE __valid)").alias("last_valid_ts"),
         F.count(F.lit(1)).alias("n_records"),
         F.sum(F.col("__valid").cast("long")).alias("n_valid"),
     )

@@ -290,7 +290,6 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 8,
     window: int = 4,
-    impl: str = "arrow",
     hash_mode: str = "fast",
 ) -> DataFrame:
     """Rolling-hash document fingerprinting by winnowing (Schleimer et al.,
@@ -313,49 +312,15 @@ def winnowing_fingerprints(
     from portable mode (different hash family); the winnowing structure and
     overlap semantics are identical.
 
-    impl='arrow' (default) runs an Arrow-batched mapInPandas — Spark's
-    higher-order array functions are interpreted per element, which makes
-    the pure expression form ~10x slower; impl='expr' (portable only) keeps
-    everything JVM-side with zero Python workers and identical values to
-    the portable Arrow path.
+    Both modes run as Arrow-batched mapInPandas kernels: Spark's
+    higher-order array functions are interpreted per element, which made
+    the pure expression form ~10x slower.
     """
     from .dedup import _fanout
 
     if hash_mode == "fast":
         return _winnow_arrow_fast(_fanout(df, id_col), id_col, text_col, k, window)
-    if impl == "arrow":
-        return _winnow_arrow(_fanout(df, id_col), id_col, text_col, k, window)
-
-    # Each intermediate array is staged as its own projection: Spark's
-    # higher-order functions are interpreted with NO common-subexpression
-    # elimination, so a lambda body that references a nested expression
-    # re-evaluates it per element (slice(hashes, i, w) would recompute the
-    # whole md5 gram array for every window — O(n^2) hashing). Binding each
-    # array to a column first makes every stage O(n).
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    staged = _fanout(df, id_col).select(F.col(id_col), norm.alias("__s"))
-    s = F.col("__s")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(s) - (k - 1), F.lit(1))),
-        lambda i: s.substr(i, F.lit(k)),
-    )
-    staged = staged.select(id_col, grams.alias("__grams"))
-    hashes = F.transform(
-        F.col("__grams"),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"),
-    )
-    staged = staged.select(id_col, hashes.alias("__hs"))
-    hs = F.col("__hs")
-    fps = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(hs) - (window - 1), F.lit(1))),
-            lambda i: F.array_min(F.slice(hs, i, window)),
-        )
-    )
-    return (
-        staged.select(F.col(id_col), F.explode(fps).alias("fingerprint"))
-        .distinct()
-    )
+    return _winnow_arrow(_fanout(df, id_col), id_col, text_col, k, window)
 
 
 def _winnow_arrow(

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 
 def lag_diff(
     df: DataFrame,
@@ -85,10 +87,12 @@ def tumbling_bucket(ts_col: str, minutes: int) -> Column:
     Pure arithmetic (no shuffle): truncate to the hour then add back the
     floored minute block. Matches DuckDB ``time_bucket`` for divisors of 60.
     """
-    assert 60 % minutes == 0, "bucket must divide the hour"
+    if minutes <= 0 or 60 % minutes:
+        raise ValueError(f"bucket must divide the hour, got {minutes} minutes")
+    ts = _sql_ident(ts_col)
     return F.expr(
-        f"timestampadd(MINUTE, {minutes} * (minute({ts_col}) div {minutes}), "
-        f"date_trunc('hour', {ts_col}))"
+        f"timestampadd(MINUTE, {minutes} * (minute({ts}) div {minutes}), "
+        f"date_trunc('hour', {ts}))"
     )
 
 
@@ -114,7 +118,7 @@ def trailing_validity_fraction(
         else df.crossJoin(F.broadcast(maxes))
     )
     in_window = (
-        F.expr(f"timestampdiff(MICROSECOND, {ts_col}, last_ts)")
+        F.expr(f"timestampdiff(MICROSECOND, {_sql_ident(ts_col)}, last_ts)")
         <= window_seconds * 1_000_000
     )
     gb2 = (

@@ -646,9 +646,9 @@ def write_dsir_ratio_artifact(
     overhead — at a 200k-gram sidecar the one-time prewarm (~0.2-0.5 s
     per task) breaks even after a few tens of thousands of docs per
     task. Opt in for LONG-lived tasks (the 100 TB steady state: one
-    task streams millions of docs); short exploratory jobs should
-    leave ``vocab_top_k=0`` or pass
-    ``dsir_scored_stream(use_vocab_sidecar=False)``.
+    task streams millions of docs); short jobs should publish with
+    ``vocab_top_k=0``, since :func:`dsir_scored_stream` prewarms from a
+    sidecar whenever the artifact has one.
     """
     import json as _json
 
@@ -814,19 +814,21 @@ def load_dsir_vocab(spark, path: str) -> list | None:
 
 class _DsirFastScorer:
     """Vectorised DSIR scoring kernel (r13 verdict #1) — the per-batch
-    body behind ``dsir_scored_stream(hash_mode='fast')``.
+    body behind :func:`dsir_scored_stream`.
 
     Design: the hash family is FIXED (the artifact's portable 60-bit
     md5), so the only latitude is where Python touches occurrences.
-    The portable twin pays two dict lookups + a bound-method call per
-    token; this kernel makes the per-OCCURRENCE path pure C and spends
-    Python only on genuinely NEW vocabulary:
+    A per-token loop pays two dict lookups + a bound-method call per
+    token (BLOOM_r14 measured it 1.35-1.46x slower end to end); this
+    kernel makes the per-OCCURRENCE path pure C and spends Python only
+    on genuinely NEW vocabulary:
 
     - tokens factorise per batch (one C hash pass over all
       occurrences), then map to PERSISTENT stable codes via a dict
       probe over the batch's UNIQUE tokens only; new tokens are
       md5-hashed once (``md5np.md5_hex60`` — bit-equal to hashlib, so
-      fast and portable cannot diverge) and join the code space.
+      the stream cannot diverge from the batch scorer's md5) and join
+      the code space.
     - bigrams become int64 composite keys of adjacent stable codes —
       no bigram STRING is ever built for a known pair. Known pairs
       resolve from a dict keyed by the composite; only the misses
@@ -846,9 +848,9 @@ class _DsirFastScorer:
     a one-time insert and steady batches touch only their own unique
     grams. State is per-TASK (an Arrow iterator closure) and capped:
     past ``max_vocab`` entries the tables stop growing and later
-    misses re-hash per batch (graceful, never wrong); the portable
-    twin's string-keyed memo grows without bound, so the cap is
-    strictly tighter than the r13 behaviour.
+    misses re-hash per batch (graceful, never wrong); the r13 per-token
+    kernel's string-keyed memo grew without bound, so the cap is
+    strictly tighter than that behaviour.
 
     The default cap sizes for many concurrent tasks per executor: 2M
     token entries cost ~200-300 MB (Python string + dict slot
@@ -861,8 +863,8 @@ class _DsirFastScorer:
 
     #: Per-doc |pico sum| past which the vectorised int64 segment sums
     #: (np.add.reduceat) and the 2*|s| micro conversion could WRAP
-    #: silently, while the portable twin's Python ints would not — a
-    #: fast/portable parity break on pathologically long documents
+    #: silently, while the batch scorer's exact decimal sums would not —
+    #: a stream/batch parity break on pathologically long documents
     #: (ADVICE r14; |sum| near 2^63 is reachable at the 1<<24
     #: max-doc-token scale with large ratios). Docs whose worst-case
     #: bound (2 * ntoks * max|lr_pico|, unigrams + bigrams) exceeds
@@ -969,10 +971,10 @@ class _DsirFastScorer:
                 self.pair_map[key] = int(v)
 
     def _score_doc_pyint(self, text: str) -> int:
-        """Arbitrary-precision twin for one OVERFLOW-RISKY document —
-        the portable kernel's exact per-token loop (hashlib md5, dict
-        walk, Python-int accumulation), so parity with the portable
-        mode holds by construction where int64 cannot be trusted."""
+        """Arbitrary-precision route for one OVERFLOW-RISKY document:
+        a per-token loop (hashlib md5, dict walk, Python-int
+        accumulation) with the vectorised path's semantics, so the score
+        stays exact where int64 cannot be trusted."""
         import hashlib
 
         from ..operators.dedup import py_tokens
@@ -1130,8 +1132,6 @@ def dsir_scored_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_logweight_micro: int | None = None,
-    hash_mode: str = "fast",
-    use_vocab_sidecar: bool = True,
 ) -> DataFrame:
     """Score each streaming document against a frozen DSIR ratio
     artifact: adds ``logweight_micro`` (exact integer micro-log units,
@@ -1142,7 +1142,7 @@ def dsir_scored_stream(
     construction and closed over by an Arrow kernel (no watermark, no
     streaming state; a restart from checkpoint re-reads the artifact,
     so decisions stay reproducible as long as refreshes are the atomic
-    swap ``write_dsir_ratio_artifact`` performs). Both kernels mirror
+    swap ``write_dsir_ratio_artifact`` performs). The kernel mirrors
     the batch pipeline exactly: ``py_tokens`` (the pinned ASCII-``\\s``
     twin of ``dedup.tokens``), unigram+bigram grams, the portable
     60-bit md5 bucket hash (the artifact's pinned ``hash``; a mismatch
@@ -1151,17 +1151,14 @@ def dsir_scored_stream(
     scorer's inner join drops them identically), and the same
     half-away-from-zero integer division to micro units.
 
-    ``hash_mode='fast'`` (default, r13 verdict #1) is the vectorised
-    kernel: per Arrow batch, ONE pandas pass builds all unigram+bigram
-    occurrences (C-level shifted concat — no per-token Python), only
+    The kernel is :class:`_DsirFastScorer` (r13 verdict #1): per Arrow
+    batch, ONE pandas pass builds all unigram+bigram occurrences, only
     NEW unique grams are hashed (``md5np.md5_hex60``, a numpy MD5 that
-    is bit-equal to hashlib — so fast and portable CANNOT diverge, the
-    exact property the frozen model needs), a memo carries resolved
-    grams across batches, and per-doc sums are one int64 scatter-add.
-    ``hash_mode='portable'`` keeps the per-token loop as the parity
-    twin. Integer-equal parity (fast == portable == batch scorer) is
+    is bit-equal to hashlib), a memo carries resolved grams across
+    batches, and per-doc sums are int64 segment reductions. Integer
+    equality with the batch scorer and with a per-token reference is
     pinned in tests/test_dsir.py. When the artifact ships a vocabulary
-    sidecar (``write_dsir_ratio_artifact(vocab_top_k=...)``), the fast
+    sidecar (``write_dsir_ratio_artifact(vocab_top_k=...)``), the
     kernel prewarms each task's gram tables from it at construction —
     eliminating the per-task cold-start md5 work on the corpus's hot
     vocabulary — with scores pinned identical by construction (the
@@ -1170,25 +1167,15 @@ def dsir_scored_stream(
     Documents whose grams all miss the table score 0 — same weight the
     batch scorer's sum-of-nothing would produce for selection purposes.
     """
-    import hashlib
-
-    from ..operators.dedup import py_tokens
-
     from pyspark.sql import types as T
 
-    if hash_mode not in ("fast", "portable"):
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
     table, meta = load_dsir_ratio(stream.sparkSession, ratio_path)
     # vocabulary sidecar (r14 verdict #3): loaded once at stream
     # construction, shipped as a Spark broadcast (one copy per
     # executor, not per task), prewarmed into each task's scorer.
     # Strings only — correctness never depends on it (see prewarm).
     bvocab = None
-    if (
-        use_vocab_sidecar
-        and hash_mode == "fast"
-        and meta.get("n_vocab_rows")
-    ):
+    if meta.get("n_vocab_rows"):
         grams = load_dsir_vocab(stream.sparkSession, ratio_path)
         if grams:
             bvocab = stream.sparkSession.sparkContext.broadcast(grams)
@@ -1208,50 +1195,7 @@ def dsir_scored_stream(
     )
     prefix = f"{salt}:".encode()
 
-    def _micro(s: int) -> int:
-        # half-away-from-zero integer division to micro units —
-        # the Python twin of text.half_away_div(s, 1e6)
-        den = 1_000_000
-        return (
-            (2 * s + den) // (2 * den)
-            if s >= 0
-            else -((2 * (-s) + den) // (2 * den))
-        )
-
-    def score_portable(batches):
-        memo: dict[str, int] = {}
-
-        def bucket_of(g: str) -> int:
-            b = memo.get(g)
-            if b is None:
-                h = hashlib.md5(prefix + g.encode()).hexdigest()[:15]
-                b = int(h, 16) % buckets
-                memo[g] = b
-            return b
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for raw_text in pdf[text_col]:
-                toks = py_tokens(raw_text)
-                s = 0
-                prev = None
-                for t in toks:
-                    lr = table.get(bucket_of(t))
-                    if lr is not None:
-                        s += lr
-                    if prev is not None:
-                        lr2 = table.get(bucket_of(prev + " " + t))
-                        if lr2 is not None:
-                            s += lr2
-                    prev = t
-                out.append(_micro(s))
-            pdf = pdf.copy()
-            pdf["logweight_micro"] = out
-            yield pdf
-
-    def score_fast(batches):
+    def score(batches):
         scorer = _DsirFastScorer(table, prefix, buckets)
         if bvocab is not None:
             scorer.prewarm(bvocab.value)
@@ -1262,10 +1206,7 @@ def dsir_scored_stream(
             pdf["logweight_micro"] = scorer.score(pdf[text_col])
             yield pdf
 
-    scored = stream.mapInPandas(
-        score_fast if hash_mode == "fast" else score_portable,
-        schema=schema_out,
-    )
+    scored = stream.mapInPandas(score, schema=schema_out)
     if min_logweight_micro is not None:
         scored = scored.where(
             F.col("logweight_micro") >= F.lit(int(min_logweight_micro))

@@ -81,6 +81,8 @@ def test_simhash_identical_zero_distance(spark):
     pairs = dedup.simhash_near_pairs(df, "doc_id", "text", max_hamming=0)
     found = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
     assert found[(1, 2)] == 0
+    with pytest.raises(ValueError, match="hash_mode"):
+        dedup.simhash64(df, "doc_id", "text", hash_mode="xxhash64")
 
 
 def test_cosine_topk_self_similarity(spark):
@@ -206,20 +208,17 @@ def test_quoted_column_names_match_plain_names(spark):
         assert sorted(map(tuple, out.collect())) == want, (op.__name__, kw)
 
 
-def test_winnowing_impls_agree_and_overlap(spark):
+def test_winnowing_portable_overlap(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame(
         [(1, base), (2, base + " with a small tail"), (3, "completely different words here")],
         ["doc_id", "text"],
     )
-    arrow = text.winnowing_fingerprints(df, "doc_id", "text", hash_mode="portable")
-    expr = text.winnowing_fingerprints(df, "doc_id", "text", impl="expr", hash_mode="portable")
-    assert arrow.exceptAll(expr).count() == 0
-    assert expr.exceptAll(arrow).count() == 0
-    fps = {
-        i: {r["fingerprint"] for r in arrow.filter(F.col("doc_id") == i).collect()}
-        for i in (1, 2, 3)
-    }
+    fps: dict[int, set] = {}
+    for r in text.winnowing_fingerprints(
+        df, "doc_id", "text", hash_mode="portable"
+    ).collect():
+        fps.setdefault(r["doc_id"], set()).add(r["fingerprint"])
     # near-identical docs share most fingerprints; unrelated docs share none
     assert len(fps[1] & fps[2]) > len(fps[1]) // 2
     assert not fps[1] & fps[3]
@@ -301,40 +300,52 @@ def test_chunk_frame_tail_and_short_doc(spark):
     assert d2[0]["__chunk"] == "x x x x"
 
 
-def test_near_dup_pairs_arrow_equals_expr(spark, sf_dir):
-    """The r15 numpy all-pairs kernel (mode='arrow') must be VALUE-identical
-    to the JVM aggregate/zip_with form (mode='expr') — the kernel replays the
-    fold's exact float semantics (widen-then-multiply, dims-sequential adds,
-    dot/(na*nb)), so this holds bit-for-bit, not within a tolerance."""
+def test_near_dup_pairs_block_cap_routes_oversized(spark, sf_dir):
+    """r16 (VERDICT r15 #4): blocks larger than max_block_rows route
+    through the expression self-join instead of one pandas group, with the
+    pair set unchanged — bounding per-task memory on skewed LSH buckets.
+    The numpy kernel replays the fold's exact float semantics
+    (widen-then-multiply, dims-sequential adds, dot/(na*nb)), so the routes
+    agree bit-for-bit, not within a tolerance: ``None`` is kernel only,
+    ``50`` mixed, ``0`` expression only."""
+
+    def pairs(df, th, cap):
+        return sorted(
+            map(
+                tuple,
+                similarity.embedding_near_dup_pairs(
+                    df, "vec_id", "embedding", block_col="label",
+                    threshold=th, max_block_rows=cap,
+                ).collect(),
+            )
+        )
+
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    # skew the blocks: fold every label to 2 values so one block far
+    # exceeds a tiny cap while the other stays under it
+    skewed = emb.selectExpr(
+        "vec_id", "embedding", "CASE WHEN vec_id % 10 = 0 THEN 1 ELSE 0 END AS label"
+    )
     for th in (0.3, 0.95):
-        a = sorted(
-            map(
-                tuple,
-                similarity.embedding_near_dup_pairs(
-                    emb, "vec_id", "embedding", block_col="label",
-                    threshold=th, mode="arrow",
-                ).collect(),
-            )
-        )
-        e = sorted(
-            map(
-                tuple,
-                similarity.embedding_near_dup_pairs(
-                    emb, "vec_id", "embedding", block_col="label",
-                    threshold=th, mode="expr",
-                ).collect(),
-            )
-        )
-        assert a == e, f"threshold={th}: arrow/expr pair sets differ"
-        dedup.release_staged(spark)
-    # degenerate edges, aligned across modes (r16): a null vector, an
-    # empty vector, a ZERO vector (filtered in both modes — the expr fold
-    # previously raised ANSI divide-by-zero), an odd-length vector (pairs
-    # to NULL under zip_with => dropped), a NULL id, and a NULL block key
-    # (pairs with nothing — the equi-join semantics, now enforced in
-    # arrow mode too; ADVICE r15) — only the well-formed near pairs come
-    # out, identically in BOTH modes
+        uncapped = pairs(skewed, th, None)
+        assert pairs(skewed, th, 50) == uncapped, th
+        assert pairs(skewed, th, 0) == uncapped, th
+        if th == 0.3:
+            assert uncapped  # the routes agree on real pairs, not just on none
+    capped_df = similarity.embedding_near_dup_pairs(
+        skewed, "vec_id", "embedding", block_col="label",
+        threshold=0.3, max_block_rows=50,
+    )
+    # the oversized block really does take the expr branch: the plan
+    # carries the self-join union alongside the pandas kernel
+    plan = capped_df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" in plan and "Union" in plan
+    # degenerate edges, one meaning on both routes (r16): a null vector, an
+    # empty vector, a ZERO vector (filtered — the fold would raise ANSI
+    # divide-by-zero), an odd-length vector (pairs to NULL under zip_with
+    # => dropped), a NULL id, and a NULL block key (pairs with nothing —
+    # the equi-join semantics, enforced on the kernel route too; ADVICE
+    # r15) — only the well-formed near pairs come out
     rows = [
         (1, [1.0, 0.0], 0),
         (2, [1.0, 0.01], 0),
@@ -349,51 +360,8 @@ def test_near_dup_pairs_arrow_equals_expr(spark, sf_dir):
     ]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>, label int")
     expected = [(1, 2, 0.99995), (1, 7, 1.0), (2, 7, 0.99995)]
-    for mode in ("arrow", "expr"):
-        got = sorted(
-            map(
-                tuple,
-                similarity.embedding_near_dup_pairs(
-                    df, "vec_id", "embedding", block_col="label",
-                    threshold=0.5, mode=mode,
-                ).collect(),
-            )
-        )
-        assert got == expected, mode
-        dedup.release_staged(spark)
-
-
-def test_near_dup_pairs_block_cap_routes_oversized(spark, sf_dir):
-    """r16 (VERDICT r15 #4): blocks larger than max_block_rows route
-    through the expression self-join instead of one pandas group, with the
-    pair set unchanged — bounding per-task memory on skewed LSH buckets."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # skew the blocks: fold every label to 2 values so one block far
-    # exceeds a tiny cap while the other stays under it
-    skewed = emb.selectExpr(
-        "vec_id", "embedding", "CASE WHEN vec_id % 10 = 0 THEN 1 ELSE 0 END AS label"
-    )
-    uncapped = sorted(
-        map(
-            tuple,
-            similarity.embedding_near_dup_pairs(
-                skewed, "vec_id", "embedding", block_col="label",
-                threshold=0.3, mode="arrow", max_block_rows=None,
-            ).collect(),
-        )
-    )
-    dedup.release_staged(spark)
-    capped_df = similarity.embedding_near_dup_pairs(
-        skewed, "vec_id", "embedding", block_col="label",
-        threshold=0.3, mode="arrow", max_block_rows=50,
-    )
-    # the oversized block really does take the expr branch: the plan
-    # carries the self-join union alongside the pandas kernel
-    plan = capped_df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan and "Union" in plan
-    capped = sorted(map(tuple, capped_df.collect()))
-    assert capped == uncapped
-    dedup.release_staged(spark)
+    for cap in (None, 50, 0):
+        assert pairs(df, 0.5, cap) == expected, cap
 
 
 def test_semantic_dedup_within_cluster(spark):
@@ -416,35 +384,29 @@ def test_semantic_dedup_within_cluster(spark):
     dedup.release_staged(spark)
 
 
-def test_shingle_frame_arrow_equals_expr(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    extra = spark.createDataFrame(
-        [
-            (9001, ""),
-            (9002, "one"),
-            (9003, "one two three"),
-            (9004, "  padded   tokens  "),
-            # whitespace edges where Python str.split() and the JVM
-            # split(trim(col), '\s+') genuinely diverge: leading tab /
-            # trailing newline (empty boundary token on the JVM),
-            # NBSP + ideographic space (NOT separators on the JVM)
-            (9005, "\tlead tab body"),
-            (9006, "body trail newline\n"),
-            (9007, "nbsp joined token and　ideographic"),
-            (9008, " \t \n mixed   ws \r\f"),
-        ],
-        ["doc_id", "text"],
-    )
-    df = docs.select("doc_id", "text").unionByName(extra)
-    a = {
-        r["__id"]: sorted(r["__sh"])
-        for r in dedup.shingle_frame(df, "doc_id", "text", 3, mode="arrow").collect()
+def test_py_tokens_equals_jvm_tokens(spark):
+    """``py_tokens`` (every Python-side tokeniser: gram hashing, winnowing,
+    DSIR scoring) must split exactly like the JVM ``dedup.tokens``."""
+    texts = [
+        "",
+        "one",
+        "one two three",
+        "  padded   tokens  ",
+        # whitespace edges where Python str.split() and the JVM
+        # split(trim(col), '\s+') genuinely diverge: leading tab /
+        # trailing newline (empty boundary token on the JVM),
+        # NBSP + ideographic space (NOT separators on the JVM)
+        "\tlead tab body",
+        "body trail newline\n",
+        "nbsp\u00a0joined token and\u3000ideographic",
+        " \t \n mixed \u00a0 ws \r\f",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+    jvm = {
+        r["doc_id"]: list(r["toks"])
+        for r in df.select("doc_id", dedup.tokens(F.col("text")).alias("toks")).collect()
     }
-    e = {
-        r["__id"]: sorted(r["__sh"])
-        for r in dedup.shingle_frame(df, "doc_id", "text", 3, mode="expr").collect()
-    }
-    assert a == e
+    assert jvm == {i: dedup.py_tokens(t) for i, t in enumerate(texts)}
 
 
 def test_kmeans_and_semantic_dedup_auto(spark):

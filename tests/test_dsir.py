@@ -209,6 +209,46 @@ def _varied_corpus(spark, n=40, seed=5):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _reference_score(raw, table, prefix, buckets):
+    """One document's DSIR score by the plain per-token loop, independent
+    of the stream scorer: hashlib md5 of every unigram and bigram, pico-log
+    sum over the buckets present in ``table`` (Python ints, so no wrap),
+    half-away-from-zero division to micro units."""
+    import hashlib
+
+    from tern_ep_data_pipeline_spark.operators.dedup import py_tokens
+
+    def lr(gram):
+        h = int(hashlib.md5(prefix + gram.encode()).hexdigest()[:15], 16)
+        return table.get(h % buckets, 0)
+
+    s, prev = 0, None
+    for t in py_tokens(raw):
+        s += lr(t)
+        if prev is not None:
+            s += lr(prev + " " + t)
+        prev = t
+    den = 1_000_000
+    return (
+        (2 * s + den) // (2 * den)
+        if s >= 0
+        else -((2 * (-s) + den) // (2 * den))
+    )
+
+
+def _reference_scores(spark, docs, path):
+    """{doc_id: :func:`_reference_score`} under the ratio artifact at
+    ``path``."""
+    from tern_ep_data_pipeline_spark.streaming.curation import load_dsir_ratio
+
+    table, meta = load_dsir_ratio(spark, path)
+    prefix, buckets = f"{meta['salt']}:".encode(), int(meta["buckets"])
+    return {
+        r["doc_id"]: _reference_score(r["text"], table, prefix, buckets)
+        for r in docs.select("doc_id", "text").collect()
+    }
+
+
 def test_dsir_ratio_artifact_roundtrip_and_swap(spark, tmp_path):
     """The frozen ratio artifact: rows equal dsir_logratio exactly, meta
     pins the feature space, a refresh is an atomic swap, and
@@ -311,13 +351,9 @@ def test_dsir_stream_scoring_matches_batch(spark, tmp_path):
     }
     for doc_id, m in batch.items():
         assert streamed[doc_id] == m, (doc_id, streamed[doc_id], m)
-    # r14: the default is the VECTORISED kernel — pin the per-token
-    # portable twin integer-equal to it (and hence to the batch scorer)
-    portable = {
-        r["doc_id"]: r["logweight_micro"]
-        for r in dsir_scored_stream(docs, path, hash_mode="portable").collect()
-    }
-    assert portable == streamed
+    # the vectorised kernel is also integer-equal to the per-token loop
+    # on every document, including those the batch scorer does not emit
+    assert _reference_scores(spark, docs, path) == streamed
     # all docs present; any batch-absent doc scores exactly 0
     assert set(streamed) == {r["doc_id"] for r in docs.select("doc_id").collect()}
     for doc_id in set(streamed) - set(batch):
@@ -472,9 +508,9 @@ def test_curated_stream_dsir_option(spark, tmp_path):
 
 
 def test_md5np_bit_equal_to_hashlib():
-    """The vectorised MD5 kernel behind hash_mode='fast' is BYTE-EQUAL
-    to hashlib for every input — the property that makes fast and
-    portable scoring incapable of diverging (unlike the Rabin-Karp
+    """The vectorised MD5 kernel behind the stream DSIR scorer is
+    BYTE-EQUAL to hashlib for every input — the property that makes
+    stream and batch scoring incapable of diverging (unlike the Rabin-Karp
     fast family, which pins decision equality over different values).
     Random strings straddle the single-block/55-byte fallback boundary;
     the salted-gram shapes are the scorer's exact inputs."""
@@ -511,8 +547,8 @@ def test_md5np_bit_equal_to_hashlib():
 
 
 def test_dsir_stream_scoring_whitespace_edge_classes(spark, tmp_path):
-    """fast == portable on the token edge classes the vectorised kernel
-    must not simplify away: empty docs (py_tokens('') == ['']), tab/NL
+    """stream == per-token reference on the token edge classes the
+    vectorised kernel must not simplify away: empty docs (py_tokens('') == ['']), tab/NL
     leading tokens (trim strips spaces only), NBSP non-splits, and
     single-token docs (no bigram)."""
     from tern_ep_data_pipeline_spark.streaming.curation import (
@@ -539,18 +575,13 @@ def test_dsir_stream_scoring_whitespace_edge_classes(spark, tmp_path):
         r["doc_id"]: r["logweight_micro"]
         for r in dsir_scored_stream(docs, path).collect()
     }
-    portable = {
-        r["doc_id"]: r["logweight_micro"]
-        for r in dsir_scored_stream(docs, path, hash_mode="portable").collect()
-    }
-    assert fast == portable
+    assert fast == _reference_scores(spark, docs, path)
     assert set(fast) == {r[0] for r in rows}
 
 
 def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
     """The artifact pins its bucket hash; a scorer whose kernel computes
-    a different family must refuse at stream construction, and an
-    unknown hash_mode fails before any plan is built."""
+    a different family must refuse at stream construction."""
     import json
     import os
 
@@ -566,9 +597,6 @@ def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
     meta = write_dsir_ratio_artifact(docs, docs, path, buckets=64)
     assert meta["hash"] == "md5-60bit"
 
-    with _pytest.raises(ValueError, match="unknown hash_mode"):
-        dsir_scored_stream(docs, path, hash_mode="sha9000")
-
     doctored = dict(meta, hash="xxhash-64")
     with open(os.path.join(path, "meta.json"), "w") as fh:
         json.dump(doctored, fh)
@@ -580,15 +608,13 @@ def test_dsir_fast_scorer_cap_path_parity():
     """The fast kernel's vocab cap must degrade to batch-local codes
     WITHOUT changing scores or poisoning the persistent pair table:
     run the same batch stream through an uncapped scorer, a tightly
-    capped one, and the portable reference loop — integer-equal
+    capped one, and the per-token reference loop — integer-equal
     everywhere, including batches AFTER the cap bites (where a stale
     pair entry keyed by a recycled batch-local code would surface)."""
-    import hashlib
     import random
 
     import pandas as pd
 
-    from tern_ep_data_pipeline_spark.operators.dedup import py_tokens
     from tern_ep_data_pipeline_spark.streaming.curation import (
         _DsirFastScorer,
     )
@@ -596,35 +622,6 @@ def test_dsir_fast_scorer_cap_path_parity():
     rng = random.Random(17)
     table = {b: rng.randint(-10**12, 10**12) for b in range(512)}
     prefix, buckets = b"dsir:", 512
-
-    def portable(texts):
-        out = []
-        for raw in texts:
-            toks = py_tokens(raw)
-            s, prev = 0, None
-            for t in toks:
-                h = int(hashlib.md5(prefix + t.encode()).hexdigest()[:15], 16)
-                lr = table.get(h % buckets)
-                if lr is not None:
-                    s += lr
-                if prev is not None:
-                    h2 = int(
-                        hashlib.md5(
-                            prefix + (prev + " " + t).encode()
-                        ).hexdigest()[:15],
-                        16,
-                    )
-                    lr2 = table.get(h2 % buckets)
-                    if lr2 is not None:
-                        s += lr2
-                prev = t
-            den = 1_000_000
-            out.append(
-                (2 * s + den) // (2 * den)
-                if s >= 0
-                else -((2 * (-s) + den) // (2 * den))
-            )
-        return out
 
     vocab = [f"tok{i}" for i in range(400)]
     batches = []
@@ -639,7 +636,7 @@ def test_dsir_fast_scorer_cap_path_parity():
     free = _DsirFastScorer(table, prefix, buckets)
     capped = _DsirFastScorer(table, prefix, buckets, max_vocab=50)
     for s in batches:
-        exp = portable(s)
+        exp = [_reference_score(t, table, prefix, buckets) for t in s]
         assert free.score(s).tolist() == exp
         assert capped.score(s).tolist() == exp
     assert len(capped.code2tok) <= 50
@@ -649,8 +646,8 @@ def test_dsir_fast_scorer_cap_path_parity():
 def test_dsir_vocab_sidecar_prewarm_parity(spark, tmp_path):
     """r14 verdict #3: an artifact built with vocab_top_k ships a
     vocabulary sidecar; the fast scorer prewarms from it and scores
-    INTEGER-EQUAL to the sidecar-less fast scorer and the portable
-    twin. Also pins: sidecar content (top-K raw grams by count), meta
+    INTEGER-EQUAL to the sidecar-less scorer and the per-token
+    reference. Also pins: sidecar content (top-K raw grams by count), meta
     bookkeeping, absence for vocab_top_k=0, and the capped-prewarm
     path (a tiny max_vocab must not change scores)."""
     import pandas as pd
@@ -684,15 +681,11 @@ def test_dsir_vocab_sidecar_prewarm_parity(spark, tmp_path):
     assert grams[0] == "alpha"  # 2 occurrences/doc: the hottest gram
     assert any(" " in g for g in grams)  # bigrams rank too
 
-    exp = {r["doc_id"]: r["logweight_micro"]
-           for r in dsir_scored_stream(docs, plain,
-                                       hash_mode="portable").collect()}
+    exp = _reference_scores(spark, docs, plain)
     for path in (plain, side):
-        for mode in ("fast", "portable"):
-            got = {r["doc_id"]: r["logweight_micro"]
-                   for r in dsir_scored_stream(docs, path,
-                                               hash_mode=mode).collect()}
-            assert got == exp, (path, mode)
+        got = {r["doc_id"]: r["logweight_micro"]
+               for r in dsir_scored_stream(docs, path).collect()}
+        assert got == exp, path
 
     # prewarm unit semantics: warmed == cold == capped-warm, and the
     # warmed scorer already knows the sidecar vocabulary
@@ -719,17 +712,17 @@ def test_dsir_vocab_sidecar_prewarm_parity(spark, tmp_path):
 def test_dsir_fast_scorer_overflow_guard_parity():
     """ADVICE r14: documents whose worst-case pico sum could wrap the
     fast kernel's int64 accumulators reroute through the Python-int
-    twin — integer-equal to the portable loop, with safe batch-mates
-    still vectorised. Exercised two ways: the guard threshold lowered
-    so ordinary docs trip it (mixed risky/safe batch), and a genuinely
-    extreme model (|lr| near 2^62) where the UNlowered guard must fire
-    on its own — there the vectorised path would truly wrap."""
+    route — integer-equal to the per-token reference, with safe
+    batch-mates still vectorised. Exercised two ways: the guard
+    threshold lowered so ordinary docs trip it (mixed risky/safe batch),
+    and a genuinely extreme model (|lr| near 2^62) where the UNlowered
+    guard must fire on its own — there the vectorised path would truly
+    wrap."""
     import hashlib
     import random
 
     import pandas as pd
 
-    from tern_ep_data_pipeline_spark.operators.dedup import py_tokens
     from tern_ep_data_pipeline_spark.streaming.curation import (
         _DsirFastScorer,
     )
@@ -737,31 +730,6 @@ def test_dsir_fast_scorer_overflow_guard_parity():
     rng = random.Random(23)
     prefix, buckets = b"dsir:", 64
     table = {b: rng.randint(-10**12, 10**12) for b in range(64)}
-
-    def portable_one(raw, tbl):
-        toks = py_tokens(raw)
-        s, prev = 0, None
-        for t in toks:
-            h = int(hashlib.md5(prefix + t.encode()).hexdigest()[:15], 16)
-            lr = tbl.get(h % buckets)
-            if lr is not None:
-                s += lr
-            if prev is not None:
-                h2 = int(
-                    hashlib.md5(
-                        prefix + (prev + " " + t).encode()
-                    ).hexdigest()[:15], 16,
-                )
-                lr2 = tbl.get(h2 % buckets)
-                if lr2 is not None:
-                    s += lr2
-            prev = t
-        den = 1_000_000
-        return (
-            (2 * s + den) // (2 * den)
-            if s >= 0
-            else -((2 * (-s) + den) // (2 * den))
-        )
 
     vocab = [f"t{i}" for i in range(50)]
     texts = [
@@ -774,7 +742,7 @@ def test_dsir_fast_scorer_overflow_guard_parity():
     low = _DsirFastScorer(table, prefix, buckets)
     low.OVERFLOW_GUARD_PICO = 2 * 20 * low.max_abs_pico  # nt_limit = 20
     got = low.score(pd.Series(texts)).tolist()
-    assert got == [portable_one(t, table) for t in texts]
+    assert got == [_reference_score(t, table, prefix, buckets) for t in texts]
     assert len(low.code2tok) > 0  # the safe docs did run vectorised
 
     # (b) default guard, extreme model: one bucket's |lr| is so large
@@ -785,7 +753,7 @@ def test_dsir_fast_scorer_overflow_guard_parity():
     big[hb % buckets] = 1 << 60
     hot_text = " ".join([hot_tok] * 64)  # worst case >> 2^63
     scorer = _DsirFastScorer(big, prefix, buckets)
-    exp = portable_one(hot_text, big)
+    exp = _reference_score(hot_text, big, prefix, buckets)
     assert exp > (1 << 63) // 1_000_000  # int64 truly insufficient
     assert int(scorer.score(pd.Series([hot_text]))[0]) == exp
 

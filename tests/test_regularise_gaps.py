@@ -53,3 +53,28 @@ def test_gap_histogram(spark):
     df = _grid_df(spark, minutes=30, n=20, skip=(3, 10, 11))
     hist = {r["n_intervals"]: r["n_gaps"] for r in gaps.gap_histogram(df, "DATETIME", 1800).collect()}
     assert hist == {2: 1, 3: 1}
+
+
+def test_quoted_column_names_match_plain_names(spark):
+    """Caller column names reach the operators' SQL strings quoted: a
+    TOA5 array column ``Ts(1)`` and a spaced ``ts local`` give the rows
+    the same calls give on plain names."""
+    import pytest
+
+    from tern_ep_data_pipeline_spark.operators import status, windows
+
+    plain = _grid_df(spark, minutes=10, n=12).withColumnRenamed("DATETIME", "ts")
+    quoted = plain.withColumnRenamed("ts", "ts local").withColumnRenamed("v", "Ts(1)")
+
+    def run(df, ts, v):
+        valid = F.col(v) > 2
+        frames = (
+            status.last_valid_stats(df, ts, v, valid),
+            df.select(F.col(v), windows.tumbling_bucket(ts, 30).alias("b")),
+            windows.trailing_validity_fraction(df, ts, valid, window_seconds=3600),
+        )
+        return [sorted(map(tuple, f.collect())) for f in frames]
+
+    assert run(quoted, "ts local", "Ts(1)") == run(plain, "ts", "v")
+    with pytest.raises(ValueError, match="divide the hour"):
+        windows.tumbling_bucket("ts", 7)

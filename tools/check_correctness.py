@@ -75,6 +75,9 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[str, str]:
 
 
 def main() -> int:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return 0
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark("correctness-check")

@@ -56,6 +56,9 @@ def overlap_files(path: str, box: dict[str, tuple]) -> tuple[int, int]:
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 64
 
