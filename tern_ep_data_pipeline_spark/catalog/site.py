@@ -33,16 +33,6 @@ SITE_DETAIL_FIELDS: tuple[tuple[str, T.DataType], ...] = (
     ("UTC_offset", T.DoubleType()),
 )
 
-#: Site-label aliases (site_details.py:41-51): presentation label -> canonical.
-ALIAS_MAP: dict[str, str] = {}
-
-
-def canonical_site_name(label: str) -> str:
-    """Strip presentation suffixes/spaces (site_details.py:127-145)."""
-    name = label.replace(" Flux Station", "").replace(" ", "")
-    return ALIAS_MAP.get(name, name)
-
-
 def site_details_df(spark: SparkSession, records: Iterable[Mapping]) -> DataFrame:
     """Build the site dimension table with the canonical schema."""
     schema = T.StructType([T.StructField(n, t) for n, t in SITE_DETAIL_FIELDS])
@@ -75,8 +65,3 @@ def to_site_time(ts_col, utc_offset_hours: float):
     minutes = int(round(utc_offset_hours * 60))
     return F.expr(f"timestampadd(MINUTE, {minutes}, {_sql_ident(ts_col)})")
 
-
-def samples_per_interval(freq_hz: int, time_step_minutes: int) -> int:
-    """n_samples for diagnostic conversion: freq * step * 60
-    (nc_constructors.py:193-219)."""
-    return int(freq_hz * time_step_minutes * 60)

@@ -558,6 +558,14 @@ def _permutation_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
+def check_hash_mode(hash_mode: str) -> None:
+    """Every ``hash_mode`` switch takes ``fast`` or ``portable``; any
+    other value raises rather than silently hashing with the portable
+    family."""
+    if hash_mode not in ("fast", "portable"):
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+
+
 def band_hash_sql(
     b: int, num_hashes: int, bands: int, hash_mode: str
 ) -> str:
@@ -566,6 +574,7 @@ def band_hash_sql(
     the persisted dedup index use; a drift between them would silently
     stop index lookups from colliding with batch LSH results."""
     assert num_hashes % bands == 0, (num_hashes, bands)
+    check_hash_mode(hash_mode)
     rows_per_band = num_hashes // bands
     cols = ", ".join(
         f"h{i}" for i in range(b * rows_per_band, (b + 1) * rows_per_band)
@@ -605,6 +614,7 @@ def minhash_signatures(
     Documents with no tokens sign with the hash of '' via the empty-shingle
     guard in ``token_shingles``.
     """
+    check_hash_mode(hash_mode)
     # Repartition by id before the explode: the shingle fan-out is the
     # expensive stage and must not inherit the scan's partitioning (a handful
     # of large parquet files would serialise it onto a handful of cores).
@@ -912,8 +922,7 @@ def simhash64(
     explode tokens -> per-bit signed sums -> recombine, all built-in
     expressions, shuffling on the id.
     """
-    if hash_mode not in ("fast", "portable"):
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    check_hash_mode(hash_mode)
     if hash_mode == "fast":
         return _simhash_arrow_fast(df, id_col, text_col)
     token_hash = F.conv(

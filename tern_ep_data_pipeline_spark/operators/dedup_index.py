@@ -266,13 +266,9 @@ def _match_frames(
             on=["band", "bh"],
             how="left_semi",
         )
-    exact_hits = (
-        rows.join(
-            ex_idx.select("content_hash", F.col("doc_id").alias("match_id")),
-            on="content_hash",
-        )
-        .groupBy("doc_id")
-        .agg(F.min("match_id").alias("match_id"))
+    exact_hits = rows.join(
+        ex_idx.select("content_hash", F.col("doc_id").alias("match_id")),
+        on="content_hash",
     )
     cand = (
         new_bands.join(
@@ -300,7 +296,6 @@ def _match_frames(
             )
         )
         cand = cand.where(agree / F.lit(num_hashes) >= min_est_jaccard)
-    near_hits = cand.groupBy("doc_id").agg(F.min("match_id").alias("match_id"))
 
     # ---- intra-batch passes: a batch must also be deduped against itself
     batch_exact = rows.where(F.col("doc_id") != F.col("__canon")).select(
@@ -351,19 +346,20 @@ def _match_frames(
         batch_cand = batch_cand.where(
             bagree / F.lit(num_hashes) >= min_est_jaccard
         )
-    batch_near = batch_cand.groupBy("doc_id").agg(F.min("__ida").alias("match_id"))
+    batch_near = batch_cand.withColumnRenamed("__ida", "match_id")
 
-    # precedence: exact (index, then batch) over near (index, then batch).
-    # Each hit set holds one row per doc, so one min over (rank, match_id)
-    # per doc picks the highest-precedence hit. A chain of left-anti joins
-    # against the growing union would read that union twice per level and
-    # double the plan at each one.
+    # precedence: exact (index, then batch) over near (index, then batch),
+    # and the lowest candidate id inside it: one min over (rank, match_id)
+    # per doc across every hit of every set. A per-set min first would be
+    # one more aggregation per set for the same answer, and a chain of
+    # left-anti joins against the growing union would read that union
+    # twice per level and double the plan at each one.
     hits = functools.reduce(
         DataFrame.unionByName,
         [
             frame.select("doc_id", F.lit(rank).alias("__rank"), "match_id")
             for rank, frame in enumerate(
-                (exact_hits, batch_exact, near_hits, batch_near)
+                (exact_hits, batch_exact, cand, batch_near)
             )
         ],
     )

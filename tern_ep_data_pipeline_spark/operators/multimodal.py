@@ -610,11 +610,6 @@ def extract_features(
     )
 
 
-def video_feature(content: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Real video feature — see :func:`video_feature_tagged`."""
-    return video_feature_tagged(content, dim)[0]
-
-
 def video_feature_tagged(
     content: bytes, dim: int = FEATURE_DIM
 ) -> tuple[np.ndarray, str]:

@@ -316,8 +316,9 @@ def winnowing_fingerprints(
     higher-order array functions are interpreted per element, which made
     the pure expression form ~10x slower.
     """
-    from .dedup import _fanout
+    from .dedup import _fanout, check_hash_mode
 
+    check_hash_mode(hash_mode)
     if hash_mode == "fast":
         return _winnow_arrow_fast(_fanout(df, id_col), id_col, text_col, k, window)
     return _winnow_arrow(_fanout(df, id_col), id_col, text_col, k, window)
@@ -681,6 +682,9 @@ def repetition_stats(
     ``'portable'`` keeps the expression-built gram strings for debugging
     what a class contains.
     """
+    from .dedup import check_hash_mode
+
+    check_hash_mode(hash_mode)
     if hash_mode == "fast":
         from .dedup import _fanout, py_tokens
 
@@ -775,6 +779,9 @@ def contamination_hits(
     reproduces the same counts over the strings. ``'portable'`` keeps the
     expression-built strings (``dedup.shingle_frame``).
     """
+    from .dedup import check_hash_mode
+
+    check_hash_mode(hash_mode)
     if hash_mode == "fast":
         tr = gram_hash_frame(train, id_col, text_col, n, distinct=True).select(
             F.col(id_col), F.col("gh").alias("gram")

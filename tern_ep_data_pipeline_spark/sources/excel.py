@@ -154,11 +154,6 @@ def sheet_names(path: str) -> list[str]:
         return [n for n, _ in _sheet_targets(z)]
 
 
-def excel_available() -> bool:
-    """Always true now — the reader is stdlib-only. Kept for API compat."""
-    return True
-
-
 def read_excel(
     spark: SparkSession,
     path: str,

@@ -970,7 +970,8 @@ def test_dedup_index_match_precedence(spark, tmp_path):
     exact-index > exact-batch > near-index > near-batch, and the lowest
     candidate id inside it. Candidate ids are
     chosen so that a plain min over match_id would pick a different row.
-    The optimized plan stays linear in the number of categories."""
+    The optimized plan stays linear in the number of categories, and the
+    one (rank, match_id) min is the only per-doc reduction of the hits."""
     import re
 
     from tern_ep_data_pipeline_spark.operators import dedup_index as di
@@ -1021,6 +1022,8 @@ def test_dedup_index_match_precedence(spark, tmp_path):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     joins = len(re.findall(r"^[\s:+\-]*Join\b", plan, re.M))
     assert joins <= 9, joins
+    aggregates = len(re.findall(r"^[\s:+\-]*Aggregate\b", plan, re.M))
+    assert aggregates <= 6, aggregates
 
 
 def test_dedup_index_one_decision_per_input_row(spark, tmp_path):

@@ -85,6 +85,28 @@ def test_simhash_identical_zero_distance(spark):
         dedup.simhash64(df, "doc_id", "text", hash_mode="xxhash64")
 
 
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda df: dedup.band_hash_sql(0, 32, 8, "Fast"),
+        lambda df: dedup.minhash_signatures(df, "doc_id", "text", hash_mode="md5"),
+        lambda df: text.winnowing_fingerprints(
+            df, "doc_id", "text", hash_mode="md5"
+        ),
+        lambda df: text.repetition_stats(df, "doc_id", "text", hash_mode="md5"),
+        lambda df: text.contamination_hits(
+            df, df, "doc_id", "text", hash_mode="md5"
+        ),
+    ],
+    ids=["band_hash_sql", "minhash_signatures", "winnowing_fingerprints",
+         "repetition_stats", "contamination_hits"],
+)
+def test_unknown_hash_mode_raises(spark, call):
+    """A hash_mode typo raises instead of running the portable hash."""
+    with pytest.raises(ValueError, match="unknown hash_mode"):
+        call(_docs(spark))
+
+
 def test_cosine_topk_self_similarity(spark):
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])],

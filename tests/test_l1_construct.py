@@ -164,6 +164,16 @@ def test_status_products(spark, raw_files, tmp_path):
     doc = json.loads(gj.read_text())
     assert doc["features"][0]["geometry"]["coordinates"] == [150.7, -33.6]
 
+    details = tmp_path / "details" / "sites.json"
+    status_plan.write_site_details_json(
+        [{"site": "TestSite", "freq_hz": 10}, {"latitude": -20.0}],
+        str(details),
+    )
+    assert json.loads(details.read_text()) == {
+        "TestSite": {"site": "TestSite", "freq_hz": 10},
+        "1": {"latitude": -20.0},
+    }
+
 
 FAKE_PAYLOAD = json.dumps(
     {
@@ -190,6 +200,21 @@ def test_logger_http_source(spark):
     assert hwm == 102
     assert df.columns == ["TIMESTAMP", "RECORD", "Ta", "RH"]
     assert "mode=since-record" in urls[0] and "p1=100" in urls[0]
+
+
+def test_logger_get_tables():
+    urls = []
+
+    def fake_fetch(url):
+        urls.append(url)
+        return json.dumps({"symbols": [{"name": "Status"}, {"name": "met"}]})
+
+    assert logger_http.get_tables("10.0.0.1", fetcher=fake_fetch) == [
+        "Status", "met"
+    ]
+    assert urls[0].startswith("http://10.0.0.1/?command=browsesymbols")
+    assert "uri=dl%3A" in urls[0] and "format=json" in urls[0]
+    assert logger_http.get_tables("10.0.0.1", fetcher=lambda url: "{}") == []
 
 
 def test_logger_url_modes():

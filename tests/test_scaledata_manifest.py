@@ -1,6 +1,6 @@
 """Provenance gate for the self-generated scaling data: every scaledata
 dir carries a MANIFEST.json (seeds, row counts, generator source hash) and
-tools/bench_scaling.py refuses to bench data that drifted from the current
+``gen_scaledata.check_manifest`` refuses data that drifted from the current
 generator — a scaling claim must be traceable to the exact generator that
 produced its inputs."""
 
@@ -19,8 +19,11 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
 )
 
-from gen_scaledata import generator_digest, write_manifest  # noqa: E402
-from bench_scaling import check_manifest  # noqa: E402
+from gen_scaledata import (  # noqa: E402
+    check_manifest,
+    generator_digest,
+    write_manifest,
+)
 
 
 def _fake_dir(tmp_path, rows=7):

@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 import __spark_entry__ as entrymod
 from tern_ep_data_pipeline_spark.operators.dedup import release_staged
 from tern_ep_data_pipeline_spark.session import get_spark
+from gen_scaledata import check_manifest
 
 #: Queries that are LINEAR in corpus size by definition — their marginal
 #: exponent hovers around 1.0, so the default 1.1 gate (meant to catch
@@ -54,39 +55,6 @@ HEAVY = [
     "ivf_pq_rerank",
     "llm_curation_suite",
 ]
-
-
-def check_manifest(d: str) -> None:
-    """Refuse to bench data whose provenance doesn't match the current
-    generator: a curve measured on drifted data would silently stand behind
-    claims the generator no longer produces. Regenerate (or pass
-    --allow-manifest-mismatch to knowingly bench foreign data)."""
-    import pyarrow.parquet as pq
-
-    from gen_scaledata import generator_digest
-
-    mpath = os.path.join(d, "MANIFEST.json")
-    if not os.path.exists(mpath):
-        raise SystemExit(
-            f"{d}: no MANIFEST.json — regenerate with tools/gen_scaledata.py "
-            "(provenance-free scale data can't back a scaling claim)"
-        )
-    with open(mpath) as fh:
-        m = json.load(fh)
-    cur = generator_digest()
-    if m.get("generator_sha256") != cur:
-        raise SystemExit(
-            f"{d}: MANIFEST generator_sha256={m.get('generator_sha256', '?')[:12]} "
-            f"!= current generator {cur[:12]} — the data predates a generator "
-            "change; regenerate before benching"
-        )
-    for t, want in m.get("rows", {}).items():
-        got = pq.read_metadata(os.path.join(d, f"{t}.parquet")).num_rows
-        if got != want:
-            raise SystemExit(
-                f"{d}/{t}.parquet: {got} rows but MANIFEST says {want} — "
-                "data and manifest disagree; regenerate"
-            )
 
 
 def main() -> None:

@@ -375,7 +375,7 @@ def generator_digest() -> str:
     """SHA-256 of this generator's own source — recorded in every
     MANIFEST.json so a scaling claim can always be traced to the exact
     generator that produced its data (and consumers can refuse drifted
-    data; see tools/bench_scaling.py)."""
+    data; see :func:`check_manifest`)."""
     import hashlib
 
     with open(os.path.abspath(__file__), "rb") as fh:
@@ -405,6 +405,35 @@ def write_manifest(out_dir: str, sf: float, counts: dict) -> None:
     }
     with open(os.path.join(out_dir, "MANIFEST.json"), "w") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
+
+
+def check_manifest(d: str) -> None:
+    """Refuse data whose provenance doesn't match the current generator:
+    a curve measured on drifted data would silently stand behind claims
+    the generator no longer produces. Regenerate (tools/bench_scaling.py
+    takes --allow-manifest-mismatch to knowingly bench foreign data)."""
+    mpath = os.path.join(d, "MANIFEST.json")
+    if not os.path.exists(mpath):
+        raise SystemExit(
+            f"{d}: no MANIFEST.json — regenerate with tools/gen_scaledata.py "
+            "(provenance-free scale data can't back a scaling claim)"
+        )
+    with open(mpath) as fh:
+        m = json.load(fh)
+    cur = generator_digest()
+    if m.get("generator_sha256") != cur:
+        raise SystemExit(
+            f"{d}: MANIFEST generator_sha256={m.get('generator_sha256', '?')[:12]} "
+            f"!= current generator {cur[:12]} — the data predates a generator "
+            "change; regenerate before benching"
+        )
+    for t, want in m.get("rows", {}).items():
+        got = pq.read_metadata(os.path.join(d, f"{t}.parquet")).num_rows
+        if got != want:
+            raise SystemExit(
+                f"{d}/{t}.parquet: {got} rows but MANIFEST says {want} — "
+                "data and manifest disagree; regenerate"
+            )
 
 
 def main() -> None:
