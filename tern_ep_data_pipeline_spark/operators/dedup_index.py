@@ -464,18 +464,13 @@ def build_chunk_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     chunk_tokens: int = 10,
-    range_partitions: int | None = None,
 ) -> int:
     """Materialise the sub-document chunk index next to the exact/band
-    tables; returns the distinct-chunk count. ``range_partitions``
-    selects the hash-range-partitioned layout (same mechanics and
-    dirty-threshold compaction as the gram table — see
-    :func:`build_gram_index`)."""
+    tables; returns the distinct-chunk count."""
     cp = os.path.join(path, "chunks")
-    _write_ranged(
-        _chunk_table(docs, id_col, text_col, chunk_tokens),
-        cp, "chunk_hash", range_partitions, "overwrite",
-    )
+    _chunk_table(docs, id_col, text_col, chunk_tokens).write.mode(
+        "overwrite"
+    ).parquet(cp)
     return docs.sparkSession.read.parquet(cp).count()
 
 
@@ -509,9 +504,9 @@ def chunk_stats_against_index(
     # docs below the gate still carry already-indexed chunks); a plain left
     # join would multiply each matching occurrence row per index copy,
     # inflating n_chunks / n_dup_chunks — the exact value callers gate on.
-    raw = spark.read.parquet(os.path.join(path, "chunks")).select(
-        F.col("chunk_hash").alias("__h")
-    )
+    cp = os.path.join(path, "chunks")
+    _read_layout(cp)
+    raw = spark.read.parquet(cp).select(F.col("chunk_hash").alias("__h"))
     if bloom_fpp is not None:
         # the core Bloom-prunes ``raw`` by the batch's chunk hashes BEFORE
         # the distinct — that distinct is the O(index) shuffle the
@@ -599,11 +594,10 @@ def append_to_chunk_index(
     (compact the parquet dir on the lake's schedule to bound re-reads)."""
     cp = os.path.join(path, "chunks")
     with index_lease(cp, "append"):
-        _write_ranged(
-            _chunk_table(accepted_docs, id_col, text_col, chunk_tokens),
-            cp, "chunk_hash",
-            _read_layout(cp).get("range_partitions"), "append",
-        )
+        _read_layout(cp)
+        _chunk_table(accepted_docs, id_col, text_col, chunk_tokens).write.mode(
+            "append"
+        ).parquet(cp)
 
 
 # ------------------------------------------------- line (boilerplate) index
@@ -623,8 +617,6 @@ def _line_count_table(
     BINARY — the wide-payload twin serving the boilerplate report, see
     :func:`boilerplate_lines_report`). min-aggregated for determinism;
     every row of one hash carries the same bytes anyway (md5 keying)."""
-    import re
-
     lines = df.select(
         F.col(id_col).alias("__id"),
         F.explode(
@@ -649,15 +641,11 @@ def build_line_index(
     text_col: str = "text",
     delimiter: str = "\n",
     min_line_chars: int = 1,
-    range_partitions: int | None = None,
     keep_text: bool = False,
 ) -> int:
     """Materialise the corpus line-count index (CCNet boilerplate removal,
     incremental form) next to the exact/band/chunk tables; returns the
-    distinct-line count. ``range_partitions`` selects the hash-range-
-    partitioned layout (see :func:`build_gram_index`) — per-partition
-    count sums equal global sums because every line_hash routes to one
-    partition.
+    distinct-line count.
 
     ``keep_text=True`` builds the WIDE twin: each row additionally
     carries the trimmed line's utf-8 bytes, so operators can report
@@ -670,16 +658,11 @@ def build_line_index(
     past the gate). The flag is recorded in the layout marker so
     appends can never drift the schema."""
     lp = os.path.join(path, "lines")
-    _write_ranged(
-        _line_count_table(
-            docs, id_col, text_col, delimiter, min_line_chars, keep_text
-        ),
-        lp, "line_hash", range_partitions, "overwrite",
-    )
+    _line_count_table(
+        docs, id_col, text_col, delimiter, min_line_chars, keep_text
+    ).write.mode("overwrite").parquet(lp)
     if keep_text:
-        layout = _read_layout(lp)
-        layout["keep_text"] = True
-        _write_layout(lp, layout)
+        _write_layout(lp, {"keep_text": True})
     return docs.sparkSession.read.parquet(lp).count()
 
 
@@ -714,9 +697,9 @@ def clean_against_line_index(
     # layout the payload must never be read for cleaning — the
     # projection pushes into the parquet scan (column pruning), so the
     # clean path costs the same on both layouts
-    scan = spark.read.parquet(os.path.join(path, "lines")).select(
-        "line_hash", "n_docs"
-    )
+    lp = os.path.join(path, "lines")
+    _read_layout(lp)
+    scan = spark.read.parquet(lp).select("line_hash", "n_docs")
     if bloom_fpp is not None:
         from .memguard import plan_size_estimate
 
@@ -765,15 +748,10 @@ def append_to_line_index(
     decides, so one caller serves both layouts without schema drift."""
     lp = os.path.join(path, "lines")
     with index_lease(lp, "append"):
-        layout = _read_layout(lp)
-        _write_ranged(
-            _line_count_table(
-                accepted_docs, id_col, text_col, delimiter, min_line_chars,
-                keep_text=bool(layout.get("keep_text")),
-            ),
-            lp, "line_hash",
-            layout.get("range_partitions"), "append",
-        )
+        _line_count_table(
+            accepted_docs, id_col, text_col, delimiter, min_line_chars,
+            keep_text=bool(_read_layout(lp).get("keep_text")),
+        ).write.mode("append").parquet(lp)
 
 
 def boilerplate_lines_report(
@@ -899,28 +877,25 @@ def _meta_row(docs: DataFrame, id_col: str, text_col: str, kind: str) -> DataFra
     )
 
 
-#: Partition column of the range-partitioned gram layout (directory
-#: names ``__part=K``); derived deterministically from gram_hash so
-#: every gram's rows land in ONE partition and per-partition min ==
-#: global min.
-_PART_COL = "__part"
-
-
-def _part_expr(p: int, key_col: str = "gram_hash"):
-    """Partition id for a hash-keyed index row (md5 string key):
-    pmod(xxhash64, P). Engine-local routing only — the portable md5
-    stays the join key; all rows of one key land in ONE partition, so
-    per-partition folds equal global folds."""
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(int(p)))
-
-
 def _read_layout(table_dir: str) -> dict:
-    """The table's layout marker (``_layout.json``), {} when flat."""
+    """The table's layout marker (``_layout.json``), {} when absent.
+    Every append, clean and compact of a gram, chunk or line table reads
+    it, so a marker key this version does not know (an older build's
+    range-partitioned layout) is refused here instead of being appended
+    to or rewritten as flat."""
     try:
         with open(os.path.join(table_dir, "_layout.json")) as fh:
-            return json.load(fh)
+            layout = json.load(fh)
     except (OSError, ValueError):
         return {}
+    unknown = sorted(set(layout) - {"keep_text"})
+    if unknown:
+        raise ValueError(
+            f"index table {table_dir!r} carries layout keys {unknown} "
+            "that this version does not read (an older range-partitioned "
+            "build); rebuild the index with its build_*_index function"
+        )
+    return layout
 
 
 def _write_layout(table_dir: str, layout: dict) -> None:
@@ -928,47 +903,23 @@ def _write_layout(table_dir: str, layout: dict) -> None:
         json.dump(layout, fh)
 
 
-def _write_part_meta(part_dir: str) -> None:
-    """Record the partition's byte size at compaction time — the clean
-    watermark the dirty-fraction test compares appends against."""
-    with open(os.path.join(part_dir, "_compact_meta.json"), "w") as fh:
-        json.dump({"bytes": _dir_bytes(part_dir)}, fh)
+def _write_compact_meta(table_dir: str) -> None:
+    """Record the table's byte size at compaction time — the clean
+    watermark :func:`dirty_fraction` compares appends against."""
+    with open(os.path.join(table_dir, "_compact_meta.json"), "w") as fh:
+        json.dump({"bytes": _dir_bytes(table_dir)}, fh)
 
 
-def _write_ranged(
-    frame: DataFrame,
-    table_dir: str,
-    key_col: str,
-    range_partitions: int | None,
-    mode: str,
-) -> None:
-    """Write an index frame flat or range-partitioned. On an overwrite
-    with ``range_partitions`` the layout marker is (re)written; appends
-    pass the marker's value so routing can never drift."""
-    if range_partitions:
-        frame.withColumn(
-            _PART_COL, _part_expr(range_partitions, key_col)
-        ).write.mode(mode).partitionBy(_PART_COL).parquet(table_dir)
-        if mode == "overwrite":
-            _write_layout(
-                table_dir, {"range_partitions": int(range_partitions)}
-            )
-    else:
-        frame.write.mode(mode).parquet(table_dir)
-
-
-def _part_dirty_fraction(part_dir: str) -> tuple[float, int, int]:
-    """(dirty_fraction, cur_bytes, clean_bytes): the fraction of the
-    partition's bytes appended since its last compaction (1.0 when never
-    compacted)."""
-    cur = _dir_bytes(part_dir)
+def dirty_fraction(table_dir: str) -> float:
+    """The fraction of the table's bytes appended since its last
+    compaction (1.0 when never compacted)."""
+    cur = _dir_bytes(table_dir)
     try:
-        with open(os.path.join(part_dir, "_compact_meta.json")) as fh:
+        with open(os.path.join(table_dir, "_compact_meta.json")) as fh:
             clean = int(json.load(fh)["bytes"])
     except (OSError, ValueError, KeyError):
-        return 1.0, cur, 0
-    dirty = max(cur - clean, 0)
-    return (dirty / cur if cur else 0.0), cur, clean
+        return 1.0
+    return max(cur - clean, 0) / cur if cur else 0.0
 
 
 def build_gram_index(
@@ -978,7 +929,6 @@ def build_gram_index(
     text_col: str = "text",
     min_tokens: int = 8,
     max_doc_tokens: int = 1 << 24,
-    range_partitions: int | None = None,
     memory_guard: bool = True,
     passes: int | None = None,
 ) -> int:
@@ -986,19 +936,6 @@ def build_gram_index(
     incremental form) next to the exact/band/chunk/line tables; returns
     the distinct-gram count. ``min_tokens``/``max_doc_tokens`` must match
     the clean-side call — they define gram boundaries and key packing.
-
-    ``range_partitions`` (VERDICT r9 #3) selects the hash-range-
-    partitioned layout: the table is stored as ``__part=K`` directories
-    (K = pmod(gram_hash, P)), so compaction can rewrite ONLY the
-    partitions whose raw-append fraction crossed a threshold — per-
-    compaction cost proportional to dirty bytes, not total index bytes.
-    Appends auto-detect the layout from the ``_layout.json`` marker (P
-    is read from the marker, so drift is impossible); readers are
-    layout-agnostic (`spark.read.parquet` discovers the partitioning,
-    and every consumer aggregates over ``gram_hash``, which fully
-    determines the partition). Pick P for the TARGET index size — each
-    partition should compact in one comfortable job (at 100 TB use
-    hundreds-to-thousands).
 
     **Id-monotonicity contract** (ADVICE r6 #3): batch doc ids must be
     strictly greater than every id already indexed — the occurrence key
@@ -1055,13 +992,12 @@ def build_gram_index(
         else:
             return _build_gram_index_chunked(
                 docs, path, id_col, text_col, min_tokens, max_doc_tokens,
-                range_partitions, passes,
+                passes,
             )
     gp = os.path.join(path, "grams")
-    _write_ranged(
-        _gram_first_table(docs, id_col, text_col, min_tokens, max_doc_tokens),
-        gp, "gram_hash", range_partitions, "overwrite",
-    )
+    _gram_first_table(
+        docs, id_col, text_col, min_tokens, max_doc_tokens
+    ).write.mode("overwrite").parquet(gp)
     _meta_row(docs, id_col, text_col, "build").write.mode("overwrite").parquet(
         os.path.join(path, "grams_meta")
     )
@@ -1075,7 +1011,6 @@ def _build_gram_index_chunked(
     text_col: str,
     min_tokens: int,
     max_doc_tokens: int,
-    range_partitions: int | None,
     passes: int,
 ) -> int:
     """Memory-derated corpus build: ``passes`` sequential id-range
@@ -1106,13 +1041,9 @@ def _build_gram_index_chunked(
         if part.limit(1).count() == 0:
             continue  # approx cuts can produce an empty edge slice
         if first:
-            gp = os.path.join(path, "grams")
-            _write_ranged(
-                _gram_first_table(
-                    part, id_col, text_col, min_tokens, max_doc_tokens
-                ),
-                gp, "gram_hash", range_partitions, "overwrite",
-            )
+            _gram_first_table(
+                part, id_col, text_col, min_tokens, max_doc_tokens
+            ).write.mode("overwrite").parquet(os.path.join(path, "grams"))
             _meta_row(part, id_col, text_col, "build").write.mode(
                 "overwrite"
             ).parquet(os.path.join(path, "grams_meta"))
@@ -1206,6 +1137,8 @@ def clean_against_gram_index(
     ``min``, which is order-independent, so append ordering never changes
     the decision.
     """
+    gp = os.path.join(path, "grams")
+    _read_layout(gp)
     if validate_ids:
         meta_path = os.path.join(path, "grams_meta")
         try:
@@ -1234,7 +1167,7 @@ def clean_against_gram_index(
         # append range carrying DIFFERENT documents is id reuse, not a
         # retry — both rejected like any other overlap.
         _validate_gram_ids(spark, new_docs, id_col, text_col, meta)
-    scan = spark.read.parquet(os.path.join(path, "grams"))
+    scan = spark.read.parquet(gp)
     if bloom_fpp is not None:
         # hand the RAW scan to the operator: it prunes by its own staged
         # batch gram-firsts frame (no second gram pass) and min-combines
@@ -1279,20 +1212,13 @@ def append_to_gram_index(
     Same id-monotonicity contract as :func:`build_gram_index`: this
     batch's ids must exceed every previously indexed id (checked on the
     clean side); the ``grams_meta`` max-id watermark is appended here so
-    the contract stays enforceable across appends.
-
-    The range-partitioned layout is auto-detected from the table's
-    ``_layout.json`` marker (written by the build), and the partition
-    count is read from it — callers cannot drift the routing."""
+    the contract stays enforceable across appends."""
     gp = os.path.join(path, "grams")
     with index_lease(gp, "append"):
-        _write_ranged(
-            _gram_first_table(
-                accepted_docs, id_col, text_col, min_tokens, max_doc_tokens
-            ),
-            gp, "gram_hash",
-            _read_layout(gp).get("range_partitions"), "append",
-        )
+        _read_layout(gp)
+        _gram_first_table(
+            accepted_docs, id_col, text_col, min_tokens, max_doc_tokens
+        ).write.mode("append").parquet(gp)
     # the meta watermark log has no dir-swap compactor, so no lease
     _meta_row(accepted_docs, id_col, text_col, "append").write.mode("append").parquet(
         os.path.join(path, "grams_meta")
@@ -1570,7 +1496,7 @@ def index_lease(path: str, role: str, wait_s: float | None = None):
                 os.unlink(lock)
 
 
-def recover_interrupted_compaction(path: str, scratch: str | None = None) -> bool:
+def recover_interrupted_compaction(path: str) -> bool:
     """Heal a compaction swap that died at ANY point — called at the
     start of every compaction and by the streaming sink before the
     index-existence check. Without it, a crash in the swap window would
@@ -1595,17 +1521,11 @@ def recover_interrupted_compaction(path: str, scratch: str | None = None) -> boo
       IS the compacted data); ``old`` is a stale pre-compaction copy —
       merging it would double-count a sum table — so it is deleted.
     - ``tmp`` exists alone: died before rename 1; live dir untouched —
-      delete ``tmp``. (Also closes review finding 8: orphaned tmp dirs
-      no longer leak until the partition re-crosses the dirty
-      threshold.)
+      delete ``tmp``.
 
-    ``scratch`` overrides where the swap dirs live (partition-scoped
-    compaction keeps them OUTSIDE the partitioned table root, where
-    Spark's partition discovery would choke on them). Returns True if
-    any state was healed."""
-    base = scratch or path
-    old = base + ".compact-old"
-    tmp = base + ".compact-tmp"
+    Returns True if any state was healed."""
+    old = path + ".compact-old"
+    tmp = path + ".compact-tmp"
     has_old, has_tmp = os.path.isdir(old), os.path.isdir(tmp)
     if not has_old and not has_tmp:
         return False
@@ -1650,7 +1570,6 @@ def _rewrite_parquet_dir(
     path: str,
     partitions: int,
     snapshot_bytes: int | None = None,
-    scratch: str | None = None,
 ) -> None:
     """Replace ``path`` with the materialisation of ``df`` (which reads
     from ``path`` — Spark cannot overwrite a dir it is scanning, so the
@@ -1679,14 +1598,9 @@ def _rewrite_parquet_dir(
     instead of being silently deleted with the old dir. A write that
     both bypasses the lease and lands entirely after the final
     ``_dir_bytes`` walk is still lost — the lease is the contract, the
-    guards are best-effort.
-
-    ``scratch`` relocates the tmp/old sibling dirs (partition-scoped
-    compaction must keep them OUTSIDE the partitioned table root —
-    a ``__part=5.compact-old`` dir inside it would poison Spark's
-    partition discovery)."""
-    tmp = (scratch or path) + ".compact-tmp"
-    old = (scratch or path) + ".compact-old"
+    guards are best-effort."""
+    tmp = path + ".compact-tmp"
+    old = path + ".compact-old"
     # the CALLER heals interrupted swaps BEFORE pinning its read of
     # ``path`` (recover_interrupted_compaction can merge a crash
     # survivor's files into the live dir — running that here, after the
@@ -1718,11 +1632,11 @@ def _rewrite_parquet_dir(
             "rewrite was being written (concurrent append). The live dir "
             "is untouched; re-run compaction with the writer stopped."
         )
-    # the layout marker describes the TABLE's contract (range routing,
-    # keep_text payload), not this file set — it must survive the swap
-    # or the next append/reader would silently treat the table as flat/
-    # narrow (surfaced by the r15 wide line-index twin, whose marker a
-    # compaction used to drop)
+    # the layout marker describes the TABLE's contract (the keep_text
+    # payload), not this file set — it must survive the swap or the next
+    # append/reader would silently treat the table as narrow (surfaced
+    # by the r15 wide line-index twin, whose marker a compaction used to
+    # drop)
     marker = os.path.join(path, "_layout.json")
     if os.path.isfile(marker):
         shutil.copy2(marker, os.path.join(tmp, "_layout.json"))
@@ -1792,7 +1706,6 @@ def _compact_partitions(
 def compact_gram_index(
     spark: SparkSession,
     path: str,
-    dirty_threshold: float = 0.2,
     wait_s: float | None = None,
 ) -> dict:
     """Rewrite the gram-first table keeping ``min(first_key)`` per gram —
@@ -1804,41 +1717,23 @@ def compact_gram_index(
     (min is idempotent/associative), which is also why compacting between
     any two batches cannot change a later batch's clean decisions.
 
-    On the range-partitioned layout (``build_gram_index(...,
-    range_partitions=P)``) only partitions whose raw-append (L0)
-    fraction exceeds ``dirty_threshold`` are touched (VERDICT r9 #3),
-    and the rewrite is LSM-tiered (r11, VERDICT r10 #1): the common
-    pass folds ONLY the L0 files into a per-partition L1 run (write
-    cost == dirty bytes), deferring the base rewrite until runs cross
-    ``_BASE_MERGE_FRACTION`` — see :func:`_compact_ranged`. Partition
-    routing is a pure function of gram_hash, so per-partition min ==
-    global min and decisions are identical to a whole-table compaction.
+    The rewrite is whole-table: the min fold spans every file, so no
+    file can be left in place as it stands. After the swap the
+    table's byte size is recorded as its clean watermark
+    (:func:`dirty_fraction`), which the span sink's scheduled hook reads
+    to skip a rewrite until enough has been appended.
 
     ``grams_meta`` is left byte-identical: it is the append-watermark log
     the id-monotonicity retry carve-out matches against (one tiny row per
     append), and folding it would erase the replay evidence.
 
-    Returns ``{rows_before, rows_after, files_before, files_after}``
-    (flat layout) or per-partition totals (partitioned layout).
+    Returns ``{rows_before, rows_after, files_before, files_after}``.
     """
     _require_local_path(path)
     gp = os.path.join(path, "grams")
-    if _read_layout(gp).get("range_partitions"):
-        # the fold groups by (key, __part) so the one-pass staging write
-        # can partition its output; __part is a pure function of the
-        # key, so the groups — and the folded values — are identical
-        return _compact_ranged(
-            spark,
-            gp,
-            lambda df: df.groupBy("gram_hash", _PART_COL).agg(
-                F.min("first_key").alias("first_key")
-            ),
-            dirty_threshold,
-            "gram_hash",
-            wait_s=wait_s,
-        )
     with index_lease(gp, "compact", wait_s=wait_s):
         recover_interrupted_compaction(gp)
+        _read_layout(gp)
         # snapshot BEFORE the read pins its file listing, so an append
         # landing after the read trips the growth guard (ADVICE r9 #3)
         snapshot = _dir_bytes(gp)
@@ -1859,6 +1754,7 @@ def compact_gram_index(
             _compact_partitions(spark, gp, rows_after / max(rows_before, 1)),
             snapshot_bytes=snapshot,
         )
+        _write_compact_meta(gp)
     return {
         "rows_before": rows_before,
         "rows_after": rows_after,
@@ -1867,397 +1763,21 @@ def compact_gram_index(
     }
 
 
-#: Heal-restored name prefixes (``_merge_dir_files``) — stripped before
-#: tier classification, so a restored base file is still base.
-_RESTORED_RE = re.compile(r"^(restored-(\d+-)?)+")
-
-
-def _file_tier(name: str) -> str:
-    """LSM tier of a data file inside a ranged partition dir, from its
-    name: ``base`` (written by the last full merge), ``run`` (a folded
-    L1 run from a run-scoped compaction), or ``l0`` (a raw append, the
-    unprefixed names Spark's append writes). Misclassification is
-    cost-only, never correctness: readers fold EVERY file on read, so a
-    base file counted as l0 merely gets re-folded earlier."""
-    core = _RESTORED_RE.sub("", name)
-    if core.startswith("base-"):
-        return "base"
-    if core.startswith("run-"):
-        return "run"
-    return "l0"
-
-
-def _part_tiers(pdir: str) -> dict[str, list[tuple[str, int]]]:
-    """{tier: [(file_name, bytes), ...]} for one partition dir (data
-    files only — checksums and ``_`` markers excluded, matching
-    ``_dir_bytes``)."""
-    out: dict[str, list[tuple[str, int]]] = {"l0": [], "run": [], "base": []}
-    try:
-        names = os.listdir(pdir)
-    except OSError:
-        return out
-    for f in names:
-        if f.startswith("_") or f.startswith(".") or f.endswith(".crc"):
-            continue
-        p = os.path.join(pdir, f)
-        if not os.path.isfile(p):
-            continue
-        out[_file_tier(f)].append((f, os.path.getsize(p)))
-    return out
-
-
-def _run_generations(tiers: dict) -> int:
-    """Number of distinct run GENERATIONS (fold passes) in a partition —
-    run files are named ``run-<seq>-<i>-<original>`` and one fold can
-    emit several ``<i>`` files, so counting files would overstate the
-    run depth by the per-fold fan-out (review r11: a partition whose
-    folds each emit k files would trip the collapse cap after
-    ceil(cap/k) folds, re-reading all run bytes almost every pass). A
-    name whose seq does not parse counts as its own generation —
-    conservative: it only collapses sooner."""
-    seqs: set[int] = set()
-    unparsed = 0
-    for name, _sz in tiers["run"]:
-        core = _RESTORED_RE.sub("", name)
-        parts = core.split("-", 2)
-        try:
-            seqs.add(int(parts[1]))
-        except (IndexError, ValueError):
-            unparsed += 1
-    return len(seqs) + unparsed
-
-
-def _next_run_seq(tiers: dict) -> int:
-    """1 + the highest existing run sequence in a partition (run files
-    are named ``run-<seq>-<i>-<original>``)."""
-    seq = 0
-    for name, _sz in tiers["run"]:
-        core = _RESTORED_RE.sub("", name)
-        parts = core.split("-", 2)
-        if len(parts) >= 2:
-            with contextlib.suppress(ValueError):
-                seq = max(seq, int(parts[1]))
-    return seq + 1
-
-
-def _rename_with_crc(dirpath: str, src: str, dst: str) -> None:
-    """Rename a data file and its local-fs checksum twin together, so
-    ChecksumFileSystem never sees a data file whose ``.crc`` carries a
-    stale name."""
-    os.rename(os.path.join(dirpath, src), os.path.join(dirpath, dst))
-    crc = os.path.join(dirpath, f".{src}.crc")
-    if os.path.exists(crc):
-        os.rename(crc, os.path.join(dirpath, f".{dst}.crc"))
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    """Hard-link ``src`` to ``dst`` (same local filesystem — free), with
-    a copy fallback for filesystems that refuse links."""
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
-
-
-def _gram_part_scratch(table_dir: str, k: str) -> str:
-    """Scratch-prefix for one partition's swap dirs — a SIBLING of the
-    table root (a ``__part=K.compact-old`` dir inside it would poison
-    Spark's partition discovery). Shared by every ranged index table
-    (grams/chunks/lines), not just grams — the name predates the
-    generalisation."""
-    return f"{table_dir}.part-{k}"
-
-
-def _recover_gram_partitions(table_dir: str) -> None:
-    """Heal any partition swap that died at any point: scan for sibling
-    scratch survivors (``.compact-old`` AND orphaned ``.compact-tmp`` —
-    review finding 8) and run the full state-machine heal per
-    partition. Safe against appends that recreated the partition dir
-    after the crash (the survivor's files are merged in, not dropped —
-    review finding 1). Works on any ranged index table dir."""
-    parent = os.path.dirname(table_dir) or "."
-    base = os.path.basename(table_dir)
-    prefix = base + ".part-"
-    ks = set()
-    for d in os.listdir(parent):
-        for suffix in (".compact-old", ".compact-tmp"):
-            if d.startswith(prefix) and d.endswith(suffix):
-                ks.add(d[len(prefix) : -len(suffix)])
-    for k in ks:
-        recover_interrupted_compaction(
-            os.path.join(table_dir, f"{_PART_COL}={k}"),
-            scratch=_gram_part_scratch(table_dir, k),
-        )
-    # an orphaned one-pass staging root (crash before any partition was
-    # staged into its scratch name) holds only unstaged copies whose
-    # live dirs are untouched — safe to drop AFTER the per-partition
-    # states above are healed
-    shutil.rmtree(table_dir + ".compact-ranged-tmp", ignore_errors=True)
-
-
-#: A partition's accumulated L1 runs merge into its base only once
-#: (l0 + run bytes) exceed this fraction of the base — the leveled-merge
-#: trigger that bounds write amplification on uniform-key appends
-#: (VERDICT r10 #1: without tiering, a uniform gram-hash workload
-#: dirties EVERY range partition at once and each triggered pass
-#: rewrote 4.7x its dirty bytes; with it, the common pass folds only
-#: the raw appends and the base rewrite is amortised over
-#: ``1/_BASE_MERGE_FRACTION`` run folds).
-_BASE_MERGE_FRACTION = 0.5
-
-#: A run fold normally writes a NEW L1 run and links the old ones over
-#: untouched, so run count grows by one per fold; once a partition
-#: holds this many runs, the next fold COLLAPSES them (fold input = L0
-#: + all runs, output = one fresh run). Bounds per-partition file count
-#: — and so read amplification between base merges — structurally:
-#: <= base files + _MAX_RUNS_PER_PARTITION runs + in-flight L0,
-#: whatever the dirty threshold and append cadence. Collapse cost is
-#: run bytes (<< base by the merge trigger), reported honestly in
-#: bytes_rewritten.
-_MAX_RUNS_PER_PARTITION = 8
-
-
-def _compact_ranged(
-    spark: SparkSession,
-    table_dir: str,
-    fold,
-    dirty_threshold: float,
-    key_col: str,
-    wait_s: float | None = None,
-) -> dict:
-    """Partition-scoped, LSM-tiered compaction of a range-partitioned
-    index table: only ``__part=K`` directories whose RAW-append (L0)
-    fraction exceeds ``dirty_threshold`` are touched, folding with
-    ``fold`` (the table's canonical aggregate — min per gram, distinct
-    chunk hashes, summed line counts; partition routing is a pure
-    function of the table's hash key, so per-partition folds equal
-    global folds, and because every fold is associative the fold of ANY
-    file subset composes with a read-side re-fold into the same view).
-
-    Two tiers per partition, tracked by file-name prefix (``base-`` /
-    ``run-`` / unprefixed = raw L0 append — see :func:`_file_tier`):
-
-    - **run fold** (the common pass): only the L0 files are read and
-      folded into a new ``run-<seq>-`` file set; base and existing run
-      files are carried into the swap untouched (hard links — zero
-      bytes moved). bytes_rewritten == the partition's dirty bytes, so
-      a uniform-append workload that dirties every partition at once
-      (VERDICT r10 #1: 4.7x amplification under whole-partition
-      rewrites) pays ~1x. Once a partition holds
-      ``_MAX_RUNS_PER_PARTITION`` runs, the next fold collapses them
-      into the new run (input = L0 + runs) — per-partition file count,
-      and so read amplification between base merges, is bounded.
-    - **base merge** (leveled): once l0+run bytes exceed
-      ``_BASE_MERGE_FRACTION`` of the base — or no base exists yet
-      (fresh build, pre-tiering layout) — the whole partition folds
-      into a new ``base-`` file set, reclaiming the run tier.
-
-    ONE Spark pass for the whole set (r10): merge partitions contribute
-    their dirs and run-fold partitions ONLY their L0 file paths to a
-    single read (``basePath`` keeps ``__part``), folded in one job and
-    written to one staging root partitioned by ``__part`` — per-
-    partition-serial compaction makes the driver the bottleneck at
-    hundreds of partitions. Output files are salted by
-    ``pmod(xxhash64(key), files_for_that_partition)`` so the computed
-    per-partition file counts are actually realised — repartitioning by
-    ``__part`` alone funnels each partition through ONE task into ONE
-    file regardless of size (ADVICE r10 #4). The swap happens per
-    partition with the same crash-healable double rename as before, so
-    a crash at any point heals partition-locally via
-    :func:`_recover_gram_partitions`. The whole pass holds the table's
-    lease once."""
-    n_merged = n_run_folded = 0
-    bytes_total = bytes_dirty = bytes_rewritten = bytes_dirty_compacted = 0
-    tmp_root = table_dir + ".compact-ranged-tmp"
-    with index_lease(table_dir, "compact", wait_s=wait_s):
-        _recover_gram_partitions(table_dir)
-        parts = sorted(
-            d for d in os.listdir(table_dir)
-            if d.startswith(_PART_COL + "=")
-            and os.path.isdir(os.path.join(table_dir, d))
-        )
-        merges: list[str] = []
-        folds: list[str] = []
-        tiers: dict[str, dict] = {}
-        snapshots: dict[str, int] = {}
-        in_bytes: dict[str, int] = {}  # fold-input bytes per partition
-        l0_bytes: dict[str, int] = {}  # dirty (L0) bytes per partition
-        fold_in: dict[str, list[str]] = {}  # fold-input FILE names
-        carry: dict[str, list[str]] = {}  # names hard-linked over a fold
-        for d in parts:
-            pdir = os.path.join(table_dir, d)
-            state = _part_tiers(pdir)
-            l0 = sum(sz for _f, sz in state["l0"])
-            run = sum(sz for _f, sz in state["run"])
-            base = sum(sz for _f, sz in state["base"])
-            total = l0 + run + base
-            bytes_total += total
-            bytes_dirty += l0
-            if total == 0 or l0 == 0 or (
-                base + run > 0 and l0 / total <= dirty_threshold
-            ):
-                continue
-            snapshots[d] = total
-            tiers[d] = state
-            l0_bytes[d] = l0
-            if base == 0 or l0 + run > _BASE_MERGE_FRACTION * base:
-                merges.append(d)
-                in_bytes[d] = total
-            else:
-                folds.append(d)
-                # past the run cap, collapse existing runs into the new
-                # one (fold input = L0 + runs) so per-partition file
-                # count stays bounded between base merges
-                collapse = _run_generations(state) >= _MAX_RUNS_PER_PARTITION
-                extra = state["run"] if collapse else []
-                fold_in[d] = [f for f, _sz in state["l0"] + extra]
-                carry[d] = [
-                    f for f, _sz in
-                    state["base"] + ([] if collapse else state["run"])
-                ]
-                in_bytes[d] = l0 + (run if collapse else 0)
-        rows_before = rows_after = 0
-        dirty = merges + folds
-        merge_set = set(merges)  # the swap loop tests membership per
-        # partition — a list scan is O(P^2) at thousands of partitions
-        if dirty:
-            paths = [os.path.join(table_dir, d) for d in merges] + [
-                os.path.join(table_dir, d, f)
-                for d in folds
-                for f in fold_in[d]
-            ]
-            df = spark.read.option("basePath", table_dir).parquet(*paths)
-            rows_before = df.count()
-            agg = fold(df)
-            # count the FOLDED frame before the write: sizes the output
-            # by the dedup ratio and is the rows_after stat anyway
-            rows_after = agg.count()
-            scale = rows_after / max(rows_before, 1)
-            split = _split_bytes(spark)
-            n_files = {
-                int(d.split("=", 1)[1]): max(
-                    1, int(in_bytes[d] * scale) // max(split, 1) + 1
-                )
-                for d in dirty
-            }
-            n_out = max(
-                sum(n_files.values()),
-                min(spark.sparkContext.defaultParallelism, len(dirty)),
-            )
-            # salt so a partition bigger than the split size really does
-            # fan into its computed file count (ADVICE r10 #4)
-            fmap = F.create_map(
-                *[F.lit(x) for kv in n_files.items() for x in kv]
-            )
-            salt = F.pmod(
-                F.xxhash64(F.col(key_col)),
-                F.element_at(fmap, F.col(_PART_COL).cast("int")),
-            )
-            shutil.rmtree(tmp_root, ignore_errors=True)
-            agg.repartition(n_out, F.col(_PART_COL), salt).write.partitionBy(
-                _PART_COL
-            ).mode("overwrite").parquet(tmp_root)
-            for d in dirty:
-                pdir = os.path.join(table_dir, d)
-                staged = os.path.join(tmp_root, d)
-                if _dir_bytes(pdir) != snapshots[d] or os.path.isdir(
-                    os.path.join(pdir, "_temporary")
-                ):
-                    shutil.rmtree(tmp_root, ignore_errors=True)
-                    raise RuntimeError(
-                        f"compaction aborted: {pdir!r} changed while the "
-                        "compacted rewrite was being written (concurrent "
-                        "append bypassing the lease). Partitions swapped "
-                        "so far are complete and decision-identical; "
-                        "re-run compaction with the writer stopped."
-                    )
-                scratch = _gram_part_scratch(table_dir, d.split("=", 1)[1])
-                old, tmp = scratch + ".compact-old", scratch + ".compact-tmp"
-                if not os.path.isdir(staged):
-                    # a dirty partition can legitimately fold to ZERO
-                    # output rows only if its fold input held zero data
-                    # rows; the swap still runs (it drops the empty L0)
-                    os.makedirs(staged, exist_ok=True)
-                staged_files = sorted(
-                    f for f in os.listdir(staged)
-                    if not f.startswith(("_", ".")) and not f.endswith(".crc")
-                )
-                if d in merge_set:
-                    # full merge: staged output IS the new base
-                    for f in staged_files:
-                        _rename_with_crc(staged, f, f"base-{f}")
-                else:
-                    # run fold: staged output becomes the next L1 run;
-                    # untouched tiers (base, plus runs unless this fold
-                    # collapsed them) are carried over as hard links
-                    # (same filesystem — no bytes moved), so the swap
-                    # replaces ONLY the files it folded
-                    seq = _next_run_seq(tiers[d])
-                    for i, f in enumerate(staged_files):
-                        _rename_with_crc(staged, f, f"run-{seq}-{i}-{f}")
-                    for f in carry[d]:
-                        _link_or_copy(
-                            os.path.join(pdir, f), os.path.join(staged, f)
-                        )
-                os.rename(staged, tmp)  # canonical scratch name: the
-                # per-partition crash state machine heals from here on
-                os.rename(pdir, old)
-                os.rename(tmp, pdir)
-                shutil.rmtree(old, ignore_errors=True)
-                _write_part_meta(pdir)
-                bytes_rewritten += in_bytes[d]
-                bytes_dirty_compacted += l0_bytes[d]
-                if d in merge_set:
-                    n_merged += 1
-                else:
-                    n_run_folded += 1
-            shutil.rmtree(tmp_root, ignore_errors=True)
-    return {
-        "layout": "ranged",
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "partitions_total": len(parts),
-        "partitions_compacted": n_merged + n_run_folded,
-        "partitions_merged": n_merged,
-        "partitions_run_folded": n_run_folded,
-        "bytes_total": bytes_total,
-        "bytes_dirty": bytes_dirty,
-        # dirty bytes of the partitions this pass actually compacted —
-        # the honest write-amplification denominator (a global
-        # bytes_dirty includes sub-threshold partitions' L0, which
-        # re-counts every pass and understates amplification)
-        "bytes_dirty_compacted": bytes_dirty_compacted,
-        "bytes_rewritten": bytes_rewritten,
-        "dirty_threshold": dirty_threshold,
-        "base_merge_fraction": _BASE_MERGE_FRACTION,
-    }
-
-
 def compact_chunk_index(
     spark: SparkSession,
     path: str,
-    dirty_threshold: float = 0.2,
     wait_s: float | None = None,
 ) -> dict:
     """Rewrite the chunk-hash table to distinct hashes (appends are
     distinct within themselves only — `append_to_chunk_index`), bounding
     the re-read the per-batch join pays. Safe at any batch boundary:
     ``chunk_stats_against_index`` distincts the index before joining, so
-    compaction changes bytes scanned, never results. On the ranged
-    layout, only partitions past ``dirty_threshold`` rewrite (the
-    partitioned distinct equals the global distinct — every chunk_hash
-    routes to one partition)."""
+    compaction changes bytes scanned, never results."""
     _require_local_path(path)
     cp = os.path.join(path, "chunks")
-    if _read_layout(cp).get("range_partitions"):
-        # distinct over (chunk_hash, __part) == distinct chunk hashes:
-        # __part is derived from the hash
-        return _compact_ranged(
-            spark, cp, lambda df: df.distinct(), dirty_threshold,
-            "chunk_hash", wait_s=wait_s,
-        )
     with index_lease(cp, "compact", wait_s=wait_s):
         recover_interrupted_compaction(cp)
+        _read_layout(cp)
         snapshot = _dir_bytes(cp)
         before = spark.read.parquet(cp)
         rows_before = before.count()
@@ -2274,42 +1794,27 @@ def compact_chunk_index(
 def compact_line_index(
     spark: SparkSession,
     path: str,
-    dirty_threshold: float = 0.2,
     wait_s: float | None = None,
 ) -> dict:
     """Rewrite the line-count table summing ``n_docs`` per hash — the
     same sum ``clean_against_line_index`` applies on read (counts add
-    across doc-disjoint appends), made durable once. On the ranged
-    layout, only partitions past ``dirty_threshold`` rewrite (per-
-    partition sums equal global sums — every line_hash routes to one
-    partition). The wide (keep_text) twin keeps its payload through
-    compaction: every row of one hash carries identical bytes (md5
-    keying), so min() is exact, not a choice."""
+    across doc-disjoint appends), made durable once. The wide
+    (keep_text) twin keeps its payload through compaction: every row of
+    one hash carries identical bytes (md5 keying), so min() is exact,
+    not a choice."""
     _require_local_path(path)
     lp = os.path.join(path, "lines")
-    keep_text = bool(_read_layout(lp).get("keep_text"))
-
-    def _agg(df: DataFrame, *keys: str) -> DataFrame:
-        aggs = [F.sum("n_docs").alias("n_docs")]
-        if keep_text:
-            aggs.append(F.min("line_bytes").alias("line_bytes"))
-        return df.groupBy(*keys).agg(*aggs)
-
-    if _read_layout(lp).get("range_partitions"):
-        return _compact_ranged(
-            spark,
-            lp,
-            lambda df: _agg(df, "line_hash", _PART_COL),
-            dirty_threshold,
-            "line_hash",
-            wait_s=wait_s,
-        )
     with index_lease(lp, "compact", wait_s=wait_s):
+        # heal first: a swap that died mid-rename leaves the layout
+        # marker in the survivor dir
         recover_interrupted_compaction(lp)
+        aggs = [F.sum("n_docs").alias("n_docs")]
+        if _read_layout(lp).get("keep_text"):
+            aggs.append(F.min("line_bytes").alias("line_bytes"))
         snapshot = _dir_bytes(lp)
         before = spark.read.parquet(lp)
         rows_before = before.count()
-        agg = _agg(before, "line_hash")
+        agg = before.groupBy("line_hash").agg(*aggs)
         rows_after = agg.count()
         _rewrite_parquet_dir(
             agg, lp,

@@ -291,6 +291,23 @@ def decode_tob_bytes(content: bytes) -> pd.DataFrame:
     return decode_tob3(content, meta)
 
 
+def tob_schema(meta: TobMeta) -> str:
+    """Spark DDL of a decoded TOB table: TIMESTAMP and RECORD first, then
+    each data field typed by its wire type (ASCII as STRING, integer and
+    boolean types as BIGINT, floats as DOUBLE)."""
+    fields = ["TIMESTAMP TIMESTAMP_NTZ", "RECORD BIGINT"]
+    for name, wt in zip(meta.field_names, meta.wire_types):
+        if name in ("SECONDS", "NANOSECONDS", "RECORD"):
+            continue
+        if wt.startswith("ASCII"):
+            fields.append(f"`{name}` STRING")
+        elif wt in ("UINT2", "UINT4", "ULONG", "INT4", "LONG", "Bool8", "BOOL"):
+            fields.append(f"`{name}` BIGINT")
+        else:
+            fields.append(f"`{name}` DOUBLE")
+    return ", ".join(fields)
+
+
 def read_tob(spark, path_glob: str, sample_path: str | None = None):
     """Distributed TOB read: binaryFile listing -> mapInPandas decode.
 
@@ -315,17 +332,7 @@ def read_tob(spark, path_glob: str, sample_path: str | None = None):
     sample_pdf_cols = ["TIMESTAMP", "RECORD"] + [
         n for n in meta.field_names if n not in ("SECONDS", "NANOSECONDS", "RECORD")
     ]
-    type_map = dict(zip(meta.field_names, meta.wire_types))
-    fields = ["TIMESTAMP TIMESTAMP_NTZ", "RECORD BIGINT"]
-    for name in sample_pdf_cols[2:]:
-        wt = type_map.get(name, "IEEE4")
-        if wt.startswith("ASCII"):
-            fields.append(f"`{name}` STRING")
-        elif wt in ("UINT2", "UINT4", "ULONG", "INT4", "LONG", "Bool8", "BOOL"):
-            fields.append(f"`{name}` BIGINT")
-        else:
-            fields.append(f"`{name}` DOUBLE")
-    schema = ", ".join(fields)
+    schema = tob_schema(meta)
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

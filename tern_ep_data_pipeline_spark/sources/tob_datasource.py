@@ -20,7 +20,7 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from .tob import decode_tob_bytes, read_tob_meta
+from .tob import decode_tob_bytes, read_tob_meta, tob_schema
 
 
 class TobFilePartition(InputPartition):
@@ -34,22 +34,6 @@ def _expand_paths(path: str) -> list[str]:
     else:
         pattern = path
     return sorted(p for p in _glob.glob(pattern) if os.path.isfile(p))
-
-
-def _schema_for(path: str) -> str:
-    meta = read_tob_meta(path)
-    skip = {"SECONDS", "NANOSECONDS", "RECORD"}
-    fields = ["TIMESTAMP TIMESTAMP_NTZ", "RECORD BIGINT"]
-    for name, wt in zip(meta.field_names, meta.wire_types):
-        if name in skip:
-            continue
-        if wt.startswith("ASCII"):
-            fields.append(f"`{name}` STRING")
-        elif wt in ("UINT2", "UINT4", "ULONG", "INT4", "LONG", "Bool8", "BOOL"):
-            fields.append(f"`{name}` BIGINT")
-        else:
-            fields.append(f"`{name}` DOUBLE")
-    return ", ".join(fields)
 
 
 class TobReader(DataSourceReader):
@@ -81,7 +65,7 @@ class TobDataSource(DataSource):
         paths = _expand_paths(self.options["path"])
         if not paths:
             raise ValueError(f"no TOB files match {self.options.get('path')!r}")
-        return _schema_for(paths[0])
+        return tob_schema(read_tob_meta(paths[0]))
 
     def reader(self, schema: StructType) -> TobReader:
         return TobReader(schema, dict(self.options))

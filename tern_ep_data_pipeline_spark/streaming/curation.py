@@ -1361,11 +1361,7 @@ def _span_dedup_batch_impl(
 
     spark = batch.sparkSession
     if "://" not in index_path:
-        from ..operators.dedup_index import (
-            _read_layout,
-            _recover_gram_partitions,
-            recover_interrupted_compaction,
-        )
+        from ..operators.dedup_index import recover_interrupted_compaction
 
         # heal a compaction swap that died between its renames —
         # otherwise this batch would see NO index and silently reset
@@ -1373,10 +1369,7 @@ def _span_dedup_batch_impl(
         # MUST run before this batch's append: an append recreating
         # a swap-window dir would otherwise strand the survivor
         # (r10 review finding 2) — the heal merges it instead.
-        gp = f"{index_path}/grams"
-        recover_interrupted_compaction(gp)
-        if os.path.isdir(gp) and _read_layout(gp).get("range_partitions"):
-            _recover_gram_partitions(gp)
+        recover_interrupted_compaction(f"{index_path}/grams")
     have_index = _dir_exists(spark, f"{index_path}/grams")
     if bloom_fpp == "auto":
         # regime gate (r14, the match classifier's semi-prune rule
@@ -1482,8 +1475,10 @@ def span_deduped_stream_sink(
     appending a duplicate copy. So the sink is effectively-once for both
     the index and the output.
 
-    ``compact_every=N`` compacts the gram index after every N-th batch
-    (``dedup_index.compact_gram_index``): appends re-record every gram
+    ``compact_every=N`` checks the gram index after every N-th batch and
+    compacts it (``dedup_index.compact_gram_index``) once the bytes
+    appended since the last compaction pass 20% of the table
+    (``dedup_index.dirty_fraction``): appends re-record every gram
     the batch shares with the corpus, so without compaction the
     per-batch min-combine scan pays for append duplication that the
     index's min semantics make redundant. Compaction between batches
@@ -1514,25 +1509,16 @@ def span_deduped_stream_sink(
         ).write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
             from ..operators.dedup_index import (
-                _part_dirty_fraction,
-                _read_layout,
-                _write_part_meta,
                 compact_gram_index,
+                dirty_fraction,
             )
 
-            gp2 = f"{index_path}/grams"
-            if _read_layout(gp2).get("range_partitions"):
-                # per-partition dirty gate lives inside the compactor
+            # explicit compaction is unconditional BY DESIGN, so the
+            # scheduled hook reads the clean watermark every gram
+            # compaction records — an O(index) rewrite only once the
+            # appends since the last one exceed 20% (r10)
+            if dirty_fraction(f"{index_path}/grams") > 0.2:
                 compact_gram_index(batch.sparkSession, index_path)
-            else:
-                # flat layout: explicit compaction is unconditional
-                # BY DESIGN, so the scheduled hook carries its own
-                # byte watermark — an O(index) rewrite only once the
-                # appends since the last one exceed 20% (r10)
-                frac, _cur, clean = _part_dirty_fraction(gp2)
-                if clean == 0 or frac > 0.2:
-                    compact_gram_index(batch.sparkSession, index_path)
-                    _write_part_meta(gp2)
 
     return (
         stream.writeStream.foreachBatch(_process)

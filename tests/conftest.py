@@ -1,10 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, first on the path, so a test run
+# from any checkout imports that checkout's package (test modules rely on it)
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tern_ep_data_pipeline_spark.session import get_spark
 

@@ -3,12 +3,9 @@ the reference's ``configs_editors`` surface (VERDICT r6 "what's missing" #1)."""
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tern_ep_data_pipeline_spark.catalog import configs as cfg
 

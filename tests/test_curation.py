@@ -1864,8 +1864,16 @@ def test_wide_line_index_boilerplate_report(spark, tmp_path):
     with pytest.raises(ValueError, match="keep_text"):
         boilerplate_lines_report(spark, batch, narrow)
 
-    # (c) append + compact keep the payload (and the counts sum)
+    # (c) append + compact keep the payload (and the counts sum), also
+    # when the compaction first heals a swap that died between renames
+    # (the marker is in the survivor dir until the heal)
+    import os
+    import shutil
+
     append_to_line_index(batch, wide)
+    lp = os.path.join(wide, "lines")
+    os.rename(lp, lp + ".compact-old")
+    shutil.copytree(lp + ".compact-old", lp + ".compact-tmp")
     stats = compact_line_index(spark, wide)
     assert stats["rows_after"] < stats["rows_before"]
     cols = spark.read.parquet(wide + "/lines").columns
@@ -3004,116 +3012,84 @@ def test_compaction_swap_recovery_and_scheme_guard(spark, tmp_path):
         compact_gram_index(spark, "s3a://bucket/gidx")
 
 
-def test_ranged_gram_index_partition_scoped_compaction(spark, tmp_path):
-    """The range-partitioned gram layout (VERDICT r9 #3): clean decisions
-    identical to the flat layout; compaction rewrites ONLY dirty
-    partitions (a one-gram append dirties exactly one), is idempotent
-    (an immediate re-run compacts nothing), and never changes the
-    min-per-gram view readers aggregate."""
-    from tern_ep_data_pipeline_spark.operators import dedup
+def test_compaction_records_clean_watermark(spark, tmp_path):
+    """Every gram compaction records the table's clean byte watermark,
+    so the span sink's scheduled hook sees a just-compacted index as
+    clean instead of paying another O(index) rewrite on its next turn."""
+    import os
+
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         append_to_gram_index,
         build_gram_index,
-        clean_against_gram_index,
         compact_gram_index,
+        dirty_fraction,
     )
 
-    phrase = " ".join(f"r{i}" for i in range(10))
-    corpus = spark.createDataFrame(
-        [
-            (1, f"intro words {phrase} outro words"),
-            (2, "another indexed document with distinct body tokens here"),
-        ],
-        ["doc_id", "text"],
+    path = str(tmp_path / "gidx_watermark")
+    gp = os.path.join(path, "grams")
+    build_gram_index(
+        spark.createDataFrame(
+            [(1, " ".join(f"wm{i}" for i in range(12)))], ["doc_id", "text"]
+        ),
+        path,
     )
-    flat, ranged = str(tmp_path / "gidx_flat"), str(tmp_path / "gidx_ranged")
-    n_flat = build_gram_index(corpus, flat)
-    n_ranged = build_gram_index(corpus, ranged, range_partitions=4)
-    assert n_flat == n_ranged
+    assert dirty_fraction(gp) == 1.0  # never compacted
+    compact_gram_index(spark, path)
+    assert dirty_fraction(gp) == 0.0
+    append_to_gram_index(
+        spark.createDataFrame(
+            [(5, " ".join(f"wn{i}" for i in range(12)))], ["doc_id", "text"]
+        ),
+        path,
+    )
+    assert 0.0 < dirty_fraction(gp) < 1.0
 
-    batch = spark.createDataFrame(
-        [
-            (10, f"new document body {phrase} trailing content here now"),
-            (11, "a fresh unrelated document with its own words only"),
-        ],
-        ["doc_id", "text"],
-    )
-    out_flat = sorted(
-        map(tuple, clean_against_gram_index(spark, batch, flat).collect())
-    )
-    dedup.release_staged(spark)
-    out_ranged = sorted(
-        map(tuple, clean_against_gram_index(spark, batch, ranged).collect())
-    )
-    dedup.release_staged(spark)
-    assert out_flat == out_ranged  # decision equality across layouts
 
+def test_old_range_partitioned_marker_refused(spark, tmp_path):
+    """A gram, chunk or line table whose layout marker carries a key this
+    version does not read (an older range-partitioned build) is refused
+    by append, clean and compact alike, before anything is written."""
+    import json
     import os
 
-    gp = os.path.join(ranged, "grams")
+    from tern_ep_data_pipeline_spark.operators import dedup_index as di
 
-    def min_view():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    view0 = min_view()
-    # first compaction: no partition has a clean watermark yet -> all
-    s1 = compact_gram_index(spark, ranged)
-    assert s1["layout"] == "ranged"
-    assert s1["partitions_compacted"] == s1["partitions_total"] > 0
-    assert min_view() == view0  # readers see the identical aggregate
-    # idempotent: immediately re-running compacts NOTHING
-    s2 = compact_gram_index(spark, ranged)
-    assert s2["partitions_compacted"] == 0
-    assert s2["bytes_rewritten"] == 0
-
-    # a single-gram append (exactly min_tokens tokens) dirties exactly
-    # one partition; compaction cost is scoped to it
-    one_gram = spark.createDataFrame(
-        [(20, " ".join(f"z{i}" for i in range(8)))], ["doc_id", "text"]
+    path = str(tmp_path / "old_idx")
+    for table in ("grams", "chunks", "lines"):
+        os.makedirs(os.path.join(path, table))
+        with open(os.path.join(path, table, "_layout.json"), "w") as fh:
+            json.dump({"range_partitions": 4}, fh)
+    docs = spark.createDataFrame(
+        [(1, " ".join(f"od{i}" for i in range(12)))], ["doc_id", "text"]
     )
-    append_to_gram_index(one_gram, ranged)
-    view1 = min_view()
-    s3 = compact_gram_index(spark, ranged)
-    assert s3["partitions_compacted"] == 1
-    assert s3["bytes_rewritten"] < s2["bytes_total"]  # scoped, not O(index)
-    assert min_view() == view1
-    # decisions against the compacted ranged index still match a fresh
-    # flat index over the same corpus
-    append_to_gram_index(one_gram, flat)
-    b2 = spark.createDataFrame(
-        [(30, f"later arrival with {phrase} and closing words")],
-        ["doc_id", "text"],
-    )
-    got_flat = sorted(
-        map(tuple, clean_against_gram_index(spark, b2, flat).collect())
-    )
-    dedup.release_staged(spark)
-    got_ranged = sorted(
-        map(tuple, clean_against_gram_index(spark, b2, ranged).collect())
-    )
-    dedup.release_staged(spark)
-    assert got_flat == got_ranged
+    calls = [
+        lambda: di.append_to_gram_index(docs, path),
+        lambda: di.append_to_chunk_index(docs, path),
+        lambda: di.append_to_line_index(docs, path),
+        lambda: di.clean_against_gram_index(spark, docs, path),
+        lambda: di.chunk_stats_against_index(spark, docs, path),
+        lambda: di.clean_against_line_index(spark, docs, path),
+        lambda: di.compact_gram_index(spark, path),
+        lambda: di.compact_chunk_index(spark, path),
+        lambda: di.compact_line_index(spark, path),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="rebuild the index"):
+            call()
+    for table in ("grams", "chunks", "lines"):
+        assert os.listdir(os.path.join(path, table)) == ["_layout.json"]
 
 
 def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path):
     """r10 review finding 1: a compaction crash between the two swap
     renames followed by an APPEND (which recreates the live dir) must
     not strand the .compact-old survivor — recovery merges its files
-    into the recreated dir instead of rmtree'ing history. Covers both
-    the ranged-partition and flat layouts, plus orphan tmp cleanup."""
+    into the recreated dir instead of rmtree'ing history, plus orphan
+    tmp cleanup."""
     import os
     import shutil
 
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _gram_part_scratch,
         append_to_gram_index,
         build_gram_index,
         compact_gram_index,
@@ -3134,30 +3110,9 @@ def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path):
         ["doc_id", "text"],
     )
 
-    # ----- ranged layout
-    ranged = str(tmp_path / "gidx_crash_ranged")
-    build_gram_index(base, ranged, range_partitions=2)
-    gp = os.path.join(ranged, "grams")
-    original = grams(gp)
-    # simulate a crash between rename 1 and rename 2 on one partition:
-    # live partition renamed away to .compact-old, tmp left behind
-    part = next(d for d in sorted(os.listdir(gp)) if d.startswith("__part="))
-    pdir = os.path.join(gp, part)
-    scratch = _gram_part_scratch(gp, part.split("=", 1)[1])
-    os.rename(pdir, scratch + ".compact-old")
-    shutil.copytree(scratch + ".compact-old", scratch + ".compact-tmp")
-    # an append recreates the partition dir with ONLY the new batch
-    append_to_gram_index(more, ranged)
-    stats = compact_gram_index(spark, ranged)
-    assert stats["layout"] == "ranged"
-    healed = grams(gp)
-    assert original <= healed  # nothing from the pre-crash index lost
-    assert not os.path.isdir(scratch + ".compact-old")
-    assert not os.path.isdir(scratch + ".compact-tmp")
-
-    # ----- flat layout, same crash shape on the whole table dir
+    # ----- crash between the renames, then an append
     flat = str(tmp_path / "gidx_crash_flat")
-    build_gram_index(base, flat, )
+    build_gram_index(base, flat)
     gpf = os.path.join(flat, "grams")
     original_f = grams(gpf)
     os.rename(gpf, gpf + ".compact-old")
@@ -3197,118 +3152,6 @@ def test_contentless_lock_reclaimed_after_grace(tmp_path, monkeypatch):
     import os
 
     assert not os.path.exists(target + ".lock")
-
-
-def test_ranged_chunk_and_line_index_layouts(spark, tmp_path):
-    """The ranged layout generalised to the chunk and line tables (r10):
-    batch decisions identical to the flat layout, dirty-threshold
-    compaction scoped and idempotent, and the line table's SUM fold
-    preserved exactly across compaction."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_chunk_index,
-        append_to_line_index,
-        build_chunk_index,
-        build_line_index,
-        chunk_stats_against_index,
-        clean_against_line_index,
-        compact_chunk_index,
-        compact_line_index,
-    )
-
-    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    corpus = spark.createDataFrame(
-        [(1, body + " one"), (2, body + " two")], ["doc_id", "text"]
-    )
-    batch = spark.createDataFrame(
-        [(10, body + " ten"), (11, "wholly new words only here now")],
-        ["doc_id", "text"],
-    )
-    lines_corpus = spark.createDataFrame(
-        [(1, "shared line\nunique a"), (2, "shared line\nunique b")],
-        ["doc_id", "text"],
-    )
-    lines_batch = spark.createDataFrame(
-        [(10, "shared line\nfresh line")], ["doc_id", "text"]
-    )
-
-    flat, ranged = str(tmp_path / "flat"), str(tmp_path / "ranged")
-    assert build_chunk_index(corpus, flat, chunk_tokens=5) == build_chunk_index(
-        corpus, ranged, chunk_tokens=5, range_partitions=4
-    )
-    build_line_index(lines_corpus, flat)
-    build_line_index(lines_corpus, ranged, range_partitions=4)
-
-    def chunk_rows(p):
-        return sorted(
-            map(
-                tuple,
-                chunk_stats_against_index(
-                    spark, batch, p, chunk_tokens=5
-                ).collect(),
-            )
-        )
-
-    def line_rows(p):
-        return sorted(
-            map(
-                tuple,
-                clean_against_line_index(
-                    spark, lines_batch, p, min_docs=2
-                ).collect(),
-            )
-        )
-
-    assert chunk_rows(flat) == chunk_rows(ranged)
-    assert line_rows(flat) == line_rows(ranged)
-
-    # appends + compaction: decisions stable, sums exact, scoping works
-    append_to_chunk_index(batch, ranged, chunk_tokens=5)
-    append_to_line_index(lines_batch, ranged)
-    append_to_chunk_index(batch, flat, chunk_tokens=5)
-    append_to_line_index(lines_batch, flat)
-    lp = os.path.join(ranged, "lines")
-    pre_sum = sorted(
-        map(
-            tuple,
-            spark.read.parquet(lp)
-            .groupBy("line_hash")
-            .agg(F.sum("n_docs").alias("n"))
-            .collect(),
-        )
-    )
-    sc = compact_chunk_index(spark, ranged)
-    sl = compact_line_index(spark, ranged)
-    assert sc["layout"] == sl["layout"] == "ranged"
-    assert sc["partitions_compacted"] > 0 and sl["partitions_compacted"] > 0
-    # the SUM fold is exact: 'shared line' seen in docs 1, 2, 10 -> 3
-    post_sum = sorted(
-        map(
-            tuple,
-            spark.read.parquet(lp)
-            .groupBy("line_hash")
-            .agg(F.sum("n_docs").alias("n"))
-            .collect(),
-        )
-    )
-    assert post_sum == pre_sum
-    import hashlib
-
-    shared = hashlib.md5(b"shared line").hexdigest()
-    assert dict(post_sum)[shared] == 3
-    # idempotent: an immediate re-run compacts nothing
-    assert compact_chunk_index(spark, ranged)["partitions_compacted"] == 0
-    assert compact_line_index(spark, ranged)["partitions_compacted"] == 0
-    # post-compaction decisions still equal the flat layout's
-    b2c = spark.createDataFrame([(20, body + " twenty")], ["doc_id", "text"])
-    b2l = spark.createDataFrame([(20, "shared line\nlast")], ["doc_id", "text"])
-    got_c = sorted(map(tuple, chunk_stats_against_index(spark, b2c, ranged, chunk_tokens=5).collect()))
-    exp_c = sorted(map(tuple, chunk_stats_against_index(spark, b2c, flat, chunk_tokens=5).collect()))
-    got_l = sorted(map(tuple, clean_against_line_index(spark, b2l, ranged, min_docs=2).collect()))
-    exp_l = sorted(map(tuple, clean_against_line_index(spark, b2l, flat, min_docs=2).collect()))
-    assert got_c == exp_c
-    assert got_l == exp_l
 
 
 def test_cap_stats_reported_on_match_and_winnow(spark, tmp_path):
@@ -3454,641 +3297,3 @@ def test_scan_rows_lower_bound_detects_unknown_stats(spark, sf_dir):
     est = scan_rows_lower_bound(docs, 64 << 10)
     n = docs.count()
     assert 1 <= est <= n  # a true lower bound from real file statistics
-
-
-@pytest.mark.parametrize("crash_point", ["p0_tmp_written", "p1_mid_swap", "p2_old_stale"])
-@pytest.mark.parametrize("append_after", [False, True])
-def test_ranged_swap_crash_matrix(spark, tmp_path, crash_point, append_after):
-    """The flat crash matrix replayed at PARTITION granularity on the
-    ranged layout: per-partition scratch dirs (siblings of the table
-    root) heal through the same state machine, with the partitioned
-    append able to recreate a mid-swap partition dir."""
-    import os
-    import shutil
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _gram_part_scratch,
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "first corpus body " + " ".join(f"a{i}" for i in range(20))),
-         (2, "second corpus body " + " ".join(f"b{i}" for i in range(20)))],
-        ["doc_id", "text"],
-    )
-    more = spark.createDataFrame(
-        [(9, "appended body " + " ".join(f"c{i}" for i in range(20)))],
-        ["doc_id", "text"],
-    )
-
-    def min_view(gp):
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    ref = str(tmp_path / f"rref_{crash_point}_{append_after}")
-    build_gram_index(base, ref, range_partitions=2)
-    if append_after:
-        append_to_gram_index(more, ref)
-    expected = min_view(os.path.join(ref, "grams"))
-
-    idx = str(tmp_path / f"ridx_{crash_point}_{append_after}")
-    build_gram_index(base, idx, range_partitions=2)
-    gp = os.path.join(idx, "grams")
-    part = next(d for d in sorted(os.listdir(gp)) if d.startswith("__part="))
-    pdir = os.path.join(gp, part)
-    scratch = _gram_part_scratch(gp, part.split("=", 1)[1])
-    old, tmp = scratch + ".compact-old", scratch + ".compact-tmp"
-    if crash_point == "p0_tmp_written":
-        shutil.copytree(pdir, tmp)
-    elif crash_point == "p1_mid_swap":
-        shutil.copytree(pdir, tmp)
-        os.rename(pdir, old)
-    elif crash_point == "p2_old_stale":
-        shutil.copytree(pdir, tmp)
-        os.rename(pdir, old)
-        os.rename(tmp, pdir)
-    if append_after:
-        append_to_gram_index(more, idx)
-    # recovery runs inside the ranged compactor (and the streaming sink)
-    stats = compact_gram_index(spark, idx)
-    assert stats["layout"] == "ranged"
-    assert min_view(gp) == expected
-    assert not os.path.isdir(old) and not os.path.isdir(tmp)
-
-
-def test_lsm_tiered_compaction_bounds_write_amplification(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r10 #1: with LSM run tiering, a triggered compaction on a
-    uniform-key workload (every partition dirty at once) folds ONLY the
-    raw L0 appends into per-partition L1 runs — bytes_rewritten tracks
-    dirty bytes, not partition bytes — and the base is rewritten only
-    when accumulated runs cross the leveled-merge fraction. Decisions
-    and the min-per-gram view are invariant throughout."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _file_tier,
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    # a base corpus much larger than each append, so the run-fold branch
-    # (l0 + run <= fraction * base) is actually reachable per partition
-    base = spark.createDataFrame(
-        [(i, f"base document {i} body " + " ".join(f"w{i}x{j}" for j in range(30)))
-         for i in range(60)],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "gidx_lsm")
-    build_gram_index(base, idx, range_partitions=4)
-    gp = os.path.join(idx, "grams")
-
-    def min_view():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    def tier_files(tier):
-        out = []
-        for d in os.listdir(gp):
-            pdir = os.path.join(gp, d)
-            if not d.startswith("__part=") or not os.path.isdir(pdir):
-                continue
-            for f in os.listdir(pdir):
-                if f.startswith(("_", ".")) or f.endswith(".crc"):
-                    continue
-                if _file_tier(f) == tier:
-                    out.append(os.path.join(d, f))
-        return out
-
-    # first compaction: no base tier yet -> every partition base-merges
-    view0 = min_view()
-    s0 = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert s0["partitions_merged"] == s0["partitions_compacted"] > 0
-    assert s0["partitions_run_folded"] == 0
-    assert tier_files("base") and not tier_files("l0") and not tier_files("run")
-    assert min_view() == view0
-
-    # uniform small appends dirty every partition; each triggered pass
-    # must RUN-FOLD (rewrite == dirty bytes), never rewrite the base
-    for k in range(3):
-        batch = spark.createDataFrame(
-            [(100 + k, f"appended doc {k} " + " ".join(f"a{k}b{j}" for j in range(10)))],
-            ["doc_id", "text"],
-        )
-        append_to_gram_index(batch, idx)
-        view = min_view()
-        s = compact_gram_index(spark, idx, dirty_threshold=0.01)
-        assert s["partitions_compacted"] > 0
-        assert s["partitions_merged"] == 0, (
-            f"pass {k} rewrote a base instead of run-folding: {s}"
-        )
-        # the amplification bound the verdict demands, at its tightest:
-        # a run fold's input IS the dirty bytes
-        assert s["bytes_rewritten"] <= s["bytes_dirty"]
-        assert min_view() == view
-    assert tier_files("run") and not tier_files("l0")
-
-    # idempotent: an immediate re-run touches nothing
-    s_idem = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert s_idem["partitions_compacted"] == 0
-    assert s_idem["bytes_rewritten"] == 0
-
-    # leveled merge: once runs exceed the base fraction (forced to 0
-    # here), the partition folds back to a single base tier
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-
-    monkeypatch.setattr(di, "_BASE_MERGE_FRACTION", 0.0)
-    batch = spark.createDataFrame(
-        [(200, "merge trigger doc " + " ".join(f"m{j}" for j in range(10)))],
-        ["doc_id", "text"],
-    )
-    append_to_gram_index(batch, idx)
-    view = min_view()
-    s_merge = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert s_merge["partitions_merged"] == s_merge["partitions_compacted"] > 0
-    assert min_view() == view
-    # merged partitions reclaimed their run tier
-    merged_parts = s_merge["partitions_merged"]
-    assert len(tier_files("run")) < merged_parts or not tier_files("run")
-    assert not tier_files("l0")
-
-    # and the compacted index still decides like a flat never-compacted
-    # twin over the same documents
-    from tern_ep_data_pipeline_spark.operators import dedup
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        clean_against_gram_index,
-    )
-
-    flat = str(tmp_path / "gidx_lsm_flat")
-    build_gram_index(base, flat)
-    for k in range(3):
-        b = spark.createDataFrame(
-            [(100 + k, f"appended doc {k} " + " ".join(f"a{k}b{j}" for j in range(10)))],
-            ["doc_id", "text"],
-        )
-        append_to_gram_index(b, flat)
-    append_to_gram_index(
-        spark.createDataFrame(
-            [(200, "merge trigger doc " + " ".join(f"m{j}" for j in range(10)))],
-            ["doc_id", "text"],
-        ),
-        flat,
-    )
-    probe = spark.createDataFrame(
-        [(300, "probe with base document 7 body w7x0 w7x1 w7x2 w7x3 w7x4 "
-               "w7x5 w7x6 w7x7 and fresh tail tokens here")],
-        ["doc_id", "text"],
-    )
-    got_flat = sorted(
-        map(tuple, clean_against_gram_index(spark, probe, flat).collect())
-    )
-    dedup.release_staged(spark)
-    got_lsm = sorted(
-        map(tuple, clean_against_gram_index(spark, probe, idx).collect())
-    )
-    dedup.release_staged(spark)
-    assert got_flat == got_lsm
-
-
-def test_compaction_salted_output_realises_file_counts(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10 #4: a partition larger than the file-split size must
-    compact into MULTIPLE files — the per-partition file-count sizing is
-    realised by salting the repartition key, not funnelled through one
-    task into one oversized file."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}n{j}" for j in range(40))) for i in range(80)],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "gidx_salt")
-    build_gram_index(docs, idx, range_partitions=2)
-    gp = os.path.join(idx, "grams")
-    # force a tiny split so every partition's bytes demand several files
-    monkeypatch.setattr(di, "_split_bytes", lambda _spark: 2048)
-    s = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert s["partitions_compacted"] == 2
-    for d in os.listdir(gp):
-        pdir = os.path.join(gp, d)
-        if not d.startswith("__part=") or not os.path.isdir(pdir):
-            continue
-        files = [
-            f for f in os.listdir(pdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        assert len(files) >= 2, (
-            f"{d}: a partition far over the split size compacted into "
-            f"{files} — the salted fan-out was not realised"
-        )
-    # and the fold is unchanged by the fan-out
-    n = spark.read.parquet(gp).groupBy("gram_hash").count()
-    assert n.where("count > 1").count() == 0
-
-
-@pytest.mark.parametrize("seed,run_cap,merge_frac", [
-    (7, 2, 0.5),
-    (19, 3, 1.5),
-])
-def test_lsm_read_bounds_hold_under_random_schedules(
-    spark, tmp_path, monkeypatch, seed, run_cap, merge_frac
-):
-    """VERDICT r11 #4: SCALING.md claims the LSM read-side bounds as
-    STRUCTURAL invariants; this pins them as properties over randomised
-    append/compact schedules (not the bench tool's fixed geometry),
-    checked after EVERY operation:
-
-    - fold-depth cap: run generations per partition <= the collapse cap
-      at all times (a fold either adds one generation under the cap or
-      collapses all of them into one);
-    - read-side byte bound: run bytes <= merge_fraction x base bytes
-      (+ parquet per-file encoding slack) wherever runs exist — the
-      merge trigger fires on pre-fold bytes, and folds only shrink them
-      — equivalently the nonbase read fraction right after a full pass
-      is <= f/(1+f);
-    - a threshold-0 pass leaves no L0 behind;
-    - the min-view decision algebra is untouched by every compaction.
-
-    Reference semantics being preserved: incremental append, as in the
-    reference's eddypro_concatenator (code/file_handling/
-    eddypro_concatenator.py:44-97)."""
-    import os
-    import random
-
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _part_tiers,
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    monkeypatch.setattr(di, "_MAX_RUNS_PER_PARTITION", run_cap)
-    monkeypatch.setattr(di, "_BASE_MERGE_FRACTION", merge_frac)
-    rng = random.Random(seed)
-
-    base = spark.createDataFrame(
-        [(i, f"prop base doc {i} " + " ".join(f"p{i}x{j}" for j in range(20)))
-         for i in range(20)],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "gidx_prop")
-    build_gram_index(base, idx, range_partitions=2)
-    gp = os.path.join(idx, "grams")
-    slack_per_file = 8192  # parquet footer/dict overhead on tiny files
-
-    def check_structural(where: str, l0_must_be_empty: bool = False):
-        for d in sorted(os.listdir(gp)):
-            pdir = os.path.join(gp, d)
-            if not (d.startswith("__part=") and os.path.isdir(pdir)):
-                continue
-            t = _part_tiers(pdir)
-            gens = di._run_generations(t)
-            assert gens <= run_cap, (
-                f"fold-depth cap violated after {where}: partition {d} "
-                f"holds {gens} run generations > cap {run_cap}"
-            )
-            run_b = sum(sz for _f, sz in t["run"])
-            base_b = sum(sz for _f, sz in t["base"])
-            if t["run"]:
-                assert base_b > 0, (
-                    f"read bound violated after {where}: partition {d} "
-                    "has run files with no base (folds require a base)"
-                )
-                budget = merge_frac * base_b + slack_per_file * len(t["run"])
-                assert run_b <= budget, (
-                    f"read-side byte bound violated after {where}: "
-                    f"partition {d} run bytes {run_b} > "
-                    f"{merge_frac} x base {base_b} (+slack) — nonbase "
-                    f"read fraction would exceed f/(1+f) at steady state"
-                )
-            if l0_must_be_empty:
-                assert not t["l0"], (
-                    f"threshold-0 pass left L0 behind in {d} after {where}"
-                )
-
-    def min_view():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    next_id = 100
-    for step in range(12):
-        if rng.random() < 0.6:
-            n_docs = rng.randint(1, 3)
-            b = spark.createDataFrame(
-                [(next_id + i,
-                  f"prop append {next_id + i} "
-                  + " ".join(f"a{next_id + i}y{j}"
-                             for j in range(rng.randint(6, 18))))
-                 for i in range(n_docs)],
-                ["doc_id", "text"],
-            )
-            next_id += n_docs
-            append_to_gram_index(b, idx)
-            check_structural(f"append step {step}")
-        else:
-            thr = rng.choice([0.0, 0.01, 0.3])
-            view = min_view()
-            compact_gram_index(spark, idx, dirty_threshold=thr)
-            assert min_view() == view, (
-                f"compaction (threshold {thr}) changed the min-view "
-                f"decision algebra at step {step}"
-            )
-            check_structural(
-                f"compact(thr={thr}) step {step}", l0_must_be_empty=(thr == 0.0)
-            )
-
-    # final full pass: the steady-state read shape
-    view = min_view()
-    compact_gram_index(spark, idx, dirty_threshold=0.0)
-    assert min_view() == view
-    check_structural("final full pass", l0_must_be_empty=True)
-
-
-def test_heal_merge_preserves_file_tiers(spark, tmp_path):
-    """A crash-heal that merges a swap survivor into an append-recreated
-    partition renames files with restored- prefixes; tier classification
-    strips them, so a restored base file is still base — the partition
-    does not re-fold its whole history after a heal."""
-    import os
-    import shutil
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _file_tier,
-        _gram_part_scratch,
-        _part_tiers,
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    # unit pins for the classifier itself
-    assert _file_tier("part-00000-x.parquet") == "l0"
-    assert _file_tier("base-part-00000-x.parquet") == "base"
-    assert _file_tier("run-2-0-part-00000-x.parquet") == "run"
-    assert _file_tier("restored-base-part-0.parquet") == "base"
-    assert _file_tier("restored-3-run-1-0-part-0.parquet") == "run"
-    assert _file_tier("restored-restored-base-p.parquet") == "base"
-
-    base = spark.createDataFrame(
-        [(1, "tier corpus body " + " ".join(f"t{i}" for i in range(25)))],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "gidx_tier_heal")
-    build_gram_index(base, idx, range_partitions=2)
-    compact_gram_index(spark, idx, dirty_threshold=0.01)  # all -> base-
-    gp = os.path.join(idx, "grams")
-    part = next(d for d in sorted(os.listdir(gp)) if d.startswith("__part="))
-    pdir = os.path.join(gp, part)
-    assert _part_tiers(pdir)["base"] and not _part_tiers(pdir)["l0"]
-
-    # crash between the swap renames, then an append recreates the dir
-    scratch = _gram_part_scratch(gp, part.split("=", 1)[1])
-    os.rename(pdir, scratch + ".compact-old")
-    shutil.copytree(scratch + ".compact-old", scratch + ".compact-tmp")
-    more = spark.createDataFrame(
-        [(9, "healed append body " + " ".join(f"h{i}" for i in range(25)))],
-        ["doc_id", "text"],
-    )
-    append_to_gram_index(more, idx)
-    stats = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert stats["partitions_compacted"] >= 1
-    tiers = _part_tiers(pdir)
-    # after heal + compaction: no raw L0 left, and nothing was lost
-    assert not tiers["l0"]
-    grams = spark.read.parquet(gp).select("gram_hash").distinct().count()
-    flat = str(tmp_path / "gidx_tier_flat")
-    build_gram_index(base, flat)
-    append_to_gram_index(more, flat)
-    flat_grams = (
-        spark.read.parquet(os.path.join(flat, "grams"))
-        .select("gram_hash").distinct().count()
-    )
-    assert grams == flat_grams
-
-
-@pytest.mark.parametrize("fail_at", [1, 2, 3, 4, 6])
-def test_run_fold_crash_injection_heals(spark, tmp_path, monkeypatch, fail_at):
-    """REAL crash injection (not simulated dir states): os.rename is made
-    to fail on the Nth swap-machinery call during a tiered compaction —
-    covering the staged-file prefix renames, staged->tmp, live->old and
-    tmp->live across both partitions — and the next compaction must heal
-    and converge to the identical min-per-gram view with no scratch
-    debris."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "crash corpus body " + " ".join(f"c{i}" for i in range(25))),
-         (2, "second crash body " + " ".join(f"d{i}" for i in range(25)))],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / f"gidx_inject_{fail_at}")
-    build_gram_index(base, idx, range_partitions=2)
-    compact_gram_index(spark, idx, dirty_threshold=0.01)  # establish base tier
-    more = spark.createDataFrame(
-        [(9, "appended crash body " + " ".join(f"e{i}" for i in range(25)))],
-        ["doc_id", "text"],
-    )
-    append_to_gram_index(more, idx)
-    gp = os.path.join(idx, "grams")
-
-    def min_view():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    expected = min_view()
-
-    real_rename = os.rename
-    hits = {"n": 0}
-
-    def flaky(src, dst):
-        s, d = str(src), str(dst)
-        if ".compact-" in s or ".compact-" in d or "__part=" in s or "__part=" in d:
-            hits["n"] += 1
-            if hits["n"] == fail_at:
-                raise OSError(f"injected crash at swap rename #{fail_at}")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", flaky)
-    # not pytest.raises: if a layout change leaves fewer swap renames
-    # than fail_at, the compaction legitimately completes and the case
-    # must SKIP, not hard-fail on DID-NOT-RAISE (review r11)
-    crashed = None
-    try:
-        compact_gram_index(spark, idx, dirty_threshold=0.01)
-    except (OSError, RuntimeError) as exc:
-        crashed = exc
-    finally:
-        monkeypatch.setattr(os, "rename", real_rename)
-    if hits["n"] < fail_at:
-        assert crashed is None
-        pytest.skip(f"only {hits['n']} swap renames at this layout")
-    assert crashed is not None, "injected crash did not propagate"
-
-    # heal + complete on the next pass; view identical, debris gone
-    compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert min_view() == expected
-    parent = os.path.dirname(gp)
-    debris = [
-        d for d in os.listdir(parent)
-        if ".compact-" in d or d.endswith(".compact-ranged-tmp")
-    ]
-    assert not debris, f"scratch debris left after heal: {debris}"
-    # a fresh batch still cleans identically against the healed index
-    s2 = compact_gram_index(spark, idx, dirty_threshold=0.01)
-    assert s2["partitions_compacted"] == 0  # idempotent after heal
-
-
-def test_run_generations_counts_folds_not_files():
-    """The collapse cap counts fold GENERATIONS: one fold emitting k
-    salted files (run-<seq>-<i>-... for several i) is ONE generation —
-    counting files would trip the cap after ceil(cap/k) folds and
-    re-read all run bytes nearly every pass (review r11). Unparseable
-    run names count as their own generation (collapse sooner, never
-    later)."""
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _run_generations,
-    )
-
-    def tiers(names):
-        return {"l0": [], "base": [], "run": [(n, 1) for n in names]}
-
-    # 2 folds x 4 files each = 2 generations, not 8
-    multi = [f"run-{s}-{i}-part.parquet" for s in (1, 2) for i in range(4)]
-    assert _run_generations(tiers(multi)) == 2
-    # heal-restored prefix stripped before parsing
-    assert _run_generations(tiers(["restored-3-run-5-0-x.parquet"])) == 1
-    # same seq restored + live = one generation
-    assert (
-        _run_generations(
-            tiers(["run-7-0-a.parquet", "restored-1-run-7-1-a.parquet"])
-        )
-        == 1
-    )
-    # unparseable names each count (conservative)
-    assert _run_generations(tiers(["run-x-junk", "run-1-0-y.parquet"])) == 2
-    assert _run_generations(tiers([])) == 0
-
-
-def test_run_tier_file_count_bounded(spark, tmp_path, monkeypatch):
-    """The L1 run cap: past _MAX_RUNS_PER_PARTITION runs, the next fold
-    collapses them into one — per-partition file count (read
-    amplification between base merges) is bounded whatever the append
-    cadence, and the view/decision algebra is untouched."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        _part_tiers,
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-    )
-
-    monkeypatch.setattr(di, "_MAX_RUNS_PER_PARTITION", 2)
-    # keep everything as run folds: base merge effectively unreachable
-    monkeypatch.setattr(di, "_BASE_MERGE_FRACTION", 10_000.0)
-
-    base = spark.createDataFrame(
-        [(i, f"cap base doc {i} " + " ".join(f"b{i}x{j}" for j in range(25)))
-         for i in range(30)],
-        ["doc_id", "text"],
-    )
-    idx = str(tmp_path / "gidx_runcap")
-    build_gram_index(base, idx, range_partitions=2)
-    compact_gram_index(spark, idx, dirty_threshold=0.01)  # base tier
-    gp = os.path.join(idx, "grams")
-
-    def min_view():
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
-        )
-
-    def run_gens():
-        out = {}
-        for d in os.listdir(gp):
-            pdir = os.path.join(gp, d)
-            if d.startswith("__part=") and os.path.isdir(pdir):
-                out[d] = di._run_generations(_part_tiers(pdir))
-        return out
-
-    saw_collapse = False
-    for k in range(6):
-        b = spark.createDataFrame(
-            [(100 + k, f"cap append {k} " + " ".join(f"a{k}y{j}" for j in range(10)))],
-            ["doc_id", "text"],
-        )
-        append_to_gram_index(b, idx)
-        pre = run_gens()
-        view = min_view()
-        s = compact_gram_index(spark, idx, dirty_threshold=0.01)
-        assert s["partitions_merged"] == 0  # never a base rewrite here
-        assert min_view() == view
-        post = run_gens()
-        for d, gens in post.items():
-            # the structural bound: never more than cap run generations
-            assert gens <= di._MAX_RUNS_PER_PARTITION, (
-                f"round {k}: {d} holds {gens} run generations — cap not enforced"
-            )
-            # a partition AT the cap before a pass that run-folded must
-            # come out with exactly ONE run generation — positive proof
-            # the collapse branch executed, not a threshold-skip that
-            # happened to leave few files (review r11)
-            if (
-                s["partitions_run_folded"]
-                and pre.get(d, 0) >= di._MAX_RUNS_PER_PARTITION
-                and gens == 1
-            ):
-                saw_collapse = True
-    assert saw_collapse  # the collapse branch actually executed

@@ -17,12 +17,9 @@ A query that fails here would flake the driver's hash gate sooner or later
 from __future__ import annotations
 
 import math
-import sys
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 

@@ -1,9 +1,5 @@
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 
 

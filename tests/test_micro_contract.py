@@ -10,12 +10,9 @@ micro arithmetic itself must be half-away-from-zero exact.
 from __future__ import annotations
 
 import math
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from tern_ep_data_pipeline_spark.operators import dedup
 from tern_ep_data_pipeline_spark.operators import text

@@ -25,12 +25,9 @@ integers and md5 strings is immune to engine float formatting variance).
 from __future__ import annotations
 
 import re
-import sys
 
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 

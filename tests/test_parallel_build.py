@@ -14,10 +14,6 @@ consistent 4-8% min-of-4 win (OPTIMIZATION_r16.md).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entrymod
 from tern_ep_data_pipeline_spark.operators.dedup import release_staged
 

@@ -13,11 +13,8 @@ Regenerate the baseline after an intentional plan change:
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from tools.plan_audit import audit_all, parse_baseline
 

@@ -13,11 +13,12 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod
 from tern_ep_data_pipeline_spark.session import get_spark
