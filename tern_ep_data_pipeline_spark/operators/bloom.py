@@ -41,15 +41,17 @@ SparkContext broadcast no matter how many keys the batch carries.
 
 Trade-off: the bitmap probe moves the index scan through Arrow once
 (the semi path does not).  Worth it when batch ≪ index — the regime
-every incremental consumer documents; callers opt in per call via
-``bloom_fpp``.  Three r13 refinements close the scale extremes: the
-bitmap is sized from a plan-time key-count estimate so the requested
-``fpp`` is honoured (and LOUDLY degraded past the 32 MiB cap);
-byte-heavy index rows are probed through a key-only projection with a
-JVM semi-join back, so payload bytes never cross the Arrow boundary;
-and a consumer whose index scan feeds a JOIN with no pre-aggregation
-(``match_against_index`` — the join probe already drops non-matching
-rows for free) takes no prefilter at all.
+every incremental consumer documents; each consumer prunes when
+``memguard.index_past_broadcast`` says its index scan is past the
+broadcast threshold, at the fixed rate :data:`PRUNE_FPP`.  Three r13
+refinements close the scale extremes: the bitmap is sized from a
+plan-time key-count estimate so the requested ``fpp`` is honoured (and
+LOUDLY degraded past the 32 MiB cap); byte-heavy index rows are probed
+through a key-only projection with a JVM semi-join back, so payload
+bytes never cross the Arrow boundary; and a consumer whose index scan
+feeds a JOIN with no pre-aggregation (``match_against_index`` — the
+join probe already drops non-matching rows for free) takes no Bloom
+prefilter, only an exact semi-join prune past the same gate.
 
 Reference parity: the incremental-ingest contract this accelerates is
 the reference's append-only concatenation model
@@ -328,6 +330,11 @@ def prune_by_bloom(df: DataFrame, key: Column, spec: BloomSpec) -> DataFrame:
     return with_key.mapInArrow(_probe, schema).drop(key_name)
 
 
+#: False-positive rate every index-read prune asks of its bitmap. A
+#: false positive only re-admits an index row that a later join drops,
+#: so the rate moves cost, never rows.
+PRUNE_FPP = 0.01
+
 #: Plan-time batch-key size below which the prune runs as an EXACT
 #: broadcast left-semi join instead of the Bloom probe (see
 #: :func:`prune_index_by_keys`).
@@ -366,7 +373,7 @@ def prune_index_by_keys(
     index_frame: DataFrame,
     key_cols: list[str],
     keys_frame: DataFrame,
-    fpp: float = 0.01,
+    fpp: float = PRUNE_FPP,
     size_hint: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:

@@ -1086,9 +1086,7 @@ def substring_dedup(
     min_tokens: int = 8,
     mode: str = "portable",
     max_doc_tokens: int = 1 << 24,
-    index_firsts: DataFrame | None = None,
-    index_raw: DataFrame | None = None,
-    index_prune_fpp: float = 0.01,
+    index: DataFrame | None = None,
 ) -> DataFrame:
     """Exact duplicated-substring removal — the relational rendition of
     ExactSubstr dedup (Lee et al. 2022, *Deduplicating Training Data Makes
@@ -1121,22 +1119,20 @@ def substring_dedup(
     by construction. ``mode='fast'`` swaps the md5 gram key for the Arrow
     Rabin-Karp kernel; ``mode='portable'`` is the SQL-oracle-checked twin.
 
-    ``index_firsts`` (optional, incremental form —
-    ``dedup_index.clean_against_gram_index``): a (gram_hash, first_key)
-    frame of per-gram first-occurrence keys from an established corpus
-    (portable md5 keys); the first-occurrence decision then spans corpus +
-    batch combined.
-
-    ``index_raw`` (alternative to ``index_firsts``): the UN-aggregated
-    (gram_hash, first_key) index scan.  The operator then prunes it by
-    its OWN staged batch gram-firsts frame before the min-combine
+    ``index`` (optional, incremental form —
+    ``dedup_index.clean_against_gram_index``): the raw (gram_hash,
+    first_key) scan of an established corpus's gram index (portable md5
+    keys, one row per gram per append). Its per-gram ``min`` combines
+    with the batch's firsts, so the first-occurrence decision spans
+    corpus + batch combined. Past the broadcast threshold
+    (``memguard.index_past_broadcast``) the scan is first pruned by the
+    operator's OWN staged batch gram-firsts frame
     (``bloom.prune_index_by_keys`` — exact broadcast semi for small
     batches, Arrow Bloom past that), so the per-batch index aggregation
     handles ~O(batch) candidate grams instead of O(index), with NO
-    second pass over the batch text to derive the prune keys.
-    Decisions are bit-identical (no false negatives; per-gram
-    all-or-none survival keeps the min exact) — pinned in
-    test_bloom_prefilter.
+    second pass over the batch text to derive the prune keys. Decisions
+    are identical (no false negatives; per-gram all-or-none survival
+    keeps the min exact).
     """
     from pyspark.sql import Window
 
@@ -1153,14 +1149,12 @@ def substring_dedup(
             f"substring_dedup needs a numeric id column (got {id_col}: "
             f"{id_type}) — the first-occurrence key is id*max_doc_tokens+pos"
         )
-    if mode == "fast" and (index_firsts is not None or index_raw is not None):
+    if mode == "fast" and index is not None:
         raise ValueError(
-            "index_firsts holds portable md5 gram keys, which can never "
+            "index holds portable md5 gram keys, which can never "
             "match fast-mode Rabin-Karp keys — use mode='portable' with an "
             "index (dedup_index.clean_against_gram_index does)"
         )
-    if index_firsts is not None and index_raw is not None:
-        raise ValueError("pass index_firsts OR index_raw, not both")
 
     toks = _stage(
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
@@ -1175,39 +1169,42 @@ def substring_dedup(
     ).alias("__k")
     occs = grams.select(id_col, "__pos", "__g", occ_key)
     firsts = occs.groupBy("__g").agg(F.min("__k").alias("__first"))
-    if index_raw is not None:
-        from . import bloom as bloom_ops
-        from .memguard import plan_size_estimate
-
-        # semi-vs-bloom gate: size the UNSTAGED firsts aggregate (its
-        # Catalyst estimate is the honest per-distinct-gram signal — a
-        # staged InMemoryRelation reports garbage before materialising,
-        # and the raw batch scan's filter pass-through over-estimates)
-        est = plan_size_estimate(firsts)
-        if est is None:
-            df_est = plan_size_estimate(df)
-            # key bytes ~6x text bytes: one 32-hex hash per ~5-byte token
-            est = None if df_est is None else 6 * df_est
-        # the batch firsts frame doubles as the prune-key source — stage
-        # it so the prune's broadcast/bitmap build and the span join
-        # below share ONE materialisation (no second gram pass)
-        firsts = _stage(firsts)
-        pruned = bloom_ops.prune_index_by_keys(
-            index_raw,
-            ["gram_hash"],
-            firsts.select(F.col("__g").alias("gram_hash")),
-            fpp=index_prune_fpp,
-            size_hint=est,
-        )
-        index_firsts = pruned.groupBy("gram_hash").agg(
-            F.min("first_key").alias("first_key")
-        )
-    if index_firsts is not None:
+    if index is not None:
         # incremental path (dedup_index.clean_against_gram_index): the
         # established corpus's per-gram first-occurrence keys combine via
         # min, so a span already present in the corpus loses every batch
         # occurrence, and an EMPTY index reproduces this operator exactly.
-        #
+        from .memguard import (
+            hash_build_fits,
+            index_past_broadcast,
+            plan_size_estimate,
+        )
+
+        if index_past_broadcast(index):
+            from . import bloom as bloom_ops
+
+            # semi-vs-bloom gate: size the UNSTAGED firsts aggregate (its
+            # Catalyst estimate is the honest per-distinct-gram signal — a
+            # staged InMemoryRelation reports garbage before materialising,
+            # and the raw batch scan's filter pass-through over-estimates)
+            est = plan_size_estimate(firsts)
+            if est is None:
+                df_est = plan_size_estimate(df)
+                # key bytes ~6x text bytes: one 32-hex hash per ~5-byte token
+                est = None if df_est is None else 6 * df_est
+            # the batch firsts frame doubles as the prune-key source — stage
+            # it so the prune's broadcast/bitmap build and the span join
+            # below share ONE materialisation (no second gram pass)
+            firsts = _stage(firsts)
+            index = bloom_ops.prune_index_by_keys(
+                index,
+                ["gram_hash"],
+                firsts.select(F.col("__g").alias("gram_hash")),
+                size_hint=est,
+            )
+        corpus_firsts = index.groupBy("gram_hash").agg(
+            F.min("first_key").alias("first_key")
+        )
         # Join strategy: this is the one CORPUS-scale side in the operator
         # (the index holds every distinct gram ever ingested, growing
         # without bound), and Spark's shuffled-hash build side cannot
@@ -1217,12 +1214,10 @@ def substring_dedup(
         # only while the measured build side fits a task's memory budget;
         # past that, the planner's sort-merge path spills cleanly and the
         # per-batch cost stays O(batch + index scan).
-        from .memguard import hash_build_fits, plan_size_estimate
-
-        idx = index_firsts.select(
+        idx = corpus_firsts.select(
             F.col("gram_hash").alias("__g"), F.col("first_key").alias("__if")
         )
-        if hash_build_fits(df.sparkSession, plan_size_estimate(index_firsts)):
+        if hash_build_fits(df.sparkSession, plan_size_estimate(corpus_firsts)):
             idx = idx.hint("shuffle_hash")
         firsts = (
             firsts.join(idx, on="__g", how="left")

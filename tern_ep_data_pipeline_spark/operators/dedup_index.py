@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from . import bloom as bloom_ops
 from . import dedup as dedup_ops
+from .memguard import index_past_broadcast, plan_size_estimate
 
 
 def _exact_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -154,28 +155,6 @@ def match_against_index(
     )
 
 
-def _broadcast_threshold_bytes(spark: SparkSession) -> int | None:
-    """spark.sql.autoBroadcastJoinThreshold in bytes (handles the
-    '10MB' spelling); None when unreadable. -1 (broadcast disabled)
-    comes through as -1 — which correctly makes EVERY estimated index
-    'past the threshold' for the regime gate below."""
-    try:
-        v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    except Exception:
-        return None
-    try:
-        return int(v)
-    except ValueError:
-        pass
-    try:
-        jvm = spark.sparkContext._jvm
-        return int(
-            jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
-        )
-    except Exception:
-        return None
-
-
 def _batch_frames(
     docs: DataFrame,
     id_col: str,
@@ -234,28 +213,15 @@ def _match_frames(
     two frames of :func:`_batch_frames`, the index as its two parquet
     scans.
 
-    Regime gate (r14): past the broadcast threshold the batch-keyed
-    joins stop streaming the index through a broadcast probe and
-    SHUFFLE the corpus-sized index per batch instead (measured:
-    223 MB/batch at a 150k-doc index, BLOOM_r14 match_sink_cells).
-    When Catalyst's index estimate exceeds the session's
-    autoBroadcastJoinThreshold, both index frames are first pruned by
-    an EXACT broadcast left-semi join on the batch's own keys (content
-    hashes / (band, bh) — always O(batch), always broadcastable); the
-    prune is map-side, so the downstream joins shuffle O(batch)
-    survivors instead of the index. Decision-identical by construction:
-    a left-semi on the join keys keeps every row that could join. The
-    route lands on local property ``tern.match_prune``."""
-    from .memguard import plan_size_estimate
-
-    spark = rows.sparkSession
-    est = plan_size_estimate(band_idx)
-    thr = _broadcast_threshold_bytes(spark)
-    prune = est is not None and thr is not None and est > thr
-    spark.sparkContext.setLocalProperty(
-        "tern.match_prune", "semi" if prune else "direct"
-    )
-    if prune:
+    Regime gate (:func:`memguard.index_past_broadcast` on the bands
+    scan): past the broadcast threshold both index frames are first
+    pruned by an EXACT broadcast left-semi join on the batch's own keys
+    (content hashes / (band, bh) — always O(batch), always
+    broadcastable); the prune is map-side, so the downstream joins
+    shuffle O(batch) survivors instead of the index. Decision-identical
+    by construction: a left-semi on the join keys keeps every row that
+    could join."""
+    if index_past_broadcast(band_idx):
         ex_idx = ex_idx.join(
             F.broadcast(rows.select("content_hash").dropDuplicates()),
             on="content_hash",
@@ -481,7 +447,6 @@ def chunk_stats_against_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     chunk_tokens: int = 10,
-    bloom_fpp: float | None = None,
 ) -> DataFrame:
     """Incremental sub-document dedup: per new document, how much of it is
     chunks the corpus has already accepted (or that an earlier document in
@@ -497,47 +462,16 @@ def chunk_stats_against_index(
     Scale shape: O(batch) — the batch's chunk occurrences join the index
     on the hash (shuffle-hash: the index side is corpus-sized, too big to
     broadcast but never scanned more than once) plus one within-batch
-    groupBy.min; the index text is never read.
+    groupBy.min; the index text is never read. Past the broadcast
+    threshold (:func:`memguard.index_past_broadcast`) the index scan is
+    first pruned by the batch's chunk hashes
+    (:func:`bloom.prune_index_by_keys`), so the distinct below shuffles
+    ~O(batch) candidate hashes instead of the whole index; the rows are
+    the same either way.
     """
-    # distinct BEFORE the left join: the index accumulates parquet appends
-    # and the same chunk_hash routinely lands in several of them (accepted
-    # docs below the gate still carry already-indexed chunks); a plain left
-    # join would multiply each matching occurrence row per index copy,
-    # inflating n_chunks / n_dup_chunks — the exact value callers gate on.
     cp = os.path.join(path, "chunks")
     _read_layout(cp)
     raw = spark.read.parquet(cp).select(F.col("chunk_hash").alias("__h"))
-    if bloom_fpp is not None:
-        # the core Bloom-prunes ``raw`` by the batch's chunk hashes BEFORE
-        # the distinct — that distinct is the O(index) shuffle the
-        # prefilter exists to remove (mechanics: bloom.prune_index_by_keys)
-        return _chunk_stats_core(
-            new_docs, raw, id_col, text_col, chunk_tokens, bloom_fpp
-        )
-    indexed = (
-        raw
-        .distinct()
-        .withColumn("__indexed", F.lit(True))
-        .hint("shuffle_hash")
-    )
-    return _chunk_stats_core(new_docs, indexed, id_col, text_col, chunk_tokens)
-
-
-def _chunk_stats_core(
-    new_docs: DataFrame,
-    indexed: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_tokens: int,
-    bloom_fpp: float | None = None,
-) -> DataFrame:
-    """Core of the incremental chunk stats: ``indexed`` is a distinct
-    (__h, __indexed=True) membership frame from the parquet-dir scan
-    (shuffle-hash hinted).  With ``bloom_fpp`` set,
-    ``indexed`` arrives RAW (one __h column, not yet distinct) and is
-    Bloom-pruned by the batch's occurrence hashes before the distinct —
-    which then shuffles ~O(batch) candidate hashes instead of the whole
-    index."""
     occ = (
         dedup_ops.chunk_frame(new_docs, id_col, text_col, chunk_tokens)
         .select(
@@ -550,19 +484,27 @@ def _chunk_stats_core(
         )
     )
     occ = dedup_ops._stage(occ)
-    if bloom_fpp is not None:
-        from .memguard import plan_size_estimate
-
+    # distinct BEFORE the left join: the index accumulates parquet appends
+    # and the same chunk_hash routinely lands in several of them (accepted
+    # docs below the gate still carry already-indexed chunks); a plain left
+    # join would multiply each matching occurrence row per index copy,
+    # inflating n_chunks / n_dup_chunks — the exact value callers gate on.
+    if index_past_broadcast(raw):
         # staged occ reports a garbage estimate pre-materialisation; the
         # batch scan's bytes are a safe over-estimate of the chunk-hash
         # key set (one 32-hex hash per ~10 tokens of text)
         indexed = (
             bloom_ops.prune_index_by_keys(
-                indexed, ["__h"], occ, fpp=bloom_fpp,
-                size_hint=plan_size_estimate(new_docs),
+                raw, ["__h"], occ, size_hint=plan_size_estimate(new_docs)
             )
             .distinct()
             .withColumn("__indexed", F.lit(True))
+        )
+    else:
+        indexed = (
+            raw.distinct()
+            .withColumn("__indexed", F.lit(True))
+            .hint("shuffle_hash")
         )
     batch_first = occ.groupBy("__h").agg(F.min("__occ").alias("__first"))
     joined = occ.join(batch_first, on="__h").join(indexed, on="__h", how="left")
@@ -675,7 +617,6 @@ def clean_against_line_index(
     min_docs: int = 2,
     min_line_chars: int = 1,
     delimiter: str = "\n",
-    bloom_fpp: float | None = None,
 ) -> DataFrame:
     """Incremental CCNet line dedup: boilerplate = lines whose distinct-doc
     count ACROSS the established corpus plus this batch clears
@@ -689,9 +630,10 @@ def clean_against_line_index(
     per-append counts sum because ingest batches hold disjoint doc sets
     (the same contract the exact/band/chunk tables rely on).
 
-    ``bloom_fpp`` Bloom-prunes the index scan by the batch's line hashes
-    before the count sum (one extra O(batch) line pass; bit-identical
-    output — mechanics: :func:`bloom.prune_index_by_keys`).
+    Past the broadcast threshold (:func:`memguard.index_past_broadcast`)
+    the index scan is pruned by the batch's line hashes before the count
+    sum (one extra O(batch) line pass; identical output — mechanics:
+    :func:`bloom.prune_index_by_keys`).
     """
     # project the count columns FIRST: on a keep_text (wide-twin)
     # layout the payload must never be read for cleaning — the
@@ -700,21 +642,18 @@ def clean_against_line_index(
     lp = os.path.join(path, "lines")
     _read_layout(lp)
     scan = spark.read.parquet(lp).select("line_hash", "n_docs")
-    if bloom_fpp is not None:
-        from .memguard import plan_size_estimate
-
+    if index_past_broadcast(scan):
         # hint with the batch scan's bytes (like the chunk consumer):
         # the key frame is an aggregate whose Catalyst estimate is
         # unreliable, and docs bytes safely over-estimate the line-hash
         # key set — which also lets the bloom path size its bitmap for
-        # the requested fpp instead of the fixed default geometry
+        # its fpp instead of the fixed default geometry
         scan = bloom_ops.prune_index_by_keys(
             scan,
             ["line_hash"],
             _line_count_table(
                 new_docs, id_col, text_col, delimiter, min_line_chars
             ),
-            fpp=bloom_fpp,
             size_hint=plan_size_estimate(new_docs),
         )
     idx = (
@@ -763,8 +702,6 @@ def boilerplate_lines_report(
     min_docs: int = 2,
     min_line_chars: int = 1,
     delimiter: str = "\n",
-    bloom_fpp: float | None = None,
-    prune_strategy: str = "auto",
 ) -> DataFrame:
     """What boilerplate would :func:`clean_against_line_index` strip
     from this batch, as TEXT: one row per batch line whose combined
@@ -778,14 +715,15 @@ def boilerplate_lines_report(
 
     Requires the WIDE line index (``build_line_index(keep_text=True)``)
     — the report never touches corpus text, only the batch's own lines
-    and the index payload. This is the wide-payload consumer the
-    two-phase Bloom probe serves (r14 verdict #2): with ``bloom_fpp``
-    set and a batch past the broadcast-semi budget (a backfill-sized
-    report), the prune probes a KEY-ONLY projection of the wide scan
-    and semi-joins survivors back, so line bytes never cross the Arrow
-    boundary (`bloom.prune_index_by_keys`; route observable on the
-    ``tern.bloom_prune.two_phase`` property). Smaller batches take the
-    exact broadcast semi; ``bloom_fpp=None`` scans the index whole.
+    and the index payload. Below the broadcast threshold
+    (:func:`memguard.index_past_broadcast`) it scans the index whole.
+    Past it the scan is pruned by the batch's line hashes: the exact
+    broadcast semi, or, for a batch past the semi budget (a
+    backfill-sized report), the two-phase Bloom probe this wide-payload
+    consumer exists for (r14 verdict #2) — it probes a KEY-ONLY
+    projection of the wide scan and semi-joins survivors back, so line
+    bytes never cross the Arrow boundary (`bloom.prune_index_by_keys`;
+    route observable on the ``tern.bloom_prune.two_phase`` property).
     Identical report on every route.
     """
     lp = os.path.join(path, "lines")
@@ -800,15 +738,11 @@ def boilerplate_lines_report(
         keep_text=True,
     ).withColumnRenamed("n_docs", "n_docs_batch")
     scan = spark.read.parquet(lp).select("line_hash", "n_docs", "line_bytes")
-    if bloom_fpp is not None:
-        from .memguard import plan_size_estimate
-
+    if index_past_broadcast(scan):
         scan = bloom_ops.prune_index_by_keys(
             scan,
             ["line_hash"],
             batch.select("line_hash"),
-            fpp=bloom_fpp,
-            strategy=prune_strategy,
             size_hint=plan_size_estimate(new_docs),
         )
     corpus = scan.groupBy("line_hash").agg(
@@ -1112,7 +1046,6 @@ def clean_against_gram_index(
     min_tokens: int = 8,
     max_doc_tokens: int = 1 << 24,
     validate_ids: bool = True,
-    bloom_fpp: float | None = None,
 ) -> DataFrame:
     """Incremental ExactSubstr span removal: a batch span whose gram
     already occurs in the established corpus (or earlier in the combined
@@ -1135,7 +1068,9 @@ def clean_against_gram_index(
     batch's gram firsts left-join the index on the 16-byte hash
     (shuffle-hash; corpus text never read); per-append firsts combine via
     ``min``, which is order-independent, so append ordering never changes
-    the decision.
+    the decision. The operator receives the raw index scan and, past the
+    broadcast threshold (:func:`memguard.index_past_broadcast`), prunes
+    it by its own staged batch firsts before that min-combine.
     """
     gp = os.path.join(path, "grams")
     _read_layout(gp)
@@ -1167,33 +1102,13 @@ def clean_against_gram_index(
         # append range carrying DIFFERENT documents is id reuse, not a
         # retry — both rejected like any other overlap.
         _validate_gram_ids(spark, new_docs, id_col, text_col, meta)
-    scan = spark.read.parquet(gp)
-    if bloom_fpp is not None:
-        # hand the RAW scan to the operator: it prunes by its own staged
-        # batch gram-firsts frame (no second gram pass) and min-combines
-        # only the ~O(batch) survivors (mechanics:
-        # dedup.substring_dedup)
-        return dedup_ops.substring_dedup(
-            new_docs,
-            id_col,
-            text_col,
-            min_tokens=min_tokens,
-            max_doc_tokens=max_doc_tokens,
-            index_raw=scan,
-            index_prune_fpp=bloom_fpp,
-        )
-    idx = (
-        scan
-        .groupBy("gram_hash")
-        .agg(F.min("first_key").alias("first_key"))
-    )
     return dedup_ops.substring_dedup(
         new_docs,
         id_col,
         text_col,
         min_tokens=min_tokens,
         max_doc_tokens=max_doc_tokens,
-        index_firsts=idx,
+        index=spark.read.parquet(gp),
     )
 
 
@@ -1853,9 +1768,9 @@ def compact_match_index(
     with index_lease(os.path.join(path, "exact"), "compact", wait_s=wait_s):
         for leg in ("exact", "bands"):
             lp = os.path.join(path, leg)
+            recover_interrupted_compaction(lp)
             if not os.path.isdir(lp):
                 continue
-            recover_interrupted_compaction(lp)
             snapshot = _dir_bytes(lp)
             files_before = sum(
                 1 for f in os.listdir(lp) if f.endswith(".parquet")

@@ -335,6 +335,49 @@ def plan_size_estimate(df) -> int | None:
     return est
 
 
+def _broadcast_threshold_bytes(spark: SparkSession) -> int | None:
+    """spark.sql.autoBroadcastJoinThreshold in bytes (handles the
+    '10MB' spelling); None when unreadable. -1 (broadcast disabled)
+    comes through as -1, which makes every estimated index 'past the
+    threshold' for :func:`index_past_broadcast`."""
+    try:
+        v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    except Exception:
+        return None
+    try:
+        return int(v)
+    except ValueError:
+        pass
+    try:
+        jvm = spark.sparkContext._jvm
+        return int(
+            jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)
+        )
+    except Exception:
+        return None
+
+
+def index_past_broadcast(index_scan) -> bool:
+    """The one regime gate of every incremental index read: True when
+    Catalyst's estimate of ``index_scan`` exceeds the session's
+    autoBroadcastJoinThreshold. Past it, the batch-keyed joins would
+    shuffle the corpus-sized index per batch (BLOOM_r14: 223 MB/batch
+    at a 150k-doc index), so the consumer prunes the scan by the
+    batch's own keys first; below it the direct plan is the measured
+    winner. The size picks the plan, never the rows: every prune keeps
+    all rows of any key the batch holds. The choice lands on the
+    SparkContext local property ``tern.index_prune`` (``prune`` /
+    ``direct``)."""
+    spark = index_scan.sparkSession
+    est = plan_size_estimate(index_scan)
+    thr = _broadcast_threshold_bytes(spark)
+    prune = est is not None and thr is not None and est > thr
+    spark.sparkContext.setLocalProperty(
+        "tern.index_prune", "prune" if prune else "direct"
+    )
+    return prune
+
+
 def tight_memory(spark: SparkSession) -> bool:
     """True when the unified pool is too small to keep checkpoint/persist
     blocks resident. Only decidable in local mode, where the driver IS the

@@ -1280,7 +1280,6 @@ def span_dedup_batch(
     min_tokens: int = 8,
     max_doc_tokens: int = 1 << 24,
     memory_guard: bool = True,
-    bloom_fpp: float | str | None = None,
 ) -> DataFrame:
     """One micro-batch of incremental ExactSubstr span dedup: clean the
     batch against the gram index, then append the batch's ORIGINAL grams.
@@ -1324,7 +1323,10 @@ def span_dedup_batch(
 
     The plan taken is published thread-locally as SparkContext local
     property ``tern.span_dedup.plan`` (``dir`` / ``bootstrap``) for
-    sinks and benches to record.
+    sinks and benches to record. Past the broadcast threshold the index
+    read is pruned by the batch's own grams
+    (``dedup_index.clean_against_gram_index``); that route lands on
+    ``tern.index_prune``.
     """
     if "://" not in index_path:
         from ..operators.dedup_index import index_lease
@@ -1335,7 +1337,7 @@ def span_dedup_batch(
     with lease:
         return _span_dedup_batch_impl(
             batch, index_path, id_col, text_col, min_tokens,
-            max_doc_tokens, memory_guard, bloom_fpp,
+            max_doc_tokens, memory_guard,
         )
 
 
@@ -1347,7 +1349,6 @@ def _span_dedup_batch_impl(
     min_tokens: int,
     max_doc_tokens: int,
     memory_guard: bool,
-    bloom_fpp: float | str | None = None,
 ) -> DataFrame:
     from ..operators.dedup import release_staged, substring_dedup
     from ..operators.dedup_index import (
@@ -1371,31 +1372,6 @@ def _span_dedup_batch_impl(
         # (r10 review finding 2) — the heal merges it instead.
         recover_interrupted_compaction(f"{index_path}/grams")
     have_index = _dir_exists(spark, f"{index_path}/grams")
-    if bloom_fpp == "auto":
-        # regime gate (r14, the match classifier's semi-prune rule
-        # applied to the gram consumer): engage the measured default
-        # prune only when the index is past the session's broadcast
-        # threshold — the regime where the pre-join O(index)
-        # aggregation shuffle dominates (BLOOM_r12/r13 sink cells:
-        # 108x/343x per-batch shuffle reduction at sf3/sf10 with the
-        # prune ON); below it the direct plan is the measured winner
-        # (the prune would pay staging for nothing). Decisions are
-        # pinned identical either way (test_bloom_prefilter), so the
-        # gate only picks between two verified plans.
-        from ..operators.dedup_index import _broadcast_threshold_bytes
-
-        thr = _broadcast_threshold_bytes(spark)
-        if not have_index or thr is None:
-            bloom_fpp = None
-        else:
-            idx_b = _dir_bytes(spark, f"{index_path}/grams")
-            bloom_fpp = 0.01 if idx_b > max(thr, 0) else None
-        spark.sparkContext.setLocalProperty(
-            "tern.span_dedup.bloom",
-            "auto:on" if bloom_fpp is not None else "auto:off",
-        )
-    elif isinstance(bloom_fpp, str):
-        raise ValueError(f"unknown bloom_fpp {bloom_fpp!r} (use 'auto')")
     # decidability FIRST: on a cluster without executor mem/core confs the
     # floor model can never fire, and the batch-bytes aggregate below is a
     # full extra scan of the micro-batch — don't pay it for a no-op check
@@ -1430,7 +1406,6 @@ def _span_dedup_batch_impl(
             text_col,
             min_tokens=min_tokens,
             max_doc_tokens=max_doc_tokens,
-            bloom_fpp=bloom_fpp,
         )
     else:  # first batch: no index yet == the plain batch operator
         cleaned = substring_dedup(
@@ -1459,7 +1434,6 @@ def span_deduped_stream_sink(
     max_doc_tokens: int = 1 << 24,
     compact_every: int | None = None,
     memory_guard: bool = True,
-    bloom_fpp: float | str | None = "auto",
 ):
     """Streaming ExactSubstr span dedup via ``foreachBatch``: each
     micro-batch is cleaned against the gram index, lands as parquet, and
@@ -1487,17 +1461,11 @@ def span_deduped_stream_sink(
     compacted files, which the same min absorbs — so the
     effectively-once story is unchanged.
 
-    ``bloom_fpp`` turns on the batch-keyed Bloom prefilter on the
-    per-batch index scan (``dedup_index.clean_against_gram_index``
-    docs): decisions are bit-identical, the index-side pre-join
-    aggregation shrinks to ~O(batch). The prune pays once the corpus
-    dwarfs a micro-batch and costs staging while the index is young, so
-    the default is ``"auto"`` (r14): each batch engages fpp 0.01 only
-    once the index's on-disk bytes exceed the session's broadcast
-    threshold — the exact regime where the O(index) aggregation shuffle
-    starts dominating (BLOOM_r12/r13 sink cells measured both sides) —
-    and records the choice on the ``tern.span_dedup.bloom`` local
-    property. Pass a float to force, ``None`` to disable.
+    Each batch's index read prunes itself by the batch's own grams
+    once the index is past the session's broadcast threshold — the
+    regime where the O(index) pre-join aggregation shuffle dominates
+    (BLOOM_r12/r13 sink cells) — and scans it whole below that;
+    decisions are identical either way (:func:`span_dedup_batch`).
     """
 
     def _process(batch: DataFrame, batch_id: int) -> None:
@@ -1505,7 +1473,6 @@ def span_deduped_stream_sink(
             batch, index_path, id_col, text_col,
             min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
             memory_guard=memory_guard,
-            bloom_fpp=bloom_fpp,
         ).write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
             from ..operators.dedup_index import (

@@ -129,7 +129,10 @@ def compact_dedup_indexes(spark: SparkSession, site: str) -> dict:
     exist to their canonical aggregates (``dedup_index.compact_*_index``),
     and the match index's exact/bands legs by an identity rewrite.
     Returns per-table row counts before/after; tables absent from the
-    root are skipped.
+    root (no live dir and no ``.compact-old`` survivor of a swap that
+    died) are skipped. Each compactor heals an interrupted swap inside
+    its table's lease, never before it: a heal outside the lease would
+    read a live sink's in-flight ``.compact-tmp`` as crash debris.
 
     EXCLUSIVE ACCESS ENFORCED: each table's compactor and appender take
     the same lock-file lease (``dedup_index.index_lease``), so this task
@@ -158,22 +161,22 @@ def compact_dedup_indexes(spark: SparkSession, site: str) -> dict:
     )
     wait_s = float(os.environ.get("SPARK_GRAFT_COMPACT_WAIT_S", "900"))
     out: dict = {"path": root}
+
+    def exists(table: str) -> bool:
+        p = os.path.join(root, table)
+        return os.path.isdir(p) or os.path.isdir(p + ".compact-old")
+
     for sub, fn in (
         ("grams", di.compact_gram_index),
         ("chunks", di.compact_chunk_index),
         ("lines", di.compact_line_index),
     ):
-        di.recover_interrupted_compaction(os.path.join(root, sub))
-        if os.path.isdir(os.path.join(root, sub)):
+        if exists(sub):
             out[sub] = fn(spark, root, wait_s=wait_s)
     # the match index's exact/bands legs (r15): identity rewrites that
     # undo per-micro-batch append file explosion — the measured
     # batch-COUNT-linear classifier degradation (BLOOM_r15)
-    if os.path.isdir(os.path.join(root, "exact")) or os.path.isdir(
-        os.path.join(root, "bands")
-    ):
-        for leg in ("exact", "bands"):
-            di.recover_interrupted_compaction(os.path.join(root, leg))
+    if exists("exact") or exists("bands"):
         out["match"] = di.compact_match_index(spark, root, wait_s=wait_s)
     return out
 

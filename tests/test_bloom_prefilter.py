@@ -1,15 +1,18 @@
-"""Batch-keyed Bloom prefilter (operators.bloom + dedup_index bloom_fpp).
+"""Batch-keyed index-read pruning (operators.bloom + the one regime gate,
+memguard.index_past_broadcast).
 
-The contract under test: ``bloom_fpp`` changes the PLAN (index rows that
-cannot join are dropped at the scan), never the RESULT — every consumer
-is pinned bit-identical against its unpruned twin, and the kernel itself
+The contract under test: the gate changes the PLAN (index rows that
+cannot join are dropped at the scan), never the RESULT — every gated
+consumer is pinned identical on both routes, and the Bloom kernel itself
 is pinned for the property the equality proofs rest on: no false
 negatives, under any partitioning of the build side.
 """
 from __future__ import annotations
 
 import random
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from tern_ep_data_pipeline_spark.operators import bloom
@@ -40,7 +43,7 @@ def test_bloom_no_false_negatives_any_partitioning(spark):
     assert kept.count() == kdf.count(), "no false negatives, ever"
 
 
-def test_bloom_fpp_and_empty_batch(spark):
+def test_bloom_false_positive_rate_and_empty_batch(spark):
     """Non-members survive at ~fpp (here: well under 5x the asked 1%),
     and an EMPTY batch's filter prunes the whole index — vacuously
     decision-preserving since an empty batch joins nothing."""
@@ -92,33 +95,7 @@ def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_gram_index_bloom_identical(spark, tmp_path):
-    corpus = _corpus(spark)
-    rows = corpus.collect()
-    path = str(tmp_path / "gidx")
-    di.build_gram_index(corpus, path, min_tokens=8)
-    batch = _batch(spark, rows)
-    plain = di.clean_against_gram_index(spark, batch, path, min_tokens=8)
-    pruned = di.clean_against_gram_index(
-        spark, batch, path, min_tokens=8, bloom_fpp=0.01
-    )
-    assert _sorted_rows(plain) == _sorted_rows(pruned)
-
-
-def test_chunk_index_bloom_identical(spark, tmp_path):
-    corpus = _corpus(spark)
-    rows = corpus.collect()
-    path = str(tmp_path / "cidx")
-    di.build_chunk_index(corpus, path, chunk_tokens=10)
-    batch = _batch(spark, rows)
-    plain = di.chunk_stats_against_index(spark, batch, path, chunk_tokens=10)
-    pruned = di.chunk_stats_against_index(
-        spark, batch, path, chunk_tokens=10, bloom_fpp=0.01
-    )
-    assert _sorted_rows(plain) == _sorted_rows(pruned)
-
-
-def test_line_index_bloom_identical(spark, tmp_path):
+def _line_frames(spark):
     corpus = spark.createDataFrame(
         [
             (1, "shared line\nunique a\nboiler"),
@@ -127,8 +104,6 @@ def test_line_index_bloom_identical(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "lidx")
-    di.build_line_index(corpus, path, min_line_chars=3)
     batch = spark.createDataFrame(
         [
             (100, "shared line\nnew body here"),
@@ -136,13 +111,81 @@ def test_line_index_bloom_identical(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    plain = di.clean_against_line_index(
-        spark, batch, path, min_docs=2, min_line_chars=3
+    return corpus, batch
+
+
+def _gated_consumer(spark, tmp_path, kind):
+    """Build ``kind``'s index and return ``run(route)``, one read of the
+    consumer against it (``route`` only picks the span index copy, so
+    both routes start from the same index)."""
+    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
+
+    path = str(tmp_path / "idx")
+    if kind in ("gram", "chunk"):
+        corpus = _corpus(spark)
+        batch = _batch(spark, corpus.collect())
+    else:
+        corpus, batch = _line_frames(spark)
+    if kind == "gram":
+        di.build_gram_index(corpus, path, min_tokens=8)
+        return lambda route: di.clean_against_gram_index(
+            spark, batch, path, min_tokens=8
+        )
+    if kind == "chunk":
+        di.build_chunk_index(corpus, path, chunk_tokens=10)
+        return lambda route: di.chunk_stats_against_index(
+            spark, batch, path, chunk_tokens=10
+        )
+    if kind in ("line", "boilerplate"):
+        di.build_line_index(
+            corpus, path, min_line_chars=3, keep_text=kind == "boilerplate"
+        )
+        read = (
+            di.clean_against_line_index if kind == "line"
+            else di.boilerplate_lines_report
+        )
+        return lambda route: read(
+            spark, batch, path, min_docs=2, min_line_chars=3
+        )
+    # span: batch 1 bootstraps the index; each route cleans batch 2 (which
+    # pastes batch 1's doc 1) against its own copy of that index
+    base = "the quick brown fox jumps over the lazy dog again and again extra tail"
+    b1 = spark.createDataFrame(
+        [(1, base), (2, "fully distinct first-batch content with enough tokens here")],
+        "doc_id long, text string",
     )
-    pruned = di.clean_against_line_index(
-        spark, batch, path, min_docs=2, min_line_chars=3, bloom_fpp=0.01
+    b2 = spark.createDataFrame(
+        [(10, base + " plus a novel suffix of its very own"),
+         (11, "second batch brand new document with its own words entirely")],
+        "doc_id long, text string",
     )
-    assert _sorted_rows(plain) == _sorted_rows(pruned)
+    span_dedup_batch(b1, path, memory_guard=False)
+    shutil.copytree(path, path + "_prune")
+    return lambda route: span_dedup_batch(
+        b2, path if route == "direct" else path + "_prune", memory_guard=False
+    )
+
+
+@pytest.mark.parametrize("kind", ["gram", "chunk", "line", "boilerplate", "span"])
+def test_index_prune_gate_identical(spark, tmp_path, kind):
+    """Every gated incremental index read gives the same rows on both
+    routes. Under the default broadcast threshold a small index is read
+    whole (``tern.index_prune`` = direct); with the threshold at -1
+    every index is past the gate, so the read is first pruned by the
+    batch's own keys (= prune)."""
+    run = _gated_consumer(spark, tmp_path, kind)
+    sc = spark.sparkContext
+    sc.setLocalProperty("tern.index_prune", None)
+    direct = _sorted_rows(run("direct"))
+    assert sc.getLocalProperty("tern.index_prune") == "direct"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        pruned = _sorted_rows(run("prune"))
+        assert sc.getLocalProperty("tern.index_prune") == "prune"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert pruned == direct
 
 
 def test_bloom_prune_actually_prunes(spark, tmp_path):
@@ -160,38 +203,6 @@ def test_bloom_prune_actually_prunes(spark, tmp_path):
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
     kept = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01).count()
     assert kept < 0.1 * total, (kept, total)
-
-
-def test_streaming_span_dedup_bloom_identical(spark, tmp_path):
-    """The streaming sink's passthrough: two sequential micro-batches
-    through ``span_dedup_batch`` with and without ``bloom_fpp`` produce
-    identical cleaned output AND leave equivalent index decisions for the
-    later batch (batch 2's cleaning sees batch 1's appended grams either
-    way)."""
-    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
-
-    base = "the quick brown fox jumps over the lazy dog again and again extra tail"
-    b1 = spark.createDataFrame(
-        [(1, base), (2, "fully distinct first-batch content with enough tokens here")],
-        "doc_id long, text string",
-    )
-    b2 = spark.createDataFrame(
-        # doc 10 pastes batch-1's doc-1 text — its span must be cut
-        [(10, base + " plus a novel suffix of its very own"),
-         (11, "second batch brand new document with its own words entirely")],
-        "doc_id long, text string",
-    )
-    outs = {}
-    for tag, fpp in (("plain", None), ("bloom", 0.01)):
-        idx = str(tmp_path / f"idx_{tag}")
-        r1 = span_dedup_batch(
-            b1, idx, "doc_id", "text", memory_guard=False, bloom_fpp=fpp
-        ).collect()
-        r2 = span_dedup_batch(
-            b2, idx, "doc_id", "text", memory_guard=False, bloom_fpp=fpp
-        ).collect()
-        outs[tag] = (sorted(map(tuple, r1)), sorted(map(tuple, r2)))
-    assert outs["plain"] == outs["bloom"]
 
 
 def test_prune_strategies_agree(spark, tmp_path):
@@ -213,31 +224,34 @@ def test_prune_strategies_agree(spark, tmp_path):
 
     # end-to-end decisions equal under either forced strategy — force at
     # the ONE shared chokepoint (bloom.prune_index_by_keys), which every
-    # consumer path routes through (the dedup_index consumers AND
-    # substring_dedup's index_raw prune)
+    # gated consumer routes through (the dedup_index consumers AND
+    # substring_dedup's index prune); threshold -1 opens the gate
     plain = _sorted_rows(di.clean_against_gram_index(spark, batch, path, min_tokens=8))
     orig = bloom.prune_index_by_keys
-    for strat in ("semi", "bloom"):
-        calls = []
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for strat in ("semi", "bloom"):
+            calls = []
 
-        def forced(idx, kc, kf, fpp=0.01, size_hint=None, strategy="auto",
-                   _s=strat, _o=orig, _c=calls):
-            _c.append(1)
-            return _o(idx, kc, kf, fpp=fpp, strategy=_s)
+            def forced(idx, kc, kf, fpp=0.01, size_hint=None, strategy="auto",
+                       _s=strat, _o=orig, _c=calls):
+                _c.append(1)
+                return _o(idx, kc, kf, fpp=fpp, strategy=_s)
 
-        # consumers resolve the attribute on the bloom module object at
-        # call time, so patching the module attribute reaches them all
-        bloom.prune_index_by_keys = forced
-        try:
-            got = _sorted_rows(
-                di.clean_against_gram_index(
-                    spark, batch, path, min_tokens=8, bloom_fpp=0.01
+            # consumers resolve the attribute on the bloom module object at
+            # call time, so patching the module attribute reaches them all
+            bloom.prune_index_by_keys = forced
+            try:
+                got = _sorted_rows(
+                    di.clean_against_gram_index(spark, batch, path, min_tokens=8)
                 )
-            )
-        finally:
-            bloom.prune_index_by_keys = orig
-        assert calls, f"prune chokepoint not exercised under {strat}"
-        assert got == plain, strat
+            finally:
+                bloom.prune_index_by_keys = orig
+            assert calls, f"prune chokepoint not exercised under {strat}"
+            assert got == plain, strat
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 # ------------------------------------------------- r13 scale closers
@@ -475,7 +489,7 @@ def test_match_index_semi_prune_regime_gate(spark, tmp_path):
     # small index, default threshold -> direct
     direct = di.match_against_index(spark, batch, path, num_hashes=16, bands=8)
     got_direct = _sorted_rows(direct)
-    assert sc.getLocalProperty("tern.match_prune") == "direct"
+    assert sc.getLocalProperty("tern.index_prune") == "direct"
 
     # force the shuffle regime: threshold below the index estimate
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -485,7 +499,7 @@ def test_match_index_semi_prune_regime_gate(spark, tmp_path):
             spark, batch, path, num_hashes=16, bands=8
         )
         got_pruned = _sorted_rows(pruned)
-        assert sc.getLocalProperty("tern.match_prune") == "semi"
+        assert sc.getLocalProperty("tern.index_prune") == "prune"
         plan = pruned._jdf.queryExecution().optimizedPlan().toString()
         assert "LeftSemi" in plan  # the prune is in the plan
         assert got_pruned == got_direct  # decisions identical

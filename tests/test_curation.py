@@ -1808,7 +1808,7 @@ def test_incremental_line_index(spark, tmp_path):
     assert got["clean_text"] == "another body"
 
 
-def test_wide_line_index_boilerplate_report(spark, tmp_path):
+def test_wide_line_index_boilerplate_report(spark, tmp_path, monkeypatch):
     """r14 verdict #2: the wide (keep_text) line-index twin and its
     consumer. Pins: (a) the report names the boilerplate as TEXT with
     combined corpus+batch counts, hottest first; (b) the clean path is
@@ -1888,20 +1888,32 @@ def test_wide_line_index_boilerplate_report(spark, tmp_path):
         ("COOKIE BANNER", 4)
     ]
 
-    # (e) bloom regime: wide payload routes the two-phase probe and the
-    # report is identical to the un-pruned one. The batch reads from
-    # parquet so the survivor-size gate has a real plan estimate (an
-    # in-memory LocalRelation estimates as unknown and the gate
-    # correctly declines to DIRECT — still exact, but not the route
-    # this pin is about).
+    # (e) bloom regime: past the gate (threshold -1), with the Bloom
+    # strategy forced at the prune_index_by_keys seam, the wide payload
+    # routes the two-phase probe and the report is identical to the
+    # un-pruned one. The batch reads from parquet so the survivor-size
+    # gate has a real plan estimate (an in-memory LocalRelation
+    # estimates as unknown and the gate correctly declines to DIRECT —
+    # still exact, but not the route this pin is about).
+    from tern_ep_data_pipeline_spark.operators import bloom
+
     sc = spark.sparkContext
     bpath = str(tmp_path / "batch_pq")
     batch.write.parquet(bpath)
     batch_pq = spark.read.parquet(bpath)
-    rep_bloom = boilerplate_lines_report(
-        spark, batch_pq, wide, min_docs=3, bloom_fpp=0.01,
-        prune_strategy="bloom",
-    ).collect()
+    orig = bloom.prune_index_by_keys
+    monkeypatch.setattr(
+        bloom, "prune_index_by_keys",
+        lambda *a, **kw: orig(*a, **{**kw, "strategy": "bloom"}),
+    )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        rep_bloom = boilerplate_lines_report(
+            spark, batch_pq, wide, min_docs=3
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert sc.getLocalProperty("tern.bloom_prune.two_phase") == "broadcast"
     rep_plain = boilerplate_lines_report(
         spark, batch, wide, min_docs=3

@@ -584,7 +584,7 @@ def test_substring_dedup_rejects_bad_args(spark):
     # fast-mode keys can never match an md5 index — unsupported combo
     idx = spark.createDataFrame([("h", 1)], ["gram_hash", "first_key"])
     with pytest.raises(ValueError, match="portable"):
-        substring_dedup(docs, mode="fast", index_firsts=idx)
+        substring_dedup(docs, mode="fast", index=idx)
 
 
 def test_label_centroids_malformed_vector_named_error(spark):

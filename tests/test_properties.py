@@ -342,7 +342,7 @@ def test_line_dedup_reassembly_identity(spark, texts):
 )
 @settings(max_examples=60, deadline=None)
 def test_bloom_kernel_no_false_negatives_property(keys, others, log_bits, k):
-    """The invariant every bloom_fpp equality pin rests on, over arbitrary
+    """The invariant every index-prune equality pin rests on, over arbitrary
     int64 keys (full range incl. extremes) and any geometry: a key that
     was set ALWAYS tests positive — pure-numpy kernel, no Spark."""
     import numpy as np

@@ -1,5 +1,5 @@
 """Provenance gate for the self-generated scaling data: every scaledata
-dir carries a MANIFEST.json (seeds, row counts, generator source hash) and
+dir carries a MANIFEST.json (seeds, row counts, generator digest) and
 ``gen_scaledata.check_manifest`` refuses data that drifted from the current
 generator — a scaling claim must be traceable to the exact generator that
 produced its inputs."""
@@ -19,6 +19,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tools")
 )
 
+import gen_scaledata  # noqa: E402
 from gen_scaledata import (  # noqa: E402
     check_manifest,
     generator_digest,
@@ -60,6 +61,27 @@ def test_generator_drift_refused(tmp_path):
     json.dump(m, open(mpath, "w"))
     with pytest.raises(SystemExit, match="generator"):
         check_manifest(d)
+
+
+def test_generator_digest_tracks_generated_bytes_only():
+    """The digest moves with what can change a generated byte and with
+    nothing else: comment, docstring and manifest-code edits keep it; a
+    generator or per-sf constant edit changes it."""
+    with open(gen_scaledata.__file__) as fh:
+        src = fh.read()
+    base = gen_scaledata._source_digest(src)
+    assert generator_digest() == base
+
+    def edited(old, new):
+        assert src.count(old) == 1, old
+        return gen_scaledata._source_digest(src.replace(old, new))
+
+    assert edited("\ndef gen_events(", "\n# a comment\ndef gen_events(") == base
+    assert edited(
+        '"data and manifest disagree; regenerate"', '"mismatch"'
+    ) == base
+    assert edited("DOCS_PER_SF = 50_000", "DOCS_PER_SF = 50_001") != base
+    assert edited("rng.exponential(50.0, size=n)", "rng.exponential(51.0, size=n)") != base
 
 
 def test_row_count_drift_refused(tmp_path):

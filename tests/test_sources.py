@@ -299,20 +299,6 @@ def test_fast_path_plan(spark, tmp_path):
     assert len(body) == 7
 
 
-def test_tob_python_datasource(spark, tmp_path):
-    from tern_ep_data_pipeline_spark.sources.tob_datasource import register
-
-    d = tmp_path / "ds"
-    d.mkdir()
-    make_tob3_file(d / "a.tob3")
-    make_tob3_file(d / "b.tob3")
-    register(spark)
-    df = spark.read.format("tob").load(str(d))
-    assert dict(df.dtypes)["TIMESTAMP"] == "timestamp_ntz"
-    assert df.count() == 14
-    assert df.rdd.getNumPartitions() == 2  # one partition per file
-
-
 def test_tob3_spark_read(spark, tmp_path):
     d = tmp_path / "tob"
     d.mkdir()

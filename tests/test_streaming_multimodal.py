@@ -1854,59 +1854,3 @@ def test_match_index_compaction_decision_preserving(spark, tmp_path):
     got = sorted(map(tuple, match_dedup_batch(probe, idx).collect()))
     exp = sorted(map(tuple, match_dedup_batch(probe, twin).collect()))
     assert got == exp
-
-
-def test_span_dedup_batch_auto_bloom_regime_gate(spark, tmp_path):
-    """r14: the span sink's default bloom_fpp='auto' engages the
-    measured prune only past the broadcast-threshold regime — young
-    index stays direct (auto:off), a threshold-crossing index flips to
-    fpp 0.01 (auto:on), decisions identical either way; an unknown
-    string spelling fails eagerly."""
-    import pytest as _pytest
-
-    from tern_ep_data_pipeline_spark.streaming.curation import (
-        span_dedup_batch,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"sg{i}w{j}" for j in range(30))) for i in range(30)],
-        "doc_id long, text string",
-    )
-    sc = spark.sparkContext
-
-    # batch 0 bootstraps (no index yet): auto resolves off
-    idx = str(tmp_path / "gidx")
-    out0 = sorted(map(tuple, span_dedup_batch(
-        docs.where("doc_id < 10"), idx, bloom_fpp="auto"
-    ).collect()))
-    assert sc.getLocalProperty("tern.span_dedup.bloom") == "auto:off"
-
-    b1 = docs.where("doc_id >= 10 and doc_id < 20")
-    # young index under the default 10MB threshold: still direct
-    auto_off = sorted(map(tuple, span_dedup_batch(
-        b1, idx, bloom_fpp="auto"
-    ).collect()))
-    assert sc.getLocalProperty("tern.span_dedup.bloom") == "auto:off"
-    none_run = sorted(map(tuple, span_dedup_batch(
-        b1, idx, bloom_fpp=None
-    ).collect()))
-    assert auto_off == none_run
-
-    # force the shuffle regime: threshold below the index bytes
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-        b2 = docs.where("doc_id >= 20")
-        auto_on = sorted(map(tuple, span_dedup_batch(
-            b2, idx, bloom_fpp="auto"
-        ).collect()))
-        assert sc.getLocalProperty("tern.span_dedup.bloom") == "auto:on"
-        forced = sorted(map(tuple, span_dedup_batch(
-            b2, idx, bloom_fpp=0.01
-        ).collect()))
-        assert auto_on == forced
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    with _pytest.raises(ValueError, match="unknown bloom_fpp"):
-        span_dedup_batch(b1, idx, bloom_fpp="always")

@@ -130,6 +130,14 @@ def test_compact_dedup_indexes_task(spark, tmp_path, monkeypatch):
     build_line_index(docs, root)
     append_to_line_index(docs.withColumn("doc_id", docs.doc_id + 1), root)
     # no chunks table on purpose: absent tables are skipped, not errors
+    # the lines swap died between its renames: only the survivor holds
+    # the table, and the task must heal and compact it, not skip it
+    import os
+    import shutil
+
+    lp = os.path.join(root, "lines")
+    os.rename(lp, lp + ".compact-old")
+    shutil.copytree(lp + ".compact-old", lp + ".compact-tmp")
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", root)
     matrix = task_mod.SiteTaskMatrix({"TestSite": {"compact_dedup_indexes": True}})
@@ -150,6 +158,47 @@ def test_compact_dedup_indexes_task(spark, tmp_path, monkeypatch):
 
     release_staged(spark)
     assert got["n_removed_tokens"] == got["n_tokens"]
+
+
+def test_compact_dedup_indexes_heals_only_under_lease(
+    spark, tmp_path, monkeypatch
+):
+    """A maintenance run must not heal a table whose lease another
+    writer holds: a live sink's in-flight ``.compact-tmp`` looks like
+    crash debris, so healing it outside the lease would kill that
+    sink's swap. The task waits for the lease and fails at acquisition
+    with the tmp dir untouched."""
+    import threading
+
+    from tern_ep_data_pipeline_spark.operators.dedup_index import (
+        IndexLockError,
+        index_lease,
+    )
+    from tern_ep_data_pipeline_spark.tasks_builtin import compact_dedup_indexes
+
+    root = tmp_path / "didx"
+    (root / "grams").mkdir(parents=True)
+    inflight = root / "grams.compact-tmp"
+    inflight.mkdir()
+    held, release = threading.Event(), threading.Event()
+
+    def sink_compaction():
+        with index_lease(str(root / "grams"), "compact"):
+            held.set()
+            release.wait(60)
+
+    t = threading.Thread(target=sink_compaction)
+    t.start()
+    try:
+        assert held.wait(60)
+        monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(root))
+        monkeypatch.setenv("SPARK_GRAFT_COMPACT_WAIT_S", "0.5")
+        with pytest.raises(IndexLockError):
+            compact_dedup_indexes(spark, "TestSite")
+        assert inflight.is_dir()
+    finally:
+        release.set()
+        t.join()
 
 
 def test_refresh_dsir_ratio_task(spark, tmp_path, monkeypatch):

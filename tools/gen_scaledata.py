@@ -371,15 +371,47 @@ def gen_tpch(sf: float, out_dir: str, rng: np.random.Generator) -> dict:
     return counts
 
 
+#: Functions that only record or check provenance: no generated byte
+#: depends on them, so :func:`generator_digest` leaves them out.
+_MANIFEST_ONLY = (
+    "generator_digest", "_source_digest", "write_manifest", "check_manifest",
+)
+
+
 def generator_digest() -> str:
-    """SHA-256 of this generator's own source — recorded in every
-    MANIFEST.json so a scaling claim can always be traced to the exact
+    """SHA-256 of this generator's syntax tree — recorded in every
+    MANIFEST.json so a scaling claim can always be traced to the
     generator that produced its data (and consumers can refuse drifted
-    data; see :func:`check_manifest`)."""
+    data; see :func:`check_manifest`). See :func:`_source_digest` for
+    what the digest leaves out."""
+    with open(os.path.abspath(__file__)) as fh:
+        return _source_digest(fh.read())
+
+
+def _source_digest(source: str) -> str:
+    """SHA-256 of ``source``'s syntax tree without comments, docstrings,
+    formatting or the :data:`_MANIFEST_ONLY` functions: an edit that
+    cannot change a generated byte leaves it, an edit to a generator or
+    a ``*_PER_SF`` constant moves it. The tree dump is the running
+    Python's ``ast.dump``, so a Python upgrade may move it once."""
+    import ast
     import hashlib
 
-    with open(os.path.abspath(__file__), "rb") as fh:
-        return hashlib.sha256(fh.read()).hexdigest()
+    tree = ast.parse(source)
+    tree.body = [
+        n for n in tree.body
+        if not (isinstance(n, ast.FunctionDef) and n.name in _MANIFEST_ONLY)
+    ]
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, (ast.Module, ast.FunctionDef, ast.ClassDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+            and isinstance(node.body[0].value.value, str)
+        ):
+            node.body = node.body[1:]
+    return hashlib.sha256(ast.dump(tree).encode()).hexdigest()
 
 
 def write_manifest(out_dir: str, sf: float, counts: dict) -> None:
