@@ -10,7 +10,6 @@ negatives, under any partitioning of the build side.
 from __future__ import annotations
 
 import random
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,11 +114,8 @@ def _line_frames(spark):
 
 
 def _gated_consumer(spark, tmp_path, kind):
-    """Build ``kind``'s index and return ``run(route)``, one read of the
-    consumer against it (``route`` only picks the span index copy, so
-    both routes start from the same index)."""
-    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
-
+    """Build ``kind``'s index and return ``run()``, one read of the
+    consumer against it."""
     path = str(tmp_path / "idx")
     if kind in ("gram", "chunk"):
         corpus = _corpus(spark)
@@ -128,64 +124,82 @@ def _gated_consumer(spark, tmp_path, kind):
         corpus, batch = _line_frames(spark)
     if kind == "gram":
         di.build_gram_index(corpus, path, min_tokens=8)
-        return lambda route: di.clean_against_gram_index(
+        return lambda: di.clean_against_gram_index(
             spark, batch, path, min_tokens=8
         )
     if kind == "chunk":
         di.build_chunk_index(corpus, path, chunk_tokens=10)
-        return lambda route: di.chunk_stats_against_index(
+        return lambda: di.chunk_stats_against_index(
             spark, batch, path, chunk_tokens=10
         )
-    if kind in ("line", "boilerplate"):
-        di.build_line_index(
-            corpus, path, min_line_chars=3, keep_text=kind == "boilerplate"
-        )
-        read = (
-            di.clean_against_line_index if kind == "line"
-            else di.boilerplate_lines_report
-        )
-        return lambda route: read(
-            spark, batch, path, min_docs=2, min_line_chars=3
-        )
-    # span: batch 1 bootstraps the index; each route cleans batch 2 (which
-    # pastes batch 1's doc 1) against its own copy of that index
+    di.build_line_index(
+        corpus, path, min_line_chars=3, keep_text=kind == "boilerplate"
+    )
+    read = (
+        di.clean_against_line_index if kind == "line"
+        else di.boilerplate_lines_report
+    )
+    return lambda: read(spark, batch, path, min_docs=2, min_line_chars=3)
+
+
+@pytest.mark.parametrize("kind", ["gram", "chunk", "line", "boilerplate"])
+def test_index_prune_gate_identical(spark, tmp_path, kind):
+    """Every gated incremental index read gives the same rows on both
+    routes. Under the default broadcast threshold a small index is read
+    whole (``tern.index_prune`` = direct); with the threshold at -1
+    every index is past the gate, so the read is first pruned by the
+    batch's own keys (= prune). The span batch, the fifth consumer, is
+    pinned by ``test_streaming_span_dedup_bloom_identical``."""
+    run = _gated_consumer(spark, tmp_path, kind)
+    sc = spark.sparkContext
+    sc.setLocalProperty("tern.index_prune", None)
+    direct = _sorted_rows(run())
+    assert sc.getLocalProperty("tern.index_prune") == "direct"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        pruned = _sorted_rows(run())
+        assert sc.getLocalProperty("tern.index_prune") == "prune"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert pruned == direct
+
+
+def test_streaming_span_dedup_bloom_identical(spark, tmp_path):
+    """The streaming sink's read: two sequential micro-batches through
+    ``span_dedup_batch`` on the direct route and on the pruned route
+    (threshold -1 puts every index past the gate) produce identical
+    cleaned output AND leave equivalent index decisions for the later
+    batch (batch 2's cleaning sees batch 1's appended grams either
+    way)."""
+    from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
+
     base = "the quick brown fox jumps over the lazy dog again and again extra tail"
     b1 = spark.createDataFrame(
         [(1, base), (2, "fully distinct first-batch content with enough tokens here")],
         "doc_id long, text string",
     )
     b2 = spark.createDataFrame(
+        # doc 10 pastes batch-1's doc-1 text — its span must be cut
         [(10, base + " plus a novel suffix of its very own"),
          (11, "second batch brand new document with its own words entirely")],
         "doc_id long, text string",
     )
-    span_dedup_batch(b1, path, memory_guard=False)
-    shutil.copytree(path, path + "_prune")
-    return lambda route: span_dedup_batch(
-        b2, path if route == "direct" else path + "_prune", memory_guard=False
-    )
-
-
-@pytest.mark.parametrize("kind", ["gram", "chunk", "line", "boilerplate", "span"])
-def test_index_prune_gate_identical(spark, tmp_path, kind):
-    """Every gated incremental index read gives the same rows on both
-    routes. Under the default broadcast threshold a small index is read
-    whole (``tern.index_prune`` = direct); with the threshold at -1
-    every index is past the gate, so the read is first pruned by the
-    batch's own keys (= prune)."""
-    run = _gated_consumer(spark, tmp_path, kind)
     sc = spark.sparkContext
-    sc.setLocalProperty("tern.index_prune", None)
-    direct = _sorted_rows(run("direct"))
-    assert sc.getLocalProperty("tern.index_prune") == "direct"
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    outs = {}
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        pruned = _sorted_rows(run("prune"))
-        assert sc.getLocalProperty("tern.index_prune") == "prune"
+        for route, thr in (("direct", old), ("prune", "-1")):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+            idx = str(tmp_path / f"idx_{route}")
+            r1 = span_dedup_batch(b1, idx, memory_guard=False).collect()
+            sc.setLocalProperty("tern.index_prune", None)
+            r2 = span_dedup_batch(b2, idx, memory_guard=False).collect()
+            assert sc.getLocalProperty("tern.index_prune") == route
+            outs[route] = (sorted(map(tuple, r1)), sorted(map(tuple, r2)))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert pruned == direct
+    assert outs["direct"] == outs["prune"]
 
 
 def test_bloom_prune_actually_prunes(spark, tmp_path):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1854,3 +1856,46 @@ def test_match_index_compaction_decision_preserving(spark, tmp_path):
     got = sorted(map(tuple, match_dedup_batch(probe, idx).collect()))
     exp = sorted(map(tuple, match_dedup_batch(probe, twin).collect()))
     assert got == exp
+
+
+def test_span_dedup_batch_auto_bloom_regime_gate(spark, tmp_path):
+    """The span sink's index read engages the batch-keyed prune only
+    past the broadcast-threshold regime: the bootstrap batch has no
+    index to read, a young index under the default threshold stays
+    direct, and an index whose measured size crosses the threshold
+    flips to the prune — decisions identical either way."""
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        span_dedup_batch,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"sg{i}w{j}" for j in range(30))) for i in range(30)],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+
+    # batch 0 bootstraps (no index yet): nothing to read, nothing to gate
+    idx = str(tmp_path / "gidx")
+    span_dedup_batch(docs.where("doc_id < 10"), idx).collect()
+    assert sc.getLocalProperty("tern.span_dedup.plan") == "bootstrap"
+    twin = str(tmp_path / "gidx_twin")
+    shutil.copytree(idx, twin)
+
+    # young index under the default 10MB threshold: direct
+    b1 = docs.where("doc_id >= 10 and doc_id < 20")
+    sc.setLocalProperty("tern.index_prune", None)
+    young = sorted(map(tuple, span_dedup_batch(b1, idx).collect()))
+    assert sc.getLocalProperty("tern.span_dedup.plan") == "dir"
+    assert sc.getLocalProperty("tern.index_prune") == "direct"
+
+    # a threshold below the index's measured bytes: the gate prunes, and
+    # the twin index (same history) read the same batch gives the same rows
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+        sc.setLocalProperty("tern.index_prune", None)
+        crossed = sorted(map(tuple, span_dedup_batch(b1, twin).collect()))
+        assert sc.getLocalProperty("tern.index_prune") == "prune"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert crossed == young
