@@ -3119,7 +3119,7 @@ def q_llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [cc, split]
 
     def _b_sample() -> list[DataFrame]:
-        bucket = sampling.hash_bucket(F.col("doc_id"), salt="smp")
+        bucket = sampling.hash_bucket("doc_id", salt="smp")
         return [
             docs.withColumn("bucket", bucket)
             .where(F.col("bucket") < 2000)

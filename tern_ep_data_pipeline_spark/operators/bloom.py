@@ -43,12 +43,10 @@ Trade-off: the bitmap probe moves the index scan through Arrow once
 (the semi path does not).  Worth it when batch ≪ index — the regime
 every incremental consumer documents; each consumer prunes when
 ``memguard.index_past_broadcast`` says its index scan is past the
-broadcast threshold, at the fixed rate :data:`PRUNE_FPP`.  Three r13
+broadcast threshold, at the fixed rate :data:`PRUNE_FPP`.  Two r13
 refinements close the scale extremes: the bitmap is sized from a
-plan-time key-count estimate so the requested ``fpp`` is honoured (and
-LOUDLY degraded past the 32 MiB cap); byte-heavy index rows are probed
-through a key-only projection with a JVM semi-join back, so payload
-bytes never cross the Arrow boundary; and a consumer whose index scan
+plan-time key-count estimate so that rate is honoured (and LOUDLY
+degraded past the 32 MiB cap); and a consumer whose index scan
 feeds a JOIN with no pre-aggregation (``match_against_index`` — the
 join probe already drops non-matching rows for free) takes no Bloom
 prefilter, only an exact semi-join prune past the same gate.
@@ -154,11 +152,9 @@ def predicted_fpp(num_bits: int, num_hashes: int, n_keys: int) -> float:
 
 #: Catalyst-style per-column byte estimates for a key/row width guess.
 #: Collections are sized pessimistically (arrays assume ~16 elements):
-#: the estimate feeds two conservative decisions — "how many keys fit
-#: in ``est`` bytes" (underestimating width OVERSTATES the key count,
-#: which only makes the bitmap bigger/safer) and "is this row too wide
-#: for the Arrow pipe" (overstating width routes to the JVM-side
-#: two-phase probe, the safe direction for byte-heavy rows).
+#: the estimate feeds "how many keys fit in ``est`` bytes", where
+#: underestimating width OVERSTATES the key count, which only makes the
+#: bitmap bigger/safer.
 def _est_row_bytes(schema) -> int:
     from pyspark.sql import types as T
 
@@ -182,29 +178,6 @@ def _est_row_bytes(schema) -> int:
         if isinstance(dt, T.StructType):
             return sum(field(f.dataType) for f in dt.fields)
         return 8  # long/double/timestamp and anything exotic
-
-    return sum(field(f.dataType) for f in schema.fields)
-
-
-#: Variable-width (string/binary) byte estimate only — the part of a
-#: row whose Arrow conversion costs per-byte copies (offsets + data).
-#: Fixed-width columns (numerics, timestamps, arrays of numerics) move
-#: through Arrow as flat buffers and contribute 0 here.
-def _est_varwidth_bytes(schema) -> int:
-    from pyspark.sql import types as T
-
-    def field(dt) -> int:
-        if isinstance(dt, T.StringType):
-            return 20
-        if isinstance(dt, T.BinaryType):
-            return 100
-        if isinstance(dt, T.ArrayType):
-            return 16 * field(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return 16 * (field(dt.keyType) + field(dt.valueType))
-        if isinstance(dt, T.StructType):
-            return sum(field(f.dataType) for f in dt.fields)
-        return 0
 
     return sum(field(f.dataType) for f in schema.fields)
 
@@ -340,27 +313,6 @@ PRUNE_FPP = 0.01
 #: :func:`prune_index_by_keys`).
 SEMI_PRUNE_MAX_BYTES = 32 << 20
 
-#: Estimated VARIABLE-WIDTH non-key payload bytes (strings/binary —
-#: including inside collections) past which the Bloom path probes a
-#: key-only projection and semi-joins survivors back instead of piping
-#: full rows through Arrow (see :func:`prune_index_by_keys`). The cost
-#: the two-phase path avoids is Arrow (de)serialisation of the
-#: payload, and that cost is shape-dependent, measured on 5M-row
-#: synthetics (BLOOM_r13 microbench): a ~290 B STRING payload runs
-#: 1.7x FASTER two-phase (1.96 vs 3.41 s — offset+data copies per
-#: row), while a 32-lane array<long> payload (~260 B but fixed-width
-#: Arrow buffers) runs 1.3x faster on the DIRECT probe (2.27 vs
-#: 3.04 s — zero-copy-ish, and two-phase pays a second scan). So only
-#: variable-width bytes count toward the gate; fixed-width payloads of
-#: any size stay on the direct probe.  The gate is a SCHEMA estimate
-#: (Catalyst default sizes: string 20, binary 100, collections x16) —
-#: it trips on binary columns, several strings, or collections of
-#: strings, but a single string column whose ACTUAL values are huge
-#: stays direct (schema width is all a plan-time decision can see;
-#: such shapes are join-payload smells anyway — project the key + a
-#: row id and fetch the blob after the join).
-WIDE_PAYLOAD_BYTES = 64
-
 #: Warn when the capped bitmap's predicted fpp exceeds this multiple
 #: of the requested rate — the prune still returns exact-superset rows
 #: (false positives only re-admit index rows a later join drops), but
@@ -373,7 +325,6 @@ def prune_index_by_keys(
     index_frame: DataFrame,
     key_cols: list[str],
     keys_frame: DataFrame,
-    fpp: float = PRUNE_FPP,
     size_hint: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -386,8 +337,9 @@ def prune_index_by_keys(
       frame's plan-time size (``size_hint`` if given, else Catalyst's
       estimate) fits ``SEMI_PRUNE_MAX_BYTES``.
     - **bloom** (large / unknown-size key sets): build a Bloom filter
-      over the keys and probe the scan with the Arrow kernel.  The
-      bitmap is sized from the requested ``fpp`` and an ``expected``
+      over the keys and probe the scan with the Arrow kernel (the
+      direct ``mapInArrow`` probe, :func:`prune_by_bloom`).  The
+      bitmap is sized for :data:`PRUNE_FPP` and an ``expected``
       key count derived at PLAN time (the same byte estimate the auto
       gate already computed, divided by the key schema's estimated row
       width — an over-count, which only means a bigger/safer bitmap),
@@ -395,24 +347,8 @@ def prune_index_by_keys(
       8x the request, a RuntimeWarning names the degradation instead
       of letting the prune silently stop pruning (r12 verdict #1a).
       With no usable estimate the fixed 1 MiB/4-hash default applies
-      and ``fpp`` is only approximate — that case is now confined to
+      and the rate is only approximate — that case is now confined to
       ``strategy='bloom'`` forced by hand on an unestimatable frame.
-
-    String/binary-heavy index rows (estimated VARIABLE-WIDTH non-key
-    payload above ``WIDE_PAYLOAD_BYTES``) flip the bloom probe to
-    TWO-PHASE: the Arrow kernel probes a key-only projection of the
-    index, the surviving distinct keys broadcast back, and a JVM
-    left-semi join filters the full-width scan — payload bytes never
-    cross the Arrow boundary (r12 verdict #1b; measured 1.7x on a
-    290 B string payload, while fixed-width payloads stay direct — see
-    ``WIDE_PAYLOAD_BYTES``).  Survivors are batch keys PLUS fpp x
-    index-keys false positives, so the broadcast is gated on an
-    estimated survivor size (ADVICE r13): past ``SEMI_PRUNE_MAX_BYTES``
-    — or with no usable estimate — the probe stays DIRECT instead of
-    risking a driver-aborting broadcast; the route lands on the
-    SparkContext local property ``tern.bloom_prune.two_phase``.  Same
-    surviving-row set by construction: bitmap membership is a pure
-    function of the key.
 
     Either way: no false negatives + per-key all-or-none row survival ⇒
     every downstream per-key aggregate is exact for keys a later join
@@ -420,14 +356,6 @@ def prune_index_by_keys(
     harmless on both paths.
     """
     keys = keys_frame.select(*key_cols)
-    # the two-phase route marker is written UNCONDITIONALLY at entry
-    # (ADVICE r14): a narrow-payload call that never reaches the
-    # wide-payload branch must not leave a previous call's
-    # 'broadcast'/'declined' value readable, or benches/sinks sampling
-    # the property after a mixed call sequence record a stale route
-    index_frame.sparkSession.sparkContext.setLocalProperty(
-        "tern.bloom_prune.two_phase", "direct-narrow-payload"
-    )
     est = size_hint
     if est is None:
         from .memguard import plan_size_estimate
@@ -446,62 +374,21 @@ def prune_index_by_keys(
         expected = max(1, est // max(1, _est_row_bytes(keys.schema)))
     spec = build_key_bloom(
         keys_frame.select(bloom_key(*key_cols).alias(_KEY_COL)),
-        fpp=fpp,
+        fpp=PRUNE_FPP,
         expected=expected,
     )
     if expected is not None:
         achieved = predicted_fpp(spec.num_bits, spec.num_hashes, expected)
-        if achieved > _FPP_WARN_FACTOR * fpp:
+        if achieved > _FPP_WARN_FACTOR * PRUNE_FPP:
             import warnings
 
             warnings.warn(
                 f"bloom prune bitmap capped at {spec.num_bits // 8 >> 20} MiB: "
                 f"predicted fpp ~{achieved:.3f} at ~{expected} keys exceeds "
-                f"{_FPP_WARN_FACTOR:.0f}x the requested {fpp} — the prune "
+                f"{_FPP_WARN_FACTOR:.0f}x the requested {PRUNE_FPP} — the prune "
                 "keeps correctness (superset) but has largely stopped "
                 "pruning; consider splitting the batch",
                 RuntimeWarning,
                 stacklevel=2,
             )
-
-    payload = _est_varwidth_bytes(index_frame.schema) - _est_varwidth_bytes(
-        index_frame.select(*key_cols).schema
-    )
-    if payload > WIDE_PAYLOAD_BYTES:
-        # Survivor cardinality is NOT "~batch-sized" (ADVICE r13): every
-        # true batch key survives PLUS predicted_fpp x the index's
-        # distinct keys of false positives — at the corpus scales that
-        # select the bloom strategy in the first place (keys past the
-        # 32 MiB semi gate, capped bitmaps degrading fpp toward 1), an
-        # unconditional broadcast of that set can abort the job. Gate
-        # the two-phase route on an estimated survivor size; past the
-        # broadcast budget (or with no usable estimates) fall back to
-        # the DIRECT probe: payload bytes cross Arrow (the measured
-        # 1.7x on wide strings) but memory stays bounded and no shuffle
-        # of the wide rows is introduced. Decision-identical either way.
-        proj = index_frame.select(*key_cols)
-        key_bytes = _est_row_bytes(proj.schema)
-        from .memguard import plan_size_estimate
-
-        idx_est = plan_size_estimate(proj)
-        surv_bytes = None
-        if expected is not None and idx_est is not None:
-            fpp_pred = predicted_fpp(spec.num_bits, spec.num_hashes, expected)
-            n_idx = idx_est // max(1, key_bytes)
-            surv_bytes = (expected + int(fpp_pred * n_idx)) * key_bytes
-        sc = index_frame.sparkSession.sparkContext
-        if surv_bytes is not None and surv_bytes <= SEMI_PRUNE_MAX_BYTES:
-            sc.setLocalProperty("tern.bloom_prune.two_phase", "broadcast")
-            survivors = (
-                prune_by_bloom(proj, bloom_key(*key_cols), spec)
-                .dropDuplicates(key_cols)
-            )
-            return index_frame.join(
-                F.broadcast(survivors), on=key_cols, how="left_semi"
-            )
-        sc.setLocalProperty(
-            "tern.bloom_prune.two_phase",
-            "declined-survivor-estimate"
-            + (f":{surv_bytes}B" if surv_bytes is not None else ":unknown"),
-        )
     return prune_by_bloom(index_frame, bloom_key(*key_cols), spec)

@@ -470,7 +470,7 @@ def chunk_stats_against_index(
     the same either way.
     """
     cp = os.path.join(path, "chunks")
-    _read_layout(cp)
+    _refuse_layout_marker(cp)
     raw = spark.read.parquet(cp).select(F.col("chunk_hash").alias("__h"))
     occ = (
         dedup_ops.chunk_frame(new_docs, id_col, text_col, chunk_tokens)
@@ -536,7 +536,7 @@ def append_to_chunk_index(
     (compact the parquet dir on the lake's schedule to bound re-reads)."""
     cp = os.path.join(path, "chunks")
     with index_lease(cp, "append"):
-        _read_layout(cp)
+        _refuse_layout_marker(cp)
         _chunk_table(accepted_docs, id_col, text_col, chunk_tokens).write.mode(
             "append"
         ).parquet(cp)
@@ -544,34 +544,36 @@ def append_to_chunk_index(
 
 # ------------------------------------------------- line (boilerplate) index
 
-def _line_count_table(
+def _trimmed_lines(
     df: DataFrame,
     id_col: str,
     text_col: str,
     delimiter: str,
     min_line_chars: int,
-    keep_text: bool = False,
 ) -> DataFrame:
-    """(line_hash, n_docs) — per trimmed line, DISTINCT docs containing it
-    within this frame. Map-side-combinable on the 16-byte hash.
-
-    ``keep_text=True`` adds ``line_bytes`` (the trimmed line, utf-8
-    BINARY — the wide-payload twin serving the boilerplate report, see
-    :func:`boilerplate_lines_report`). min-aggregated for determinism;
-    every row of one hash carries the same bytes anyway (md5 keying)."""
+    """(__id, __t) — one row per trimmed line of at least
+    ``min_line_chars`` characters."""
     lines = df.select(
         F.col(id_col).alias("__id"),
         F.explode(
             F.split(F.col(text_col), re.escape(delimiter))
         ).alias("__line"),
     ).select("__id", F.trim("__line").alias("__t"))
-    kept = lines.where(F.length("__t") >= min_line_chars)
-    if keep_text:
-        return kept.groupBy(F.md5("__t").alias("line_hash")).agg(
-            F.countDistinct("__id").alias("n_docs"),
-            F.min(F.encode("__t", "utf-8")).alias("line_bytes"),
-        )
-    return kept.groupBy(F.md5("__t").alias("line_hash")).agg(
+    return lines.where(F.length("__t") >= min_line_chars)
+
+
+def _line_count_table(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    delimiter: str,
+    min_line_chars: int,
+) -> DataFrame:
+    """(line_hash, n_docs) — per trimmed line, DISTINCT docs containing it
+    within this frame. Map-side-combinable on the 16-byte hash."""
+    return _trimmed_lines(
+        df, id_col, text_col, delimiter, min_line_chars
+    ).groupBy(F.md5("__t").alias("line_hash")).agg(
         F.countDistinct("__id").alias("n_docs")
     )
 
@@ -583,29 +585,53 @@ def build_line_index(
     text_col: str = "text",
     delimiter: str = "\n",
     min_line_chars: int = 1,
-    keep_text: bool = False,
 ) -> int:
     """Materialise the corpus line-count index (CCNet boilerplate removal,
     incremental form) next to the exact/band/chunk tables; returns the
-    distinct-line count.
-
-    ``keep_text=True`` builds the WIDE twin: each row additionally
-    carries the trimmed line's utf-8 bytes, so operators can report
-    boilerplate as human-readable text (:func:`boilerplate_lines_report`)
-    without ever re-touching the corpus. The clean path is unaffected —
-    it projects (line_hash, n_docs) and parquet column pruning never
-    reads the payload — while batch-pruned scans that DO need the
-    payload route the key-only two-phase Bloom probe in the bloom
-    regime (``bloom.WIDE_PAYLOAD_BYTES``: a binary column estimates
-    past the gate). The flag is recorded in the layout marker so
-    appends can never drift the schema."""
+    distinct-line count. The index holds (line_hash, n_docs) only: no
+    reader needs the corpus's line text (:func:`boilerplate_lines_report`
+    takes it from the batch)."""
     lp = os.path.join(path, "lines")
     _line_count_table(
-        docs, id_col, text_col, delimiter, min_line_chars, keep_text
+        docs, id_col, text_col, delimiter, min_line_chars
     ).write.mode("overwrite").parquet(lp)
-    if keep_text:
-        _write_layout(lp, {"keep_text": True})
     return docs.sparkSession.read.parquet(lp).count()
+
+
+def _corpus_line_counts(
+    spark: SparkSession,
+    new_docs: DataFrame,
+    path: str,
+    id_col: str,
+    text_col: str,
+    delimiter: str,
+    min_line_chars: int,
+) -> DataFrame:
+    """(line_hash, n_docs) — the corpus distinct-doc count per line hash,
+    summed over the index's appends (counts add because ingest batches
+    hold disjoint doc sets). Past the broadcast threshold
+    (:func:`memguard.index_past_broadcast`) the index scan is first
+    pruned by the batch's line hashes (one extra O(batch) line pass;
+    identical counts for every batch line — mechanics:
+    :func:`bloom.prune_index_by_keys`)."""
+    lp = os.path.join(path, "lines")
+    _refuse_layout_marker(lp)
+    scan = spark.read.parquet(lp).select("line_hash", "n_docs")
+    if index_past_broadcast(scan):
+        # hint with the batch scan's bytes (like the chunk consumer):
+        # the key frame is an aggregate whose Catalyst estimate is
+        # unreliable, and docs bytes safely over-estimate the line-hash
+        # key set — which also lets the bloom path size its bitmap for
+        # its fpp instead of the fixed default geometry
+        scan = bloom_ops.prune_index_by_keys(
+            scan,
+            ["line_hash"],
+            _line_count_table(
+                new_docs, id_col, text_col, delimiter, min_line_chars
+            ),
+            size_hint=plan_size_estimate(new_docs),
+        )
+    return scan.groupBy("line_hash").agg(F.sum("n_docs").alias("n_docs"))
 
 
 def clean_against_line_index(
@@ -626,41 +652,10 @@ def clean_against_line_index(
 
     Output matches ``line_dedup_frame``. Scale shape: O(batch) — the
     batch's line counts left-join the index counts on the hash
-    (shuffle-hash: corpus-sized index, read once, text never read); the
-    per-append counts sum because ingest batches hold disjoint doc sets
-    (the same contract the exact/band/chunk tables rely on).
-
-    Past the broadcast threshold (:func:`memguard.index_past_broadcast`)
-    the index scan is pruned by the batch's line hashes before the count
-    sum (one extra O(batch) line pass; identical output — mechanics:
-    :func:`bloom.prune_index_by_keys`).
+    (shuffle-hash: corpus-sized index, read once, text never read;
+    pruned by the batch past the broadcast threshold, see
+    :func:`_corpus_line_counts`).
     """
-    # project the count columns FIRST: on a keep_text (wide-twin)
-    # layout the payload must never be read for cleaning — the
-    # projection pushes into the parquet scan (column pruning), so the
-    # clean path costs the same on both layouts
-    lp = os.path.join(path, "lines")
-    _read_layout(lp)
-    scan = spark.read.parquet(lp).select("line_hash", "n_docs")
-    if index_past_broadcast(scan):
-        # hint with the batch scan's bytes (like the chunk consumer):
-        # the key frame is an aggregate whose Catalyst estimate is
-        # unreliable, and docs bytes safely over-estimate the line-hash
-        # key set — which also lets the bloom path size its bitmap for
-        # its fpp instead of the fixed default geometry
-        scan = bloom_ops.prune_index_by_keys(
-            scan,
-            ["line_hash"],
-            _line_count_table(
-                new_docs, id_col, text_col, delimiter, min_line_chars
-            ),
-            size_hint=plan_size_estimate(new_docs),
-        )
-    idx = (
-        scan
-        .groupBy("line_hash")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
     return dedup_ops.line_dedup_frame(
         new_docs,
         id_col,
@@ -668,7 +663,9 @@ def clean_against_line_index(
         min_docs=min_docs,
         min_line_chars=min_line_chars,
         delimiter=delimiter,
-        index_counts=idx,
+        index_counts=_corpus_line_counts(
+            spark, new_docs, path, id_col, text_col, delimiter, min_line_chars
+        ),
     )
 
 
@@ -682,14 +679,12 @@ def append_to_line_index(
 ) -> None:
     """Append this batch's per-line distinct-doc counts. Counts sum across
     appends into true corpus counts because batches are doc-disjoint;
-    compact the parquet dir on the lake's schedule to bound re-reads.
-    The wide (keep_text) twin appends wide rows — the layout marker
-    decides, so one caller serves both layouts without schema drift."""
+    compact the parquet dir on the lake's schedule to bound re-reads."""
     lp = os.path.join(path, "lines")
     with index_lease(lp, "append"):
+        _refuse_layout_marker(lp)
         _line_count_table(
-            accepted_docs, id_col, text_col, delimiter, min_line_chars,
-            keep_text=bool(_read_layout(lp).get("keep_text")),
+            accepted_docs, id_col, text_col, delimiter, min_line_chars
         ).write.mode("append").parquet(lp)
 
 
@@ -713,51 +708,31 @@ def boilerplate_lines_report(
     report surfaces of `code/network_monitoring/network_status.py:434-557`,
     which publish what the pipeline DID for operators to inspect).
 
-    Requires the WIDE line index (``build_line_index(keep_text=True)``)
-    — the report never touches corpus text, only the batch's own lines
-    and the index payload. Below the broadcast threshold
-    (:func:`memguard.index_past_broadcast`) it scans the index whole.
-    Past it the scan is pruned by the batch's line hashes: the exact
-    broadcast semi, or, for a batch past the semi budget (a
-    backfill-sized report), the two-phase Bloom probe this wide-payload
-    consumer exists for (r14 verdict #2) — it probes a KEY-ONLY
-    projection of the wide scan and semi-joins survivors back, so line
-    bytes never cross the Arrow boundary (`bloom.prune_index_by_keys`;
-    route observable on the ``tern.bloom_prune.two_phase`` property).
-    Identical report on every route.
+    The report never touches corpus text: each line's text comes from
+    the batch itself, and the index gives only the corpus count per
+    line hash (the same read as the clean path, so it is pruned by the
+    batch past the broadcast threshold). Identical report on every
+    route.
     """
-    lp = os.path.join(path, "lines")
-    if not _read_layout(lp).get("keep_text"):
-        raise ValueError(
-            f"line index at {lp!r} was built without keep_text=True — "
-            "the boilerplate report needs the wide (line_bytes) twin; "
-            "rebuild with build_line_index(..., keep_text=True)"
-        )
-    batch = _line_count_table(
-        new_docs, id_col, text_col, delimiter, min_line_chars,
-        keep_text=True,
-    ).withColumnRenamed("n_docs", "n_docs_batch")
-    scan = spark.read.parquet(lp).select("line_hash", "n_docs", "line_bytes")
-    if index_past_broadcast(scan):
-        scan = bloom_ops.prune_index_by_keys(
-            scan,
-            ["line_hash"],
-            batch.select("line_hash"),
-            size_hint=plan_size_estimate(new_docs),
-        )
-    corpus = scan.groupBy("line_hash").agg(
-        F.sum("n_docs").alias("__n_corpus")
+    # every row of one hash carries the same text (md5 keying), so the
+    # min is exact, not a choice
+    batch = _trimmed_lines(
+        new_docs, id_col, text_col, delimiter, min_line_chars
+    ).groupBy(F.md5("__t").alias("line_hash")).agg(
+        F.countDistinct("__id").alias("n_docs_batch"),
+        F.min("__t").alias("line"),
+    )
+    corpus = _corpus_line_counts(
+        spark, new_docs, path, id_col, text_col, delimiter, min_line_chars
     )
     # batch lines drive the join (O(batch) result); corpus counts come
-    # from the (possibly pruned) index side only — broadcast-hash on
-    # the batch side via the join ordering Catalyst picks for the
-    # aggregated small left
+    # from the (possibly pruned) index side only
     joined = batch.join(corpus, on="line_hash", how="left")
     return (
         joined.select(
-            F.decode("line_bytes", "utf-8").alias("line"),
+            F.col("line"),
             (
-                F.coalesce(F.col("__n_corpus"), F.lit(0))
+                F.coalesce(F.col("n_docs"), F.lit(0))
                 + F.col("n_docs_batch")
             ).alias("n_docs_total"),
             F.col("n_docs_batch"),
@@ -811,30 +786,20 @@ def _meta_row(docs: DataFrame, id_col: str, text_col: str, kind: str) -> DataFra
     )
 
 
-def _read_layout(table_dir: str) -> dict:
-    """The table's layout marker (``_layout.json``), {} when absent.
-    Every append, clean and compact of a gram, chunk or line table reads
-    it, so a marker key this version does not know (an older build's
-    range-partitioned layout) is refused here instead of being appended
-    to or rewritten as flat."""
-    try:
-        with open(os.path.join(table_dir, "_layout.json")) as fh:
-            layout = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    unknown = sorted(set(layout) - {"keep_text"})
-    if unknown:
+def _refuse_layout_marker(table_dir: str) -> None:
+    """Refuse a gram, chunk or line table that carries a layout marker
+    (``_layout.json``). This version writes none, so a marker is an
+    older build's layout (range-partitioned, or the wide line index);
+    every append, read and compact checks here instead of appending to
+    it, reading it or rewriting it as flat. Presence is enough: a
+    corrupt marker is refused too."""
+    if os.path.exists(os.path.join(table_dir, "_layout.json")):
         raise ValueError(
-            f"index table {table_dir!r} carries layout keys {unknown} "
-            "that this version does not read (an older range-partitioned "
-            "build); rebuild the index with its build_*_index function"
+            f"index table {table_dir!r} carries a layout marker "
+            "(_layout.json) from an older build whose layout this version "
+            "does not read; rebuild the index with its build_*_index "
+            "function"
         )
-    return layout
-
-
-def _write_layout(table_dir: str, layout: dict) -> None:
-    with open(os.path.join(table_dir, "_layout.json"), "w") as fh:
-        json.dump(layout, fh)
 
 
 def _write_compact_meta(table_dir: str) -> None:
@@ -1073,7 +1038,7 @@ def clean_against_gram_index(
     it by its own staged batch firsts before that min-combine.
     """
     gp = os.path.join(path, "grams")
-    _read_layout(gp)
+    _refuse_layout_marker(gp)
     if validate_ids:
         meta_path = os.path.join(path, "grams_meta")
         try:
@@ -1130,7 +1095,7 @@ def append_to_gram_index(
     the contract stays enforceable across appends."""
     gp = os.path.join(path, "grams")
     with index_lease(gp, "append"):
-        _read_layout(gp)
+        _refuse_layout_marker(gp)
         _gram_first_table(
             accepted_docs, id_col, text_col, min_tokens, max_doc_tokens
         ).write.mode("append").parquet(gp)
@@ -1547,14 +1512,6 @@ def _rewrite_parquet_dir(
             "rewrite was being written (concurrent append). The live dir "
             "is untouched; re-run compaction with the writer stopped."
         )
-    # the layout marker describes the TABLE's contract (the keep_text
-    # payload), not this file set — it must survive the swap or the next
-    # append/reader would silently treat the table as narrow (surfaced
-    # by the r15 wide line-index twin, whose marker a compaction used to
-    # drop)
-    marker = os.path.join(path, "_layout.json")
-    if os.path.isfile(marker):
-        shutil.copy2(marker, os.path.join(tmp, "_layout.json"))
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
@@ -1648,7 +1605,7 @@ def compact_gram_index(
     gp = os.path.join(path, "grams")
     with index_lease(gp, "compact", wait_s=wait_s):
         recover_interrupted_compaction(gp)
-        _read_layout(gp)
+        _refuse_layout_marker(gp)
         # snapshot BEFORE the read pins its file listing, so an append
         # landing after the read trips the growth guard (ADVICE r9 #3)
         snapshot = _dir_bytes(gp)
@@ -1692,7 +1649,7 @@ def compact_chunk_index(
     cp = os.path.join(path, "chunks")
     with index_lease(cp, "compact", wait_s=wait_s):
         recover_interrupted_compaction(cp)
-        _read_layout(cp)
+        _refuse_layout_marker(cp)
         snapshot = _dir_bytes(cp)
         before = spark.read.parquet(cp)
         rows_before = before.count()
@@ -1713,23 +1670,18 @@ def compact_line_index(
 ) -> dict:
     """Rewrite the line-count table summing ``n_docs`` per hash — the
     same sum ``clean_against_line_index`` applies on read (counts add
-    across doc-disjoint appends), made durable once. The wide
-    (keep_text) twin keeps its payload through compaction: every row of
-    one hash carries identical bytes (md5 keying), so min() is exact,
-    not a choice."""
+    across doc-disjoint appends), made durable once."""
     _require_local_path(path)
     lp = os.path.join(path, "lines")
     with index_lease(lp, "compact", wait_s=wait_s):
-        # heal first: a swap that died mid-rename leaves the layout
-        # marker in the survivor dir
         recover_interrupted_compaction(lp)
-        aggs = [F.sum("n_docs").alias("n_docs")]
-        if _read_layout(lp).get("keep_text"):
-            aggs.append(F.min("line_bytes").alias("line_bytes"))
+        _refuse_layout_marker(lp)
         snapshot = _dir_bytes(lp)
         before = spark.read.parquet(lp)
         rows_before = before.count()
-        agg = before.groupBy("line_hash").agg(*aggs)
+        agg = before.groupBy("line_hash").agg(
+            F.sum("n_docs").alias("n_docs")
+        )
         rows_after = agg.count()
         _rewrite_parquet_dir(
             agg, lp,

@@ -23,6 +23,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .text import _sql_ident
+
 _log = logging.getLogger(__name__)
 
 #: winner-set size above which the forced broadcast derates to the
@@ -66,12 +68,16 @@ def scan_rows_lower_bound(df: DataFrame, row_bytes_upper: int) -> int:
     return max(1, int(size // max(row_bytes_upper, 1)))
 
 
-def hash_bucket(key: Column, salt: str = "smp", buckets: int = 10_000) -> Column:
+def hash_bucket(key_sql: str, salt: str = "smp", buckets: int = 10_000) -> Column:
     """Deterministic bucket in [0, buckets) from md5(salt:key) — the shared
-    portable-hash construction (one definition: sketch.portable_hash)."""
-    from .sketch import portable_hash
+    portable-hash construction (one definition: sketch.portable_hash_sql).
+    ``key_sql`` is an atomic or parenthesized SQL expression; quote a
+    column name with ``text._sql_ident``."""
+    from .sketch import portable_hash_sql
 
-    return (portable_hash(key, salt) % buckets).alias("bucket")
+    return F.expr(f"({portable_hash_sql(key_sql, salt)} % {buckets})").alias(
+        "bucket"
+    )
 
 
 def hash_sample(
@@ -86,7 +92,7 @@ def hash_sample(
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     cut = int(round(fraction * buckets))
-    return df.where(hash_bucket(F.col(key_col), salt, buckets) < cut)
+    return df.where(hash_bucket(_sql_ident(key_col), salt, buckets) < cut)
 
 
 def stratified_hash_sample(
@@ -109,7 +115,7 @@ def stratified_hash_sample(
         expr = F.when(
             F.col(strata_col) == stratum, F.lit(int(round(frac * buckets)))
         ).otherwise(expr)
-    return df.where(hash_bucket(F.col(key_col), salt, buckets) < expr)
+    return df.where(hash_bucket(_sql_ident(key_col), salt, buckets) < expr)
 
 
 def budget_select(
@@ -164,11 +170,11 @@ def weighted_hash_sample(
     once per duplicate). Pre-aggregate to unique keys if exact-``n``
     row semantics are required.
     """
-    from .sketch import _KMV_DOMAIN, portable_hash
+    from .sketch import _KMV_DOMAIN, portable_hash_sql
 
-    u = (portable_hash(F.col(key_col), salt) + 1).cast("double") / F.lit(
-        _KMV_DOMAIN
-    )
+    u = F.expr(
+        f"CAST({portable_hash_sql(_sql_ident(key_col), salt)} + 1 AS DOUBLE)"
+    ) / F.lit(_KMV_DOMAIN)
     scored = df.where(F.col(weight_col) > 0).withColumn(
         "__ws", F.pow(u, 1.0 / F.col(weight_col))
     )
@@ -259,7 +265,7 @@ def temperature_sample(
     )
     return (
         df.join(F.broadcast(cuts), on=strata_col)
-        .where(hash_bucket(F.col(key_col), salt, buckets) < F.col("__cut"))
+        .where(hash_bucket(_sql_ident(key_col), salt, buckets) < F.col("__cut"))
         .drop("__cut")
     )
 
@@ -382,8 +388,7 @@ def leak_free_split(
     joined = df.select(id_col).join(
         comp.hint("shuffle_hash"), on=id_col, how="left"
     )
-    key = F.coalesce(F.col("component"), F.col(id_col))
-    b = hash_bucket(key, salt, buckets)
+    b = hash_bucket(f"coalesce(component, {_sql_ident(id_col)})", salt, buckets)
     expr = F.lit(splits[-1][0])
     acc = 0.0
     cuts = []
@@ -411,7 +416,7 @@ def _dsir_grams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     at sf0.1, twice per ``importance_resample`` call). Counts are exact
     integers, so the result is partition-independent."""
     from .dedup import _fanout
-    from .text import _sql_ident, _sql_tokens
+    from .text import _sql_tokens
 
     # SQL strings: plan-equal to the r15 Column form, pinned in
     # tests/test_sqltwins.py; one selectExpr parse per projection.
@@ -449,9 +454,7 @@ def dsir_logratio(
     ``buckets`` rows, so every downstream use broadcasts it. Totals ride
     in as broadcast one-row frames; no collect.
     """
-    from .sketch import portable_hash
-
-    bcol = (portable_hash(F.col("__g"), salt) % buckets).alias("bucket")
+    bcol = hash_bucket("__g", salt, buckets)
     raw_b = (
         _dsir_grams(raw, id_col, text_col)
         .select(bcol)
@@ -547,7 +550,7 @@ def importance_resample(
     """
     from .dedup import _stage
     from .sketch import portable_hash_sql
-    from .text import _sql_double, _sql_half_away_div, _sql_ident
+    from .text import _sql_double, _sql_half_away_div
 
     # Expressions ride as SQL strings (r16 build batching): plan-equal to
     # the r15 Column form, pinned in tests/test_sqltwins.py.

@@ -22,30 +22,22 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import _sql_ident
+from .text import _sql_ident, _sql_str
 
 #: Hash domain: first 15 hex chars of md5 = 60 bits.
 _KMV_DOMAIN = float(1 << 60)
 
 
 def portable_hash_sql(col_sql: str, salt: str = "kmv") -> str:
-    """SQL twin of :func:`portable_hash` (plan-equal, r16 build batching;
-    pinned in tests/test_sqltwins.py). ``col_sql`` must be an atomic or
-    parenthesized SQL expression."""
+    """Uniform 60-bit integer from md5(salt:value), as a SQL expression —
+    the construction the portable MinHash/sampling paths use;
+    reproducible in any engine. ``col_sql`` must be an atomic or
+    parenthesized SQL expression (quote a column name with
+    ``text._sql_ident``); wrap in ``F.expr`` where a Column is needed."""
     return (
-        f"CAST(conv(substring(md5(concat('{salt}:', "
+        f"CAST(conv(substring(md5(concat({_sql_str(salt + ':')}, "
         f"CAST({col_sql} AS STRING))), 1, 15), 16, 10) AS BIGINT)"
     )
-
-
-def portable_hash(col, salt: str = "kmv"):
-    """Uniform 60-bit integer from md5(salt:value) — same construction the
-    portable MinHash/sampling paths use; reproducible in any engine."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{salt}:"), col.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
 
 
 def kmv_distinct(
@@ -73,7 +65,10 @@ def kmv_distinct(
     # at rank k and silently break oracle parity.
     hashed = (
         df.where(F.col(value_col).isNotNull())
-        .select(*group_cols, portable_hash(F.col(value_col), salt).alias("__hv"))
+        .select(
+            *group_cols,
+            F.expr(portable_hash_sql(_sql_ident(value_col), salt)).alias("__hv"),
+        )
         .distinct()
     )
     w = Window.partitionBy(*group_cols).orderBy("__hv")
@@ -115,9 +110,9 @@ def sampled_quantiles(
 
     Output: group cols + one ``q_<pct>`` column per requested quantile.
     """
-    key = F.col(key_col) if key_col else F.col(value_col)
+    key = portable_hash_sql(_sql_ident(key_col or value_col), salt)
     cut = int(round(fraction * 10_000))
-    sampled = df.where((portable_hash(key, salt) % 10_000) < cut)
+    sampled = df.where(F.expr(f"({key} % 10000) < {cut}"))
     aggs = [
         F.expr(f"percentile({_sql_ident(value_col)}, {q})").alias(
             f"q_{str(q).replace('.', '_')}"

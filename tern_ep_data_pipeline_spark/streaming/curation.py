@@ -83,7 +83,7 @@ def curated_document_stream(
     s = s.where((n >= min_chars) & (n <= max_chars))
     if sample_fraction < 1.0:
         cut = int(round(sample_fraction * 10_000))
-        s = s.where(hash_bucket(F.col(id_col), salt) < cut)
+        s = s.where(hash_bucket(_sql_ident(id_col), salt) < cut)
     if scrub:
         s = s.withColumn(text_col, F.expr(scrub_pii_sql(_sql_ident(text_col))))
     if quality_model_path is not None:

@@ -132,9 +132,7 @@ def _gated_consumer(spark, tmp_path, kind):
         return lambda: di.chunk_stats_against_index(
             spark, batch, path, chunk_tokens=10
         )
-    di.build_line_index(
-        corpus, path, min_line_chars=3, keep_text=kind == "boilerplate"
-    )
+    di.build_line_index(corpus, path, min_line_chars=3)
     read = (
         di.clean_against_line_index if kind == "line"
         else di.boilerplate_lines_report
@@ -215,7 +213,7 @@ def test_bloom_prune_actually_prunes(spark, tmp_path):
         "doc_id long, text string",
     )
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
-    kept = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01).count()
+    kept = bloom.prune_index_by_keys(scan, ["gram_hash"], keys).count()
     assert kept < 0.1 * total, (kept, total)
 
 
@@ -230,8 +228,8 @@ def test_prune_strategies_agree(spark, tmp_path):
     batch = _batch(spark, corpus.collect(), start_id=9000)
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
 
-    semi = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01, strategy="semi")
-    blm = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, 0.01, strategy="bloom")
+    semi = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, strategy="semi")
+    blm = bloom.prune_index_by_keys(scan, ["gram_hash"], keys, strategy="bloom")
     semi_keys = {r["gram_hash"] for r in semi.select("gram_hash").distinct().collect()}
     bloom_keys = {r["gram_hash"] for r in blm.select("gram_hash").distinct().collect()}
     assert semi_keys <= bloom_keys, "bloom must be a superset (no false negatives)"
@@ -248,10 +246,10 @@ def test_prune_strategies_agree(spark, tmp_path):
         for strat in ("semi", "bloom"):
             calls = []
 
-            def forced(idx, kc, kf, fpp=0.01, size_hint=None, strategy="auto",
+            def forced(idx, kc, kf, size_hint=None, strategy="auto",
                        _s=strat, _o=orig, _c=calls):
                 _c.append(1)
-                return _o(idx, kc, kf, fpp=fpp, strategy=_s)
+                return _o(idx, kc, kf, strategy=_s)
 
             # consumers resolve the attribute on the bloom module object at
             # call time, so patching the module attribute reaches them all
@@ -295,26 +293,26 @@ def test_geometry_honors_fpp_at_10m_keys():
 
 def test_prune_threads_expected_from_size_hint(spark, monkeypatch):
     """ADVICE r12 #1: the auto path derives ``expected`` from the byte
-    estimate it already has, so ``fpp`` is honoured on the bloom
+    estimate it already has, so ``PRUNE_FPP`` is honoured on the bloom
     strategy instead of silently using the fixed default geometry."""
     captured = {}
     orig = bloom.build_key_bloom
 
-    def spy(keys, fpp=0.01, expected=None, key_col="__bk"):
+    def spy(keys, fpp=None, expected=None, key_col="__bk"):
         captured["expected"] = expected
         captured["fpp"] = fpp
-        return orig(keys, fpp=fpp, expected=expected, key_col=key_col)
+        return orig(keys, fpp=bloom.PRUNE_FPP, expected=expected, key_col=key_col)
 
     monkeypatch.setattr(bloom, "build_key_bloom", spy)
     idx = spark.range(100).select(F.col("id").alias("k"))
     keys = spark.range(50).select(F.col("id").alias("k"))
     hint = 64 << 20  # past the semi gate ⇒ bloom strategy
-    bloom.prune_index_by_keys(idx, ["k"], keys, fpp=0.005, size_hint=hint).count()
-    assert captured["fpp"] == 0.005
+    bloom.prune_index_by_keys(idx, ["k"], keys, size_hint=hint).count()
+    assert captured["fpp"] == bloom.PRUNE_FPP
     row_bytes = bloom._est_row_bytes(keys.schema)
     assert captured["expected"] == hint // row_bytes
     # and the geometry actually differs from the fixed default
-    bits, hashes = bloom._geometry(captured["expected"], 0.005)
+    bits, hashes = bloom._geometry(captured["expected"], bloom.PRUNE_FPP)
     assert (bits, hashes) != (bloom._DEFAULT_BITS, bloom._DEFAULT_HASHES)
 
 
@@ -328,9 +326,7 @@ def test_prune_warns_when_bitmap_cap_saturates(spark):
     keys = spark.range(50).select(F.col("id").alias("k"))
     with _warnings.catch_warnings(record=True) as rec:
         _warnings.simplefilter("always")
-        bloom.prune_index_by_keys(
-            idx, ["k"], keys, fpp=0.01, size_hint=1 << 40
-        ).count()
+        bloom.prune_index_by_keys(idx, ["k"], keys, size_hint=1 << 40).count()
     msgs = [str(w.message) for w in rec if w.category is RuntimeWarning]
     assert any("largely stopped pruning" in m for m in msgs), msgs
 
@@ -353,137 +349,6 @@ def test_prune_by_bloom_key_column_collision(spark):
     rows = {(r["k"], r["__bk"]) for r in out.collect()}
     assert (1, "payload-a") in rows and (3, "payload-c") in rows
     assert out.columns == ["k", "__bk"], "payload __bk column must survive"
-
-
-def test_wide_payload_routes_two_phase(spark, monkeypatch):
-    """r12 verdict #1b (refined by the r13 microbench): rows with a
-    VARIABLE-WIDTH-heavy payload (strings/binary — per-byte Arrow
-    copies) are probed through a KEY-ONLY projection, while fixed-width
-    payloads of any size (numeric arrays — flat Arrow buffers, measured
-    faster direct) stay on the direct probe; the surviving row set is
-    identical either way."""
-    wide = spark.range(200).selectExpr(
-        "id as k",
-        # binary payload: schema-estimated var-width heavy (the gate is
-        # a plan-time schema estimate — Catalyst default sizes)
-        "cast(repeat(cast(id as string), 40) as binary) as payload",
-        "array_repeat(id, 32) as sig",
-    )
-    assert (
-        bloom._est_varwidth_bytes(wide.schema)
-        - bloom._est_varwidth_bytes(wide.select("k").schema)
-        > bloom.WIDE_PAYLOAD_BYTES
-    )
-    # fixed-width-only payload must NOT trip the gate, however big
-    fixed = spark.range(10).selectExpr("id as k", "array_repeat(id, 64) as sig")
-    assert (
-        bloom._est_varwidth_bytes(fixed.schema)
-        - bloom._est_varwidth_bytes(fixed.select("k").schema)
-        == 0
-    )
-    keys = spark.range(0, 200, 7).select(F.col("id").alias("k"))
-
-    probed_cols = []
-    orig = bloom.prune_by_bloom
-
-    def spy(df, key, spec):
-        probed_cols.append(list(df.columns))
-        return orig(df, key, spec)
-
-    monkeypatch.setattr(bloom, "prune_by_bloom", spy)
-    got = bloom.prune_index_by_keys(wide, ["k"], keys, strategy="bloom")
-    got_rows = {r["k"] for r in got.select("k").collect()}
-    assert probed_cols == [["k"]], "Arrow probe must see the key column only"
-    # no false negatives: every true member row survives with payload
-    assert {r["id"] for r in keys.withColumnRenamed("k", "id").collect()} <= got_rows
-    assert set(got.columns) == {"k", "payload", "sig"}
-
-    # the fixed-width frame routes DIRECT (probe sees all columns)
-    probed_cols.clear()
-    bloom.prune_index_by_keys(fixed, ["k"], keys, strategy="bloom").count()
-    assert probed_cols == [["k", "sig"]], "fixed-width payload stays direct"
-
-    # and the direct probe keeps exactly the same rows as two-phase
-    monkeypatch.setattr(bloom, "WIDE_PAYLOAD_BYTES", 1 << 30)
-    direct = bloom.prune_index_by_keys(wide, ["k"], keys, strategy="bloom")
-    assert {r["k"] for r in direct.select("k").collect()} == got_rows
-
-
-def test_two_phase_declines_oversized_broadcast(spark, monkeypatch):
-    """ADVICE r13 (medium): the two-phase broadcast is gated on an
-    ESTIMATED survivor size — batch keys plus fpp x index keys — not
-    the docstring's old '~batch-sized' assumption. A key-set estimate
-    past the broadcast budget routes back to the DIRECT probe (bounded
-    memory, identical surviving rows) and records the decline."""
-    wide = spark.range(500).selectExpr(
-        "id as k",
-        "cast(repeat(cast(id as string), 40) as binary) as payload",
-    )
-    keys = spark.range(0, 500, 9).select(F.col("id").alias("k"))
-
-    probed_cols = []
-    orig = bloom.prune_by_bloom
-
-    def spy(df, key, spec):
-        probed_cols.append(list(df.columns))
-        return orig(df, key, spec)
-
-    monkeypatch.setattr(bloom, "prune_by_bloom", spy)
-    sc = spark.sparkContext
-
-    # a size_hint claiming ~100M batch keys makes the survivor estimate
-    # blow the 32 MiB broadcast budget -> direct probe (all columns)
-    got = bloom.prune_index_by_keys(
-        wide, ["k"], keys, strategy="bloom", size_hint=1 << 31
-    )
-    rows = {r["k"] for r in got.select("k").collect()}
-    assert probed_cols == [["k", "payload"]], "oversized survivors => direct"
-    assert sc.getLocalProperty("tern.bloom_prune.two_phase").startswith(
-        "declined-survivor-estimate:"
-    )
-    assert {r["k"] for r in keys.collect()} <= rows
-
-    # small, estimable key set: broadcast two-phase as before (row sets
-    # are compared against true members only — the two runs size their
-    # bitmaps from different expected-key counts, so their false-
-    # positive sets legitimately differ)
-    probed_cols.clear()
-    small = bloom.prune_index_by_keys(wide, ["k"], keys, strategy="bloom")
-    assert probed_cols == [["k"]]
-    assert sc.getLocalProperty("tern.bloom_prune.two_phase") == "broadcast"
-    assert {r["k"] for r in keys.collect()} <= {
-        r["k"] for r in small.select("k").collect()
-    }
-
-
-def test_two_phase_property_resets_on_narrow_payload(spark):
-    """ADVICE r14: the tern.bloom_prune.two_phase local property is
-    written UNCONDITIONALLY at prune entry — a narrow-payload (direct)
-    call after a wide-payload one must not leave the previous call's
-    'broadcast'/'declined' value readable, or a bench sampling the
-    property after a mixed sequence records a stale route."""
-    sc = spark.sparkContext
-    wide = spark.range(100).selectExpr(
-        "id as k", "cast(repeat(cast(id as string), 40) as binary) as payload"
-    )
-    narrow = spark.range(100).selectExpr("id as k", "id * 2 as v")
-    keys = spark.range(0, 100, 7).select(F.col("id").alias("k"))
-
-    bloom.prune_index_by_keys(wide, ["k"], keys, strategy="bloom").count()
-    assert sc.getLocalProperty("tern.bloom_prune.two_phase") == "broadcast"
-
-    bloom.prune_index_by_keys(narrow, ["k"], keys, strategy="bloom").count()
-    assert (
-        sc.getLocalProperty("tern.bloom_prune.two_phase")
-        == "direct-narrow-payload"
-    ), "stale two-phase route survived a narrow-payload call"
-
-    # the semi strategy never consults the wide-payload branch either
-    bloom.prune_index_by_keys(wide, ["k"], keys, strategy="semi").count()
-    assert (
-        sc.getLocalProperty("tern.bloom_prune.two_phase")
-        == "direct-narrow-payload"
-    )
 
 
 def test_match_index_semi_prune_regime_gate(spark, tmp_path):

@@ -1809,19 +1809,16 @@ def test_incremental_line_index(spark, tmp_path):
 
 
 def test_wide_line_index_boilerplate_report(spark, tmp_path, monkeypatch):
-    """r14 verdict #2: the wide (keep_text) line-index twin and its
-    consumer. Pins: (a) the report names the boilerplate as TEXT with
-    combined corpus+batch counts, hottest first; (b) the clean path is
-    bit-identical on wide vs narrow layouts (payload never read); (c)
-    appends and compaction preserve the payload through the layout
-    marker; (d) a narrow index refuses the report loudly; (e) in the
-    bloom regime the wide payload routes the two-phase key-only probe
-    ('broadcast' on the route property) with an identical report."""
+    """The boilerplate report over the one (line_hash, n_docs) line
+    index. Pins: (a) the report names the boilerplate as TEXT taken from
+    the batch, with combined corpus+batch counts, hottest first; (b) an
+    append and a compaction keep the summed counts; (c) with the Bloom
+    strategy forced past the prune gate the report is identical to the
+    un-pruned one."""
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         append_to_line_index,
         boilerplate_lines_report,
         build_line_index,
-        clean_against_line_index,
         compact_line_index,
     )
 
@@ -1833,10 +1830,9 @@ def test_wide_line_index_boilerplate_report(spark, tmp_path, monkeypatch):
         ],
         ["doc_id", "text"],
     )
-    wide = str(tmp_path / "wide")
-    narrow = str(tmp_path / "narrow")
-    assert build_line_index(corpus, wide, keep_text=True) == 5
-    assert build_line_index(corpus, narrow) == 5
+    path = str(tmp_path / "lines_idx")
+    assert build_line_index(corpus, path) == 5
+    assert spark.read.parquet(path + "/lines").columns == ["line_hash", "n_docs"]
 
     batch = spark.createDataFrame(
         [
@@ -1846,77 +1842,49 @@ def test_wide_line_index_boilerplate_report(spark, tmp_path, monkeypatch):
         ],
         ["doc_id", "text"],
     )
-    # (b) clean decisions identical across layouts
-    via_wide = sorted(
-        map(tuple, clean_against_line_index(spark, batch, wide).collect())
-    )
-    via_narrow = sorted(
-        map(tuple, clean_against_line_index(spark, batch, narrow).collect())
-    )
-    assert via_wide == via_narrow
-
     # (a) the report: banner 2+1=3 docs, rights 2+1=3, bodies below cut
-    rep = boilerplate_lines_report(spark, batch, wide, min_docs=3).collect()
+    rep = boilerplate_lines_report(spark, batch, path, min_docs=3).collect()
     assert [(r["line"], r["n_docs_total"], r["n_docs_batch"]) for r in rep] \
         == [("ALL RIGHTS RESERVED", 3, 1), ("COOKIE BANNER", 3, 1)]
 
-    # (d) narrow layout refuses loudly
-    with pytest.raises(ValueError, match="keep_text"):
-        boilerplate_lines_report(spark, batch, narrow)
-
-    # (c) append + compact keep the payload (and the counts sum), also
-    # when the compaction first heals a swap that died between renames
-    # (the marker is in the survivor dir until the heal)
-    import os
-    import shutil
-
-    append_to_line_index(batch, wide)
-    lp = os.path.join(wide, "lines")
-    os.rename(lp, lp + ".compact-old")
-    shutil.copytree(lp + ".compact-old", lp + ".compact-tmp")
-    stats = compact_line_index(spark, wide)
+    # (b) append + compact: the counts sum
+    append_to_line_index(batch, path)
+    stats = compact_line_index(spark, path)
     assert stats["rows_after"] < stats["rows_before"]
-    cols = spark.read.parquet(wide + "/lines").columns
-    assert "line_bytes" in cols
     rep2 = boilerplate_lines_report(
         spark,
         spark.createDataFrame([(20, "COOKIE BANNER\nlast body")],
                               ["doc_id", "text"]),
-        wide, min_docs=4,
+        path, min_docs=4,
     ).collect()
     assert [(r["line"], r["n_docs_total"]) for r in rep2] == [
         ("COOKIE BANNER", 4)
     ]
 
-    # (e) bloom regime: past the gate (threshold -1), with the Bloom
-    # strategy forced at the prune_index_by_keys seam, the wide payload
-    # routes the two-phase probe and the report is identical to the
-    # un-pruned one. The batch reads from parquet so the survivor-size
-    # gate has a real plan estimate (an in-memory LocalRelation
-    # estimates as unknown and the gate correctly declines to DIRECT —
-    # still exact, but not the route this pin is about).
+    # (c) past the gate (threshold -1), with the Bloom strategy forced
+    # at the prune_index_by_keys seam, the report is identical to the
+    # un-pruned one
     from tern_ep_data_pipeline_spark.operators import bloom
 
-    sc = spark.sparkContext
-    bpath = str(tmp_path / "batch_pq")
-    batch.write.parquet(bpath)
-    batch_pq = spark.read.parquet(bpath)
+    calls = []
     orig = bloom.prune_index_by_keys
-    monkeypatch.setattr(
-        bloom, "prune_index_by_keys",
-        lambda *a, **kw: orig(*a, **{**kw, "strategy": "bloom"}),
-    )
+
+    def forced(*a, **kw):
+        calls.append(1)
+        return orig(*a, **{**kw, "strategy": "bloom"})
+
+    monkeypatch.setattr(bloom, "prune_index_by_keys", forced)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         rep_bloom = boilerplate_lines_report(
-            spark, batch_pq, wide, min_docs=3
+            spark, batch, path, min_docs=3
         ).collect()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert sc.getLocalProperty("tern.bloom_prune.two_phase") == "broadcast"
+    assert calls, "the Bloom prune was not exercised"
     rep_plain = boilerplate_lines_report(
-        spark, batch, wide, min_docs=3
+        spark, batch, path, min_docs=3
     ).collect()
     assert rep_bloom == rep_plain
 
@@ -3058,38 +3026,42 @@ def test_compaction_records_clean_watermark(spark, tmp_path):
 
 
 def test_old_range_partitioned_marker_refused(spark, tmp_path):
-    """A gram, chunk or line table whose layout marker carries a key this
-    version does not read (an older range-partitioned build) is refused
-    by append, clean and compact alike, before anything is written."""
-    import json
+    """A gram, chunk or line table that still carries a layout marker
+    from an older build (range-partitioned, the wide line index's
+    ``{"keep_text": true}``, or a marker that is not JSON at all) is
+    refused by append, clean, report and compact alike, before anything
+    is written."""
     import os
 
     from tern_ep_data_pipeline_spark.operators import dedup_index as di
 
-    path = str(tmp_path / "old_idx")
-    for table in ("grams", "chunks", "lines"):
-        os.makedirs(os.path.join(path, table))
-        with open(os.path.join(path, table, "_layout.json"), "w") as fh:
-            json.dump({"range_partitions": 4}, fh)
     docs = spark.createDataFrame(
         [(1, " ".join(f"od{i}" for i in range(12)))], ["doc_id", "text"]
     )
-    calls = [
-        lambda: di.append_to_gram_index(docs, path),
-        lambda: di.append_to_chunk_index(docs, path),
-        lambda: di.append_to_line_index(docs, path),
-        lambda: di.clean_against_gram_index(spark, docs, path),
-        lambda: di.chunk_stats_against_index(spark, docs, path),
-        lambda: di.clean_against_line_index(spark, docs, path),
-        lambda: di.compact_gram_index(spark, path),
-        lambda: di.compact_chunk_index(spark, path),
-        lambda: di.compact_line_index(spark, path),
-    ]
-    for call in calls:
-        with pytest.raises(ValueError, match="rebuild the index"):
-            call()
-    for table in ("grams", "chunks", "lines"):
-        assert os.listdir(os.path.join(path, table)) == ["_layout.json"]
+    markers = ['{"range_partitions": 4}', '{"keep_text": true}', "{not json"]
+    for n, marker in enumerate(markers):
+        path = str(tmp_path / f"old_idx{n}")
+        for table in ("grams", "chunks", "lines"):
+            os.makedirs(os.path.join(path, table))
+            with open(os.path.join(path, table, "_layout.json"), "w") as fh:
+                fh.write(marker)
+        calls = [
+            lambda: di.append_to_gram_index(docs, path),
+            lambda: di.append_to_chunk_index(docs, path),
+            lambda: di.append_to_line_index(docs, path),
+            lambda: di.clean_against_gram_index(spark, docs, path),
+            lambda: di.chunk_stats_against_index(spark, docs, path),
+            lambda: di.clean_against_line_index(spark, docs, path),
+            lambda: di.boilerplate_lines_report(spark, docs, path),
+            lambda: di.compact_gram_index(spark, path),
+            lambda: di.compact_chunk_index(spark, path),
+            lambda: di.compact_line_index(spark, path),
+        ]
+        for call in calls:
+            with pytest.raises(ValueError, match="rebuild the index"):
+                call()
+        for table in ("grams", "chunks", "lines"):
+            assert os.listdir(os.path.join(path, table)) == ["_layout.json"]
 
 
 def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path):

@@ -77,13 +77,9 @@ def test_dsir_logratio_shape_and_sign(spark):
     assert 0 < len(rows) <= 512
     # the sci vocabulary dominates its buckets in the target; web grams
     # never appear there — their buckets must score below the sci ones
-    from tern_ep_data_pipeline_spark.operators.sketch import portable_hash
-
     probe = spark.createDataFrame(
         [("alpha beta",), ("omega psi",)], "g string"
-    ).select(
-        "g", (portable_hash(F.col("g"), "dsir") % 512).alias("bucket")
-    )
+    ).select("g", sampling.hash_bucket("g", "dsir", 512))
     scored = {r["g"]: r["lr_pico"] for r in probe.join(lr, on="bucket").collect()}
     assert scored["alpha beta"] > 0 > scored["omega psi"], scored
 
@@ -313,8 +309,8 @@ def test_dsir_stream_scoring_matches_batch(spark, tmp_path):
     from tern_ep_data_pipeline_spark.operators.sampling import (
         _dsir_grams,
         dsir_logratio,
+        hash_bucket,
     )
-    from tern_ep_data_pipeline_spark.operators.sketch import portable_hash
     from tern_ep_data_pipeline_spark.operators.text import half_away_div
     from tern_ep_data_pipeline_spark.streaming.curation import (
         dsir_scored_stream,
@@ -328,7 +324,7 @@ def test_dsir_stream_scoring_matches_batch(spark, tmp_path):
 
     lr = dsir_logratio(docs, target, buckets=256)
     gb = _dsir_grams(docs, "doc_id", "text").select(
-        "doc_id", (portable_hash(F.col("__g"), "dsir") % 256).alias("bucket")
+        "doc_id", hash_bucket("__g", "dsir", 256)
     )
     batch = {
         r["doc_id"]: r["m"]

@@ -135,8 +135,16 @@ def _ref_importance_resample_subset(raw, target, k, id_col, text_col,
     """Verbatim r15 Column-form of sampling.importance_resample
     (target_subset_of_raw=True), minus the _stage persist (plan-equality
     is checked persist-free on both sides)."""
-    from tern_ep_data_pipeline_spark.operators.sketch import portable_hash
     from tern_ep_data_pipeline_spark.operators.text import half_away_div
+
+    def portable_hash(col, salt):
+        return F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit(f"{salt}:"), col.cast("string"))), 1, 15
+            ),
+            16,
+            10,
+        ).cast("bigint")
 
     bcol = (portable_hash(F.col("__g"), salt) % buckets).alias("bucket")
     gb = _ref_dsir_grams(raw, id_col, text_col).select(F.col(id_col), bcol)
@@ -223,16 +231,4 @@ def test_tfidf_top_terms_plan_equal(docs):
     assert _same(
         _ref_tfidf_top_terms(docs, "doc_id", "text", 3),
         text.tfidf_top_terms(docs, "doc_id", "text", 3),
-    )
-
-
-def test_portable_hash_sql_plan_equal(docs):
-    from tern_ep_data_pipeline_spark.operators.sketch import (
-        portable_hash,
-        portable_hash_sql,
-    )
-
-    assert _same(
-        docs.select(portable_hash(F.col("doc_id"), "dsir").alias("h")),
-        docs.selectExpr(f"{portable_hash_sql('doc_id', 'dsir')} AS h"),
     )
