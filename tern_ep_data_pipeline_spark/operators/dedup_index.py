@@ -13,33 +13,41 @@ MinHash signature agreement; everything else is fresh. Appending the
 accepted batch's rows keeps the index current — each ingest batch costs
 O(batch), not O(corpus).
 
-Every table is a plain parquet directory: a reader needs no catalog
-entry, so an index survives a session restart as its files. Compaction
-swaps directories with local renames; once a batch's index scan would
-pass the broadcast threshold, the match classifier semi-joins the index
-by the batch's own keys so only O(batch) rows shuffle (see
-:func:`_match_frames`).
+Every table is a set of immutable parquet files listed by the root's
+numbered manifests (:mod:`index_log`): a reader needs no catalog entry,
+so an index survives a session restart as its files. Every build,
+append and compaction is one commit that creates the next manifest,
+with no rename, on a local disk or an object store alike; once a
+batch's index scan would pass the broadcast threshold, the match
+classifier semi-joins the index by the batch's own keys so only
+O(batch) rows shuffle (see :func:`_match_frames`).
 """
 
 from __future__ import annotations
 
-import contextlib
 import functools
-import itertools
-import json
-import os
 import re
-import shutil
-import socket
-import threading
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import bloom as bloom_ops
 from . import dedup as dedup_ops
+from . import index_log
 from .memguard import index_past_broadcast, plan_size_estimate
+
+
+def _commit_writes(
+    path: str, frames: dict[str, DataFrame], op: str = "append"
+) -> index_log.Snapshot:
+    """Write each ``table -> frame`` and commit them as one version of
+    ``path``. The writes depend on nothing the index holds, so the commit
+    is blind: it lands on whatever version is newest. The root's layout
+    is checked before anything is written."""
+    spark = next(iter(frames.values())).sparkSession
+    index_log.snapshot(spark, path)
+    adds = [index_log.write(df, path, table) for table, df in frames.items()]
+    return index_log.commit(spark, path, None, adds, op=op)
 
 
 def _exact_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -86,17 +94,29 @@ def build_dedup_index(
     bands: int = 8,
     hash_mode: str = "fast",
 ) -> dict:
-    """Materialise the index for an (already deduplicated) corpus."""
-    _exact_table(docs, id_col, text_col).write.mode("overwrite").parquet(
-        os.path.join(path, "exact")
+    """Materialise the index for an (already deduplicated) corpus: both
+    tables replace what the root held, in one commit."""
+    snap = _commit_writes(
+        path,
+        _match_tables(docs, id_col, text_col, n, num_hashes, bands, hash_mode),
+        op="overwrite",
     )
-    _band_table(docs, id_col, text_col, n, num_hashes, bands, hash_mode).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "bands"))
-    spark = docs.sparkSession
+    return {"exact_rows": snap.rows("exact"), "band_rows": snap.rows("bands")}
+
+
+def _match_tables(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    bands: int,
+    hash_mode: str,
+) -> dict[str, DataFrame]:
+    """The two tables' rows of ``docs``."""
     return {
-        "exact_rows": spark.read.parquet(os.path.join(path, "exact")).count(),
-        "band_rows": spark.read.parquet(os.path.join(path, "bands")).count(),
+        "exact": _exact_table(docs, id_col, text_col),
+        "bands": _band_table(docs, id_col, text_col, n, num_hashes, bands, hash_mode),
     }
 
 
@@ -144,12 +164,13 @@ def match_against_index(
     batch, an exact semi-join prune engages instead — see
     :func:`_match_frames`.
     """
+    snap = index_log.snapshot(spark, path)
     return _match_frames(
         *_batch_frames(
             new_docs, id_col, text_col, n, num_hashes, bands, hash_mode
         ),
-        spark.read.parquet(os.path.join(path, "exact")),
-        spark.read.parquet(os.path.join(path, "bands")),
+        index_log.scan(spark, path, "exact", snap),
+        index_log.scan(spark, path, "bands", snap),
         num_hashes, min_band_matches, min_est_jaccard, max_bucket,
         cap_stats,
     )
@@ -210,7 +231,7 @@ def _match_frames(
     cap_stats: dict | None = None,
 ) -> DataFrame:
     """The core of :func:`match_against_index`: the batch arrives as the
-    two frames of :func:`_batch_frames`, the index as its two parquet
+    two frames of :func:`_batch_frames`, the index as its two table
     scans.
 
     Regime gate (:func:`memguard.index_past_broadcast` on the bands
@@ -350,26 +371,15 @@ def _match_frames(
     )
 
 
-def _append_index_rows(rows: DataFrame, leg: str, path: str) -> None:
-    """Append precomputed ``exact`` or ``bands`` rows to ``<path>/<leg>``,
-    one leg of the match index. The one write path of the public
-    ``append_*`` functions and :func:`match_dedup_batch`."""
-    rows.write.mode("append").parquet(os.path.join(path, leg))
-
-
 def append_exact_to_index(
     accepted_docs: DataFrame,
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """The exact-table leg of :func:`append_to_index`, separable so a
-    retrying caller can make EACH leg independently idempotent (ADVICE
-    r13: the two legs are two separate write jobs — a crash between
-    them must be healable per leg, not skipped whole)."""
-    _append_index_rows(
-        _exact_table(accepted_docs, id_col, text_col), "exact", path
-    )
+    """The exact-table leg of :func:`append_to_index` alone, as its own
+    commit."""
+    _commit_writes(path, {"exact": _exact_table(accepted_docs, id_col, text_col)})
 
 
 def append_bands_to_index(
@@ -382,14 +392,13 @@ def append_bands_to_index(
     bands: int = 8,
     hash_mode: str = "fast",
 ) -> None:
-    """The bands-table leg of :func:`append_to_index` (see
-    :func:`append_exact_to_index` for why the legs are separable)."""
-    _append_index_rows(
-        _band_table(
-            accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
-        ),
-        "bands",
+    """The bands-table leg of :func:`append_to_index` alone, as its own
+    commit."""
+    _commit_writes(
         path,
+        {"bands": _band_table(
+            accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+        )},
     )
 
 
@@ -403,11 +412,11 @@ def append_to_index(
     bands: int = 8,
     hash_mode: str = "fast",
 ) -> None:
-    """Append accepted (fresh) docs' rows so later batches see them."""
-    append_exact_to_index(accepted_docs, path, id_col, text_col)
-    append_bands_to_index(
-        accepted_docs, path, id_col, text_col, n, num_hashes, bands, hash_mode
-    )
+    """Append accepted (fresh) docs' rows so later batches see them:
+    both tables in one commit, so no reader sees one without the other."""
+    _commit_writes(path, _match_tables(
+        accepted_docs, id_col, text_col, n, num_hashes, bands, hash_mode
+    ))
 
 
 # ------------------------------------------------ chunk-level (sub-document)
@@ -433,11 +442,12 @@ def build_chunk_index(
 ) -> int:
     """Materialise the sub-document chunk index next to the exact/band
     tables; returns the distinct-chunk count."""
-    cp = os.path.join(path, "chunks")
-    _chunk_table(docs, id_col, text_col, chunk_tokens).write.mode(
-        "overwrite"
-    ).parquet(cp)
-    return docs.sparkSession.read.parquet(cp).count()
+    snap = _commit_writes(
+        path,
+        {"chunks": _chunk_table(docs, id_col, text_col, chunk_tokens)},
+        op="overwrite",
+    )
+    return snap.rows("chunks")
 
 
 def chunk_stats_against_index(
@@ -469,9 +479,9 @@ def chunk_stats_against_index(
     ~O(batch) candidate hashes instead of the whole index; the rows are
     the same either way.
     """
-    cp = os.path.join(path, "chunks")
-    _refuse_layout_marker(cp)
-    raw = spark.read.parquet(cp).select(F.col("chunk_hash").alias("__h"))
+    raw = index_log.scan(spark, path, "chunks").select(
+        F.col("chunk_hash").alias("__h")
+    )
     occ = (
         dedup_ops.chunk_frame(new_docs, id_col, text_col, chunk_tokens)
         .select(
@@ -484,7 +494,7 @@ def chunk_stats_against_index(
         )
     )
     occ = dedup_ops._stage(occ)
-    # distinct BEFORE the left join: the index accumulates parquet appends
+    # distinct BEFORE the left join: the index accumulates appends
     # and the same chunk_hash routinely lands in several of them (accepted
     # docs below the gate still carry already-indexed chunks); a plain left
     # join would multiply each matching occurrence row per index copy,
@@ -533,13 +543,11 @@ def append_to_chunk_index(
     """Append accepted docs' distinct chunk hashes. Each append is distinct
     WITHIN itself only — the same hash recurs across appends, which is why
     :func:`chunk_stats_against_index` distincts the index before joining
-    (compact the parquet dir on the lake's schedule to bound re-reads)."""
-    cp = os.path.join(path, "chunks")
-    with index_lease(cp, "append"):
-        _refuse_layout_marker(cp)
-        _chunk_table(accepted_docs, id_col, text_col, chunk_tokens).write.mode(
-            "append"
-        ).parquet(cp)
+    (:func:`compact_chunk_index` on the lake's schedule bounds re-reads)."""
+    _commit_writes(
+        path,
+        {"chunks": _chunk_table(accepted_docs, id_col, text_col, chunk_tokens)},
+    )
 
 
 # ------------------------------------------------- line (boilerplate) index
@@ -591,11 +599,14 @@ def build_line_index(
     distinct-line count. The index holds (line_hash, n_docs) only: no
     reader needs the corpus's line text (:func:`boilerplate_lines_report`
     takes it from the batch)."""
-    lp = os.path.join(path, "lines")
-    _line_count_table(
-        docs, id_col, text_col, delimiter, min_line_chars
-    ).write.mode("overwrite").parquet(lp)
-    return docs.sparkSession.read.parquet(lp).count()
+    snap = _commit_writes(
+        path,
+        {"lines": _line_count_table(
+            docs, id_col, text_col, delimiter, min_line_chars
+        )},
+        op="overwrite",
+    )
+    return snap.rows("lines")
 
 
 def _corpus_line_counts(
@@ -614,9 +625,7 @@ def _corpus_line_counts(
     pruned by the batch's line hashes (one extra O(batch) line pass;
     identical counts for every batch line — mechanics:
     :func:`bloom.prune_index_by_keys`)."""
-    lp = os.path.join(path, "lines")
-    _refuse_layout_marker(lp)
-    scan = spark.read.parquet(lp).select("line_hash", "n_docs")
+    scan = index_log.scan(spark, path, "lines").select("line_hash", "n_docs")
     if index_past_broadcast(scan):
         # hint with the batch scan's bytes (like the chunk consumer):
         # the key frame is an aggregate whose Catalyst estimate is
@@ -679,13 +688,13 @@ def append_to_line_index(
 ) -> None:
     """Append this batch's per-line distinct-doc counts. Counts sum across
     appends into true corpus counts because batches are doc-disjoint;
-    compact the parquet dir on the lake's schedule to bound re-reads."""
-    lp = os.path.join(path, "lines")
-    with index_lease(lp, "append"):
-        _refuse_layout_marker(lp)
-        _line_count_table(
+    :func:`compact_line_index` on the lake's schedule bounds re-reads."""
+    _commit_writes(
+        path,
+        {"lines": _line_count_table(
             accepted_docs, id_col, text_col, delimiter, min_line_chars
-        ).write.mode("append").parquet(lp)
+        )},
+    )
 
 
 def boilerplate_lines_report(
@@ -786,39 +795,13 @@ def _meta_row(docs: DataFrame, id_col: str, text_col: str, kind: str) -> DataFra
     )
 
 
-def _refuse_layout_marker(table_dir: str) -> None:
-    """Refuse a gram, chunk or line table that carries a layout marker
-    (``_layout.json``). This version writes none, so a marker is an
-    older build's layout (range-partitioned, or the wide line index);
-    every append, read and compact checks here instead of appending to
-    it, reading it or rewriting it as flat. Presence is enough: a
-    corrupt marker is refused too."""
-    if os.path.exists(os.path.join(table_dir, "_layout.json")):
-        raise ValueError(
-            f"index table {table_dir!r} carries a layout marker "
-            "(_layout.json) from an older build whose layout this version "
-            "does not read; rebuild the index with its build_*_index "
-            "function"
-        )
-
-
-def _write_compact_meta(table_dir: str) -> None:
-    """Record the table's byte size at compaction time — the clean
-    watermark :func:`dirty_fraction` compares appends against."""
-    with open(os.path.join(table_dir, "_compact_meta.json"), "w") as fh:
-        json.dump({"bytes": _dir_bytes(table_dir)}, fh)
-
-
-def dirty_fraction(table_dir: str) -> float:
-    """The fraction of the table's bytes appended since its last
-    compaction (1.0 when never compacted)."""
-    cur = _dir_bytes(table_dir)
-    try:
-        with open(os.path.join(table_dir, "_compact_meta.json")) as fh:
-            clean = int(json.load(fh)["bytes"])
-    except (OSError, ValueError, KeyError):
-        return 1.0
-    return max(cur - clean, 0) / cur if cur else 0.0
+def dirty_fraction(spark: SparkSession, path: str, table: str) -> float:
+    """The fraction of ``table``'s live bytes that no compaction wrote
+    (1.0 when never compacted), from the newest manifest."""
+    files = index_log.snapshot(spark, path).files(table)
+    total = sum(f["bytes"] for f in files)
+    dirty = sum(f["bytes"] for f in files if not f["compacted"])
+    return dirty / total if total else 0.0
 
 
 def build_gram_index(
@@ -893,14 +876,11 @@ def build_gram_index(
                 docs, path, id_col, text_col, min_tokens, max_doc_tokens,
                 passes,
             )
-    gp = os.path.join(path, "grams")
-    _gram_first_table(
-        docs, id_col, text_col, min_tokens, max_doc_tokens
-    ).write.mode("overwrite").parquet(gp)
-    _meta_row(docs, id_col, text_col, "build").write.mode("overwrite").parquet(
-        os.path.join(path, "grams_meta")
-    )
-    return spark.read.parquet(gp).count()
+    return _commit_writes(
+        path,
+        _gram_tables(docs, id_col, text_col, min_tokens, max_doc_tokens, "build"),
+        op="overwrite",
+    ).rows("grams")
 
 
 def _build_gram_index_chunked(
@@ -940,12 +920,13 @@ def _build_gram_index_chunked(
         if part.limit(1).count() == 0:
             continue  # approx cuts can produce an empty edge slice
         if first:
-            _gram_first_table(
-                part, id_col, text_col, min_tokens, max_doc_tokens
-            ).write.mode("overwrite").parquet(os.path.join(path, "grams"))
-            _meta_row(part, id_col, text_col, "build").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "grams_meta"))
+            _commit_writes(
+                path,
+                _gram_tables(
+                    part, id_col, text_col, min_tokens, max_doc_tokens, "build"
+                ),
+                op="overwrite",
+            )
             first = False
         else:
             append_to_gram_index(
@@ -953,7 +934,7 @@ def _build_gram_index_chunked(
                 min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
             )
     return (
-        docs.sparkSession.read.parquet(os.path.join(path, "grams"))
+        index_log.scan(docs.sparkSession, path, "grams")
         .select("gram_hash")
         .distinct()
         .count()
@@ -966,11 +947,9 @@ def _validate_gram_ids(
     """The id-monotonicity check (see :func:`clean_against_gram_index`
     for the contract): ``meta`` is a list of (min, max, kind,
     fingerprint) rows. The replay carve-out requires the batch content
-    fingerprint to MATCH the recorded append's when one was recorded —
-    an exact-range id reuse with different documents is rejected, not
-    mistaken for an at-least-once retry (ADVICE r7 #1). Rows from a
-    pre-fingerprint meta layout carry ``None`` and keep the lenient
-    range-only carve-out."""
+    fingerprint to MATCH the recorded append's — an exact-range id reuse
+    with different documents is rejected, not mistaken for an
+    at-least-once retry (ADVICE r7 #1)."""
     meta = [(lo, hi, k, fp) for (lo, hi, k, fp) in meta if hi is not None]
     if not meta:
         return
@@ -983,9 +962,7 @@ def _validate_gram_ids(
         (m_lo, m_hi)
         for (m_lo, m_hi, m_kind, m_fp) in meta
         if not (
-            m_kind == "append"
-            and (m_lo, m_hi) == (lo, hi)
-            and (m_fp is None or m_fp == fp)
+            m_kind == "append" and (m_lo, m_hi) == (lo, hi) and m_fp == fp
         )
     ]
     indexed_max = max((m[1] for m in others), default=None)
@@ -1037,26 +1014,13 @@ def clean_against_gram_index(
     broadcast threshold (:func:`memguard.index_past_broadcast`), prunes
     it by its own staged batch firsts before that min-combine.
     """
-    gp = os.path.join(path, "grams")
-    _refuse_layout_marker(gp)
+    snap = index_log.snapshot(spark, path)
+    grams = index_log.scan(spark, path, "grams", snap)
     if validate_ids:
-        meta_path = os.path.join(path, "grams_meta")
-        try:
-            mdf = spark.read.parquet(meta_path)
-            # pre-r8 meta layout carried no kind tag; those rows were all
-            # written by the same build/append code paths, so keep the old
-            # (lenient) carve-out for them rather than rejecting retries of
-            # an index built before the tag existed
-            if "kind" not in mdf.columns:
-                mdf = mdf.withColumn("kind", F.lit("append"))
-            if "fingerprint" not in mdf.columns:
-                mdf = mdf.withColumn("fingerprint", F.lit(None).cast("long"))
-            meta = [
-                (r["min_doc_id"], r["max_doc_id"], r["kind"], r["fingerprint"])
-                for r in mdf.collect()
-            ]
-        except Exception:  # pre-watermark index layout: nothing to check
-            meta = []
+        meta = [
+            (r["min_doc_id"], r["max_doc_id"], r["kind"], r["fingerprint"])
+            for r in index_log.scan(spark, path, "grams_meta", snap).collect()
+        ]
         # An APPEND whose (min, max) range equals this batch exactly is
         # this batch's own earlier append — foreachBatch is at-least-once,
         # and a re-delivered batch re-appends the same per-gram minima
@@ -1073,7 +1037,7 @@ def clean_against_gram_index(
         text_col,
         min_tokens=min_tokens,
         max_doc_tokens=max_doc_tokens,
-        index=spark.read.parquet(gp),
+        index=grams,
     )
 
 
@@ -1091,444 +1055,32 @@ def append_to_gram_index(
 
     Same id-monotonicity contract as :func:`build_gram_index`: this
     batch's ids must exceed every previously indexed id (checked on the
-    clean side); the ``grams_meta`` max-id watermark is appended here so
-    the contract stays enforceable across appends."""
-    gp = os.path.join(path, "grams")
-    with index_lease(gp, "append"):
-        _refuse_layout_marker(gp)
-        _gram_first_table(
-            accepted_docs, id_col, text_col, min_tokens, max_doc_tokens
-        ).write.mode("append").parquet(gp)
-    # the meta watermark log has no dir-swap compactor, so no lease
-    _meta_row(accepted_docs, id_col, text_col, "append").write.mode("append").parquet(
-        os.path.join(path, "grams_meta")
-    )
+    clean side); the ``grams_meta`` max-id watermark row lands in the
+    same commit, so the contract stays enforceable across appends."""
+    _commit_writes(path, _gram_tables(
+        accepted_docs, id_col, text_col, min_tokens, max_doc_tokens, "append"
+    ))
+
+
+def _gram_tables(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_tokens: int,
+    max_doc_tokens: int,
+    kind: str,
+) -> dict[str, DataFrame]:
+    """The two tables a gram build or append writes: the docs' per-gram
+    first keys and their watermark row (``kind`` ``build``/``append``)."""
+    return {
+        "grams": _gram_first_table(
+            docs, id_col, text_col, min_tokens, max_doc_tokens
+        ),
+        "grams_meta": _meta_row(docs, id_col, text_col, kind),
+    }
 
 
 # ------------------------------------------------------------- compaction
-
-def _require_local_path(path: str) -> None:
-    """The plain-parquet compactors swap DIRECTORIES with local-filesystem
-    renames; a scheme-qualified path (hdfs://, s3a://) would write its
-    Spark temp dir fine and then die on ``os.rename``, killing a stream
-    mid-compaction. Refuse up front with the alternative named."""
-    if "://" in path:
-        raise NotImplementedError(
-            f"compact_*_index swaps directories with local-fs renames; "
-            f"{path!r} is not a local path. On a cluster store, run the "
-            "equivalent rewrite through the lake's table format (Delta "
-            "OPTIMIZE / Iceberg rewrite_data_files)."
-        )
-
-
-class IndexLockError(RuntimeError):
-    """An index-table lease is held by another live process."""
-
-
-#: This process's hostname, stamped into lease payloads so waiters on a
-#: SHARED filesystem can tell a foreign-host holder (whose pid they
-#: cannot liveness-probe) from a local one (ADVICE r14).
-_HOSTNAME = socket.gethostname()
-
-
-#: Default seconds a lease acquisition polls before failing loudly.
-#: Appends ride out a long compaction; compactors ride out short appends.
-_LEASE_WAIT_S = 60.0
-
-#: Seconds a CONTENTLESS lock file must persist before it is treated as
-#: crash debris and reclaimed (a live writer links payload atomically,
-#: so a lock that stays empty has no holder to liveness-check).
-_LEASE_UNREADABLE_GRACE_S = 5.0
-
-#: Seconds a reclaim-by-rename waits before re-reading the lock to
-#: confirm the rename was not itself clobbered by a second reclaimer
-#: (see the reclaim block in :func:`index_lease`). Sized well above
-#: plausible driver pause times (GC, CPU oversubscription routinely
-#: stall a thread 50-200ms): a competitor suspended between ITS stale
-#: re-read and ITS rename can only clobber a confirmed waiter if its
-#: stall exceeds this settle. Reclaim is a rare crash-recovery path,
-#: so the latency is cheap (ADVICE r11 #1).
-_RECLAIM_SETTLE_S = 0.75
-
-#: Second, shorter confirmation interval: after the settle read-back
-#: says the lease is ours, wait this long and read ONCE more before
-#: treating the lease as held — a belt-and-braces re-verification
-#: immediately before the caller's first destructive action.
-_RECLAIM_CONFIRM_S = 0.25
-
-#: Per-acquisition sequence — with the thread id, makes every lease
-#: attempt's payload temp file (and payload nonce) unique, so two
-#: threads of one process can never share a temp path (ADVICE r10 #3).
-_LEASE_SEQ = itertools.count()
-
-#: Re-entrancy registry: lease paths held by the CURRENT thread.
-#: ``index_lease`` yields without re-acquiring when the same thread
-#: already holds the path, so a composite operation (streaming batch:
-#: heal -> read/clean -> append) can hold the table's lease across its
-#: whole span while the append inside it takes the lease as usual.
-_LEASE_HELD = threading.local()
-
-
-@contextlib.contextmanager
-def index_lease(path: str, role: str, wait_s: float | None = None):
-    """Exclusive lock-file lease over one index table dir (``path``).
-
-    This is the STRUCTURAL exclusion the r8/r9 best-effort guards
-    (in-progress ``_temporary`` dirs, byte-growth snapshots) could not
-    provide: both writers take it — appends (``append_to_*_index``) and
-    compactors (``compact_*_index``) — so ``compact_dedup_indexes``
-    racing a live stream now fails loudly at acquisition instead of
-    silently deleting a concurrently appended part file with the old
-    dir. The lock is ``<path>.lock``, created with O_CREAT|O_EXCL
-    (atomic on a local filesystem — the only store the dir-swap
-    compactors support, see :func:`_require_local_path`) and carrying
-    ``{pid, role, ts}`` for diagnostics.
-
-    Acquisition polls up to ``wait_s`` (appends ride out a long
-    compaction; compactors ride out short appends), reclaiming a lease
-    whose holder pid is dead (crash between acquire and release — the
-    data itself is crash-safe via :func:`recover_interrupted_compaction`,
-    the lock must not wedge the table forever). Non-local paths
-    (``://``) no-op: the directory-swap compactors are local-only, so
-    there is no swap to exclude there.
-
-    Re-entrant WITHIN a thread: a composite holder (the streaming
-    batch's heal -> clean -> append span) keeps the lease while the
-    appends inside it take it again as no-ops; two THREADS of one
-    process still exclude each other.
-    """
-    if "://" in path:
-        yield
-        return
-    held = getattr(_LEASE_HELD, "paths", None)
-    if held is None:
-        held = _LEASE_HELD.paths = set()
-    key = os.path.abspath(path)
-    if key in held:  # re-entrant within one thread (composite ops)
-        yield
-        return
-    if wait_s is None:
-        wait_s = _LEASE_WAIT_S
-    lock = path + ".lock"
-    os.makedirs(os.path.dirname(os.path.abspath(lock)), exist_ok=True)
-    deadline = time.monotonic() + wait_s
-    # the payload is linked into place ATOMICALLY (write a private temp
-    # file, hard-link it to the lock path): a holder killed between an
-    # O_EXCL create and its payload write would leave a contentless lock
-    # no liveness check can ever clear (review finding 5). With link(),
-    # a visible lock always carries its holder. Pre-existing contentless
-    # locks (older layouts, exotic filesystems) are reclaimed after a
-    # grace period instead of wedging the table forever.
-    seq = next(_LEASE_SEQ)
-    payload = json.dumps(
-        {
-            "pid": os.getpid(),
-            # pid liveness (os.kill(pid, 0)) is HOST-LOCAL: on a shared
-            # filesystem a waiter on another machine cannot probe this
-            # holder. The hostname in the payload lets a foreign-host
-            # waiter recognise that and stay conservative (never
-            # reclaim) instead of misreading ESRCH as a dead holder
-            # (ADVICE r14)
-            "host": _HOSTNAME,
-            "role": role,
-            "ts": time.time(),
-            # thread id + sequence: distinguishes two acquisitions from
-            # the same pid (the settle re-read below compares payloads)
-            "nonce": f"{threading.get_ident()}-{seq}",
-        }
-    ).encode()
-    # temp path unique per ACQUISITION, not per process: two threads of
-    # one process (append + compaction hook racing in a driver) must
-    # never share it — one thread's finally-unlink would remove it
-    # between the other's write and os.link (ADVICE r10 #3)
-    tmpf = f"{lock}.{os.getpid()}.{threading.get_ident()}.{seq}.tmp"
-    with open(tmpf, "wb") as fh:
-        fh.write(payload)
-    unreadable_since: float | None = None
-    acquired = False
-    try:
-        while True:
-            try:
-                os.link(tmpf, lock)
-                acquired = True
-                break
-            except FileExistsError:
-                pass
-            holder: dict = {}
-            readable = False
-            try:
-                with open(lock) as fh:
-                    holder = json.load(fh)
-                readable = True
-            except OSError:
-                continue  # released between link and read; retry now
-            except ValueError:
-                pass  # contentless/corrupt lock — grace-period below
-            pid = holder.get("pid")
-            alive = True
-            if readable and pid is not None:
-                unreadable_since = None
-                lock_host = holder.get("host")
-                if lock_host is not None and lock_host != _HOSTNAME:
-                    # foreign-host holder on a shared filesystem: its
-                    # pid cannot be probed from here — NEVER reclaim,
-                    # ride the wait and fail loudly instead (ADVICE
-                    # r14; the timeout message names the host)
-                    alive = True
-                else:
-                    try:
-                        os.kill(int(pid), 0)
-                    except (ProcessLookupError, ValueError):
-                        alive = False  # dead or malformed pid — stale
-                    except OSError:
-                        alive = True  # EPERM: holder exists, not ours
-            else:  # contentless or pid-less lock
-                now = time.monotonic()
-                if unreadable_since is None:
-                    unreadable_since = now
-                # a real writer links payload atomically, so a lock that
-                # STAYS contentless was left by a crash — reclaimable
-                alive = now - unreadable_since < _LEASE_UNREADABLE_GRACE_S
-            if not alive:
-                # holder died without releasing — reclaim by RENAMING
-                # our payload temp over the stale lock: reclaim and
-                # acquisition are ONE atomic step (ADVICE r10 #2 — the
-                # old read->unlink->link let a second waiter unlink the
-                # first's freshly re-acquired lease). Re-read just
-                # before the rename; a competitor stalled between ITS
-                # dead-holder re-read and ITS rename can still clobber
-                # ours, so after the rename we settle briefly and read
-                # the lock back: only the waiter whose payload survives
-                # holds the lease, a clobbered waiter re-enters the
-                # poll. The residual window is a competitor suspended
-                # longer than the settle between two ADJACENT syscalls
-                # (POSIX offers no compare-and-swap rename to close it
-                # fully).
-                still: dict | None = {}
-                try:
-                    with open(lock) as fh:
-                        still = json.load(fh)
-                except OSError:
-                    continue  # gone — poll again
-                except ValueError:
-                    still = None  # still contentless
-                if (still is None and not readable) or (
-                    still is not None and still.get("pid") == pid
-                ):
-                    try:
-                        os.rename(tmpf, lock)
-                    except OSError:
-                        continue
-                    # two-stage confirmation: the long settle outlasts
-                    # plausible competitor pauses, the short second read
-                    # re-verifies the payload immediately before the
-                    # caller's critical section (ADVICE r11 #1)
-                    mine = True
-                    for pause in (_RECLAIM_SETTLE_S, _RECLAIM_CONFIRM_S):
-                        time.sleep(pause)
-                        try:
-                            with open(lock, "rb") as fh:
-                                mine = fh.read() == payload
-                        except OSError:
-                            mine = False
-                        if not mine:
-                            break
-                    if mine:
-                        acquired = True
-                        break
-                    # clobbered by a concurrent reclaimer — the rename
-                    # consumed our temp file; recreate it and re-poll
-                    with open(tmpf, "wb") as fh:
-                        fh.write(payload)
-                    unreadable_since = None
-                continue
-            if time.monotonic() >= deadline:
-                foreign = (
-                    holder.get("host") not in (None, _HOSTNAME)
-                    if holder
-                    else False
-                )
-                raise IndexLockError(
-                    f"index lease {lock!r} held by {holder or 'unknown'} "
-                    f"(waited {wait_s:.0f}s). A compaction and a writer "
-                    "cannot touch the same index table concurrently — "
-                    "stop one, or remove the lock file if its holder is "
-                    "known dead."
-                    + (
-                        f" The holder is on host {holder.get('host')!r} "
-                        "(liveness cannot be probed from here — verify "
-                        "on that machine before removing)."
-                        if foreign
-                        else ""
-                    )
-                ) from None
-            time.sleep(0.1)
-        held.add(key)
-        try:
-            yield
-        finally:
-            held.discard(key)
-    finally:
-        with contextlib.suppress(OSError):
-            os.unlink(tmpf)
-        if acquired:  # never remove a FOREIGN holder's lock on failure
-            with contextlib.suppress(OSError):
-                os.unlink(lock)
-
-
-def recover_interrupted_compaction(path: str) -> bool:
-    """Heal a compaction swap that died at ANY point — called at the
-    start of every compaction and by the streaming sink before the
-    index-existence check. Without it, a crash in the swap window would
-    make the next batch see NO index and silently reset dedup state;
-    worse (r10 review finding 1), an APPEND landing after the crash
-    recreates the live dir, so a naive "restore only if missing" heal
-    would leave the ``.compact-old`` survivor to be rmtree'd later —
-    permanent silent loss of the pre-compaction rows.
-
-    The swap protocol is: write tmp -> rename(live, old) -> rename(tmp,
-    live) -> rmtree(old). The crash state is therefore decidable from
-    which scratch dirs exist:
-
-    - ``old`` and ``tmp`` both exist: died between the renames. The
-      authoritative data is ``old``; the live dir, if present, holds
-      only post-crash appends — restore ``old`` by renaming it back
-      (live missing) or by MOVING its data files in (live recreated;
-      union is decision-correct: every table's read-side aggregate —
-      min / distinct / sum-over-disjoint-appends — treats the restored
-      rows exactly as pre-compaction appends). ``tmp`` is discarded.
-    - ``old`` exists, ``tmp`` missing: rename 2 completed (the live dir
-      IS the compacted data); ``old`` is a stale pre-compaction copy —
-      merging it would double-count a sum table — so it is deleted.
-    - ``tmp`` exists alone: died before rename 1; live dir untouched —
-      delete ``tmp``.
-
-    Returns True if any state was healed."""
-    old = path + ".compact-old"
-    tmp = path + ".compact-tmp"
-    has_old, has_tmp = os.path.isdir(old), os.path.isdir(tmp)
-    if not has_old and not has_tmp:
-        return False
-    if has_old and has_tmp:
-        # died between the renames: old is authoritative
-        if not os.path.exists(path):
-            os.rename(old, path)
-        else:
-            _merge_dir_files(old, path)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return True
-    if has_old:
-        if not os.path.exists(path):
-            # defensive: shouldn't be reachable (tmp missing means
-            # rename 2 ran, which creates the live dir) — restore
-            os.rename(old, path)
-            return True
-        shutil.rmtree(old, ignore_errors=True)  # stale post-swap copy
-        return True
-    shutil.rmtree(tmp, ignore_errors=True)  # died before rename 1
-    return True
-
-
-def _merge_dir_files(src: str, dst: str) -> None:
-    """Move ``src``'s data files into ``dst`` under collision-proof
-    names (crash-recovery merge of a swap survivor into a live dir that
-    appends recreated)."""
-    for f in os.listdir(src):
-        if f.startswith("_") or f.endswith(".crc"):
-            continue
-        target = os.path.join(dst, f"restored-{f}")
-        n = 0
-        while os.path.exists(target):
-            n += 1
-            target = os.path.join(dst, f"restored-{n}-{f}")
-        os.rename(os.path.join(src, f), target)
-
-
-def _rewrite_parquet_dir(
-    df: DataFrame,
-    path: str,
-    partitions: int,
-    snapshot_bytes: int | None = None,
-) -> None:
-    """Replace ``path`` with the materialisation of ``df`` (which reads
-    from ``path`` — Spark cannot overwrite a dir it is scanning, so the
-    rewrite lands in a sibling temp dir first and the dirs swap after the
-    write commits). Local-filesystem renames (``_require_local_path`` is
-    checked by callers); on an object-store lake the same two steps are
-    "write new version dir, flip the table manifest" (Delta/Iceberg give
-    it to you as OPTIMIZE/rewrite_data_files — this is that operation for
-    the plain-parquet index layout). Crash safety: the data always exists
-    in ``path`` or ``path + '.compact-old'`` — a crash between the two
-    renames is healed by :func:`recover_interrupted_compaction`, and the
-    old dir is only deleted after the new dir is in place.
-
-    EXCLUSIVE-ACCESS CONTRACT: the swap is atomic against readers, NOT
-    against concurrent writers. Structural exclusion comes from
-    :func:`index_lease` — every ``compact_*_index`` holds the table's
-    lease across read→swap, and every ``append_to_*_index`` takes the
-    same lease around its write, so the standalone compaction task vs a
-    live stream is excluded at acquisition, not merely detected. Two
-    in-process guards remain as a backstop against writers that bypass
-    the lease (hand-rolled appends): an in-progress Spark ``_temporary``
-    dir aborts the swap, and a byte-growth check against
-    ``snapshot_bytes`` — captured by the CALLER before its
-    ``spark.read.parquet`` pinned the file listing (ADVICE r9 #3), so
-    an append landing between the read and the swap trips the guard
-    instead of being silently deleted with the old dir. A write that
-    both bypasses the lease and lands entirely after the final
-    ``_dir_bytes`` walk is still lost — the lease is the contract, the
-    guards are best-effort."""
-    tmp = path + ".compact-tmp"
-    old = path + ".compact-old"
-    # the CALLER heals interrupted swaps BEFORE pinning its read of
-    # ``path`` (recover_interrupted_compaction can merge a crash
-    # survivor's files into the live dir — running that here, after the
-    # caller's read pinned its file listing, would let this rewrite
-    # silently drop the just-restored rows). Scratch dirs appearing at
-    # this point mean a concurrent compactor — fail loudly.
-    if os.path.isdir(tmp) or os.path.isdir(old):
-        raise RuntimeError(
-            f"compaction aborted: scratch dirs for {path!r} appeared after "
-            "the caller's heal — a concurrent compaction holds this table? "
-            "The lease should make this unreachable; investigate before "
-            "re-running."
-        )
-    if os.path.isdir(os.path.join(path, "_temporary")):
-        raise RuntimeError(
-            f"compaction aborted: {path!r} has an in-progress write "
-            "(_temporary dir present). compact_* requires exclusive "
-            "access — stop the writer (or let its batch commit) first."
-        )
-    if snapshot_bytes is None:
-        snapshot_bytes = _dir_bytes(path)
-    df.repartition(max(1, partitions)).write.mode("overwrite").parquet(tmp)
-    if _dir_bytes(path) != snapshot_bytes or os.path.isdir(
-        os.path.join(path, "_temporary")
-    ):
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction aborted: {path!r} changed while the compacted "
-            "rewrite was being written (concurrent append). The live dir "
-            "is untouched; re-run compaction with the writer stopped."
-        )
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _dir_bytes(path: str) -> int:
-    """Data bytes under a parquet dir (checksums and ``_``-prefixed
-    markers excluded — the same files Spark's file index ignores)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if not f.endswith(".crc") and not f.startswith("_")
-        )
-    return total
-
 
 def _split_bytes(spark: SparkSession) -> int:
     """The session's file-split size (maxPartitionBytes), defaulting to
@@ -1548,24 +1100,25 @@ def _split_bytes(spark: SparkSession) -> int:
 
 
 def _compact_partitions(
-    spark: SparkSession, path: str, row_scale: float = 1.0
+    spark: SparkSession, total_bytes: int, row_scale: float = 1.0
 ) -> int:
-    """Output partition count for a compacted table: its on-disk bytes
-    over the session's file-split size, floored at the session's core
-    count. The floor matters: sizing by maxPartitionBytes alone wrote a
-    214 MB index as 2 snappy files, and the per-batch min-combine scan
-    then decoded 11M rows in 2 tasks — post-compaction batches measured
-    ~50% SLOWER than the uncompacted 160-file layout (r8). Parquet byte
-    ranges split across tasks, but decode parallelism follows row groups,
-    so the file count must at least match the cores that will scan it.
+    """Output partition count for a compacted table: its live bytes (from
+    the manifest) over the session's file-split size, floored at the
+    session's core count. The floor matters: sizing by maxPartitionBytes
+    alone wrote a 214 MB index as 2 snappy files, and the per-batch
+    min-combine scan then decoded 11M rows in 2 tasks — post-compaction
+    batches measured ~50% SLOWER than the uncompacted 160-file layout
+    (r8). Parquet byte ranges split across tasks, but decode parallelism
+    follows row groups, so the file count must at least match the cores
+    that will scan it.
 
-    ``row_scale`` = rows_after / rows_before: the walk below sees the
+    ``row_scale`` = rows_after / rows_before: ``total_bytes`` are the
     PRE-compaction bytes, and a heavily append-duplicated index shrinks
     by the dup factor — sizing from raw bytes alone fanned the output
     into ~dup-factor more, smaller files than the sub-MB-shard guard
     intends (ADVICE r8 #4). Callers that have counted the aggregated
     frame pass the ratio so the sizing model sees post-fold bytes."""
-    total = int(_dir_bytes(path) * min(1.0, max(row_scale, 0.0)))
+    total = int(total_bytes * min(1.0, max(row_scale, 0.0)))
     split = _split_bytes(spark)
     return max(
         # decode-parallelism floor, but never fan a tiny index into
@@ -1575,11 +1128,42 @@ def _compact_partitions(
     )
 
 
-def compact_gram_index(
-    spark: SparkSession,
-    path: str,
-    wait_s: float | None = None,
-) -> dict:
+def _compact_whole(spark: SparkSession, path: str, table: str, fold) -> dict:
+    """Replace every live file of ``table`` with ``fold`` of their rows
+    (the aggregate every read of the table already applies), as one
+    compaction commit, then sweep the root. The fold spans every file, so
+    no file can stay as it stands. An append that commits while this
+    runs stays live beside the folded files: the commit rebases onto it.
+
+    Returns ``{rows_before, rows_after, files_before, files_after}``."""
+
+    def attempt(snap: index_log.Snapshot):
+        files = snap.files(table)
+        agg = fold(index_log.scan(spark, path, table, snap))
+        # count the FOLDED frame before the rewrite: it sizes the output
+        # (bytes scale by the dedup ratio — ADVICE r8 #4) and it is the
+        # rows_after the caller wants anyway
+        rows_after = agg.count()
+        parts = _compact_partitions(
+            spark, snap.bytes(table), rows_after / max(snap.rows(table), 1)
+        )
+        added = index_log.write(
+            agg.repartition(parts), path, table, compacted=True
+        )
+        stats = {
+            "rows_before": snap.rows(table),
+            "rows_after": rows_after,
+            "files_before": len(files),
+        }
+        return [added], [f["path"] for f in files], "compact", stats
+
+    stats, snap = index_log.transact(spark, path, attempt)
+    stats["files_after"] = len(snap.files(table))
+    index_log.sweep(spark, path)
+    return stats
+
+
+def compact_gram_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the gram-first table keeping ``min(first_key)`` per gram —
     the same min-combine every read already applies, run once and made
     durable, so the per-batch O(index) scan stops paying for append
@@ -1589,158 +1173,83 @@ def compact_gram_index(
     (min is idempotent/associative), which is also why compacting between
     any two batches cannot change a later batch's clean decisions.
 
-    The rewrite is whole-table: the min fold spans every file, so no
-    file can be left in place as it stands. After the swap the
-    table's byte size is recorded as its clean watermark
-    (:func:`dirty_fraction`), which the span sink's scheduled hook reads
-    to skip a rewrite until enough has been appended.
+    The compacted files are marked as such in the manifest, which
+    :func:`dirty_fraction` reads so the span sink's scheduled hook can
+    skip a rewrite until enough has been appended.
 
-    ``grams_meta`` is left byte-identical: it is the append-watermark log
-    the id-monotonicity retry carve-out matches against (one tiny row per
+    ``grams_meta`` is left as it is: it is the append-watermark log the
+    id-monotonicity retry carve-out matches against (one tiny row per
     append), and folding it would erase the replay evidence.
 
     Returns ``{rows_before, rows_after, files_before, files_after}``.
     """
-    _require_local_path(path)
-    gp = os.path.join(path, "grams")
-    with index_lease(gp, "compact", wait_s=wait_s):
-        recover_interrupted_compaction(gp)
-        _refuse_layout_marker(gp)
-        # snapshot BEFORE the read pins its file listing, so an append
-        # landing after the read trips the growth guard (ADVICE r9 #3)
-        snapshot = _dir_bytes(gp)
-        before = spark.read.parquet(gp)
-        files_before = sum(
-            1 for f in os.listdir(gp) if f.endswith(".parquet")
-        )
-        rows_before = before.count()
-        agg = before.groupBy("gram_hash").agg(
+    return _compact_whole(
+        spark, path, "grams",
+        lambda df: df.groupBy("gram_hash").agg(
             F.min("first_key").alias("first_key")
-        )
-        # count the FOLDED frame before the rewrite: it sizes the output
-        # (bytes scale by the dedup ratio — ADVICE r8 #4) and it is the
-        # rows_after the caller wants anyway, so no pass is added
-        rows_after = agg.count()
-        _rewrite_parquet_dir(
-            agg, gp,
-            _compact_partitions(spark, gp, rows_after / max(rows_before, 1)),
-            snapshot_bytes=snapshot,
-        )
-        _write_compact_meta(gp)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": sum(1 for f in os.listdir(gp) if f.endswith(".parquet")),
-    }
+        ),
+    )
 
 
-def compact_chunk_index(
-    spark: SparkSession,
-    path: str,
-    wait_s: float | None = None,
-) -> dict:
+def compact_chunk_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the chunk-hash table to distinct hashes (appends are
     distinct within themselves only — `append_to_chunk_index`), bounding
     the re-read the per-batch join pays. Safe at any batch boundary:
     ``chunk_stats_against_index`` distincts the index before joining, so
     compaction changes bytes scanned, never results."""
-    _require_local_path(path)
-    cp = os.path.join(path, "chunks")
-    with index_lease(cp, "compact", wait_s=wait_s):
-        recover_interrupted_compaction(cp)
-        _refuse_layout_marker(cp)
-        snapshot = _dir_bytes(cp)
-        before = spark.read.parquet(cp)
-        rows_before = before.count()
-        agg = before.distinct()
-        rows_after = agg.count()
-        _rewrite_parquet_dir(
-            agg, cp,
-            _compact_partitions(spark, cp, rows_after / max(rows_before, 1)),
-            snapshot_bytes=snapshot,
-        )
-    return {"rows_before": rows_before, "rows_after": rows_after}
+    return _compact_whole(spark, path, "chunks", DataFrame.distinct)
 
 
-def compact_line_index(
-    spark: SparkSession,
-    path: str,
-    wait_s: float | None = None,
-) -> dict:
+def compact_line_index(spark: SparkSession, path: str) -> dict:
     """Rewrite the line-count table summing ``n_docs`` per hash — the
     same sum ``clean_against_line_index`` applies on read (counts add
     across doc-disjoint appends), made durable once."""
-    _require_local_path(path)
-    lp = os.path.join(path, "lines")
-    with index_lease(lp, "compact", wait_s=wait_s):
-        recover_interrupted_compaction(lp)
-        _refuse_layout_marker(lp)
-        snapshot = _dir_bytes(lp)
-        before = spark.read.parquet(lp)
-        rows_before = before.count()
-        agg = before.groupBy("line_hash").agg(
-            F.sum("n_docs").alias("n_docs")
-        )
-        rows_after = agg.count()
-        _rewrite_parquet_dir(
-            agg, lp,
-            _compact_partitions(spark, lp, rows_after / max(rows_before, 1)),
-            snapshot_bytes=snapshot,
-        )
-    return {"rows_before": rows_before, "rows_after": rows_after}
+    return _compact_whole(
+        spark, path, "lines",
+        lambda df: df.groupBy("line_hash").agg(F.sum("n_docs").alias("n_docs")),
+    )
 
 
-def compact_match_index(
-    spark: SparkSession,
-    path: str,
-    wait_s: float | None = None,
-) -> dict:
-    """Rewrite the match index's exact and bands tables into few, full
-    files (r14 verdict #1 / BLOOM_r15): unlike grams/chunks/lines there
-    is NO aggregation to canonicalise — rows are already unique (doc-
-    disjoint appends of per-doc exact rows and per-doc band rows) — the
-    compaction exists purely to undo per-micro-batch FILE EXPLOSION.
-    The sweep measured the cost of skipping it: at 1000-doc batches
-    every append lands a file set per leg, and after 100 batches the
-    per-batch classifier scan pays thousands of file opens — the
-    steady-state wall grows with batch COUNT, not data. Identity
-    rewrite, so decisions are trivially preserved.
+def compact_match_index(spark: SparkSession, path: str) -> dict:
+    """Bin-pack the match index's exact and bands tables (r14 verdict
+    #1 / BLOOM_r15): at 1000-doc batches every append lands a file set
+    per table, and after 100 batches the per-batch classifier scan paid
+    thousands of file opens — the steady-state wall grew with batch
+    COUNT, not data. Unlike grams/chunks/lines there is no aggregation
+    to canonicalise (rows are unique per doc), so the compaction only
+    merges files: those below half the session's split size are read
+    and rewritten into files of about one split each, and one commit
+    removes them and adds the merged ones. Full files stay where they
+    are, so the bytes one compaction writes are bounded by the files
+    appended since the last one plus at most one half-full file, not by
+    the index. The row multiset never changes, so a batch that read the
+    index before this commit rebases onto it without reclassifying.
 
-    LEASE PROTOCOL: the whole two-leg compaction holds the EXACT leg's
-    lease — the same single lease ``match_dedup_batch`` holds across
-    its whole heal->classify->append span. Per-leg leases would leave
-    a hole: a live batch holds only the exact lease, so a bands-only
-    compactor could rewrite the bands dir out from under the batch's
-    in-flight bands append, silently deleting it with the old dir."""
-    import pyarrow.parquet as pq
+    Returns per table ``{rows, files_before, files_after}``: the live
+    rows and files after the commit, from the manifest."""
+    target = _split_bytes(spark)
 
-    _require_local_path(path)
-    out: dict = {}
-    with index_lease(os.path.join(path, "exact"), "compact", wait_s=wait_s):
+    def attempt(snap: index_log.Snapshot):
+        adds, removes, stats = [], [], {}
         for leg in ("exact", "bands"):
-            lp = os.path.join(path, leg)
-            recover_interrupted_compaction(lp)
-            if not os.path.isdir(lp):
+            if not snap.has(leg):
                 continue
-            snapshot = _dir_bytes(lp)
-            files_before = sum(
-                1 for f in os.listdir(lp) if f.endswith(".parquet")
-            )
-            _rewrite_parquet_dir(
-                spark.read.parquet(lp), lp,
-                _compact_partitions(spark, lp, 1.0),
-                snapshot_bytes=snapshot,
-            )
-            # rows and files of what the rewrite wrote, from the parquet
-            # footers: no count job, and it checks the output, not the input
-            written = [f for f in os.listdir(lp) if f.endswith(".parquet")]
-            out[leg] = {
-                "rows": sum(
-                    pq.read_metadata(os.path.join(lp, f)).num_rows
-                    for f in written
-                ),
-                "files_before": files_before,
-                "files_after": len(written),
-            }
-    return out
+            files = snap.files(leg)
+            stats[leg] = {"files_before": len(files)}
+            small = [f for f in files if f["bytes"] < target // 2]
+            if len(small) < 2:
+                continue
+            parts = max(1, sum(f["bytes"] for f in small) // target)
+            merged = index_log.scan_files(spark, snap, leg, small)
+            adds.append(index_log.write(
+                merged.repartition(parts), path, leg, compacted=True
+            ))
+            removes += [f["path"] for f in small]
+        return adds, removes, "compact", stats
+
+    stats, snap = index_log.transact(spark, path, attempt)
+    for leg, leg_stats in stats.items():
+        leg_stats["rows"] = snap.rows(leg)
+        leg_stats["files_after"] = len(snap.files(leg))
+    index_log.sweep(spark, path)
+    return stats

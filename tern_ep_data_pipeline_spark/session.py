@@ -60,6 +60,13 @@ ENGINE_CONF: dict[str, str] = {
 #: largest working set.
 CODEGEN_CACHE_ENTRIES = 2000
 
+#: The directory that holds this package. :func:`get_spark` puts it first
+#: on the Python workers' path (``spark.executorEnv.PYTHONPATH``): a
+#: driver script that imports the package through ``sys.path`` from
+#: another working directory otherwise fails at its first Arrow or
+#: pandas UDF with ``ModuleNotFoundError`` in the worker.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "tern-ep-spark",
@@ -85,6 +92,12 @@ def get_spark(
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     builder = builder.config(
         "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+    )
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(
+            p for p in (PACKAGE_PARENT, os.environ.get("PYTHONPATH")) if p
+        ),
     )
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)

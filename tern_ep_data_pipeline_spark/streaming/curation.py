@@ -26,9 +26,6 @@ the arrival-time leg.
 
 from __future__ import annotations
 
-import contextlib
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -67,7 +64,7 @@ def curated_document_stream(
     ``dsir_ratio_path`` (r12 verdict #4) scores every surviving
     document against a FROZEN DSIR ratio artifact
     (:func:`write_dsir_ratio_artifact` — built offline from raw+target,
-    refreshed on a cadence via atomic swap) and adds
+    refreshed on a cadence by versioned publication) and adds
     ``logweight_micro``; ``dsir_min_logweight_micro`` additionally
     drops documents below the cut — the streaming form of the batch
     ``curate_corpus(dsir_target=...)`` stage, with selection-by-
@@ -261,101 +258,74 @@ def match_dedup_batch(
     ``fresh`` exactly like ``dedup_index.match_against_index`` (whose
     core does the classifying, including the intra-batch self pass).
 
-    Effectively-once under foreachBatch's at-least-once delivery, by
-    two rules rather than external state:
-
-    - **self-replay reclassification**: a RETRIED batch finds its own
-      first-attempt appends in the index, so each previously-fresh doc
-      matches itself (``match_id == doc_id`` — ids are unique and
-      monotonic per the index contract, so only the doc itself can
-      produce that). Such matches re-classify ``fresh``; matches
-      against batch-mates are already consistent because the first
-      attempt's intra-batch pass made the same decision.
-    - **per-leg idempotent append** (ADVICE r13): the exact and band
-      rows are TWO separate write jobs, so each leg anti-joins its OWN
-      table — exact rows against the exact table's doc ids, band rows
-      against the bands table's doc ids. A retry therefore adds zero
-      rows to a leg that committed AND re-appends exactly the rows of
-      a leg that didn't: a crash landing BETWEEN the two writes (a
-      real window under foreachBatch at-least-once) heals on replay
-      instead of skipping the doc's band rows forever. A single
-      anti-join against exact alone would do exactly that skip — the
-      doc's future near-duplicates would silently classify fresh. The
-      bands anti-join costs one extra doc_id-column scan of the bands
-      table per batch, the same O(index-scan) class as the (band, bh)
-      probe the classifier already pays — but ONLY on a replay: a
-      first attempt is proven first by the absence of self-hits (any
-      previously-appended doc must self-match) and skips both
-      anti-joins entirely (r14 verdict #1 — the index's doc_id columns
-      are not even scanned on the steady-state path).
+    Effectively-once under foreachBatch's at-least-once delivery, with
+    no state outside the index: both tables' rows of the accepted docs
+    land in ONE commit of the index (:mod:`operators.index_log`), so a
+    crash before that commit leaves nothing a reader sees, and a crash
+    after it leaves both tables complete. A RETRIED batch after a
+    commit finds its own first-attempt rows, so each doc that attempt
+    accepted matches itself (``match_id == doc_id`` — ids are unique
+    and monotonic per the index contract, so only the doc itself can
+    produce that). Such self-hits re-classify ``fresh``; matches against
+    batch-mates are already consistent because the first attempt's
+    intra-batch pass made the same decision. Only the docs the
+    classifier called ``fresh`` before that relabel are appended, so a
+    replay appends nothing twice.
 
     The batch is staged once: its exact rows and band rows (hashes and
-    MinHash signatures) are materialised with ``localCheckpoint`` under
-    the lease, before classifying. The classifier and both append legs
-    read those staged rows, so the md5 and MinHash pipelines run once
-    per batch, and the appends neither re-derive them nor read the batch
-    source again.
+    MinHash signatures) are materialised with ``localCheckpoint``
+    before classifying. The classifier and both appends read those
+    staged rows, so the md5 and MinHash pipelines run once per batch,
+    and the appends neither re-derive them nor read the batch source
+    again.
 
-    The whole span runs under the lease of the index's exact table dir,
-    serialising against maintenance.
+    Concurrent writers are optimistic: if another append to the match
+    index commits between this batch's read and its commit, the batch
+    deletes its files and classifies again against the new version (so
+    no document is admitted twice); a compaction that commits in
+    between does not change what the classifier computes, so the batch
+    commits on top of it unchanged. With no index yet, the batch
+    classifies against empty tables and its commit creates the index.
     """
-    from ..operators.dedup_index import (
-        _append_index_rows,
-        _batch_frames,
-        _match_frames,
-        build_dedup_index,
-        index_lease,
-    )
+    from ..operators import index_log
+    from ..operators.dedup_index import _batch_frames, _match_frames
 
     spark = batch.sparkSession
-    if "://" not in index_path:
-        lease = index_lease(f"{index_path}/exact", "batch")
-    else:
-        lease = contextlib.nullcontext()
-    with lease:
-        if not _dir_exists(spark, f"{index_path}/exact"):
-            # bootstrap: an EMPTY index makes batch 0 a pure
-            # intra-batch classification through the same code path
-            build_dedup_index(
-                batch.limit(0).select(id_col, text_col), index_path,
-                id_col, text_col,
-                n=n, num_hashes=num_hashes, bands=bands,
-                hash_mode=hash_mode,
-            )
-        ex_idx = spark.read.parquet(f"{index_path}/exact")
-        bd_idx = spark.read.parquet(f"{index_path}/bands")
-        rows, band_rows = _batch_frames(
-            batch, id_col, text_col, n, num_hashes, bands, hash_mode,
-            stage=True,
-        )
+    rows, band_rows = _batch_frames(
+        batch, id_col, text_col, n, num_hashes, bands, hash_mode, stage=True,
+    )
+    new_exact = rows.select("content_hash", "doc_id")
+    self_hit = (F.col("status") != "fresh") & (
+        F.col("match_id") == F.col("doc_id")
+    )
+    fresh = F.col("status") == "fresh"
+    route = spark.sparkContext.setLocalProperty
+
+    def attempt(snap):
+        if snap.has("exact"):
+            ex_idx = index_log.scan(spark, index_path, "exact", snap)
+            bd_idx = index_log.scan(spark, index_path, "bands", snap)
+        else:  # no index yet: classify against empty tables
+            ex_idx, bd_idx = new_exact.limit(0), band_rows.limit(0)
         matches = _match_frames(
             rows, band_rows, ex_idx, bd_idx, num_hashes, min_band_matches,
             min_est_jaccard, max_bucket,
         )
-        self_hit = (F.col("status") != "fresh") & (
-            F.col("match_id") == F.col("doc_id")
-        )
-        # The self-hit and fresh counts (the fast path below) ride on
-        # the decisions' checkpoint job as named observed metrics, read
-        # from that plan's QueryExecution. Not a pyspark ``Observation``:
-        # it starts the session's ObservationManager, which cannot be
-        # serialized, and from then on every task closure capturing the
-        # session fails (pyspark.ml model transforms do). count_if,
-        # unlike sum, reads 0 on an empty batch, not null.
-        counts = [
-            F.count_if(self_hit).alias("n_self"),
-            F.count_if(self_hit | (F.col("status") == "fresh")).alias(
-                "n_fresh"
-            ),
-        ]
-        observed = matches.observe("match_sink_counts", *counts)
+        # The fresh count rides on the decisions' checkpoint job as a
+        # named observed metric, read from that plan's QueryExecution.
+        # Not a pyspark ``Observation``: it starts the session's
+        # ObservationManager, which cannot be serialized, and from then
+        # on every task closure capturing the session fails (pyspark.ml
+        # model transforms do). count_if, unlike sum, reads 0 on an
+        # empty batch, not null.
+        n_fresh = F.count_if(fresh).alias("n_fresh")
+        observed = matches.observe("match_sink_counts", n_fresh)
         raw = observed.localCheckpoint()  # decide BEFORE the index moves
         seen = observed._jdf.queryExecution().observedMetrics()
         if seen.contains("match_sink_counts"):
-            row = seen.apply("match_sink_counts")
-            st = {"n_self": row.getLong(0), "n_fresh": row.getLong(1)}
+            any_fresh = seen.apply("match_sink_counts").getLong(0) > 0
         else:  # the optimizer pruned the metrics node: count instead
-            st = raw.agg(*counts).first()
+            any_fresh = raw.agg(n_fresh).first()[0] > 0
         out = raw.select(
             "doc_id",
             F.when(self_hit, F.lit("fresh")).otherwise(F.col("status")).alias(
@@ -365,79 +335,35 @@ def match_dedup_batch(
                 self_hit, F.lit(None).cast(dict(batch.dtypes)[id_col])
             ).otherwise(F.col("match_id")).alias("match_id"),
         )
-        # First-attempt fast path (r14 verdict #1): the per-leg
-        # anti-joins below exist ONLY to heal a replay, but they cost
-        # two full index doc_id-column scans per batch — an O(index)
-        # per-batch IO wall that dominates the sink's steady state.
-        # Whether this batch IS a replay is decided by the self-hit
-        # count, already computed: a doc this batch previously appended
-        # can only match ITSELF (ids are unique and monotonic per the
-        # index contract), and the exact leg commits before the bands
-        # leg, so absence from exact implies absence from bands. Zero
-        # self-hits therefore PROVES both anti-joins are vacuous, and
-        # the fast path appends the staged rows directly, touching the
-        # index not at all. Any self-hit (a retried batch, however it
-        # tore) falls back to the per-leg anti-join heal, unchanged.
         # the route taken lands on a local property (the bloom gates'
         # observability pattern) so tests and bench cells can pin it
-        _route = spark.sparkContext.setLocalProperty
-        if not st["n_fresh"]:
-            _route("tern.match_sink.append_route", "no-fresh-docs")
-            return out  # nothing accepted: no appends, no index IO
+        if not any_fresh:
+            route("tern.match_sink.append_route", "no-fresh-docs")
+            return [], [], "append", out  # nothing accepted: no commit
+        route("tern.match_sink.append_route", "append")
         # Fresh docs are always canonical: a non-canonical copy always
-        # has a batch_exact hit, and since it was never appended it
-        # cannot self-hit on a replay either. So the staged band rows
-        # (canonical docs only) cover every fresh doc.
+        # has a batch_exact hit. So the staged band rows (canonical docs
+        # only) cover every fresh doc. Both appends read only
+        # checkpointed frames, never the batch source or the index.
         # (the ids join on an expression, not on=, which would move
         # doc_id to the front of the appended rows)
         fresh_ids = F.broadcast(
-            out.where(F.col("status") == "fresh").select(
-                F.col("doc_id").alias("__id")
-            )
+            raw.where(fresh).select(F.col("doc_id").alias("__id"))
         )
         is_id = F.col("doc_id") == F.col("__id")
-        new_exact = rows.select("content_hash", "doc_id").join(
-            fresh_ids, is_id, "left_semi"
-        )
-        new_bands = band_rows.join(fresh_ids, is_id, "left_semi")
-        if not st["n_self"]:
-            # first attempt: both legs append the staged rows of exactly
-            # the fresh docs. They read only checkpointed frames, never
-            # the batch source or the index tables, so no checkpoint of
-            # their own is needed.
-            _route("tern.match_sink.append_route", "first-attempt-fast")
-        else:
-            _route("tern.match_sink.append_route", "replay-per-leg-heal")
-            # Per-leg idempotent appends (docstring rule 2): EACH leg
-            # anti-joins its OWN table, and BOTH frames materialise
-            # before either write — a lazy frame would re-evaluate
-            # mid-append against its own fresh rows and silently append
-            # zero rows (table scans re-resolve at action time; the
-            # parquet-dir read only dodges this because
-            # spark.read.parquet pins its file listing eagerly). The
-            # anti-joins' RIGHT sides are first broadcast-SEMI-pruned
-            # by the fresh ids: an anti-join match can only carry an
-            # id present in the batch, so the prune is
-            # decision-identical, and it keeps the right side O(batch)
-            # — broadcastable — instead of shuffling a corpus-sized id
-            # column per batch once the index outgrows the broadcast
-            # threshold (the regime BLOOM_r14 measured on the
-            # classifier joins).
-            ex_ids = ex_idx.select(F.col("doc_id").alias("__id")).join(
-                fresh_ids, on="__id", how="left_semi"
-            )
-            bd_ids = bd_idx.select(F.col("doc_id").alias("__id")).join(
-                fresh_ids, on="__id", how="left_semi"
-            )
-            new_exact = new_exact.join(
-                ex_ids, is_id, "left_anti"
-            ).localCheckpoint()
-            new_bands = new_bands.join(
-                bd_ids, is_id, "left_anti"
-            ).localCheckpoint()
-        _append_index_rows(new_exact, "exact", index_path)
-        _append_index_rows(new_bands, "bands", index_path)
-        return out
+        adds = [
+            index_log.write(
+                new_exact.join(fresh_ids, is_id, "left_semi"),
+                index_path, "exact",
+            ),
+            index_log.write(
+                band_rows.join(fresh_ids, is_id, "left_semi"),
+                index_path, "bands",
+            ),
+        ]
+        return adds, [], "append", out
+
+    return index_log.transact(spark, index_path, attempt)[0]
 
 
 def match_deduped_stream_sink(
@@ -458,13 +384,13 @@ def match_deduped_stream_sink(
     of the batch operator's replay-safe index rules.
 
     ``compact_every=N`` compacts the index after every N-th batch
-    (identity rewrite — ``compact_match_index``): each append lands a
-    file set per leg, so small batches degrade the classifier scan
-    linearly in BATCH COUNT until compaction resets it (BLOOM_r15
+    (``compact_match_index`` bin-packs the small files): each append
+    lands a file set per table, so small batches degrade the classifier
+    scan linearly in BATCH COUNT until compaction resets it (BLOOM_r15
     measured 1000-doc batches drifting to ~33 s/batch over 100
-    uncompacted appends). Runs inside foreachBatch
-    AFTER the batch's own lease span, so it serialises with the
-    stream's own appends by construction."""
+    uncompacted appends). A compaction from another process may run at
+    any time too: it commits like any writer, and a batch it races
+    rebases onto it (:func:`match_dedup_batch`)."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         match_dedup_batch(
@@ -487,7 +413,6 @@ def write_quality_model_artifact(
     weights: dict,
     path: str,
     spark=None,
-    versioned: bool | None = None,
 ) -> dict:
     """Persist sampled-trainer quality weights
     (``quality_model.train_quality_weights_sampled``) as a frozen JSON
@@ -497,17 +422,17 @@ def write_quality_model_artifact(
     zip is positional, so mismatched columns must fail at WRITE time,
     not when a stream restarts at 3am.
 
-    Two publication modes (r14, verdict #4 — shared with the DSIR
-    ratio via ``sources.artifacts``): the default local mode is a
-    tmp-file ``os.replace`` (atomic on POSIX); ``versioned=True`` — or
-    any ``://`` path, where rename does not exist — publishes a
-    ``v=N/model.json`` payload and flips the ``_CURRENT`` pointer, so
-    refreshes are atomic on object stores too and an in-flight reader
-    finishes on its resolved version. Versioned mode needs ``spark``
-    for the path's Hadoop filesystem."""
+    Publication goes through ``sources.artifacts`` like the DSIR ratio:
+    a ``v=N/model.json`` payload, then the ``_CURRENT`` pointer flip, on
+    a local path and an object store alike; an in-flight reader
+    finishes on its resolved version. ``spark`` (for the path's Hadoop
+    filesystem) defaults to the active session."""
     import json as _json
 
+    from pyspark.sql import SparkSession
+
     from ..operators.quality_model import HEURISTIC_FEATURES
+    from ..sources.artifacts import _write_small_file, publish_artifact_version
 
     if list(weights.get("cols", ())) != list(HEURISTIC_FEATURES):
         raise ValueError(
@@ -515,56 +440,28 @@ def write_quality_model_artifact(
             f"HEURISTIC_FEATURES: {weights.get('cols')!r}"
         )
     payload = {k: weights[k] for k in ("cols", "mean", "std", "w", "b")}
-    if versioned is None:
-        versioned = "://" in path
-    if versioned:
-        if spark is None:
-            raise ValueError(
-                "versioned quality-model publication needs spark= (the "
-                "pointer flip goes through the path's Hadoop filesystem)"
-            )
-        from ..sources.artifacts import (
-            _write_small_file,
-            publish_artifact_version,
-        )
-
-        data = _json.dumps(payload).encode()
-        publish_artifact_version(
-            spark, path,
-            lambda vdir: _write_small_file(
-                spark, vdir + "/model.json", data
-            ),
-        )
-        return payload
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(payload, fh)
-    os.replace(tmp, path)
+    spark = spark or SparkSession.active()
+    data = _json.dumps(payload).encode()
+    publish_artifact_version(
+        spark, path,
+        lambda vdir: _write_small_file(spark, vdir + "/model.json", data),
+    )
     return payload
 
 
 def load_quality_model(path: str, spark=None) -> dict:
-    """Read a frozen quality model — flat JSON file (local mode) or the
-    live version of a versioned artifact (``_CURRENT`` pointer
-    present; needs ``spark`` for non-local schemes)."""
+    """Read the live version of a frozen quality model (``spark``
+    defaults to the active session)."""
     import json as _json
 
-    if spark is not None:
-        from ..sources.artifacts import (
-            current_artifact_version,
-            read_small_file,
-        )
+    from pyspark.sql import SparkSession
 
-        if current_artifact_version(spark, path) is not None:
-            from ..sources.artifacts import current_artifact_dir
+    from ..sources.artifacts import current_artifact_dir, read_small_file
 
-            return _json.loads(
-                read_small_file(
-                    spark, current_artifact_dir(spark, path) + "/model.json"
-                )
-            )
-    with open(path) as fh:
-        return _json.load(fh)
+    spark = spark or SparkSession.active()
+    return _json.loads(
+        read_small_file(spark, current_artifact_dir(spark, path) + "/model.json")
+    )
 
 
 def quality_scored_stream(
@@ -601,11 +498,10 @@ def write_dsir_ratio_artifact(
     buckets: int = 10_000,
     smoothing: float = 1.0,
     salt: str = "dsir",
-    versioned: bool | None = None,
     vocab_top_k: int = 0,
 ) -> dict:
     """Materialise the DSIR importance log-ratio table as a FROZEN,
-    atomically-swappable artifact (r12 verdict #4): at 100 TB the ratio
+    versioned artifact (r12 verdict #4): at 100 TB the ratio
     model is built once from raw+target (or refreshed on a lake
     cadence), and every streaming micro-batch scores against the
     persisted table — the same frozen-model pattern as
@@ -616,16 +512,12 @@ def write_dsir_ratio_artifact(
     salt, bucket hash), so a scorer can refuse an artifact whose
     feature space doesn't match its configuration.
 
-    Two refresh modes (r13 verdict #3). Default local mode: a
-    directory swap (write tmp → rename, the compactors' pattern) —
-    a live stream reads either the old table or the new one, never a
-    partial write. ``versioned=True`` — or automatically for any
-    ``://`` path, where rename does not exist — publishes through
-    ``sources.artifacts``: a complete immutable ``v=N`` payload, then
-    a single-file ``_CURRENT`` pointer flip; a scorer resolves the
-    pointer once at stream construction and keeps reading its version
-    (the previous version survives pruning, so in-flight readers are
-    never torn).
+    Every refresh publishes through ``sources.artifacts`` (r13 verdict
+    #3), on a local path and an object store alike: a complete
+    immutable ``v=N`` payload, then a single-file ``_CURRENT`` pointer
+    flip; a scorer resolves the pointer once at stream construction
+    and keeps reading its version (the previous version survives
+    pruning, so in-flight readers are never torn).
 
     ``vocab_top_k`` (r14 verdict #3) additionally ships a VOCABULARY
     SIDECAR: the top-K grams of the RAW pool by occurrence count (the
@@ -653,9 +545,8 @@ def write_dsir_ratio_artifact(
     import json as _json
 
     from ..operators.sampling import _dsir_grams, dsir_logratio
+    from ..sources.artifacts import _write_small_file, publish_artifact_version
 
-    if versioned is None:
-        versioned = "://" in path
     lr = dsir_logratio(
         raw, target, id_col, text_col,
         buckets=buckets, smoothing=smoothing, salt=salt,
@@ -685,7 +576,7 @@ def write_dsir_ratio_artifact(
         "hash": "md5-60bit",
     }
 
-    def _fill(dest: str, write_meta) -> dict:
+    def _fill(dest: str) -> dict:
         lr.write.mode("overwrite").parquet(dest + "/ratio")
         n = spark.read.parquet(dest + "/ratio").count()
         full = dict(meta, n_ratio_rows=int(n))
@@ -694,41 +585,12 @@ def write_dsir_ratio_artifact(
             nv = spark.read.parquet(dest + "/vocab").count()
             full["vocab_top_k"] = int(vocab_top_k)
             full["n_vocab_rows"] = int(nv)
-        write_meta(dest + "/meta.json", _json.dumps(full).encode())
+        _write_small_file(spark, dest + "/meta.json", _json.dumps(full).encode())
         return full
 
-    if versioned:
-        from ..sources.artifacts import (
-            _write_small_file,
-            publish_artifact_version,
-        )
-
-        out: dict = {}
-        publish_artifact_version(
-            spark, path,
-            lambda vdir: out.update(
-                _fill(vdir, lambda p, b: _write_small_file(spark, p, b))
-            ),
-        )
-        return out
-
-    tmp = path + ".swap-new"
-    old = path + ".swap-old"
-    import shutil as _sh
-
-    _sh.rmtree(tmp, ignore_errors=True)
-    _sh.rmtree(old, ignore_errors=True)
-
-    def _local_meta(p: str, data: bytes) -> None:
-        with open(p, "wb") as fh:
-            fh.write(data)
-
-    full = _fill(tmp, _local_meta)
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    _sh.rmtree(old, ignore_errors=True)
-    return full
+    out: dict = {}
+    publish_artifact_version(spark, path, lambda vdir: out.update(_fill(vdir)))
+    return out
 
 
 def load_dsir_ratio(spark, path: str) -> tuple[dict, dict]:
@@ -736,8 +598,7 @@ def load_dsir_ratio(spark, path: str) -> tuple[dict, dict]:
     driver-side frozen model a stateless scorer closes over (≤ the
     configured bucket count of (int, int) pairs, the same size class
     ``decontaminated_stream`` collects). Resolves the ``_CURRENT``
-    pointer when the artifact is versioned (object-store layout) —
-    ONCE, here at stream construction. After this returns, the model is
+    pointer ONCE, here at stream construction. After this returns, the model is
     FULLY driver-resident (the whole table collects here), so even a
     long-running stream outliving many refreshes cannot be torn when
     its resolved version dir is eventually pruned: version retention
@@ -746,33 +607,16 @@ def load_dsir_ratio(spark, path: str) -> tuple[dict, dict]:
     until the NEXT publish."""
     import json as _json
 
-    from ..sources.artifacts import (
-        current_artifact_dir,
-        current_artifact_version,
-        read_small_file,
-    )
+    from ..sources.artifacts import current_artifact_dir, read_small_file
 
-    if current_artifact_version(spark, path) is not None:
-        vdir = current_artifact_dir(spark, path)
-        meta = _json.loads(read_small_file(spark, vdir + "/meta.json"))
-        rows = spark.read.parquet(vdir + "/ratio").collect()
-        table = {int(r["bucket"]): int(r["lr_pico"]) for r in rows}
-        if len(table) != meta.get("n_ratio_rows", len(table)):
-            raise ValueError(
-                f"DSIR ratio artifact {vdir!r} is inconsistent: meta pins "
-                f"{meta.get('n_ratio_rows')} rows, table has {len(table)}"
-            )
-        return table, meta
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = _json.load(fh)
-    rows = spark.read.parquet(os.path.join(path, "ratio")).collect()
+    vdir = current_artifact_dir(spark, path)
+    meta = _json.loads(read_small_file(spark, vdir + "/meta.json"))
+    rows = spark.read.parquet(vdir + "/ratio").collect()
     table = {int(r["bucket"]): int(r["lr_pico"]) for r in rows}
     if len(table) != meta.get("n_ratio_rows", len(table)):
         raise ValueError(
-            f"DSIR ratio artifact {path!r} is inconsistent: meta pins "
-            f"{meta.get('n_ratio_rows')} rows, table has {len(table)} — "
-            "refusing a torn read (the artifact swap is atomic; this "
-            "indicates a hand-edited or half-copied directory)"
+            f"DSIR ratio artifact {vdir!r} is inconsistent: meta pins "
+            f"{meta.get('n_ratio_rows')} rows, table has {len(table)}"
         )
     return table, meta
 
@@ -788,16 +632,10 @@ def load_dsir_vocab(spark, path: str) -> list | None:
     a v=K table with a v=K±1 sidecar (racing a refresh between the two
     loads) still scores exactly — the skewed sidecar merely prewarms
     slightly different grams."""
-    from ..sources.artifacts import current_artifact_version
+    from ..sources.artifacts import _exists, current_artifact_dir
 
-    if current_artifact_version(spark, path) is not None:
-        from ..sources.artifacts import current_artifact_dir
-
-        vdir = current_artifact_dir(spark, path)
-    else:
-        vdir = path
-    vpath = vdir.rstrip("/") + "/vocab"
-    if not _dir_exists(spark, vpath):
+    vpath = current_artifact_dir(spark, path) + "/vocab"
+    if not _exists(spark, vpath):
         return None
     # Arrow toPandas, not collect(): a 200k-row collect crosses py4j
     # row by row (~seconds) and this load sits on the stream-
@@ -1141,8 +979,8 @@ def dsir_scored_stream(
     Stateless per row — the ratio table is loaded ONCE at stream
     construction and closed over by an Arrow kernel (no watermark, no
     streaming state; a restart from checkpoint re-reads the artifact,
-    so decisions stay reproducible as long as refreshes are the atomic
-    swap ``write_dsir_ratio_artifact`` performs). The kernel mirrors
+    so decisions stay reproducible as long as refreshes are the
+    versioned publication ``write_dsir_ratio_artifact`` performs). The kernel mirrors
     the batch pipeline exactly: ``py_tokens`` (the pinned ASCII-``\\s``
     twin of ``dedup.tokens``), unigram+bigram grams, the portable
     60-bit md5 bucket hash (the artifact's pinned ``hash``; a mismatch
@@ -1230,8 +1068,9 @@ def dsir_scored_stream_sink(
     of appending a duplicate copy (the span sink's effectively-once
     pattern). Scoring is stateless against a frozen model, so a
     restart re-scores a re-delivered batch IDENTICALLY as long as
-    artifact refreshes use :func:`write_dsir_ratio_artifact`'s atomic
-    swap; kill/restart exactly-once is pinned in tests/test_dsir.py."""
+    artifact refreshes use :func:`write_dsir_ratio_artifact`'s
+    versioned publication; kill/restart exactly-once is pinned in
+    tests/test_dsir.py."""
     scored = dsir_scored_stream(
         stream, ratio_path, id_col, text_col,
         min_logweight_micro=min_logweight_micro,
@@ -1252,26 +1091,6 @@ def _dsir_write_batch(batch: DataFrame, batch_id: int, out_path: str) -> None:
     batch.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
 
-def _dir_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop filesystem of the path's scheme —
-    os.path only sees the local disk and would silently report False for
-    hdfs:///s3a:// index paths, making every batch take the empty-index
-    branch on a cluster."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
-def _dir_bytes(spark, path: str) -> int:
-    """Recursive byte size of a directory through the Hadoop filesystem
-    (works for hdfs:///s3a:// index paths, not just local disk)."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return int(fs.getContentSummary(jpath).getLength())
-
-
 def span_dedup_batch(
     batch: DataFrame,
     index_path: str,
@@ -1284,27 +1103,16 @@ def span_dedup_batch(
     """One micro-batch of incremental ExactSubstr span dedup: clean the
     batch against the gram index, then append the batch's ORIGINAL grams.
 
-    The WHOLE span — crash heal, index read/clean, append — runs under
-    ``index_lease`` on the grams dir (ADVICE r10 #1): without it, the
-    pre-batch heal would misread a LIVE standalone compaction's scratch
-    dirs as crash debris and delete its in-flight tmp (or rename old
-    back mid-swap), and the batch's index read could land inside the
-    live swap's missing-dir window between its two renames and silently
-    bootstrap-reset the dedup state. Holding it, a concurrent
-    ``compact_dedup_indexes`` serialises against the batch at
-    acquisition; the append inside re-takes the lease re-entrantly.
-
-    NOTE the lease is held for the WHOLE batch span — minutes for a
-    large micro-batch — while a standalone compactor's default
-    acquisition wait is only ``dedup_index._LEASE_WAIT_S`` (60s), so a
-    maintenance compaction run against a live stream with the default
-    wait raises ``IndexLockError`` more often than not (ADVICE r11 #4).
-    Compactors targeting a table with a live streaming writer should
-    pass a batch-sized ``wait_s`` (every ``compact_*`` function accepts
-    it; the ``compact_dedup_indexes`` task defaults to 900s via
-    ``$SPARK_GRAFT_COMPACT_WAIT_S``) or schedule compaction through the
-    sink's own ``compact_every`` hook, which runs inside the batch
-    lease.
+    The clean and the append are one optimistic transaction on the index
+    (:mod:`operators.index_log`): the batch cleans against the newest
+    version and commits its grams and its ``grams_meta`` watermark row,
+    together, against that version. If another append to the gram index
+    commits in between, the batch deletes its files and cleans again
+    against the new version; a compaction in between changes no decision
+    (the min over compacted rows is the min over the appends), so the
+    batch commits on top of it. No lock is held, so a maintenance
+    ``compact_dedup_indexes`` neither waits for a batch nor makes one
+    wait.
 
     Appending the original (not cleaned) text makes the index converge to
     exactly the full-corpus first-occurrence keys, so a later batch's
@@ -1328,31 +1136,10 @@ def span_dedup_batch(
     (``dedup_index.clean_against_gram_index``); that route lands on
     ``tern.index_prune``.
     """
-    if "://" not in index_path:
-        from ..operators.dedup_index import index_lease
-
-        lease = index_lease(f"{index_path}/grams", "batch")
-    else:
-        lease = contextlib.nullcontext()
-    with lease:
-        return _span_dedup_batch_impl(
-            batch, index_path, id_col, text_col, min_tokens,
-            max_doc_tokens, memory_guard,
-        )
-
-
-def _span_dedup_batch_impl(
-    batch: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    min_tokens: int,
-    max_doc_tokens: int,
-    memory_guard: bool,
-) -> DataFrame:
+    from ..operators import index_log
     from ..operators.dedup import release_staged, substring_dedup
     from ..operators.dedup_index import (
-        append_to_gram_index,
+        _gram_tables,
         clean_against_gram_index,
     )
     from ..operators.memguard import (
@@ -1361,66 +1148,57 @@ def _span_dedup_batch_impl(
     )
 
     spark = batch.sparkSession
-    if "://" not in index_path:
-        from ..operators.dedup_index import recover_interrupted_compaction
 
-        # heal a compaction swap that died between its renames —
-        # otherwise this batch would see NO index and silently reset
-        # the dedup state (the .compact-old survivor holds the data).
-        # MUST run before this batch's append: an append recreating
-        # a swap-window dir would otherwise strand the survivor
-        # (r10 review finding 2) — the heal merges it instead.
-        recover_interrupted_compaction(f"{index_path}/grams")
-    have_index = _dir_exists(spark, f"{index_path}/grams")
-    # decidability FIRST: on a cluster without executor mem/core confs the
-    # floor model can never fire, and the batch-bytes aggregate below is a
-    # full extra scan of the micro-batch — don't pay it for a no-op check
-    if memory_guard and incremental_span_floor_decidable(spark):
-        index_bytes = (
-            _dir_bytes(spark, f"{index_path}/grams") if have_index else 0
-        )
-        # raw text bytes via a map-only aggregate: a streaming micro-batch
-        # frame carries no usable Catalyst size estimate (measured r8 —
-        # the plan-stats path silently skipped the guard and the JVM died
-        # with a raw heap OOM at the 2g floor), and text bytes are the
-        # quantity the coverage-window resident model is calibrated on
-        batch_bytes = batch.agg(
-            F.sum(F.octet_length(F.col(text_col)))
-        ).collect()[0][0]
-        floor_msg = incremental_span_floor_message(
-            batch.sparkSession, batch_bytes, index_bytes
-        )
-        if floor_msg is not None:
-            from ..plans.curation import CurationMemoryError
+    def attempt(snap):
+        have_index = snap.has("grams")
+        # decidability FIRST: on a cluster without executor mem/core
+        # confs the floor model can never fire, and the batch-bytes
+        # aggregate below is a full extra scan of the micro-batch —
+        # don't pay it for a no-op check
+        if memory_guard and incremental_span_floor_decidable(spark):
+            # raw text bytes via a map-only aggregate: a streaming
+            # micro-batch frame carries no usable Catalyst size estimate
+            # (measured r8 — the plan-stats path silently skipped the
+            # guard and the JVM died with a raw heap OOM at the 2g
+            # floor), and text bytes are the quantity the coverage-window
+            # resident model is calibrated on
+            batch_bytes = batch.agg(
+                F.sum(F.octet_length(F.col(text_col)))
+            ).collect()[0][0]
+            floor_msg = incremental_span_floor_message(
+                spark, batch_bytes, snap.bytes("grams")
+            )
+            if floor_msg is not None:
+                from ..plans.curation import CurationMemoryError
 
-            raise CurationMemoryError(floor_msg)
-    spark.sparkContext.setLocalProperty(
-        "tern.span_dedup.plan", "dir" if have_index else "bootstrap"
-    )
-    if have_index:
-        cleaned = clean_against_gram_index(
-            spark,
-            batch,
-            index_path,
-            id_col,
-            text_col,
-            min_tokens=min_tokens,
-            max_doc_tokens=max_doc_tokens,
+                raise CurationMemoryError(floor_msg)
+        spark.sparkContext.setLocalProperty(
+            "tern.span_dedup.plan", "dir" if have_index else "bootstrap"
         )
-    else:  # first batch: no index yet == the plain batch operator
-        cleaned = substring_dedup(
-            batch, id_col, text_col,
-            min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
+        if have_index:
+            cleaned = clean_against_gram_index(
+                spark, batch, index_path, id_col, text_col,
+                min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
+            )
+        else:  # first batch: no index yet == the plain batch operator
+            cleaned = substring_dedup(
+                batch, id_col, text_col,
+                min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
+            )
+        out = cleaned.localCheckpoint()  # decide BEFORE the index moves
+        # the operator stages its token table per call; a long-running
+        # stream must not accumulate one persisted frame per micro-batch
+        release_staged(spark)
+        frames = _gram_tables(
+            batch, id_col, text_col, min_tokens, max_doc_tokens, "append"
         )
-    out = cleaned.localCheckpoint()  # decide BEFORE the index moves
-    # the operator stages its token table per call; a long-running stream
-    # must not accumulate one persisted frame per micro-batch
-    release_staged(spark)
-    append_to_gram_index(
-        batch, index_path, id_col, text_col,
-        min_tokens=min_tokens, max_doc_tokens=max_doc_tokens,
-    )
-    return out
+        adds = [
+            index_log.write(df, index_path, table)
+            for table, df in frames.items()
+        ]
+        return adds, [], "append", out
+
+    return index_log.transact(spark, index_path, attempt)[0]
 
 
 def span_deduped_stream_sink(
@@ -1450,9 +1228,10 @@ def span_deduped_stream_sink(
     the index and the output.
 
     ``compact_every=N`` checks the gram index after every N-th batch and
-    compacts it (``dedup_index.compact_gram_index``) once the bytes
-    appended since the last compaction pass 20% of the table
-    (``dedup_index.dirty_fraction``): appends re-record every gram
+    compacts it (``dedup_index.compact_gram_index``) once the bytes no
+    compaction wrote pass 20% of the table's live bytes
+    (``dedup_index.dirty_fraction``, read from the manifest): appends
+    re-record every gram
     the batch shares with the corpus, so without compaction the
     per-batch min-combine scan pays for append duplication that the
     index's min semantics make redundant. Compaction between batches
@@ -1481,10 +1260,10 @@ def span_deduped_stream_sink(
             )
 
             # explicit compaction is unconditional BY DESIGN, so the
-            # scheduled hook reads the clean watermark every gram
-            # compaction records — an O(index) rewrite only once the
-            # appends since the last one exceed 20% (r10)
-            if dirty_fraction(f"{index_path}/grams") > 0.2:
+            # scheduled hook reads which live bytes a compaction wrote —
+            # an O(index) rewrite only once the appends since the last
+            # one exceed 20% (r10)
+            if dirty_fraction(batch.sparkSession, index_path, "grams") > 0.2:
                 compact_gram_index(batch.sparkSession, index_path)
 
     return (

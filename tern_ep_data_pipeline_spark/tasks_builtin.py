@@ -126,58 +126,40 @@ def compact_dedup_indexes(spark: SparkSession, site: str) -> dict:
     off-ingest-path maintenance the index docstrings defer to): for the
     index root at ``$SPARK_GRAFT_INDEX_DIR`` (default ``<out>/dedup_index/
     site=<site>``), rewrite whichever of the grams/chunks/lines tables
-    exist to their canonical aggregates (``dedup_index.compact_*_index``),
-    and the match index's exact/bands legs by an identity rewrite.
-    Returns per-table row counts before/after; tables absent from the
-    root (no live dir and no ``.compact-old`` survivor of a swap that
-    died) are skipped. Each compactor heals an interrupted swap inside
-    its table's lease, never before it: a heal outside the lease would
-    read a live sink's in-flight ``.compact-tmp`` as crash debris.
+    exist to their canonical aggregates (``dedup_index.compact_*_index``)
+    and bin-pack the match index's exact/bands files. Returns per-table
+    row counts before/after; tables the root's manifest does not list
+    are skipped.
 
-    EXCLUSIVE ACCESS ENFORCED: each table's compactor and appender take
-    the same lock-file lease (``dedup_index.index_lease``), so this task
-    racing a live ingest stream fails loudly at acquisition
-    (``IndexLockError``) instead of silently deleting a concurrently
-    appended part file with the old dir. A live stream compacts safely
-    through its own sink hook (``compact_every``), which serialises with
-    appends inside ``foreachBatch``. Best-effort in-process guards
-    (in-progress ``_temporary`` dirs, pre-read byte snapshots) remain as
-    a backstop against writers that bypass the lease — see
-    ``dedup_index._rewrite_parquet_dir``.
-
-    A live streaming writer holds its table's lease across a WHOLE
-    micro-batch (heal -> clean -> append — minutes for a large batch),
-    so this task's default acquisition wait is sized for that case:
-    ``$SPARK_GRAFT_COMPACT_WAIT_S`` (default 900s, vs the library's
-    per-call 60s) — a maintenance compactor should outwait a batch, not
-    turn concurrent maintenance into the common failure (ADVICE r11
-    #4)."""
+    Safe against a live ingest stream on the same root, on any store:
+    every compaction and every append is one commit of the root's
+    manifest log (``operators.index_log``), so a stream batch that
+    commits while this task compacts stays live beside the compacted
+    files, and a batch that read the index before a compaction commits
+    on top of it unchanged. Each compactor ends by sweeping what crashed
+    or superseded writers left behind."""
     from .operators import dedup_index as di
+    from .operators.index_log import snapshot
 
     apply_engine_conf(spark)
     root = os.environ.get(
         "SPARK_GRAFT_INDEX_DIR",
         os.path.join(_out_dir(), "dedup_index", f"site={site}"),
     )
-    wait_s = float(os.environ.get("SPARK_GRAFT_COMPACT_WAIT_S", "900"))
     out: dict = {"path": root}
-
-    def exists(table: str) -> bool:
-        p = os.path.join(root, table)
-        return os.path.isdir(p) or os.path.isdir(p + ".compact-old")
-
+    snap = snapshot(spark, root)
     for sub, fn in (
         ("grams", di.compact_gram_index),
         ("chunks", di.compact_chunk_index),
         ("lines", di.compact_line_index),
     ):
-        if exists(sub):
-            out[sub] = fn(spark, root, wait_s=wait_s)
-    # the match index's exact/bands legs (r15): identity rewrites that
-    # undo per-micro-batch append file explosion — the measured
+        if snap.has(sub):
+            out[sub] = fn(spark, root)
+    # the match index's exact/bands legs (r15): bin-packing undoes
+    # per-micro-batch append file explosion — the measured
     # batch-COUNT-linear classifier degradation (BLOOM_r15)
-    if exists("exact") or exists("bands"):
-        out["match"] = di.compact_match_index(spark, root, wait_s=wait_s)
+    if snap.has("exact") or snap.has("bands"):
+        out["match"] = di.compact_match_index(spark, root)
     return out
 
 
@@ -187,9 +169,9 @@ def refresh_dsir_ratio(spark: SparkSession, site: str) -> dict:
     the cadence leg of the frozen-model pattern: the streaming scorer
     (``streaming.curation.dsir_scored_stream``) reads a persisted
     (bucket, lr_pico) table; this task rebuilds it from the current
-    raw documents pool and the target slice and swaps it atomically
-    (``write_dsir_ratio_artifact``), so a live stream keeps scoring
-    against either the old or the new model, never a torn one.
+    raw documents pool and the target slice and publishes it as a new
+    version (``write_dsir_ratio_artifact``), so a live stream keeps
+    scoring against either the old or the new model, never a torn one.
 
     Env knobs: ``$SPARK_GRAFT_DSIR_RATIO_DIR`` (default
     ``<out>/dsir_ratio/site=<site>``), ``$SPARK_GRAFT_DSIR_TARGET_LANG``
@@ -246,7 +228,7 @@ def refresh_quality_model(spark: SparkSession, site: str) -> dict:
     weights = train_quality_weights_sampled(
         labelled, "doc_id", "text", sample_rows=sample_rows
     )
-    write_quality_model_artifact(weights, path, spark=spark, versioned=True)
+    write_quality_model_artifact(weights, path, spark=spark)
     from .sources.artifacts import current_artifact_version
 
     return {

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from tern_ep_data_pipeline_spark.operators import bloom
 from tern_ep_data_pipeline_spark.operators import dedup_index as di
+from tern_ep_data_pipeline_spark.operators import index_log
 
 
 # ------------------------------------------------------------- kernel
@@ -206,7 +207,7 @@ def test_bloom_prune_actually_prunes(spark, tmp_path):
     corpus = _corpus(spark, n=400, seed=3)
     path = str(tmp_path / "gidx")
     di.build_gram_index(corpus, path, min_tokens=8)
-    scan = spark.read.parquet(path + "/grams")
+    scan = index_log.scan(spark, path, "grams")
     total = scan.count()
     batch = spark.createDataFrame(
         [(5000, "one tiny fresh document that shares no grams at all")],
@@ -224,7 +225,7 @@ def test_prune_strategies_agree(spark, tmp_path):
     corpus = _corpus(spark, n=120, seed=9)
     path = str(tmp_path / "gidx")
     di.build_gram_index(corpus, path, min_tokens=8)
-    scan = spark.read.parquet(path + "/grams")
+    scan = index_log.scan(spark, path, "grams")
     batch = _batch(spark, corpus.collect(), start_id=9000)
     keys = di._gram_first_table(batch, "doc_id", "text", 8, 1 << 24)
 

@@ -11,6 +11,7 @@ from tern_ep_data_pipeline_spark.operators.graph import (
     connected_components,
     dedup_clusters,
 )
+from tern_ep_data_pipeline_spark.operators.index_log import scan
 
 
 # ---------------------------------------------------------------- graph
@@ -1060,7 +1061,7 @@ def test_dedup_index_one_decision_per_input_row(spark, tmp_path):
         spark.createDataFrame([(1, t), (2, u), (3, t)], schema), sink
     ).collect()
     for leg in ("exact", "bands"):
-        ids = spark.read.parquet(f"{sink}/{leg}").select("doc_id")
+        ids = scan(spark, sink, leg).select("doc_id")
         assert {r["doc_id"] for r in ids.collect()} == {1, 2}, leg
 
 
@@ -1832,7 +1833,7 @@ def test_wide_line_index_boilerplate_report(spark, tmp_path, monkeypatch):
     )
     path = str(tmp_path / "lines_idx")
     assert build_line_index(corpus, path) == 5
-    assert spark.read.parquet(path + "/lines").columns == ["line_hash", "n_docs"]
+    assert scan(spark, path, "lines").columns == ["line_hash", "n_docs"]
 
     batch = spark.createDataFrame(
         [
@@ -2323,7 +2324,7 @@ def test_gram_build_chunked_identical(spark, tmp_path):
     assert n_flat == n_chunk
 
     # meta: one build row + >=1 append rows, watermark = corpus max id
-    meta = spark.read.parquet(chunked + "/grams_meta").collect()
+    meta = scan(spark, chunked, "grams_meta").collect()
     kinds = sorted(r["kind"] for r in meta)
     assert kinds[0] == "append" and kinds[-1] == "build" and len(meta) == 3
     assert max(r["max_doc_id"] for r in meta) == 59
@@ -2443,7 +2444,7 @@ def test_compact_gram_index_preserves_decisions(spark, tmp_path):
     assert stats["rows_after"] < stats["rows_before"]
     assert stats["files_after"] <= stats["files_before"]
     # distinct grams survive exactly once
-    grams = spark.read.parquet(str(tmp_path / "gidx_compact" / "grams"))
+    grams = scan(spark, path, "grams")
     assert grams.count() == grams.select("gram_hash").distinct().count()
 
     after = key(clean_against_gram_index(spark, probe, path).collect())
@@ -2515,27 +2516,24 @@ def test_compact_chunk_and_line_index(spark, tmp_path):
     import hashlib
 
     lh = hashlib.md5(b"shared line").hexdigest()
-    rows = spark.read.parquet(lpath + "/lines").collect()
+    rows = scan(spark, lpath, "lines").collect()
     counts = {r["line_hash"]: r["n_docs"] for r in rows}
     assert counts[lh] == 3
     assert len(rows) == len(counts)  # one row per hash after compaction
 
 
-def test_compact_sizing_uses_post_fold_bytes(spark, tmp_path):
-    """_compact_partitions sizes from POST-fold bytes (raw bytes scaled
-    by rows_after/rows_before): a dup-heavy index must not fan out into
-    ~dup-factor more sub-MB shards than the compacted data warrants
-    (ADVICE r8 #4)."""
+def test_compact_sizing_uses_post_fold_bytes(spark):
+    """_compact_partitions sizes from POST-fold bytes (the manifest's
+    live bytes scaled by rows_after/rows_before): a dup-heavy index must
+    not fan out into ~dup-factor more sub-MB shards than the compacted
+    data warrants (ADVICE r8 #4)."""
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         _compact_partitions,
     )
 
-    d = tmp_path / "fake_idx"
-    d.mkdir()
-    for i in range(8):  # 8 MiB of raw appends
-        (d / f"part-{i}.parquet").write_bytes(b"\0" * (1 << 20))
-    raw = _compact_partitions(spark, str(d))
-    folded = _compact_partitions(spark, str(d), row_scale=0.1)
+    raw_bytes = 8 << 20  # 8 MiB of raw appends
+    raw = _compact_partitions(spark, raw_bytes)
+    folded = _compact_partitions(spark, raw_bytes, row_scale=0.1)
     # unscaled: one shard per raw MiB (+1), floored at the session's
     # decode parallelism — derive from the fixture, don't hard-code
     # (the conftest session is local[4], so the floor clamps 9 -> 4)
@@ -2544,285 +2542,152 @@ def test_compact_sizing_uses_post_fold_bytes(spark, tmp_path):
     assert folded == 1  # 10x dup factor folds to <1 MiB -> one file
     assert folded < raw
     # scale never INCREASES the count (clamped to [0, 1])
-    assert _compact_partitions(spark, str(d), row_scale=5.0) == raw
+    assert _compact_partitions(spark, raw_bytes, row_scale=5.0) == raw
 
 
-def test_compaction_aborts_on_inprogress_write(spark, tmp_path):
-    """The dir-swap compactor requires exclusive access (ADVICE r8 #2);
-    an in-progress Spark write (_temporary dir) must abort the swap
-    LOUDLY with the live dir untouched, and compaction must succeed once
-    the writer is gone."""
+def _on_disk_parquet(root):
+    """Data files under an index root, relative to it."""
     import os
 
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith(".")
+    }
+
+
+def _listed(spark, root):
+    from tern_ep_data_pipeline_spark.operators import index_log
+
+    snap = index_log.snapshot(spark, root)
+    return {f["path"] for t in snap.tables.values() for f in t["files"]}
+
+
+def test_compaction_ignores_uncommitted_write(spark, tmp_path, monkeypatch):
+    """A write that has not committed (its files sit in a fresh dir no
+    manifest lists) is invisible to a compaction and survives the
+    compaction's sweep while younger than the grace: the writer can
+    still commit after the compaction and lose nothing. Past the grace,
+    an abandoned write is swept and the index reads the same."""
+    import os
+
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
+        _gram_tables,
         build_gram_index,
         compact_gram_index,
     )
 
     path = str(tmp_path / "gidx_busy")
-    docs = spark.createDataFrame(
-        [(1, "some document body " + " ".join(f"w{i}" for i in range(12)))],
+    mk = lambda i, w: spark.createDataFrame(
+        [(i, f"{w} document body " + " ".join(f"{w}{j}" for j in range(12)))],
         ["doc_id", "text"],
     )
-    build_gram_index(docs, path)
-    gp = os.path.join(path, "grams")
-    os.makedirs(os.path.join(gp, "_temporary"))
-    rows = spark.read.parquet(gp).count()
-    with pytest.raises(RuntimeError, match="in-progress write"):
-        compact_gram_index(spark, path)
-    assert spark.read.parquet(gp).count() == rows  # live dir untouched
-    os.rmdir(os.path.join(gp, "_temporary"))
+    build_gram_index(mk(1, "w"), path)
+    rows = scan(spark, path, "grams").count()
+    pending = [
+        index_log.write(df, path, table)
+        for table, df in _gram_tables(
+            mk(2, "x"), "doc_id", "text", 8, 1 << 24, "append"
+        ).items()
+    ]
     stats = compact_gram_index(spark, path)
-    assert stats["rows_after"] <= stats["rows_before"]
-
-
-def test_index_lease_excludes_compaction_from_live_writer(
-    spark, tmp_path, monkeypatch
-):
-    """compact_* vs a concurrent append is STRUCTURALLY excluded by the
-    lock-file lease (VERDICT r9 #3): a lease held by a live pid makes
-    compaction fail loudly at acquisition; a stale lease (dead holder)
-    is reclaimed; the lease is released after both success and failure."""
-    import json
-    import os
-
-    from tern_ep_data_pipeline_spark.operators import dedup_index
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        IndexLockError,
-        build_gram_index,
-        compact_gram_index,
-        index_lease,
+    assert stats["rows_before"] == rows  # the pending rows are not in
+    for add in pending:
+        for f in add["files"]:
+            assert os.path.exists(os.path.join(path, f["path"]))
+    index_log.commit(spark, path, None, pending)
+    assert scan(spark, path, "grams").count() == stats["rows_after"] + sum(
+        f["rows"] for f in pending[0]["files"]
     )
 
-    monkeypatch.setattr(dedup_index, "_LEASE_WAIT_S", 0.3)
-    path = str(tmp_path / "gidx_lease")
-    docs = spark.createDataFrame(
-        [(1, "lease document body " + " ".join(f"w{i}" for i in range(12)))],
-        ["doc_id", "text"],
+    live = _listed(spark, path)
+    abandoned = index_log.write(
+        _gram_tables(mk(3, "y"), "doc_id", "text", 8, 1 << 24, "append")["grams"],
+        path, "grams",
     )
-    build_gram_index(docs, path)
-    gp = os.path.join(path, "grams")
-    lock = gp + ".lock"
+    assert abandoned["files"]
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    index_log.sweep(spark, path)
+    assert _on_disk_parquet(path) == live == _listed(spark, path)
 
-    # a lease held by a LIVE process (this one) blocks compaction loudly
-    with open(lock, "w") as fh:
-        json.dump({"pid": os.getpid(), "role": "append"}, fh)
-    rows = spark.read.parquet(gp).count()
-    with pytest.raises(IndexLockError, match="lease"):
-        compact_gram_index(spark, path)
-    assert spark.read.parquet(gp).count() == rows  # live dir untouched
-    assert os.path.exists(lock)  # a foreign lease is never stolen
-    os.unlink(lock)
 
-    # a STALE lease (dead holder pid) is reclaimed and compaction runs
-    with open(lock, "w") as fh:
-        json.dump({"pid": 2**22 + 12345, "role": "append"}, fh)
-    stats = compact_gram_index(spark, path)
-    assert stats["rows_after"] <= stats["rows_before"]
-    assert not os.path.exists(lock)  # released after success
-
-    # appends take the same lease and release it
+def test_compaction_racing_an_append_keeps_it(spark, tmp_path, monkeypatch):
+    """A compaction and an append race on one table with no lock: an
+    append that commits between the compaction's read and its commit
+    stays live beside the folded files (the compaction rebases onto it),
+    and a second compaction that commits in between makes the first
+    rerun. Either way the clean decisions equal an index that never
+    raced."""
+    from tern_ep_data_pipeline_spark.operators import dedup, index_log
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         append_to_gram_index,
-    )
-
-    more = spark.createDataFrame(
-        [(2, "second body " + " ".join(f"x{i}" for i in range(12)))],
-        ["doc_id", "text"],
-    )
-    append_to_gram_index(more, path)
-    assert not os.path.exists(lock)
-
-    # exclusion the other way: an append in ANOTHER thread while a
-    # compactor holds the lease times out loudly instead of corrupting
-    # the swap. (Same-thread nesting is re-entrant BY DESIGN — the
-    # streaming batch holds the lease across heal->clean->append and the
-    # inner append's acquisition is a no-op.)
-    import threading
-
-    with index_lease(gp, "compact"):
-        with index_lease(gp, "append"):  # re-entrant: no deadlock
-            pass
-        err: list = []
-
-        def _try_append():
-            try:
-                with index_lease(gp, "append", wait_s=0.3):
-                    pass
-            except IndexLockError as exc:
-                err.append(exc)
-
-        t = threading.Thread(target=_try_append)
-        t.start()
-        t.join()
-        assert err and isinstance(err[0], IndexLockError)
-    assert not os.path.exists(lock)  # released once, by the real holder
-
-
-def test_lease_foreign_host_lock_never_reclaimed(tmp_path, monkeypatch):
-    """ADVICE r14: pid liveness (os.kill(pid, 0)) is HOST-LOCAL — on a
-    shared filesystem a lock written by another machine must be treated
-    conservatively, not reclaimed because its pid happens to be dead
-    HERE. Post-r15 payloads carry the holder's hostname: a foreign-host
-    lock reads alive (never reclaimed; the timeout names the host), a
-    same-host dead-pid lock reclaims as before, and pre-r15 payloads
-    without a host field keep the local-probe behaviour."""
-    import json
-    import os
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        IndexLockError,
-        index_lease,
-    )
-
-    gp = str(tmp_path / "tbl")
-    lock = gp + ".lock"
-    dead_pid = 2**22 + 54321
-
-    # foreign host + (locally) dead pid: reported ALIVE, never reclaimed
-    with open(lock, "w") as fh:
-        json.dump(
-            {"pid": dead_pid, "host": "some-other-executor", "role": "append"},
-            fh,
-        )
-    with pytest.raises(IndexLockError, match="some-other-executor"):
-        with index_lease(gp, "compact", wait_s=0.3):
-            pass
-    assert os.path.exists(lock)  # the foreign lease was not stolen
-
-    # same host + dead pid: stale — reclaimed and acquired as before
-    import socket as _socket
-
-    with open(lock, "w") as fh:
-        json.dump(
-            {"pid": dead_pid, "host": _socket.gethostname(), "role": "append"},
-            fh,
-        )
-    with index_lease(gp, "compact", wait_s=5.0):
-        with open(lock) as fh:
-            payload = json.load(fh)
-        assert payload["pid"] == os.getpid()
-        assert payload["host"] == _socket.gethostname()  # stamped
-    assert not os.path.exists(lock)
-
-    # pre-r15 payload (no host field): local probe governs — reclaimed
-    with open(lock, "w") as fh:
-        json.dump({"pid": dead_pid, "role": "append"}, fh)
-    with index_lease(gp, "compact", wait_s=5.0):
-        pass
-    assert not os.path.exists(lock)
-
-
-def test_two_waiter_stale_reclaim_race(tmp_path, monkeypatch):
-    """VERDICT r11 #5 / ADVICE r11 #1: N threads race to reclaim ONE
-    dead-pid lease. The rename-based reclaim must elect exactly one
-    winner per acquisition (mutual exclusion never violated), losers
-    must recreate their consumed payload temp and re-poll without any
-    FileNotFoundError surfacing, and every waiter eventually acquires
-    serially."""
-    import json
-    import os
-    import threading
-
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-
-    # keep the two-stage confirmation logic but compress the waits so
-    # four serial reclaim+hold cycles stay fast
-    monkeypatch.setattr(di, "_RECLAIM_SETTLE_S", 0.2)
-    monkeypatch.setattr(di, "_RECLAIM_CONFIRM_S", 0.1)
-    target = str(tmp_path / "raced_table")
-    lock = target + ".lock"
-    with open(lock, "w") as fh:
-        json.dump({"pid": 2**22 + 54321, "role": "append"}, fh)  # dead pid
-
-    n = 4
-    barrier = threading.Barrier(n)
-    inside = threading.Semaphore(1)
-    acquired: list[int] = []
-    errors: list[BaseException] = []
-
-    def waiter(i: int):
-        try:
-            barrier.wait()
-            with di.index_lease(target, "append", wait_s=30):
-                # mutual exclusion: a second thread inside the critical
-                # section at the same time means the reclaim elected two
-                # winners
-                assert inside.acquire(blocking=False), (
-                    "two lease holders inside the critical section — "
-                    "stale reclaim elected more than one winner"
-                )
-                try:
-                    import time
-
-                    time.sleep(0.05)
-                    acquired.append(i)
-                finally:
-                    inside.release()
-        except BaseException as exc:  # surfaced below
-            errors.append(exc)
-
-    threads = [threading.Thread(target=waiter, args=(i,)) for i in range(n)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=60)
-    assert not any(t.is_alive() for t in threads), "waiter threads wedged"
-    assert not errors, f"reclaim race raised: {errors}"
-    assert sorted(acquired) == list(range(n))  # every waiter got through
-    assert not os.path.exists(lock)  # released by the last holder
-
-
-def test_compactor_wait_outlasts_batch_lease(spark, tmp_path):
-    """ADVICE r11 #4: a streaming batch holds its index lease for the
-    whole heal->clean->append span, so a maintenance compactor with the
-    default 60s wait raced against a long batch fails as the COMMON
-    case. Every compactor now accepts wait_s: a short wait still fails
-    loudly, a batch-sized wait rides the holder out and compacts."""
-    import os
-    import threading
-    import time
-
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        IndexLockError,
         build_gram_index,
+        clean_against_gram_index,
         compact_gram_index,
-        index_lease,
     )
 
-    path = str(tmp_path / "gidx_waits")
-    docs = spark.createDataFrame(
-        [(1, "wait document body " + " ".join(f"w{i}" for i in range(12)))],
-        ["doc_id", "text"],
+    phrase = " ".join(f"rc{i}" for i in range(10))
+    mk = lambda rows: spark.createDataFrame(rows, ["doc_id", "text"])
+    base = mk([(1, f"owner doc {phrase} tail words"),
+               (2, "another owner body with its own words here")])
+    more = mk([(5, f"late copy {phrase} other ending"),
+               (6, "fresh appended body nothing shared at all")])
+    probe = mk([(10, f"probe copy {phrase} fresh ending"),
+                (11, "late copy rc0 rc1 rc2 rc3 rc4 rc5 rc6 rc7 rc8 rc9")])
+
+    def decide(root):
+        out = sorted(map(tuple, clean_against_gram_index(
+            spark, probe, root).collect()))
+        dedup.release_staged(spark)
+        return out
+
+    ref = str(tmp_path / "ref")
+    build_gram_index(base, ref)
+    append_to_gram_index(more, ref)
+    expected = decide(ref)
+
+    real_commit = index_log.commit
+    attempts: list[str] = []
+
+    def racing(competitor):
+        def commit(spark_, root, read_version, adds, removes=(), op="append",
+                   **kw):
+            if op == "compact":
+                attempts.append(op)
+                if len(attempts) == 1:
+                    competitor(root)
+            return real_commit(spark_, root, read_version, adds, removes, op, **kw)
+        return commit
+
+    path = str(tmp_path / "raced_append")
+    build_gram_index(base, path)
+    monkeypatch.setattr(
+        index_log, "commit", racing(lambda root: append_to_gram_index(more, root))
     )
-    build_gram_index(docs, path)
-    gp = os.path.join(path, "grams")
+    stats = compact_gram_index(spark, path)
+    monkeypatch.setattr(index_log, "commit", real_commit)
+    assert attempts == ["compact"]  # rebased, not rerun
+    assert stats["files_after"] > 1  # the folded file and the append's
+    assert decide(path) == expected
 
-    held = threading.Event()
-    release = threading.Event()
+    path = str(tmp_path / "raced_compaction")
+    build_gram_index(base, path)
+    append_to_gram_index(more, path)
+    attempts.clear()
 
-    def holder():
-        with index_lease(gp, "batch"):
-            held.set()
-            release.wait(timeout=30)
+    def competing_compaction(root):
+        monkeypatch.setattr(index_log, "commit", real_commit)
+        compact_gram_index(spark, root)
 
-    t = threading.Thread(target=holder)
-    t.start()
-    try:
-        assert held.wait(timeout=10)
-        # impatient compactor: fails loudly while the batch holds on
-        with pytest.raises(IndexLockError, match="lease"):
-            compact_gram_index(spark, path, wait_s=0.3)
-        # batch-sized wait: outlasts the holder and compacts
-        timer = threading.Timer(1.0, release.set)
-        timer.start()
-        t0 = time.monotonic()
-        stats = compact_gram_index(spark, path, wait_s=30)
-        assert time.monotonic() - t0 >= 0.5  # it actually waited
-        assert stats["rows_after"] <= stats["rows_before"]
-    finally:
-        release.set()
-        t.join(timeout=10)
+    monkeypatch.setattr(index_log, "commit", racing(competing_compaction))
+    compact_gram_index(spark, path)
+    monkeypatch.setattr(index_log, "commit", real_commit)
+    assert attempts == ["compact"]  # the loser reran with the real commit
+    # build, append, the competitor, the loser's rerun
+    assert index_log.snapshot(spark, path).version == 4
+    assert decide(path) == expected
 
 
 def test_incremental_span_floor_calibration():
@@ -2944,60 +2809,59 @@ def test_cc_concurrent_tight_runs_refcount(spark, monkeypatch):
     assert leftover == []
 
 
-def test_compaction_swap_recovery_and_scheme_guard(spark, tmp_path):
-    """A compaction swap killed between its two renames leaves the data in
-    .compact-old; the next batch (and the next compaction) must heal it
-    instead of silently resetting the dedup state. Scheme-qualified paths
-    are refused up front (the swap is local-fs rename)."""
-    import os
-
-    from tern_ep_data_pipeline_spark.operators import dedup
+def test_compaction_crash_recovery_and_uri_root(spark, tmp_path, monkeypatch):
+    """A gram compaction killed after writing its folded files but
+    before its commit leaves the index as it was: the next span batch
+    still cuts the indexed span. A ``file://`` root, which the
+    rename-based compactor refused, builds, appends, compacts and sweeps
+    through the same commit as a local path."""
+    from tern_ep_data_pipeline_spark.operators import dedup, index_log
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         build_gram_index,
+        clean_against_gram_index,
         compact_gram_index,
-        recover_interrupted_compaction,
     )
     from tern_ep_data_pipeline_spark.streaming.curation import span_dedup_batch
 
     phrase = " ".join(f"rc{i}" for i in range(10))
-    path = str(tmp_path / "gidx_recover")
-    build_gram_index(
-        spark.createDataFrame(
-            [(1, f"owner doc {phrase} tail words")], ["doc_id", "text"]
-        ),
-        path,
+    owner = spark.createDataFrame(
+        [(1, f"owner doc {phrase} tail words")], ["doc_id", "text"]
     )
-    # simulate the crash window: grams renamed away, new dir not yet in place
-    gp = os.path.join(path, "grams")
-    os.rename(gp, gp + ".compact-old")
-    assert not os.path.exists(gp)
-
-    # the streaming batch heals it and still cuts the indexed span
     batch = spark.createDataFrame(
         [(10, f"later copy {phrase} fresh ending")], ["doc_id", "text"]
     )
+    path = str(tmp_path / "gidx_recover")
+    build_gram_index(owner, path)
+
+    def killed(*a, **k):
+        raise RuntimeError("killed before commit")
+
+    monkeypatch.setattr(index_log, "commit", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        compact_gram_index(spark, path)
+    monkeypatch.undo()
+    assert len(_on_disk_parquet(path)) > len(_listed(spark, path))
     out = {r["doc_id"]: r for r in span_dedup_batch(batch, path).collect()}
     dedup.release_staged(spark)
     assert out[10]["n_removed_tokens"] == 10  # index was NOT reset
-    assert os.path.exists(gp)
 
-    # an interrupted swap is also healed by the next compaction itself
-    os.rename(gp, gp + ".compact-old")
-    stats = compact_gram_index(spark, path)
-    assert stats["rows_after"] > 0
-    # idempotent no-op when nothing is interrupted
-    assert recover_interrupted_compaction(gp) is False
-
-    with pytest.raises(NotImplementedError, match="local"):
-        compact_gram_index(spark, "s3a://bucket/gidx")
+    uri = "file://" + str(tmp_path / "gidx_uri")
+    build_gram_index(owner, uri)
+    span_dedup_batch(batch.withColumn("doc_id", batch.doc_id + 10), uri)
+    dedup.release_staged(spark)
+    stats = compact_gram_index(spark, uri)
+    assert stats["rows_after"] < stats["rows_before"]
+    assert stats["files_after"] == 1
+    got = clean_against_gram_index(spark, batch.withColumn(
+        "doc_id", batch.doc_id + 20), uri).first()
+    dedup.release_staged(spark)
+    assert got["n_removed_tokens"] == got["n_tokens"]
 
 
 def test_compaction_records_clean_watermark(spark, tmp_path):
-    """Every gram compaction records the table's clean byte watermark,
+    """Every gram compaction marks the files it writes in the manifest,
     so the span sink's scheduled hook sees a just-compacted index as
     clean instead of paying another O(index) rewrite on its next turn."""
-    import os
-
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         append_to_gram_index,
         build_gram_index,
@@ -3006,23 +2870,22 @@ def test_compaction_records_clean_watermark(spark, tmp_path):
     )
 
     path = str(tmp_path / "gidx_watermark")
-    gp = os.path.join(path, "grams")
     build_gram_index(
         spark.createDataFrame(
             [(1, " ".join(f"wm{i}" for i in range(12)))], ["doc_id", "text"]
         ),
         path,
     )
-    assert dirty_fraction(gp) == 1.0  # never compacted
+    assert dirty_fraction(spark, path, "grams") == 1.0  # never compacted
     compact_gram_index(spark, path)
-    assert dirty_fraction(gp) == 0.0
+    assert dirty_fraction(spark, path, "grams") == 0.0
     append_to_gram_index(
         spark.createDataFrame(
             [(5, " ".join(f"wn{i}" for i in range(12)))], ["doc_id", "text"]
         ),
         path,
     )
-    assert 0.0 < dirty_fraction(gp) < 1.0
+    assert 0.0 < dirty_fraction(spark, path, "grams") < 1.0
 
 
 def test_old_range_partitioned_marker_refused(spark, tmp_path):
@@ -3030,7 +2893,8 @@ def test_old_range_partitioned_marker_refused(spark, tmp_path):
     from an older build (range-partitioned, the wide line index's
     ``{"keep_text": true}``, or a marker that is not JSON at all) is
     refused by append, clean, report and compact alike, before anything
-    is written."""
+    is written: a root whose table dirs hold files directly and which has
+    no manifests is an older build's layout."""
     import os
 
     from tern_ep_data_pipeline_spark.operators import dedup_index as di
@@ -3064,26 +2928,22 @@ def test_old_range_partitioned_marker_refused(spark, tmp_path):
             assert os.listdir(os.path.join(path, table)) == ["_layout.json"]
 
 
-def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path):
-    """r10 review finding 1: a compaction crash between the two swap
-    renames followed by an APPEND (which recreates the live dir) must
-    not strand the .compact-old survivor — recovery merges its files
-    into the recreated dir instead of rmtree'ing history, plus orphan
-    tmp cleanup."""
-    import os
-    import shutil
-
+def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path, monkeypatch):
+    """A gram compaction that dies after writing its folded files but
+    before its commit, followed by an APPEND: the append commits on top
+    of the untouched pre-crash files, nothing is stranded or counted
+    twice, the next compaction merges both into one fold, and the dead
+    compaction's files are swept once past the grace."""
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         append_to_gram_index,
         build_gram_index,
         compact_gram_index,
     )
 
-    def grams(gp):
-        return {
-            r["gram_hash"]
-            for r in spark.read.parquet(gp).select("gram_hash").collect()
-        }
+    def grams(root):
+        return sorted(map(tuple, scan(spark, root, "grams").groupBy(
+            "gram_hash").agg(F.min("first_key")).collect()))
 
     base = spark.createDataFrame(
         [(1, "original corpus body " + " ".join(f"g{i}" for i in range(30)))],
@@ -3093,49 +2953,29 @@ def test_compaction_crash_with_append_heals_by_merge(spark, tmp_path):
         [(5, "appended body " + " ".join(f"h{i}" for i in range(30)))],
         ["doc_id", "text"],
     )
+    ref = str(tmp_path / "gidx_ref")
+    build_gram_index(base, ref)
+    append_to_gram_index(more, ref)
 
-    # ----- crash between the renames, then an append
-    flat = str(tmp_path / "gidx_crash_flat")
-    build_gram_index(base, flat)
-    gpf = os.path.join(flat, "grams")
-    original_f = grams(gpf)
-    os.rename(gpf, gpf + ".compact-old")
-    shutil.copytree(gpf + ".compact-old", gpf + ".compact-tmp")
-    append_to_gram_index(more, flat)
-    compact_gram_index(spark, flat)
-    assert original_f <= grams(gpf)
-    assert not os.path.isdir(gpf + ".compact-old")
-    assert not os.path.isdir(gpf + ".compact-tmp")
+    path = str(tmp_path / "gidx_crash")
+    build_gram_index(base, path)
 
-    # ----- post-swap crash (old stale, tmp gone): old must be DROPPED,
-    # not merged (merging a stale copy would double a sum table)
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        recover_interrupted_compaction,
-    )
+    def killed(*a, **k):
+        raise RuntimeError("killed before commit")
 
-    shutil.copytree(gpf, gpf + ".compact-old")
-    before = grams(gpf)
-    assert recover_interrupted_compaction(gpf)
-    assert grams(gpf) == before
-    assert not os.path.isdir(gpf + ".compact-old")
+    monkeypatch.setattr(index_log, "commit", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        compact_gram_index(spark, path)
+    monkeypatch.undo()
+    append_to_gram_index(more, path)
+    assert grams(path) == grams(ref)
+    stats = compact_gram_index(spark, path)
+    assert stats["rows_after"] == len(grams(ref))
+    assert grams(path) == grams(ref)
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    index_log.sweep(spark, path)
+    assert _on_disk_parquet(path) == _listed(spark, path)
 
-
-def test_contentless_lock_reclaimed_after_grace(tmp_path, monkeypatch):
-    """r10 review finding 5: a holder killed before writing its lease
-    payload must not wedge the table — a lock that STAYS contentless is
-    reclaimed after the grace period (real writers link their payload
-    atomically, so an empty lock can only be crash debris)."""
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
-
-    monkeypatch.setattr(di, "_LEASE_UNREADABLE_GRACE_S", 0.3)
-    monkeypatch.setattr(di, "_LEASE_WAIT_S", 5.0)
-    target = str(tmp_path / "tbl")
-    open(target + ".lock", "w").close()  # crash debris: zero bytes
-    with di.index_lease(target, "append"):
-        pass  # acquired after the grace; released cleanly
-    import os
-
-    assert not os.path.exists(target + ".lock")
 
 
 def test_cap_stats_reported_on_match_and_winnow(spark, tmp_path):
@@ -3194,76 +3034,99 @@ def test_cap_stats_reported_on_match_and_winnow(spark, tmp_path):
     dedup.release_staged(spark)
 
 
-@pytest.mark.parametrize("crash_point", ["p0_tmp_written", "p1_mid_swap", "p2_old_stale"])
-@pytest.mark.parametrize("append_after", [False, True])
-def test_swap_crash_matrix(spark, tmp_path, crash_point, append_after):
-    """Exhaustive crash matrix for the compaction swap protocol (write
-    tmp -> rename live->old -> rename tmp->live -> drop old): at EVERY
-    crash point, with and without an append landing before recovery, the
-    healed index must contain every pre-crash gram plus every appended
-    gram, and the min-per-gram view must equal a never-crashed index
-    over the same documents."""
+@pytest.mark.parametrize(
+    "crash_point",
+    ["parent_swap_state", "files_unlisted", "manifest_created", "mid_sweep"],
+)
+def test_commit_crash_matrix(spark, tmp_path, monkeypatch, crash_point):
+    """Crash injection at every step of a match-index compaction: its
+    files written but not listed, its manifest created (sweep not run),
+    and mid-sweep. Each time a near copy of an indexed doc classifies
+    ``near`` as on an uncrashed index, both tables keep every row, and a
+    later compaction plus a sweep leave exactly the listed files.
+
+    ``parent_swap_state`` is what the rename-based compactor left when
+    killed between its two renames: the plain ``exact`` dir moved to an
+    "old" sibling with a "tmp" copy beside it, no manifests (the batch
+    never looked at the siblings, so their names do not matter). The
+    batch used to read that as an empty index, classify the near copy
+    ``fresh`` and overwrite the band rows of all 40 documents with its
+    own 8; now the root is refused and nothing is written."""
     import os
     import shutil
 
-    from tern_ep_data_pipeline_spark.operators.dedup_index import (
-        append_to_gram_index,
-        build_gram_index,
-        compact_gram_index,
-        recover_interrupted_compaction,
-    )
+    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    from tern_ep_data_pipeline_spark.operators import index_log
+    from tern_ep_data_pipeline_spark.streaming.curation import match_dedup_batch
 
-    base = spark.createDataFrame(
-        [(1, "first corpus body " + " ".join(f"a{i}" for i in range(20))),
-         (2, "second corpus body " + " ".join(f"b{i}" for i in range(20)))],
-        ["doc_id", "text"],
-    )
-    more = spark.createDataFrame(
-        [(9, "appended body " + " ".join(f"c{i}" for i in range(20)))],
-        ["doc_id", "text"],
-    )
+    schema = "doc_id long, text string"
+    docs = [(i, " ".join(f"d{i}w{j}" for j in range(30))) for i in range(40)]
+    corpus = spark.createDataFrame(docs, schema)
+    near = docs[5][1].rsplit(" ", 2)[0] + " zz98 zz99"
+    probe = spark.createDataFrame([(100, near)], schema)
+    idx = str(tmp_path / "midx")
 
-    def min_view(gp):
-        return sorted(
-            map(
-                tuple,
-                spark.read.parquet(gp)
-                .groupBy("gram_hash")
-                .agg(F.min("first_key").alias("first_key"))
-                .collect(),
-            )
+    if crash_point == "parent_swap_state":
+        di._exact_table(corpus, "doc_id", "text").write.parquet(idx + "/exact")
+        di._band_table(corpus, "doc_id", "text", 3, 32, 8, "fast").write.parquet(
+            idx + "/bands"
         )
+        shutil.copytree(idx + "/exact", idx + "/exact.tmp")
+        shutil.copytree(idx + "/exact", idx + "/exact.old")
+        shutil.rmtree(idx + "/exact")
+        with pytest.raises(ValueError, match="rebuild the index"):
+            match_dedup_batch(probe, idx)
+        assert spark.read.parquet(idx + "/bands").count() == 320
+        assert sorted(os.listdir(idx)) == ["bands", "exact.old", "exact.tmp"]
+        return
 
-    # the oracle: the same documents, never crashed
-    ref = str(tmp_path / f"ref_{crash_point}_{append_after}")
-    build_gram_index(base, ref)
-    if append_after:
-        append_to_gram_index(more, ref)
-    expected = min_view(os.path.join(ref, "grams"))
+    di.build_dedup_index(corpus, idx)
+    extra = spark.createDataFrame(
+        [(50 + i, " ".join(f"e{i}w{j}" for j in range(30))) for i in range(3)],
+        schema,
+    )
+    match_dedup_batch(extra, idx)  # a second set of small files
+    rows = {"exact": 43, "bands": 344}
 
-    idx = str(tmp_path / f"idx_{crash_point}_{append_after}")
-    build_gram_index(base, idx)
-    gp = os.path.join(idx, "grams")
-    old, tmp = gp + ".compact-old", gp + ".compact-tmp"
-    # simulate the swap's on-disk states by hand. The tmp staging dir is
-    # a COMPLETE folded copy (the write commits before any rename).
-    if crash_point == "p0_tmp_written":
-        shutil.copytree(gp, tmp)
-    elif crash_point == "p1_mid_swap":
-        shutil.copytree(gp, tmp)
-        os.rename(gp, old)
-    elif crash_point == "p2_old_stale":
-        shutil.copytree(gp, tmp)
-        os.rename(gp, old)
-        os.rename(tmp, gp)
-    if append_after:
-        append_to_gram_index(more, idx)  # may recreate a missing live dir
-    recover_interrupted_compaction(gp)
-    assert min_view(gp) == expected
-    assert not os.path.isdir(old) and not os.path.isdir(tmp)
-    # and a subsequent real compaction works and preserves the view
-    compact_gram_index(spark, idx)
-    assert min_view(gp) == expected
+    def table_rows():
+        snap = index_log.snapshot(spark, idx)
+        return {t: snap.rows(t) for t in rows}
+
+    assert table_rows() == rows
+
+    def killed(*a, **k):
+        raise RuntimeError("killed")
+
+    if crash_point == "files_unlisted":
+        monkeypatch.setattr(index_log, "commit", killed)
+    elif crash_point == "manifest_created":
+        monkeypatch.setattr(index_log, "sweep", killed)
+    else:  # mid_sweep: the first deletion lands, the second kills it
+        real_delete = index_log._delete
+        deleted: list[str] = []
+
+        def delete_once(spark_, path):
+            if deleted:
+                killed()
+            deleted.append(path)
+            real_delete(spark_, path)
+
+        monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+        monkeypatch.setattr(index_log, "_delete", delete_once)
+    with pytest.raises(RuntimeError, match="killed"):
+        di.compact_match_index(spark, idx)
+    monkeypatch.undo()
+
+    assert table_rows() == rows
+    got = {r["doc_id"]: (r["status"], r["match_id"])
+           for r in match_dedup_batch(probe, idx).collect()}
+    assert got == {100: ("near", 5)}
+    assert table_rows() == rows
+
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    stats = di.compact_match_index(spark, idx)
+    assert {t: stats[t]["rows"] for t in rows} == rows
+    assert _on_disk_parquet(idx) == _listed(spark, idx)
 
 
 def test_scan_rows_lower_bound_detects_unknown_stats(spark, sf_dir):

@@ -247,8 +247,8 @@ def _reference_scores(spark, docs, path):
 
 def test_dsir_ratio_artifact_roundtrip_and_swap(spark, tmp_path):
     """The frozen ratio artifact: rows equal dsir_logratio exactly, meta
-    pins the feature space, a refresh is an atomic swap, and
-    object-store paths are refused with the alternative named."""
+    pins the feature space, a refresh publishes the next version, and a
+    ``://`` path publishes the same versioned layout."""
     import pytest as _pytest
 
     from tern_ep_data_pipeline_spark.streaming.curation import (
@@ -271,7 +271,8 @@ def test_dsir_ratio_artifact_roundtrip_and_swap(spark, tmp_path):
     }
     assert table == expect
 
-    # refresh = atomic swap; the new model must differ and fully replace
+    # refresh = the next version; the new model must differ and fully
+    # replace the old one for a new reader
     write_dsir_ratio_artifact(docs, t2, path, buckets=512)
     table2, _ = load_dsir_ratio(spark, path)
     assert table2 == {
@@ -279,17 +280,15 @@ def test_dsir_ratio_artifact_roundtrip_and_swap(spark, tmp_path):
         for r in sampling.dsir_logratio(docs, t2, buckets=512).collect()
     }
     assert table2 != table
-    import os as _os
-
-    assert not _os.path.exists(path + ".swap-new")
-    assert not _os.path.exists(path + ".swap-old")
-
-    # r14 (verdict r13 #3): a ``://`` path no longer refuses — it
-    # auto-routes to the VERSIONED pointer layout (rename-free, object-
-    # store-capable; file:// drives the same Hadoop FS code path here)
     from tern_ep_data_pipeline_spark.sources.artifacts import (
         current_artifact_version,
     )
+
+    assert current_artifact_version(spark, path) == 2
+
+    # r14 (verdict r13 #3): a ``://`` path publishes the same versioned
+    # pointer layout (rename-free, object-store-capable; file:// drives
+    # the same Hadoop FS code path here)
 
     uri = "file://" + str(tmp_path / "ratio_uri")
     write_dsir_ratio_artifact(docs, t1, uri, buckets=512)
@@ -366,7 +365,7 @@ def test_dsir_stream_scoring_matches_batch(spark, tmp_path):
 import pytest as _pytest_mod
 
 
-@_pytest_mod.mark.parametrize("layout", ["flat", "versioned"])
+@_pytest_mod.mark.parametrize("layout", ["local", "versioned"])
 def test_dsir_sink_kill_restart_exactly_once(
     spark, tmp_path, monkeypatch, layout
 ):
@@ -374,10 +373,10 @@ def test_dsir_sink_kill_restart_exactly_once(
     committed batch), restart from the SAME checkpoint, and the output
     equals a crash-free twin — every doc scored once, identical
     weights, a retried batch replaces its own partition. Scores come
-    from the frozen artifact both before and after the restart — on
-    the flat local-swap layout AND the r14 versioned pointer layout
-    (the restart re-resolves _CURRENT; unchanged artifact -> identical
-    re-scores, the object-store story's exactly-once leg)."""
+    from the frozen artifact both before and after the restart — on a
+    plain local path AND a file:// URI, both the r14 versioned pointer
+    layout (the restart re-resolves _CURRENT; unchanged artifact ->
+    identical re-scores, the object-store story's exactly-once leg)."""
     import glob as globmod
 
     import pytest as _pytest
@@ -579,10 +578,13 @@ def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
     """The artifact pins its bucket hash; a scorer whose kernel computes
     a different family must refuse at stream construction."""
     import json
-    import os
 
     import pytest as _pytest
 
+    from tern_ep_data_pipeline_spark.sources.artifacts import (
+        _write_small_file,
+        current_artifact_dir,
+    )
     from tern_ep_data_pipeline_spark.streaming.curation import (
         dsir_scored_stream,
         write_dsir_ratio_artifact,
@@ -594,8 +596,10 @@ def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
     assert meta["hash"] == "md5-60bit"
 
     doctored = dict(meta, hash="xxhash-64")
-    with open(os.path.join(path, "meta.json"), "w") as fh:
-        json.dump(doctored, fh)
+    _write_small_file(
+        spark, current_artifact_dir(spark, path) + "/meta.json",
+        json.dumps(doctored).encode(),
+    )
     with _pytest.raises(ValueError, match="mismatched buckets"):
         dsir_scored_stream(docs, path)
 

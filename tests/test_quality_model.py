@@ -297,7 +297,7 @@ def test_fit_logistic_sample_matches_scalar_reference():
 
 def test_quality_model_artifact_and_stream_scoring(spark, labelled, tmp_path):
     """r13: the frozen-model streaming leg — sampled weights persist as
-    an atomically-replaced JSON artifact, the stream scorer adds
+    a versioned JSON artifact, the stream scorer adds
     quality_prob via the SAME codegen expression the batch filter uses
     (scores equal by construction, asserted), min_prob cuts, and a
     wrong-feature-set artifact is refused at WRITE time."""

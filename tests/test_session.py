@@ -25,3 +25,28 @@ def test_codegen_cache_reuses_compiled_plans(spark):
     before = compiles.getCount()
     compile_all()
     assert compiles.getCount() - before == 0
+
+
+def test_workers_find_the_package(spark):
+    """The Python workers' path starts with the directory holding the
+    package, so a driver that imports it from any working directory
+    runs its UDFs, and a UDF in a worker imports the package."""
+    import os
+
+    from tern_ep_data_pipeline_spark import session
+
+    conf = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert conf.split(os.pathsep)[0] == session.PACKAGE_PARENT
+    assert os.path.isdir(
+        os.path.join(session.PACKAGE_PARENT, "tern_ep_data_pipeline_spark")
+    )
+
+    def imports(batches):
+        import tern_ep_data_pipeline_spark as pkg
+
+        for pdf in batches:
+            pdf["where"] = os.path.dirname(os.path.dirname(pkg.__file__))
+            yield pdf
+
+    got = spark.range(1).mapInPandas(imports, "id long, where string").first()
+    assert got["where"] == session.PACKAGE_PARENT

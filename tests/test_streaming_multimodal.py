@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tern_ep_data_pipeline_spark.operators import multimodal
+from tern_ep_data_pipeline_spark.operators.index_log import scan
 from tern_ep_data_pipeline_spark.sources.tables import load_table
 from tern_ep_data_pipeline_spark.streaming import (
     conditioned_file_stream,
@@ -953,12 +954,12 @@ def test_span_dedup_stream_matches_batch(spark, tmp_path):
 
     # re-delivery idempotence: re-append b2, index decisions unchanged
     before = sorted(
-        map(tuple, spark.read.parquet(f"{idx}/grams")
+        map(tuple, scan(spark, idx, "grams")
             .groupBy("gram_hash").agg(F.min("first_key").alias("fk")).collect())
     )
     span_dedup_batch(b2, idx)  # simulated foreachBatch retry
     after = sorted(
-        map(tuple, spark.read.parquet(f"{idx}/grams")
+        map(tuple, scan(spark, idx, "grams")
             .groupBy("gram_hash").agg(F.min("first_key").alias("fk")).collect())
     )
     assert before == after
@@ -1015,7 +1016,7 @@ def test_span_dedup_stream_sink_end_to_end(spark, tmp_path):
     import glob as globmod
 
     assert globmod.glob(f"{out}/batch_id=*")
-    assert globmod.glob(f"{idx}/grams/*.parquet")
+    assert scan(spark, idx, "grams").count() > 0
 
 
 def test_span_dedup_stream_sink_with_compaction(spark, tmp_path):
@@ -1082,7 +1083,7 @@ def test_span_dedup_stream_sink_with_compaction(spark, tmp_path):
     # the cross-batch span was actually cut (through the compacted index)
     assert compacted[11][1] == 10
     # compaction left one distinct row per gram
-    grams = spark.read.parquet(str(tmp_path / "gidx_c1" / "grams"))
+    grams = scan(spark, str(tmp_path / "gidx_c1"), "grams")
     assert grams.count() == grams.select("gram_hash").distinct().count()
 
 
@@ -1411,10 +1412,12 @@ def test_span_sink_checkpoint_kill_restart_exactly_once(
     append (whole batch retried) and between append and output write
     (retry re-appends — idempotent via the per-gram min — then lands
     the output once). Reference semantics: incremental append
-    exactly-once (code/file_handling/eddypro_concatenator.py:10-17)."""
+    exactly-once (code/file_handling/eddypro_concatenator.py:10-17). The
+    index append is the batch's one commit of the gram index, so the
+    crash lands just before or just after it."""
     import glob as globmod
 
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.operators.dedup import release_staged
 
     phrase = " ".join(f"cr{i}" for i in range(10))
@@ -1445,18 +1448,18 @@ def test_span_sink_checkpoint_kill_restart_exactly_once(
     # faulted run: batch 0 commits, then the injected crash kills the
     # query inside batch 1
     _kr_write_source(docs, str(tmp_path / "src_cr"))
-    real_append = di.append_to_gram_index
+    real_commit = index_log.commit
     state = {"calls": 0}
 
-    def faulty_append(frame, path, *a, **k):
+    def faulty_commit(*a, **k):
         state["calls"] += 1
         if state["calls"] == 2:  # batch 1 (batch 0 already committed)
             if crash_mode == "after_index_append":
-                real_append(frame, path, *a, **k)
+                real_commit(*a, **k)
             raise RuntimeError("injected mid-batch crash")
-        return real_append(frame, path, *a, **k)
+        return real_commit(*a, **k)
 
-    monkeypatch.setattr(di, "append_to_gram_index", faulty_append)
+    monkeypatch.setattr(index_log, "commit", faulty_commit)
     q = start("cr")
     with pytest.raises(Exception, match="injected mid-batch crash"):
         q.awaitTermination(180)
@@ -1468,7 +1471,7 @@ def test_span_sink_checkpoint_kill_restart_exactly_once(
     assert len(landed) == 1
 
     # restart from the SAME checkpoint with the fault removed
-    monkeypatch.setattr(di, "append_to_gram_index", real_append)
+    monkeypatch.setattr(index_log, "commit", real_commit)
     q2 = start("cr")
     q2.awaitTermination(180)
     assert q2.exception() is None
@@ -1520,8 +1523,7 @@ def test_match_dedup_batch_incremental(spark, tmp_path):
     assert out2[12][0] == "fresh"
 
     # index holds exactly the fresh docs (1, 2, 12) — dups never enter
-    ids = {r["doc_id"] for r in
-           spark.read.parquet(idx + "/exact").collect()}
+    ids = {r["doc_id"] for r in scan(spark, idx, "exact").collect()}
     assert ids == {1, 2, 12}
 
 
@@ -1533,14 +1535,15 @@ def test_match_sink_kill_restart_exactly_once(
 ):
     """Kill the match-dedup stream mid-batch (one committed batch),
     restart from the SAME checkpoint, and the decisions equal a
-    crash-free twin — the after-append retry exercises BOTH replay
-    rules (self-replay reclassification + per-leg anti-join no-op),
-    and ``between_legs`` faults the window ADVICE r13 flagged: exact
-    leg committed, bands leg not — the retry must re-append exactly
-    the missing band rows, or future near-dups classify fresh."""
+    crash-free twin. A batch writes its exact rows, then its band rows,
+    then commits both in one manifest: ``between_legs`` kills it after
+    the exact write, ``before_append`` after both writes but before the
+    commit (nothing a reader sees either way), and ``after_append``
+    after the commit, so the retry finds its own rows (self-replay
+    reclassification) and must append nothing twice."""
     import glob as globmod
 
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.streaming.curation import (
         match_deduped_stream_sink,
     )
@@ -1588,26 +1591,26 @@ def test_match_sink_kill_restart_exactly_once(
     assert expected[11] == ("exact", 1) and expected[12] == ("near", 1)
     assert expected[13][0] == "fresh"
 
-    real_append = di._append_index_rows
-    state = {"n": 0}
+    real_write, real_commit = index_log.write, index_log.commit
+    state = {"bands": 0, "commits": 0}
 
-    # exact leg writes first; count batches on it. before_append: crash
-    # with NOTHING written; between_legs: exact committed, bands not;
-    # after_append: both committed, sink write never happens.
-    def faulty_append(frame, leg, *a, **k):
-        if leg == "exact":
-            state["n"] += 1
-            if state["n"] == 2 and crash_mode == "before_append":
+    def faulty_write(df, root, table, *a, **k):
+        if table == "bands":
+            state["bands"] += 1
+            if state["bands"] == 2 and crash_mode == "between_legs":
                 raise RuntimeError("injected mid-batch crash")
-            return real_append(frame, leg, *a, **k)
-        if state["n"] == 2:
-            if crash_mode == "between_legs":
-                raise RuntimeError("injected mid-batch crash")
-            real_append(frame, leg, *a, **k)
+        return real_write(df, root, table, *a, **k)
+
+    def faulty_commit(*a, **k):
+        state["commits"] += 1
+        if state["commits"] == 2:  # batch 1 (batch 0 already committed)
+            if crash_mode == "after_append":
+                real_commit(*a, **k)
             raise RuntimeError("injected mid-batch crash")
-        return real_append(frame, leg, *a, **k)
+        return real_commit(*a, **k)
 
-    monkeypatch.setattr(di, "_append_index_rows", faulty_append)
+    monkeypatch.setattr(index_log, "write", faulty_write)
+    monkeypatch.setattr(index_log, "commit", faulty_commit)
     q = start("cr")
     with pytest.raises(Exception, match="injected mid-batch crash"):
         q.awaitTermination(180)
@@ -1615,21 +1618,21 @@ def test_match_sink_kill_restart_exactly_once(
             raise q.exception()
     assert len(globmod.glob(str(tmp_path / "out_cr") + "/batch_id=*")) == 1
 
-    monkeypatch.setattr(di, "_append_index_rows", real_append)
+    monkeypatch.undo()
     q2 = start("cr")
     q2.awaitTermination(180)
     assert q2.exception() is None
     assert collect("cr") == expected
     # no doc decided twice, and the index holds each fresh doc once —
-    # in BOTH legs (a torn bands leg is exactly what between_legs makes)
+    # in BOTH tables
     dupes = (
         spark.read.parquet(str(tmp_path / "out_cr"))
         .groupBy("doc_id").count().where("count > 1").count()
     )
     assert dupes == 0
-    ex = spark.read.parquet(str(tmp_path / "midx_cr") + "/exact")
+    ex = scan(spark, str(tmp_path / "midx_cr"), "exact")
     assert ex.groupBy("doc_id").count().where("count > 1").count() == 0
-    bd = spark.read.parquet(str(tmp_path / "midx_cr") + "/bands")
+    bd = scan(spark, str(tmp_path / "midx_cr"), "bands")
     assert {r["doc_id"] for r in bd.select("doc_id").distinct().collect()} == {
         r["doc_id"] for r in ex.select("doc_id").collect()
     }
@@ -1637,12 +1640,14 @@ def test_match_sink_kill_restart_exactly_once(
 
 def test_match_dedup_batch_heals_torn_append(spark, tmp_path, monkeypatch):
     """The ADVICE r13 failure scenario, end to end: attempt 1 of a batch
-    crashes BETWEEN the exact and bands writes, the foreachBatch retry
-    must re-append the missing band rows (per-leg anti-join), and a
-    LATER batch carrying a near-duplicate of the torn doc classifies
-    ``near`` — under the pre-fix single exact anti-join it would have
-    classified ``fresh`` and entered the corpus."""
-    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    crashes BETWEEN the exact and bands writes. Both tables commit in
+    one manifest, so the index shows neither leg; the foreachBatch retry
+    appends both, and a LATER batch carrying a near-duplicate of the
+    torn doc classifies ``near`` — under an exact-only append it would
+    have classified ``fresh`` and entered the corpus."""
+    import os
+
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.streaming.curation import (
         match_dedup_batch,
     )
@@ -1651,33 +1656,27 @@ def test_match_dedup_batch_heals_torn_append(spark, tmp_path, monkeypatch):
     idx = str(tmp_path / "midx")
     b1 = spark.createDataFrame([(1, base)], ["doc_id", "text"])
 
-    real = di._append_index_rows
+    real = index_log.write
 
-    def boom(frame, leg, *a, **k):
-        if leg == "bands":
+    def boom(df, root, table, *a, **k):
+        if table == "bands":
             raise RuntimeError("injected between-legs crash")
-        return real(frame, leg, *a, **k)
+        return real(df, root, table, *a, **k)
 
-    monkeypatch.setattr(di, "_append_index_rows", boom)
+    monkeypatch.setattr(index_log, "write", boom)
     with pytest.raises(RuntimeError, match="between-legs"):
         match_dedup_batch(b1, idx)
 
-    def tables():  # re-read: spark.read.parquet pins file listings
-        return (
-            spark.read.parquet(idx + "/exact"),
-            spark.read.parquet(idx + "/bands"),
-        )
+    # torn state: the exact rows are on disk, and no reader sees them
+    assert os.listdir(os.path.join(idx, "exact"))
+    assert index_log.snapshot(spark, idx).version == 0
 
-    # torn state: doc 1 exact-indexed, zero band rows
-    ex, bd = tables()
-    assert ex.count() == 1 and bd.count() == 0
-
-    monkeypatch.setattr(di, "_append_index_rows", real)
+    monkeypatch.setattr(index_log, "write", real)
     out_retry = {r["doc_id"]: r["status"]
                  for r in match_dedup_batch(b1, idx).collect()}
-    assert out_retry == {1: "fresh"}  # self-replay reclassification
-    ex, bd = tables()
-    assert bd.where("doc_id = 1").count() > 0  # bands leg healed
+    assert out_retry == {1: "fresh"}
+    ex, bd = scan(spark, idx, "exact"), scan(spark, idx, "bands")
+    assert bd.where("doc_id = 1").count() > 0  # bands leg landed
     assert ex.count() == 1  # exact leg did NOT double-append
 
     near = base.rsplit(" ", 2)[0] + " hz98 hz99"
@@ -1688,14 +1687,13 @@ def test_match_dedup_batch_heals_torn_append(spark, tmp_path, monkeypatch):
 
 
 def test_match_dedup_first_attempt_fast_path(spark, tmp_path):
-    """r14 verdict #1: a FIRST attempt (zero self-hits) appends without
-    ever scanning the index's doc_id columns — the per-leg anti-join
-    heal is replay-only. Pinned via the route property plus the
-    strongest observable: an all-duplicate batch leaves the exact
-    dir's FILE SET untouched (no empty append job), and a replay of an
-    already-appended batch routes to the heal and adds zero rows."""
-    import os as _os
-
+    """A batch appends the staged rows of its fresh docs without ever
+    scanning the index's doc_id columns. Pinned via the route property
+    plus the strongest observable: an all-duplicate batch commits
+    nothing (the index version and file set stay as they were), and a
+    replay of an already-committed batch finds its own rows, reports
+    the same decisions and appends nothing."""
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.streaming import curation as cur
 
     base = " ".join(f"fp{i}" for i in range(30))
@@ -1712,35 +1710,28 @@ def test_match_dedup_first_attempt_fast_path(spark, tmp_path):
     out1 = {r["doc_id"]: r["status"]
             for r in cur.match_dedup_batch(b1, idx).collect()}
     assert out1 == {1: "fresh", 2: "fresh", 3: "exact"}
-    assert route() == "first-attempt-fast"
+    assert route() == "append"
 
-    def part_files():
-        d = _os.path.join(idx, "exact")
-        return sorted(
-            f for f in _os.listdir(d) if not f.startswith(("_", "."))
-        )
+    before = index_log.snapshot(spark, idx)
+    assert {r["doc_id"] for r in scan(spark, idx, "exact").collect()} == {1, 2}
 
-    before = part_files()
-    assert {r["doc_id"] for r in
-            spark.read.parquet(idx + "/exact").collect()} == {1, 2}
-
-    # all-duplicate batch: zero fresh -> zero appends, zero index IO
+    # all-duplicate batch: zero fresh -> no commit
     b2 = spark.createDataFrame([(10, base)], ["doc_id", "text"])
     out2 = {r["doc_id"]: (r["status"], r["match_id"])
             for r in cur.match_dedup_batch(b2, idx).collect()}
     assert out2 == {10: ("exact", 1)}
     assert route() == "no-fresh-docs"
-    assert part_files() == before, "all-dup batch must not touch the index"
+    assert index_log.snapshot(spark, idx) == before, (
+        "all-dup batch must not touch the index"
+    )
 
-    # a REPLAY (docs 1/2 already indexed -> self-hits) takes the
-    # per-leg heal path and double-appends nothing
+    # a REPLAY (docs 1/2 already indexed -> self-hits) relabels them
+    # fresh and appends nothing
     out_replay = {r["doc_id"]: r["status"]
                   for r in cur.match_dedup_batch(b1, idx).collect()}
     assert out_replay == {1: "fresh", 2: "fresh", 3: "exact"}
-    assert route() == "replay-per-leg-heal"
-    assert spark.read.parquet(idx + "/exact").count() == 2
-    bands = spark.read.parquet(idx + "/bands")
-    assert bands.count() == bands.dropDuplicates().count()
+    assert route() == "no-fresh-docs"
+    assert index_log.snapshot(spark, idx) == before
     # the decision counts must not leave the session unserializable: a
     # pyspark Observation does, and then every task closure capturing
     # the session (pyspark.ml model transforms) fails
@@ -1794,18 +1785,18 @@ def test_match_dedup_batch_stages_batch_once(spark, tmp_path, monkeypatch):
     assert len(built) == 1
     plan = classifiers[0]._jdf.queryExecution().optimizedPlan().toString()
     assert not re.search(r"^[\s:+\-]*Generate\b", plan, re.M), plan
-    assert {r["doc_id"] for r in
-            spark.read.parquet(idx + "/bands").collect()} == {1, 12}
+    assert {r["doc_id"] for r in scan(spark, idx, "bands").collect()} == {1, 12}
 
 
 def test_match_index_compaction_decision_preserving(spark, tmp_path):
     """r15 (r14 verdict #1): the match-index compactor undoes per-batch
-    append file explosion without changing a single decision — an
-    identity rewrite (no aggregation exists for these tables). Pins:
-    file count shrinks, row sets byte-identical, and a post-compaction
-    batch classifies exactly like an uncompacted twin."""
-    import os as _os
-
+    append file explosion without changing a single decision — it only
+    merges files (no aggregation exists for these tables). Pins: file
+    count shrinks, row sets identical, a post-compaction batch
+    classifies exactly like an uncompacted twin, and a file of at least
+    half the split size stays where it is while only the small files
+    appended after it are merged."""
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.operators.dedup_index import (
         compact_match_index,
     )
@@ -1813,13 +1804,12 @@ def test_match_index_compaction_decision_preserving(spark, tmp_path):
         match_dedup_batch,
     )
 
-    base = " ".join(f"cm{i}" for i in range(30))
+    text = lambda d: " ".join(f"cm{d}w{j}" for j in range(30))
     idx = str(tmp_path / "midx")
     twin = str(tmp_path / "midx_twin")
     batches = [
         spark.createDataFrame(
-            [(b * 10 + i, f"doc {b} {i} " + base + f" tail{b * 10 + i}")
-             for i in range(3)],
+            [(b * 10 + i, text(b * 10 + i)) for i in range(3)],
             ["doc_id", "text"],
         )
         for b in range(4)
@@ -1829,33 +1819,185 @@ def test_match_index_compaction_decision_preserving(spark, tmp_path):
         match_dedup_batch(b, twin)
 
     def rows(path):
-        ex = spark.read.parquet(path + "/exact")
-        bd = spark.read.parquet(path + "/bands")
+        ex = scan(spark, path, "exact")
+        bd = scan(spark, path, "bands")
         return (sorted(map(tuple, ex.collect())),
                 sorted(map(tuple, bd.collect())))
 
     before = rows(idx)
-    nf = len([f for f in _os.listdir(idx + "/exact")
-              if f.endswith(".parquet")])
+    nf = len(index_log.snapshot(spark, idx).files("exact"))
     stats = compact_match_index(spark, idx)
     for leg in ("exact", "bands"):
-        assert stats[leg]["rows"] == spark.read.parquet(
-            f"{idx}/{leg}"
-        ).count()
+        assert stats[leg]["rows"] == scan(spark, idx, leg).count()
     assert stats["exact"]["files_before"] == nf
     assert stats["exact"]["files_after"] < nf
     assert stats["bands"]["files_after"] < stats["bands"]["files_before"]
-    assert rows(idx) == before  # identity rewrite
+    assert rows(idx) == before  # the row multiset is unchanged
 
     # a post-compaction batch decides exactly like the uncompacted twin
     probe = spark.createDataFrame(
-        [(100, "doc 0 0 " + base + " tail0"),      # exact dup of doc 0
-         (101, base + " novel probe body zz1")],   # fresh
+        [(100, text(0)),                           # exact dup of doc 0
+         (101, text(101))],                        # fresh
         ["doc_id", "text"],
     )
     got = sorted(map(tuple, match_dedup_batch(probe, idx).collect()))
     exp = sorted(map(tuple, match_dedup_batch(probe, twin).collect()))
     assert got == exp
+
+    # bin-packing: with a split size no more than twice the merged
+    # bands file, that file is full and stays; only what came after it
+    # (the probe's append) is merged
+    merged = index_log.snapshot(spark, idx).files("bands")[0]
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(2 * merged["bytes"]))
+    try:
+        match_dedup_batch(batches[0].withColumn(
+            "doc_id", batches[0].doc_id + 200), idx)
+        stats = compact_match_index(spark, idx)
+    finally:
+        spark.conf.set(key, old)
+    live = index_log.snapshot(spark, idx).files("bands")
+    assert merged in live
+    assert stats["bands"]["files_after"] == 2
+    assert stats["bands"]["rows"] == sum(f["rows"] for f in live)
+
+
+def _racing_commit(monkeypatch, competitor):
+    """Patch ``index_log.commit`` so that the first append commit runs
+    ``competitor`` (with the real commit) just before it: a competing
+    writer lands between the batch's read and its commit."""
+    from tern_ep_data_pipeline_spark.operators import index_log
+
+    real_commit = index_log.commit
+    raced: list[int] = []
+
+    def commit(*a, **k):
+        if not raced:
+            raced.append(1)
+            monkeypatch.setattr(index_log, "commit", real_commit)
+            competitor()
+        return real_commit(*a, **k)
+
+    monkeypatch.setattr(index_log, "commit", commit)
+
+
+@pytest.mark.parametrize("competitor", ["append", "compaction"])
+def test_match_batch_races_a_commit(spark, tmp_path, monkeypatch, competitor):
+    """A competing commit lands between a match batch's read and its
+    commit. An append to the index makes the batch classify again
+    against the new version, so a document another writer admitted
+    meanwhile is not admitted twice; a compaction changes nothing the
+    classifier computes, so the batch commits on top of it without
+    classifying again."""
+    from tern_ep_data_pipeline_spark.operators import dedup_index as di
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        match_dedup_batch,
+    )
+
+    base = " ".join(f"rb{i}" for i in range(30))
+    other = " ".join(f"ro{i}" for i in range(30))
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    idx = str(tmp_path / "midx")
+    match_dedup_batch(mk([(1, base)]), idx)
+    match_dedup_batch(mk([(2, "a second small file of index rows")]), idx)
+
+    real_match = di._match_frames
+    classified: list[int] = []
+
+    def counted(*a, **k):
+        classified.append(1)
+        return real_match(*a, **k)
+
+    monkeypatch.setattr(di, "_match_frames", counted)
+    if competitor == "append":
+        _racing_commit(
+            monkeypatch, lambda: di.append_to_index(mk([(20, other)]), idx)
+        )
+    else:
+        _racing_commit(monkeypatch, lambda: di.compact_match_index(spark, idx))
+    got = {r["doc_id"]: (r["status"], r["match_id"])
+           for r in match_dedup_batch(
+               mk([(10, other), (11, base + " tail")]), idx).collect()}
+
+    exact = {r["doc_id"] for r in scan(spark, idx, "exact").collect()}
+    if competitor == "append":
+        assert len(classified) == 2  # classified again after the conflict
+        assert got == {10: ("exact", 20), 11: ("near", 1)}
+        assert exact == {1, 2, 20}  # 'other' admitted once, as doc 20
+    else:
+        assert len(classified) == 1  # rebased, not classified again
+        assert got == {10: ("fresh", None), 11: ("near", 1)}
+        assert exact == {1, 2, 10}
+    bands = scan(spark, idx, "bands")
+    assert bands.count() == bands.dropDuplicates().count()
+
+
+def test_index_code_never_renames(spark, tmp_path, monkeypatch):
+    """No index write path renames anything: with ``os.rename``,
+    ``os.replace`` and ``shutil.move`` raising, two match-sink passes
+    and two span-sink passes, each compacting after every batch, and the
+    maintenance task all run, and the sinks decide like the batch
+    operators."""
+    import importlib
+    import os
+
+    import tern_ep_data_pipeline_spark.tasks_builtin as builtin_mod
+    from tern_ep_data_pipeline_spark import tasks as task_mod
+    from tern_ep_data_pipeline_spark.operators.dedup import release_staged
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        match_deduped_stream_sink,
+        span_deduped_stream_sink,
+    )
+
+    importlib.reload(builtin_mod)
+    phrase = " ".join(f"nr{i}" for i in range(10))
+    rows = [
+        (1, f"first holder doc {phrase} original ending"),
+        (2, "plain novel doc nothing shared with any other"),
+        (11, f"first holder doc {phrase} original ending"),
+        (12, f"mid copier piece {phrase} different framing"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for b, chunk in enumerate((rows[:2], rows[2:])):
+        spark.createDataFrame(chunk, docs.schema).coalesce(1).write.parquet(
+            str(tmp_path / "src" / f"b{b}")
+        )
+
+    def renamed(*a, **k):
+        raise AssertionError("index code renamed a path")
+
+    for mod, name in ((os, "rename"), (os, "replace"), (shutil, "move")):
+        monkeypatch.setattr(mod, name, renamed)
+
+    def run(sink, tag, **kw):
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(tmp_path / "src") + "/b*")
+        )
+        q = sink(
+            stream, str(tmp_path / "idx"), str(tmp_path / f"out_{tag}"),
+            str(tmp_path / f"ckpt_{tag}"), compact_every=1, **kw,
+        ).trigger(availableNow=True).start()
+        q.awaitTermination(180)
+        assert q.exception() is None, q.exception()
+        release_staged(spark)
+        return spark.read.parquet(str(tmp_path / f"out_{tag}"))
+
+    match = {r["doc_id"]: r["status"]
+             for r in run(match_deduped_stream_sink, "match").collect()}
+    assert (match[1], match[2], match[11]) == ("fresh", "fresh", "exact")
+    span = {r["doc_id"]: r["n_removed_tokens"]
+            for r in run(span_deduped_stream_sink, "span",
+                         min_tokens=8).collect()}
+    assert span[12] == 10 and span[1] == 0
+
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    matrix = task_mod.SiteTaskMatrix({"TestSite": {"compact_dedup_indexes": True}})
+    res = task_mod.run_task(spark, "compact_dedup_indexes", matrix)
+    assert res[0].ok, res[0].error
+    assert set(res[0].result) == {"path", "grams", "match"}
 
 
 def test_span_dedup_batch_auto_bloom_regime_gate(spark, tmp_path):
