@@ -3129,6 +3129,91 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, crash_point):
     assert _on_disk_parquet(idx) == _listed(spark, idx)
 
 
+@pytest.mark.parametrize("crash_point", ["p0_tmp_written", "p1_mid_swap", "p2_old_stale"])
+@pytest.mark.parametrize("append_after", [False, True])
+def test_swap_crash_matrix(spark, tmp_path, monkeypatch, crash_point, append_after):
+    """Crash matrix for a gram-index compaction, with and without an
+    append landing before the next read. ``p0_tmp_written``: the folded
+    copy is written but never committed. ``p1_mid_swap``: the commit
+    landed, the replaced files are still on disk (sweep killed).
+    ``p2_old_stale``: the sweep is killed after its first deletion. Each
+    time the min-per-gram view equals a never-crashed index over the
+    same documents, and a later compaction leaves exactly the listed
+    files on disk."""
+    from tern_ep_data_pipeline_spark.operators import index_log
+    from tern_ep_data_pipeline_spark.operators.dedup_index import (
+        append_to_gram_index,
+        build_gram_index,
+        compact_gram_index,
+    )
+
+    def frame(rows):
+        return spark.createDataFrame(rows, ["doc_id", "text"])
+
+    base = frame(
+        [(1, "first corpus body " + " ".join(f"a{i}" for i in range(20))),
+         (2, "second corpus body " + " ".join(f"b{i}" for i in range(20)))]
+    )
+    # a second set of files, so the compaction has more than one to sweep
+    base2 = frame([(5, "later corpus body " + " ".join(f"d{i}" for i in range(20)))])
+    more = frame([(9, "appended body " + " ".join(f"c{i}" for i in range(20)))])
+
+    def min_view(root):
+        return sorted(
+            map(
+                tuple,
+                index_log.scan(spark, root, "grams")
+                .groupBy("gram_hash")
+                .agg(F.min("first_key").alias("first_key"))
+                .collect(),
+            )
+        )
+
+    # the oracle: the same documents, never crashed
+    ref = str(tmp_path / "ref")
+    build_gram_index(base, ref)
+    append_to_gram_index(base2, ref)
+    if append_after:
+        append_to_gram_index(more, ref)
+    expected = min_view(ref)
+
+    idx = str(tmp_path / "idx")
+    build_gram_index(base, idx)
+    append_to_gram_index(base2, idx)
+
+    def killed(*a, **k):
+        raise RuntimeError("killed")
+
+    if crash_point == "p0_tmp_written":
+        monkeypatch.setattr(index_log, "commit", killed)
+    elif crash_point == "p1_mid_swap":
+        monkeypatch.setattr(index_log, "sweep", killed)
+    else:  # p2_old_stale: the first deletion lands, the second kills it
+        real_delete = index_log._delete
+        deleted: list[str] = []
+
+        def delete_once(spark_, path):
+            if deleted:
+                killed()
+            deleted.append(path)
+            real_delete(spark_, path)
+
+        monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+        monkeypatch.setattr(index_log, "_delete", delete_once)
+    with pytest.raises(RuntimeError, match="killed"):
+        compact_gram_index(spark, idx)
+    monkeypatch.undo()
+
+    if append_after:
+        append_to_gram_index(more, idx)
+    assert min_view(idx) == expected
+    # and a subsequent real compaction works and preserves the view
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    compact_gram_index(spark, idx)
+    assert min_view(idx) == expected
+    assert _on_disk_parquet(idx) == _listed(spark, idx)
+
+
 def test_scan_rows_lower_bound_detects_unknown_stats(spark, sf_dir):
     """r10 review finding 3: frames with unusable optimizer statistics
     (in-memory relations report sizeInBytes = Long.MaxValue) must fall
