@@ -1,8 +1,11 @@
 """Index tables as immutable parquet files plus numbered manifests.
 
-One index root (the ``path`` argument of ``dedup_index``) holds one or
-more tables — the match index's ``exact`` and ``bands``, the gram index's
-``grams`` and ``grams_meta``, ``chunks``, ``lines`` — and one log:
+One root holds one or more tables and one log. A root is an index (the
+``path`` argument of ``dedup_index``: the match index's ``exact`` and
+``bands``, the gram index's ``grams`` and ``grams_meta``, ``chunks``,
+``lines``) or a frozen-model artifact (``streaming.curation``: the DSIR
+ratio's ``ratio``, ``vocab`` and ``meta``, the quality model's
+``model``):
 
     <root>/<table>/<uuid>/part-*.parquet   immutable data files
     <root>/_v/<N>.json                      manifest N
@@ -44,8 +47,6 @@ from dataclasses import dataclass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from ..sources.artifacts import read_small_file
 
 #: Seconds an unlisted file, or a manifest superseded by a newer one,
 #: survives :func:`sweep`. It covers a writer between its write and its
@@ -109,6 +110,20 @@ def _delete(spark: SparkSession, path: str) -> None:
     fs.delete(jpath, True)
 
 
+def read_small_file(spark: SparkSession, path: str) -> bytes:
+    """Whole contents of one small file (a manifest) through the path's
+    Hadoop filesystem."""
+    fs, jpath = _fs(spark, path)
+    jvm = spark.sparkContext._jvm
+    stream = fs.open(jpath)
+    try:
+        out = jvm.java.io.ByteArrayOutputStream()
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, out, 65536, False)
+        return bytes(out.toByteArray())
+    finally:
+        stream.close()
+
+
 def create_exclusive(spark: SparkSession, path: str, data: bytes) -> bool:
     """Create ``path`` holding ``data`` only if it is absent; False when
     it exists. Locally the data goes to a private temp file that is then
@@ -166,10 +181,27 @@ def _versions(spark: SparkSession, root: str) -> list[int]:
 
 
 def _refuse_legacy(spark: SparkSession, root: str) -> None:
-    """A root without manifests whose table dirs hold files directly is
-    an older build's plain parquet layout. Uncommitted writes of this
-    layout sit one level down, in ``<table>/<uuid>/``, so they pass."""
-    for name, is_dir, _ in _ls(spark, root):
+    """Refuse a root without manifests that an older build laid out: a
+    frozen-model artifact published flat (a plain file, or a top-level
+    ``meta.json``) or through a ``_CURRENT`` pointer over ``v=N/`` dirs,
+    or an index whose table dirs hold files directly. Uncommitted writes
+    of this layout sit one level down, in ``<table>/<uuid>/``, so they
+    pass."""
+    fs, jpath = _fs(spark, root)
+    entries = _ls(spark, root)
+    if fs.isFile(jpath) or any(
+        (name in ("_CURRENT", "meta.json") and not is_dir)
+        or (is_dir and name.startswith("v=") and name[2:].isdigit())
+        for name, is_dir, _ in entries
+    ):
+        raise ValueError(
+            f"{root!r} holds a frozen-model artifact in an older layout "
+            "(a flat file, or a _CURRENT pointer over v=N/ dirs) that this "
+            "version does not read; delete it and republish it with its "
+            "write_*_artifact function (write_dsir_ratio_artifact or "
+            "write_quality_model_artifact)"
+        )
+    for name, is_dir, _ in entries:
         if is_dir and name != _LOG and any(
             not sub_is_dir for _, sub_is_dir, _ in _ls(spark, f"{root}/{name}")
         ):

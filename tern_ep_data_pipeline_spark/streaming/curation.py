@@ -26,9 +26,12 @@ the arrival-time leg.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import index_log
 from ..operators.dedup import normalise_text
 from ..operators.sampling import hash_bucket
 from ..operators.text import _sql_ident, scrub_pii_sql
@@ -287,7 +290,6 @@ def match_dedup_batch(
     commits on top of it unchanged. With no index yet, the batch
     classifies against empty tables and its commit creates the index.
     """
-    from ..operators import index_log
     from ..operators.dedup_index import _batch_frames, _match_frames
 
     spark = batch.sparkSession
@@ -407,32 +409,65 @@ def match_deduped_stream_sink(
     )
 
 
-# ------------------------------------------------- frozen quality model
+# ------------------------------------------------- frozen-model artifacts
+#
+# An artifact is an index-log root (:mod:`operators.index_log`): each
+# publish writes its tables into fresh ``<table>/<uuid>/`` dirs and
+# commits them as the next manifest with one blind overwrite. Two
+# publishers racing both commit, each version listing one publisher's
+# whole payload; a killed publisher leaves only unlisted files, which
+# the next publish's sweep deletes once past ``index_log.GRACE_S``.
+
+
+def _publish(spark, path: str, adds: list[dict]) -> int:
+    """Commit ``adds`` (``index_log.write`` results) as the artifact's
+    next version, replacing every table they touch; returns the version
+    this commit created."""
+    snap = index_log.commit(spark, path, None, adds, op="overwrite")
+    index_log.sweep(spark, path)
+    return snap.version
+
+
+def _artifact(spark, path: str, table: str) -> index_log.Snapshot:
+    """The newest version of the artifact at ``path``. An older build's
+    layout is refused (``index_log.snapshot``); a root with no version
+    holding ``table`` raises FileNotFoundError."""
+    snap = index_log.snapshot(spark, path)
+    if not snap.has(table):
+        raise FileNotFoundError(f"no published artifact under {path!r}")
+    return snap
+
+
+def _json_table(spark, doc: dict) -> DataFrame:
+    """``doc`` as a one-row, one-column (``json``) table."""
+    return spark.createDataFrame([(json.dumps(doc),)], "json string")
+
+
+def _read_json_table(spark, snap: index_log.Snapshot, table: str) -> dict:
+    return json.loads(index_log.scan(spark, snap.root, table, snap).first()["json"])
+
 
 def write_quality_model_artifact(
     weights: dict,
     path: str,
     spark=None,
 ) -> dict:
-    """Persist sampled-trainer quality weights
-    (``quality_model.train_quality_weights_sampled``) as a frozen JSON
+    """Publish sampled-trainer quality weights
+    (``quality_model.train_quality_weights_sampled``) as a frozen
     artifact for streaming scorers — the second leg of the
     frozen-model pattern next to the DSIR ratio table (r13). Validates
     the feature-set contract eagerly: ``quality_prob_expr``'s inline
     zip is positional, so mismatched columns must fail at WRITE time,
     not when a stream restarts at 3am.
 
-    Publication goes through ``sources.artifacts`` like the DSIR ratio:
-    a ``v=N/model.json`` payload, then the ``_CURRENT`` pointer flip, on
-    a local path and an object store alike; an in-flight reader
-    finishes on its resolved version. ``spark`` (for the path's Hadoop
+    The weights go as JSON into a one-row ``model`` table, committed as
+    the artifact's next version (module comment above), on a local path
+    and an object store alike. Returns the payload with the ``version``
+    this publish committed. ``spark`` (for the path's Hadoop
     filesystem) defaults to the active session."""
-    import json as _json
-
     from pyspark.sql import SparkSession
 
     from ..operators.quality_model import HEURISTIC_FEATURES
-    from ..sources.artifacts import _write_small_file, publish_artifact_version
 
     if list(weights.get("cols", ())) != list(HEURISTIC_FEATURES):
         raise ValueError(
@@ -441,27 +476,18 @@ def write_quality_model_artifact(
         )
     payload = {k: weights[k] for k in ("cols", "mean", "std", "w", "b")}
     spark = spark or SparkSession.active()
-    data = _json.dumps(payload).encode()
-    publish_artifact_version(
-        spark, path,
-        lambda vdir: _write_small_file(spark, vdir + "/model.json", data),
-    )
-    return payload
+    adds = [index_log.write(_json_table(spark, payload), path, "model")]
+    return dict(payload, version=_publish(spark, path, adds))
 
 
 def load_quality_model(path: str, spark=None) -> dict:
-    """Read the live version of a frozen quality model (``spark``
-    defaults to the active session)."""
-    import json as _json
-
+    """The weights of the newest version of a frozen quality model, with
+    that ``version`` (``spark`` defaults to the active session)."""
     from pyspark.sql import SparkSession
 
-    from ..sources.artifacts import current_artifact_dir, read_small_file
-
     spark = spark or SparkSession.active()
-    return _json.loads(
-        read_small_file(spark, current_artifact_dir(spark, path) + "/model.json")
-    )
+    snap = _artifact(spark, path, "model")
+    return dict(_read_json_table(spark, snap, "model"), version=snap.version)
 
 
 def quality_scored_stream(
@@ -507,31 +533,29 @@ def write_dsir_ratio_artifact(
     persisted table — the same frozen-model pattern as
     ``quality_model`` (train offline, apply as a pure predicate).
 
-    Layout: a ``ratio`` parquet dir (bucket, lr_pico — at most
-    ``buckets`` rows) + ``meta.json`` pinning (buckets, smoothing,
-    salt, bucket hash), so a scorer can refuse an artifact whose
-    feature space doesn't match its configuration.
+    Layout: a ``ratio`` table (bucket, lr_pico — at most ``buckets``
+    rows), a ``vocab`` table and a one-row ``meta`` table pinning
+    (buckets, smoothing, salt, bucket hash), so a scorer can refuse an
+    artifact whose feature space doesn't match its configuration. All
+    three commit together as the artifact's next version (module
+    comment above the quality-model writer), on a local path and an
+    object store alike; a scorer reads one version at stream
+    construction. Returns the meta with the ``version`` this publish
+    committed; row counts come from the written files' footers.
 
-    Every refresh publishes through ``sources.artifacts`` (r13 verdict
-    #3), on a local path and an object store alike: a complete
-    immutable ``v=N`` payload, then a single-file ``_CURRENT`` pointer
-    flip; a scorer resolves the pointer once at stream construction
-    and keeps reading its version (the previous version survives
-    pruning, so in-flight readers are never torn).
-
-    ``vocab_top_k`` (r14 verdict #3) additionally ships a VOCABULARY
-    SIDECAR: the top-K grams of the RAW pool by occurrence count (the
-    distribution the scorer will see), written as a ``vocab`` parquet
-    beside the ratio table and versioned with it. The fast scorer
-    prewarms its per-task gram tables from the sidecar once per task,
-    so a task's EARLY batches skip the md5-and-insert work for the
-    corpus's hot vocabulary (BLOOM_r15 cold-start cell: 1.36x on a
-    fresh task's first batch, scores pinned equal). The sidecar
-    carries STRINGS only — every lr value is always recomputed from
-    the loaded ratio table through the same kernel the lazy path uses,
-    so parity (and tolerance of a version-skewed sidecar) holds by
-    construction. One extra map-side-combinable count + top-K job at
-    build time, amortised over the model's refresh cadence.
+    ``vocab_top_k`` (r14 verdict #3) fills the ``vocab`` table, a
+    VOCABULARY SIDECAR: the top-K grams of the RAW pool by occurrence
+    count (the distribution the scorer will see). It is empty when
+    ``vocab_top_k=0``, so a refresh never leaves an older sidecar live.
+    The fast scorer prewarms its per-task gram tables from the sidecar
+    once per task, so a task's EARLY batches skip the md5-and-insert
+    work for the corpus's hot vocabulary (BLOOM_r15 cold-start cell:
+    1.36x on a fresh task's first batch, scores pinned equal). The
+    sidecar carries STRINGS only — every lr value is always recomputed
+    from the loaded ratio table through the same kernel the lazy path
+    uses, so parity holds by construction. One extra map-side-combinable
+    count + top-K job at build time, amortised over the model's refresh
+    cadence.
 
     Sizing honesty (BLOOM_r15): the lazy path's miss handling is
     already vectorised, so prewarm only buys the per-batch cold-start
@@ -542,28 +566,28 @@ def write_dsir_ratio_artifact(
     ``vocab_top_k=0``, since :func:`dsir_scored_stream` prewarms from a
     sidecar whenever the artifact has one.
     """
-    import json as _json
-
     from ..operators.sampling import _dsir_grams, dsir_logratio
-    from ..sources.artifacts import _write_small_file, publish_artifact_version
 
     lr = dsir_logratio(
         raw, target, id_col, text_col,
         buckets=buckets, smoothing=smoothing, salt=salt,
     )
-    vocab = None
-    if vocab_top_k:
-        # deterministic top-K: count desc, gram asc tiebreak (a
-        # TakeOrdered plan — map-side partial top-K, no full sort)
-        vocab = (
-            _dsir_grams(raw, id_col, text_col)
-            .groupBy("__g")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.desc("n"), F.asc("__g"))
-            .limit(int(vocab_top_k))
-            .select(F.col("__g").alias("gram"), "n")
-        )
+    # deterministic top-K: count desc, gram asc tiebreak (a TakeOrdered
+    # plan — map-side partial top-K, no full sort); limit 0 plans as an
+    # empty relation, so vocab_top_k=0 scans nothing
+    vocab = (
+        _dsir_grams(raw, id_col, text_col)
+        .groupBy("__g")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), F.asc("__g"))
+        .limit(int(vocab_top_k))
+        .select(F.col("__g").alias("gram"), "n")
+    )
     spark = raw.sparkSession
+    adds = [
+        index_log.write(lr, path, "ratio"),
+        index_log.write(vocab, path, "vocab"),
+    ]
     meta = {
         "buckets": int(buckets),
         "smoothing": float(smoothing),
@@ -574,80 +598,60 @@ def write_dsir_ratio_artifact(
         # verdict #1). Both scorer kernels (portable hashlib loop and
         # the vectorised numpy fast mode) compute exactly this hash.
         "hash": "md5-60bit",
+        "n_ratio_rows": sum(f["rows"] for f in adds[0]["files"]),
     }
-
-    def _fill(dest: str) -> dict:
-        lr.write.mode("overwrite").parquet(dest + "/ratio")
-        n = spark.read.parquet(dest + "/ratio").count()
-        full = dict(meta, n_ratio_rows=int(n))
-        if vocab is not None:
-            vocab.write.mode("overwrite").parquet(dest + "/vocab")
-            nv = spark.read.parquet(dest + "/vocab").count()
-            full["vocab_top_k"] = int(vocab_top_k)
-            full["n_vocab_rows"] = int(nv)
-        _write_small_file(spark, dest + "/meta.json", _json.dumps(full).encode())
-        return full
-
-    out: dict = {}
-    publish_artifact_version(spark, path, lambda vdir: out.update(_fill(vdir)))
-    return out
+    if vocab_top_k:
+        meta["vocab_top_k"] = int(vocab_top_k)
+        meta["n_vocab_rows"] = sum(f["rows"] for f in adds[1]["files"])
+    adds.append(index_log.write(_json_table(spark, meta), path, "meta"))
+    return dict(meta, version=_publish(spark, path, adds))
 
 
-def load_dsir_ratio(spark, path: str) -> tuple[dict, dict]:
-    """(bucket -> lr_pico dict, meta) from a ratio artifact — the
-    driver-side frozen model a stateless scorer closes over (≤ the
-    configured bucket count of (int, int) pairs, the same size class
-    ``decontaminated_stream`` collects). Resolves the ``_CURRENT``
-    pointer ONCE, here at stream construction. After this returns, the model is
-    FULLY driver-resident (the whole table collects here), so even a
-    long-running stream outliving many refreshes cannot be torn when
-    its resolved version dir is eventually pruned: version retention
-    (``keep``) only needs to cover the construction window itself, and
-    keep=2 guarantees the version a just-read pointer names survives
-    until the NEXT publish."""
-    import json as _json
-
-    from ..sources.artifacts import current_artifact_dir, read_small_file
-
-    vdir = current_artifact_dir(spark, path)
-    meta = _json.loads(read_small_file(spark, vdir + "/meta.json"))
-    rows = spark.read.parquet(vdir + "/ratio").collect()
+def _dsir_ratio(spark, snap: index_log.Snapshot) -> tuple[dict, dict]:
+    meta = dict(_read_json_table(spark, snap, "meta"), version=snap.version)
+    rows = index_log.scan(spark, snap.root, "ratio", snap).collect()
     table = {int(r["bucket"]): int(r["lr_pico"]) for r in rows}
     if len(table) != meta.get("n_ratio_rows", len(table)):
         raise ValueError(
-            f"DSIR ratio artifact {vdir!r} is inconsistent: meta pins "
-            f"{meta.get('n_ratio_rows')} rows, table has {len(table)}"
+            f"DSIR ratio artifact {snap.root!r} version {snap.version} is "
+            f"inconsistent: meta pins {meta.get('n_ratio_rows')} rows, "
+            f"table has {len(table)}"
         )
     return table, meta
 
 
-def load_dsir_vocab(spark, path: str) -> list | None:
-    """The gram strings of a ratio artifact's vocabulary sidecar
-    (hot-first: count desc, gram asc — the order they were ranked at
-    build time), or None when the artifact ships no sidecar. Resolves
-    the ``_CURRENT`` pointer exactly like :func:`load_dsir_ratio`.
-
-    The sidecar is advisory: it carries STRINGS only, every lr value
-    is recomputed from the loaded ratio table, so a reader that pairs
-    a v=K table with a v=K±1 sidecar (racing a refresh between the two
-    loads) still scores exactly — the skewed sidecar merely prewarms
-    slightly different grams."""
-    from ..sources.artifacts import _exists, current_artifact_dir
-
-    vpath = current_artifact_dir(spark, path) + "/vocab"
-    if not _exists(spark, vpath):
+def _dsir_vocab(spark, snap: index_log.Snapshot) -> list | None:
+    if not snap.rows("vocab"):
         return None
     # Arrow toPandas, not collect(): a 200k-row collect crosses py4j
     # row by row (~seconds) and this load sits on the stream-
     # construction path; the columnar transfer is ~50x faster and the
     # session enables Arrow by default
     pdf = (
-        spark.read.parquet(vpath)
+        index_log.scan(spark, snap.root, "vocab", snap)
         .orderBy(F.desc("n"), F.asc("gram"))
         .select("gram")
         .toPandas()
     )
     return pdf["gram"].tolist()
+
+
+def load_dsir_ratio(spark, path: str) -> tuple[dict, dict]:
+    """(bucket -> lr_pico dict, meta with its ``version``) from the
+    newest version of a ratio artifact — the driver-side frozen model a
+    stateless scorer closes over (≤ the configured bucket count of
+    (int, int) pairs, the same size class ``decontaminated_stream``
+    collects). The whole table collects here, so a long-running stream
+    outliving many refreshes keeps its model after the sweep deletes
+    the files it was read from."""
+    return _dsir_ratio(spark, _artifact(spark, path, "meta"))
+
+
+def load_dsir_vocab(spark, path: str) -> list | None:
+    """The gram strings of the newest version's vocabulary sidecar
+    (hot-first: count desc, gram asc — the order they were ranked at
+    build time), or None when that version ships none."""
+    return _dsir_vocab(spark, _artifact(spark, path, "meta"))
 
 
 class _DsirFastScorer:
@@ -976,11 +980,12 @@ def dsir_scored_stream(
     the batch scorer's currency) and optionally filters below
     ``min_logweight_micro``.
 
-    Stateless per row — the ratio table is loaded ONCE at stream
+    Stateless per row — the ratio table, its meta and its vocabulary
+    sidecar are read from ONE version of the artifact at stream
     construction and closed over by an Arrow kernel (no watermark, no
-    streaming state; a restart from checkpoint re-reads the artifact,
-    so decisions stay reproducible as long as refreshes are the
-    versioned publication ``write_dsir_ratio_artifact`` performs). The kernel mirrors
+    streaming state; a restart from checkpoint re-reads the newest
+    version, so decisions stay reproducible while the artifact is not
+    refreshed in between). The kernel mirrors
     the batch pipeline exactly: ``py_tokens`` (the pinned ASCII-``\\s``
     twin of ``dedup.tokens``), unigram+bigram grams, the portable
     60-bit md5 bucket hash (the artifact's pinned ``hash``; a mismatch
@@ -1007,22 +1012,21 @@ def dsir_scored_stream(
     """
     from pyspark.sql import types as T
 
-    table, meta = load_dsir_ratio(stream.sparkSession, ratio_path)
-    # vocabulary sidecar (r14 verdict #3): loaded once at stream
-    # construction, shipped as a Spark broadcast (one copy per
-    # executor, not per task), prewarmed into each task's scorer.
-    # Strings only — correctness never depends on it (see prewarm).
-    bvocab = None
-    if meta.get("n_vocab_rows"):
-        grams = load_dsir_vocab(stream.sparkSession, ratio_path)
-        if grams:
-            bvocab = stream.sparkSession.sparkContext.broadcast(grams)
+    spark = stream.sparkSession
+    snap = _artifact(spark, ratio_path, "meta")
+    table, meta = _dsir_ratio(spark, snap)
     if meta.get("hash", "md5-60bit") != "md5-60bit":
         raise ValueError(
             f"DSIR ratio artifact {ratio_path!r} pins bucket hash "
             f"{meta.get('hash')!r}; this scorer computes md5-60bit — "
             "refusing to score against mismatched buckets"
         )
+    # vocabulary sidecar (r14 verdict #3): read from the same version as
+    # the table, shipped as a Spark broadcast (one copy per executor,
+    # not per task), prewarmed into each task's scorer. Strings only —
+    # correctness never depends on it (see prewarm).
+    grams = _dsir_vocab(spark, snap)
+    bvocab = spark.sparkContext.broadcast(grams) if grams else None
     buckets, salt = int(meta["buckets"]), meta["salt"]
     # a fresh StructType, NOT stream.schema.add(...): DataFrame.schema is
     # cached and .add mutates it in place, silently corrupting the
@@ -1067,10 +1071,9 @@ def dsir_scored_stream_sink(
     at-least-once, so a retried batch replaces its own output instead
     of appending a duplicate copy (the span sink's effectively-once
     pattern). Scoring is stateless against a frozen model, so a
-    restart re-scores a re-delivered batch IDENTICALLY as long as
-    artifact refreshes use :func:`write_dsir_ratio_artifact`'s
-    versioned publication; kill/restart exactly-once is pinned in
-    tests/test_dsir.py."""
+    restart re-scores a re-delivered batch IDENTICALLY while the
+    artifact is not refreshed in between; kill/restart exactly-once is
+    pinned in tests/test_dsir.py."""
     scored = dsir_scored_stream(
         stream, ratio_path, id_col, text_col,
         min_logweight_micro=min_logweight_micro,
@@ -1136,7 +1139,6 @@ def span_dedup_batch(
     (``dedup_index.clean_against_gram_index``); that route lands on
     ``tern.index_prune``.
     """
-    from ..operators import index_log
     from ..operators.dedup import release_staged, substring_dedup
     from ..operators.dedup_index import (
         _gram_tables,

@@ -172,6 +172,8 @@ def refresh_dsir_ratio(spark: SparkSession, site: str) -> dict:
     raw documents pool and the target slice and publishes it as a new
     version (``write_dsir_ratio_artifact``), so a live stream keeps
     scoring against either the old or the new model, never a torn one.
+    The result carries the artifact meta and the version this run
+    committed.
 
     Env knobs: ``$SPARK_GRAFT_DSIR_RATIO_DIR`` (default
     ``<out>/dsir_ratio/site=<site>``), ``$SPARK_GRAFT_DSIR_TARGET_LANG``
@@ -199,10 +201,11 @@ def refresh_quality_model(spark: SparkSession, site: str) -> dict:
     verdict #4 — parity with ``refresh_dsir_ratio``): weak labels from
     Gopher's repetition rule (``repetition_weak_labels`` — no human
     labels at corpus scale), a bounded driver-side Newton fit
-    (``train_quality_weights_sampled``), published as a VERSIONED
-    artifact (``sources.artifacts``) so the refresh is atomic on
-    object stores too and a live ``quality_scored_stream`` keeps its
-    resolved version until restart.
+    (``train_quality_weights_sampled``), published as the artifact's
+    next version (``write_quality_model_artifact``, one manifest commit,
+    rename-free so object stores work too); a live
+    ``quality_scored_stream`` keeps the weights it loaded until restart.
+    The result names the version this run committed.
 
     Env knobs: ``$SPARK_GRAFT_QM_MODEL_DIR`` (default
     ``<out>/quality_model/site=<site>``), ``$SPARK_GRAFT_QM_REP_FRAC``
@@ -228,12 +231,10 @@ def refresh_quality_model(spark: SparkSession, site: str) -> dict:
     weights = train_quality_weights_sampled(
         labelled, "doc_id", "text", sample_rows=sample_rows
     )
-    write_quality_model_artifact(weights, path, spark=spark)
-    from .sources.artifacts import current_artifact_version
-
+    out = write_quality_model_artifact(weights, path, spark=spark)
     return {
         "path": path,
-        "version": current_artifact_version(spark, path),
+        "version": out["version"],
         "rep_frac_threshold": frac,
         "cols": list(weights["cols"]),
     }

@@ -1,10 +1,11 @@
-"""Versioned object-store-capable frozen-model artifacts (r13 verdict
-#3/#4): pointer-based publication through sources.artifacts, the DSIR
-ratio and quality-model writers on top of it, and the refresh task.
+"""Frozen-model artifacts (the DSIR ratio and the quality-model weights)
+as index-log roots: each publish commits its tables as the next
+manifest, loaders read one snapshot, and the refresh task reports the
+version it committed.
 
 Object stores aren't available to the tests; the file:// scheme drives
-the same Hadoop FileSystem code paths (URI parsing, fs.exists / create
-/ delete, pointer resolution), and most paths here use it.
+the same Hadoop FileSystem code paths (URI parsing, listing, create /
+delete, manifest reads), and most paths here use it.
 """
 from __future__ import annotations
 
@@ -13,93 +14,136 @@ import os
 
 import pytest
 
-from tern_ep_data_pipeline_spark.sources.artifacts import (
-    current_artifact_dir,
-    current_artifact_version,
-    publish_artifact_version,
-    read_small_file,
-)
+from tern_ep_data_pipeline_spark.operators import index_log
+from tern_ep_data_pipeline_spark.operators.quality_model import HEURISTIC_FEATURES
 
 
 def _file_uri(p) -> str:
     return "file://" + str(p)
 
 
-def test_publish_resolve_prune(spark, tmp_path):
-    """Three publishes with keep=2: the pointer flips per publish, the
-    live dir is always complete, and only the newest two payloads
-    survive (an in-flight reader of the PREVIOUS version never loses
-    its files mid-read)."""
-    base = _file_uri(tmp_path / "art")
-    assert current_artifact_version(spark, base) is None
+def _weights(tag: float) -> dict:
+    """A quality-model payload told apart by its bias ``tag``."""
+    n = len(HEURISTIC_FEATURES)
+    return {
+        "cols": list(HEURISTIC_FEATURES),
+        "mean": [0.0] * n,
+        "std": [1.0] * n,
+        "w": [0.5] * n,
+        "b": float(tag),
+    }
+
+
+def _table_dirs(root, table: str) -> set[str]:
+    return set(os.listdir(os.path.join(str(root), table)))
+
+
+def _dsir_docs(spark):
+    rows = [
+        (i, f"alpha beta{i % 5} gamma{i % 3} delta{i % 7} shared tail")
+        for i in range(40)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _expected_ratio(docs, target, buckets: int) -> dict:
+    from tern_ep_data_pipeline_spark.operators.sampling import dsir_logratio
+
+    return {
+        int(r["bucket"]): int(r["lr_pico"])
+        for r in dsir_logratio(docs, target, buckets=buckets).collect()
+    }
+
+
+def test_publish_resolve_prune(spark, tmp_path, monkeypatch):
+    """Three publishes: each loads as the newest version. The superseded
+    versions' files stay while younger than the sweep grace (a reader of
+    an older manifest may still be scanning them); a sweep past the
+    grace leaves only the live version's files and manifest."""
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        load_quality_model,
+        write_quality_model_artifact,
+    )
+
+    root = tmp_path / "art"
+    base = _file_uri(root)
     with pytest.raises(FileNotFoundError):
-        current_artifact_dir(spark, base)
+        load_quality_model(base, spark=spark)
 
-    def writer_for(tag):
-        def w(vdir):
-            local = vdir[len("file://"):]
-            os.makedirs(local, exist_ok=True)
-            with open(os.path.join(local, "payload.json"), "w") as fh:
-                json.dump({"tag": tag}, fh)
-        return w
+    for i in (1, 2, 3):
+        out = write_quality_model_artifact(_weights(i), base, spark=spark)
+        assert out == dict(_weights(i), version=i)
+        assert load_quality_model(base, spark=spark) == out
+    assert len(_table_dirs(root, "model")) == 3
+    assert _table_dirs(root, "_v") >= {"1.json", "2.json", "3.json"}
 
-    for i, tag in enumerate(("a", "b", "c"), start=1):
-        v = publish_artifact_version(spark, base, writer_for(tag))
-        assert v == i == current_artifact_version(spark, base)
-        got = json.loads(
-            read_small_file(
-                spark, current_artifact_dir(spark, base) + "/payload.json"
-            )
-        )
-        assert got == {"tag": tag}
-    root = str(tmp_path / "art")
-    assert not os.path.exists(os.path.join(root, "v=1"))  # pruned
-    assert os.path.exists(os.path.join(root, "v=2"))      # reader grace
-    assert os.path.exists(os.path.join(root, "v=3"))
-
-    with pytest.raises(ValueError, match="keep"):
-        publish_artifact_version(spark, base, writer_for("x"), keep=0)
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    index_log.sweep(spark, base)
+    snap = index_log.snapshot(spark, base)
+    assert snap.version == 3
+    assert _table_dirs(root, "model") == {
+        f["path"].split("/")[1] for f in snap.files("model")
+    }
+    assert {n for n in _table_dirs(root, "_v") if n.endswith(".json")} == {
+        "3.json"
+    }
+    assert load_quality_model(base, spark=spark) == dict(_weights(3), version=3)
 
 
-def test_publish_crash_resume(spark, tmp_path):
-    """A writer that dies mid-payload leaves the pointer UNCHANGED (the
-    old version stays live); the retry reclaims the same version
-    number, deleting the half-written leftovers first."""
-    base = _file_uri(tmp_path / "cr")
+def test_publish_crash_resume(spark, tmp_path, monkeypatch):
+    """A publisher that dies mid-payload, or is killed after writing its
+    tables and before its commit, leaves only unlisted files: the
+    published version stays live, and the next publish commits version
+    2 at once and loads its own payload."""
+    from tern_ep_data_pipeline_spark.streaming import curation as sc
 
-    def ok(vdir):
-        local = vdir[len("file://"):]
-        os.makedirs(local, exist_ok=True)
-        with open(os.path.join(local, "p.txt"), "w") as fh:
-            fh.write("good")
+    docs = _dsir_docs(spark)
+    t1, t2 = docs.where("doc_id % 2 = 0"), docs.where("doc_id % 3 = 0")
 
-    publish_artifact_version(spark, base, ok)
+    # a writer that raises after the ratio and vocab tables landed
+    base = _file_uri(tmp_path / "raising")
+    sc.write_dsir_ratio_artifact(docs, t1, base, buckets=128, vocab_top_k=4)
+    real_write = index_log.write
 
-    def boom(vdir):
-        local = vdir[len("file://"):]
-        os.makedirs(local, exist_ok=True)
-        with open(os.path.join(local, "p.txt"), "w") as fh:
-            fh.write("torn")
-        raise RuntimeError("publisher died")
+    def dying_write(df, root, table, *a, **k):
+        if table == "meta":
+            raise RuntimeError("publisher died")
+        return real_write(df, root, table, *a, **k)
 
-    with pytest.raises(RuntimeError, match="publisher died"):
-        publish_artifact_version(spark, base, boom)
-    assert current_artifact_version(spark, base) == 1  # pointer intact
-    assert read_small_file(
-        spark, current_artifact_dir(spark, base) + "/p.txt"
-    ) == b"good"
+    with monkeypatch.context() as m:
+        m.setattr(index_log, "write", dying_write)
+        with pytest.raises(RuntimeError, match="publisher died"):
+            sc.write_dsir_ratio_artifact(docs, t2, base, buckets=128)
+    table, meta = sc.load_dsir_ratio(spark, base)
+    assert meta["version"] == 1 and meta["vocab_top_k"] == 4
+    assert table == _expected_ratio(docs, t1, 128)
+    meta = sc.write_dsir_ratio_artifact(docs, t2, base, buckets=128)
+    assert meta["version"] == 2 and "vocab_top_k" not in meta
+    assert sc.load_dsir_ratio(spark, base) == (
+        _expected_ratio(docs, t2, 128), meta
+    )
+    assert sc.load_dsir_vocab(spark, base) is None
 
-    v = publish_artifact_version(spark, base, ok)
-    assert v == 2
-    assert read_small_file(
-        spark, current_artifact_dir(spark, base) + "/p.txt"
-    ) == b"good"
+    # a publisher killed between its write and its commit: its table
+    # written whole, plus a torn file from a write cut short
+    root = tmp_path / "killed"
+    base = _file_uri(root)
+    sc.write_quality_model_artifact(_weights(1), base, spark=spark)
+    killed = spark.createDataFrame([(json.dumps(_weights(9)),)], "json string")
+    index_log.write(killed, base, "model")
+    torn = root / "model" / "f00dfeed" / "part-00000-torn.snappy.parquet"
+    torn.parent.mkdir()
+    torn.write_bytes(b"PAR1\x00half")
+    assert sc.load_quality_model(base, spark=spark) == dict(_weights(1), version=1)
+    out = sc.write_quality_model_artifact(_weights(2), base, spark=spark)
+    assert out == dict(_weights(2), version=2)
+    assert sc.load_quality_model(base, spark=spark) == out
 
 
 def test_versioned_dsir_artifact_scores_like_flat(spark, tmp_path):
-    """write_dsir_ratio_artifact publishes the same versioned layout on
-    a plain local path and on a :// path; the scorer resolves either
-    pointer and produces integer-equal scores."""
+    """write_dsir_ratio_artifact publishes the same manifest layout on
+    a plain local path and on a :// path; the scorer reads either and
+    produces integer-equal scores."""
     from tern_ep_data_pipeline_spark.streaming.curation import (
         dsir_scored_stream,
         load_dsir_ratio,
@@ -115,8 +159,8 @@ def test_versioned_dsir_artifact_scores_like_flat(spark, tmp_path):
     uri = _file_uri(tmp_path / "versioned")
     meta_v = write_dsir_ratio_artifact(docs, target, uri, buckets=128)
     assert meta_v == meta_flat
-    assert current_artifact_version(spark, uri) == 1
-    assert current_artifact_version(spark, flat) == 1
+    assert index_log.snapshot(spark, uri).version == 1
+    assert index_log.snapshot(spark, flat).version == 1
 
     t_flat, m_flat = load_dsir_ratio(spark, flat)
     t_v, m_v = load_dsir_ratio(spark, uri)
@@ -129,12 +173,12 @@ def test_versioned_dsir_artifact_scores_like_flat(spark, tmp_path):
     assert sv == sf
 
 
-def test_versioned_refresh_never_tears_resolved_reader(spark, tmp_path):
-    """A scorer resolves _CURRENT once at construction: a refresh that
-    lands AFTER construction must not change (or break) that scorer's
-    output — its version dir survives pruning — while a scorer built
-    after the refresh sees the new model. This is the live-stream
-    refresh contract verdict r13 #3 asks for."""
+def test_versioned_refresh_never_tears_resolved_reader(spark, tmp_path, monkeypatch):
+    """A scorer reads one version at construction and holds it on the
+    driver: a refresh that lands AFTER construction must not change (or
+    break) that scorer's output, not even once a sweep has deleted the
+    files it was read from, while a scorer built after the refresh sees
+    the new model."""
     from tern_ep_data_pipeline_spark.streaming.curation import (
         dsir_scored_stream,
         write_dsir_ratio_artifact,
@@ -146,15 +190,17 @@ def test_versioned_refresh_never_tears_resolved_reader(spark, tmp_path):
 
     write_dsir_ratio_artifact(docs, docs.where("doc_id % 2 = 0"), uri,
                               buckets=128)
-    old_scored = dsir_scored_stream(docs, uri)          # resolves v=1
+    old_scored = dsir_scored_stream(docs, uri)          # reads version 1
     before = {r["doc_id"]: r["logweight_micro"] for r in old_scored.collect()}
 
-    # refresh with a DIFFERENT target -> different model at v=2
+    # refresh with a DIFFERENT target -> different model at version 2
     write_dsir_ratio_artifact(docs, docs.where("doc_id % 3 = 0"), uri,
                               buckets=128)
-    assert current_artifact_version(spark, uri) == 2
+    assert index_log.snapshot(spark, uri).version == 2
+    monkeypatch.setattr(index_log, "GRACE_S", 0.0)
+    index_log.sweep(spark, uri)                         # version 1's files go
     after_old = {r["doc_id"]: r["logweight_micro"] for r in old_scored.collect()}
-    assert after_old == before                          # v=1 dir intact
+    assert after_old == before
 
     new_scored = {r["doc_id"]: r["logweight_micro"]
                   for r in dsir_scored_stream(docs, uri).collect()}
@@ -162,12 +208,11 @@ def test_versioned_refresh_never_tears_resolved_reader(spark, tmp_path):
 
 
 def test_versioned_quality_model_roundtrip(spark, tmp_path):
-    """Quality-model artifact through the same mechanism: versioned
-    write + pointer-resolved load + the streaming scorer consumes it, on
-    a :// path and a plain local path alike; a flat model file an older
-    build left is refused with a request to republish."""
-    import pytest as _pytest
-
+    """Quality-model artifact through the same mechanism: a manifest
+    commit + snapshot load + the streaming scorer consumes it, on a ://
+    path and a plain local path alike; a base an older build left (a
+    flat model file, or a _CURRENT pointer over v=N/ dirs) is refused
+    with a request to republish."""
     from tern_ep_data_pipeline_spark.operators.quality_model import (
         repetition_weak_labels,
         train_quality_weights_sampled,
@@ -188,32 +233,36 @@ def test_versioned_quality_model_roundtrip(spark, tmp_path):
     w = train_quality_weights_sampled(labelled, "doc_id", "text")
 
     uri = _file_uri(tmp_path / "qm")
-    write_quality_model_artifact(w, uri, spark=spark)
-    assert current_artifact_version(spark, uri) == 1
-    assert load_quality_model(uri, spark=spark) == w
+    assert write_quality_model_artifact(w, uri, spark=spark)["version"] == 1
+    assert load_quality_model(uri, spark=spark) == dict(w, version=1)
 
     scored = quality_scored_stream(docs, uri)
     probs = {r["doc_id"]: r["quality_prob"] for r in scored.collect()}
     assert set(probs) == {r[0] for r in rows}
     assert all(0.0 <= p <= 1.0 for p in probs.values())
 
-    # a plain local path publishes the same versioned layout (spark
-    # defaults to the active session)
+    # a plain local path publishes the same layout (spark defaults to
+    # the active session)
     local = str(tmp_path / "model")
     write_quality_model_artifact(w, local)
-    assert current_artifact_version(spark, local) == 1
-    assert load_quality_model(local) == w
+    assert index_log.snapshot(spark, local).version == 1
+    assert load_quality_model(local) == dict(w, version=1)
 
     flat = tmp_path / "model.json"
     flat.write_text(json.dumps(w))
-    with _pytest.raises(ValueError, match="republish"):
-        load_quality_model(str(flat), spark=spark)
+    pointer = tmp_path / "pointer"
+    (pointer / "v=1").mkdir(parents=True)
+    (pointer / "v=1" / "model.json").write_text(json.dumps(w))
+    (pointer / "_CURRENT").write_text("1 tok")
+    for old in (flat, pointer):
+        with pytest.raises(ValueError, match="republish.*write_quality_model"):
+            load_quality_model(str(old), spark=spark)
 
 
 def test_refresh_quality_model_task(spark, tmp_path, monkeypatch):
     """The scheduled quality-model refresh: weak labels -> bounded fit
-    -> versioned publication; a second run bumps the version and the
-    stream loader follows the pointer."""
+    -> a manifest commit; each run reports the version its own commit
+    created, and the stream loader reads the newest."""
     import importlib
 
     import tern_ep_data_pipeline_spark.tasks_builtin as builtin_mod
@@ -235,147 +284,100 @@ def test_refresh_quality_model_task(spark, tmp_path, monkeypatch):
     out = results[0].result
     assert out["version"] == 1 and out["path"] == qm_dir
     w1 = load_quality_model(qm_dir, spark=spark)
-    assert set(w1) == {"cols", "mean", "std", "w", "b"}
+    assert set(w1) == {"cols", "mean", "std", "w", "b", "version"}
+    assert w1["version"] == 1
 
     results = task_mod.run_task(spark, "refresh_quality_model", matrix)
     assert results[0].ok and results[0].result["version"] == 2
-    assert load_quality_model(qm_dir, spark=spark) == w1  # same inputs
+    # same inputs -> same weights
+    assert load_quality_model(qm_dir, spark=spark) == dict(w1, version=2)
+
+
+def _dsir_payload(spark, base) -> tuple:
+    from tern_ep_data_pipeline_spark.streaming import curation as sc
+
+    table, meta = sc.load_dsir_ratio(spark, base)
+    return table, meta, sc.load_dsir_vocab(spark, base)
 
 
 def test_fencing_one_winner_one_clean_abort(spark, tmp_path, monkeypatch):
-    """r14 verdict #4: on a store where the version claim is NOT atomic
-    (create-if-absent degrades to a plain overwrite, emulated here), two
-    racing publishers must produce one winner and one CLEAN abort —
-    never two publishers both flipping the pointer onto a torn payload.
-    The race is staged deterministically: publisher A's writer runs
-    publisher B to completion mid-publish, so A's pre-flip fencing
-    re-read finds the pointer moved and aborts with nothing changed."""
-    from tern_ep_data_pipeline_spark.operators import index_log
-    from tern_ep_data_pipeline_spark.sources.artifacts import (
-        ArtifactPublishError,
-        _write_small_file,
+    """On a store whose create-if-absent degrades to a plain overwrite
+    (emulated here), two publishers racing for the same manifest both
+    report that version and the loser is not told it lost — but the
+    live artifact is still one publisher's whole payload, because each
+    manifest lists only its own publisher's files. The race is staged
+    deterministically: publisher B runs to completion inside A's
+    manifest write, which then overwrites B's."""
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        write_dsir_ratio_artifact,
     )
 
+    docs = _dsir_docs(spark)
+    t_a, t_b = docs.where("doc_id % 2 = 0"), docs.where("doc_id % 3 = 0")
+    base = str(tmp_path / "fence")
+    versions, raced = {}, []
+
     def overwrite(spark_, path, data):
-        _write_small_file(spark_, path, data)
+        if not raced:
+            raced.append(path)
+            versions["b"] = write_dsir_ratio_artifact(
+                docs, t_b, base, buckets=128, vocab_top_k=5
+            )["version"]
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as fh:
+            fh.write(data)
         return True
 
     monkeypatch.setattr(index_log, "create_exclusive", overwrite)
-    base = _file_uri(tmp_path / "fence")
+    versions["a"] = write_dsir_ratio_artifact(
+        docs, t_a, base, buckets=128, vocab_top_k=3
+    )["version"]
+    assert versions == {"a": 1, "b": 1}
 
-    def plain_writer(tag):
-        def w(vdir):
-            local = vdir[len("file://"):]
-            os.makedirs(local, exist_ok=True)
-            with open(os.path.join(local, "p.json"), "w") as fh:
-                json.dump({"tag": tag}, fh)
-        return w
-
-    def racing_writer(vdir):
-        plain_writer("loser")(vdir)
-        # competitor B starts AND finishes while A is mid-publish
-        publish_artifact_version(spark, base, plain_writer("winner"))
-
-    with pytest.raises(ArtifactPublishError, match="aborting cleanly"):
-        publish_artifact_version(spark, base, racing_writer)
-
-    # exactly one publication stands, intact, named by a fenced pointer
-    assert current_artifact_version(spark, base) == 1
-    live = current_artifact_dir(spark, base)  # token cross-check passes
-    assert json.loads(read_small_file(spark, live + "/p.json")) == {
-        "tag": "winner"
-    }
-
-
-def test_reader_detects_torn_publication(spark, tmp_path):
-    """A pointer whose fencing token disagrees with the version dir's
-    _PUBLISHER stake is a torn publication — resolution refuses loudly
-    instead of serving a hybrid payload."""
-    from tern_ep_data_pipeline_spark.sources.artifacts import (
-        ArtifactPublishError,
-    )
-
-    root = tmp_path / "torn"
-    (root / "v=1").mkdir(parents=True)
-    (root / "v=1" / "_PUBLISHER").write_text("tok-b")
-    (root / "_CURRENT").write_text("1 tok-a")
-    base = _file_uri(root)
-    assert current_artifact_version(spark, base) == 1  # version still reads
-    with pytest.raises(ArtifactPublishError, match="torn"):
-        current_artifact_dir(spark, base)
-
-
-def test_legacy_pointer_without_token_resolves_and_upgrades(spark, tmp_path):
-    """Pre-r15 pointers carry only the version number and version dirs
-    have no _PUBLISHER stake: resolution skips the fencing cross-check,
-    and the next publish on top writes the fenced format."""
-    root = tmp_path / "legacy"
-    (root / "v=3").mkdir(parents=True)
-    (root / "v=3" / "p.txt").write_text("old")
-    (root / "_CURRENT").write_text("3")
-    base = _file_uri(root)
-    assert current_artifact_version(spark, base) == 3
-    assert current_artifact_dir(spark, base).endswith("/v=3")
-
-    def w(vdir):
-        local = vdir[len("file://"):]
-        os.makedirs(local, exist_ok=True)
-        with open(os.path.join(local, "p.txt"), "w") as fh:
-            fh.write("new")
-
-    assert publish_artifact_version(spark, base, w) == 4
-    ptr = (root / "_CURRENT").read_text().split()
-    assert ptr[0] == "4" and len(ptr) == 2  # fenced format now
-    assert (root / "v=4" / "_PUBLISHER").read_text() == ptr[1]
+    table, meta, vocab = _dsir_payload(spark, base)
+    assert table == _expected_ratio(docs, t_a, 128)
+    assert meta["vocab_top_k"] == 3 == len(vocab)
 
 
 def test_concurrent_publishers_serialise(spark, tmp_path):
-    """Two threads publishing simultaneously on a local base are
-    serialised by the version claim: a publisher that finds its version
-    claimed aborts cleanly, every publication that succeeds holds its
-    own version, and the final pointer names the complete payload of the
-    one winner of the newest version."""
+    """Two threads publishing at once on a local base both commit, as
+    versions 1 and 2, and the newest version is the whole payload of
+    the publisher that committed it."""
     import threading
 
-    from tern_ep_data_pipeline_spark.sources.artifacts import (
-        ArtifactPublishError,
+    from tern_ep_data_pipeline_spark.streaming.curation import (
+        write_dsir_ratio_artifact,
     )
 
+    docs = _dsir_docs(spark)
+    targets = {
+        "a": (docs.where("doc_id % 2 = 0"), 3),
+        "b": (docs.where("doc_id % 3 = 0"), 5),
+    }
     base = _file_uri(tmp_path / "race")
-    results = []
-    errors = []
-
-    def writer_for(tag):
-        def w(vdir):
-            local = vdir[len("file://"):]
-            os.makedirs(local, exist_ok=True)
-            import time as _t
-
-            _t.sleep(0.2)  # widen the overlap window
-            with open(os.path.join(local, "p.json"), "w") as fh:
-                json.dump({"tag": tag}, fh)
-        return w
+    results, errors = {}, []
+    barrier = threading.Barrier(2)
 
     def run(tag):
+        target, k = targets[tag]
         try:
-            results.append(
-                (tag, publish_artifact_version(spark, base, writer_for(tag)))
-            )
+            barrier.wait()
+            results[tag] = write_dsir_ratio_artifact(
+                docs, target, base, buckets=128, vocab_top_k=k
+            )["version"]
         except Exception as exc:  # surface, don't swallow
             errors.append((tag, exc))
 
-    ts = [threading.Thread(target=run, args=(t,)) for t in ("a", "b")]
+    ts = [threading.Thread(target=run, args=(t,)) for t in targets]
     for t in ts:
         t.start()
     for t in ts:
         t.join()
-    assert all(isinstance(e, ArtifactPublishError) for _, e in errors), errors
-    assert len(results) + len(errors) == 2 and results
-    versions = sorted(v for _, v in results)
-    assert versions == list(range(1, len(versions) + 1))
-    assert current_artifact_version(spark, base) == versions[-1]
-    live = json.loads(
-        read_small_file(spark, current_artifact_dir(spark, base) + "/p.json")
-    )
-    winner = next(tag for tag, v in results if v == versions[-1])
-    assert live == {"tag": winner}
+    assert not errors, errors
+    assert sorted(results.values()) == [1, 2]
+    winner = next(tag for tag, v in results.items() if v == 2)
+    target, k = targets[winner]
+    table, meta, vocab = _dsir_payload(spark, base)
+    assert meta["version"] == 2
+    assert table == _expected_ratio(docs, target, 128)
+    assert meta["vocab_top_k"] == k == len(vocab)

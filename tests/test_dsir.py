@@ -280,19 +280,17 @@ def test_dsir_ratio_artifact_roundtrip_and_swap(spark, tmp_path):
         for r in sampling.dsir_logratio(docs, t2, buckets=512).collect()
     }
     assert table2 != table
-    from tern_ep_data_pipeline_spark.sources.artifacts import (
-        current_artifact_version,
-    )
+    from tern_ep_data_pipeline_spark.operators import index_log
 
-    assert current_artifact_version(spark, path) == 2
+    assert index_log.snapshot(spark, path).version == 2
 
-    # r14 (verdict r13 #3): a ``://`` path publishes the same versioned
-    # pointer layout (rename-free, object-store-capable; file:// drives
-    # the same Hadoop FS code path here)
+    # r14 (verdict r13 #3): a ``://`` path publishes the same manifest
+    # layout (rename-free, object-store-capable; file:// drives the same
+    # Hadoop FS code path here)
 
     uri = "file://" + str(tmp_path / "ratio_uri")
     write_dsir_ratio_artifact(docs, t1, uri, buckets=512)
-    assert current_artifact_version(spark, uri) == 1
+    assert index_log.snapshot(spark, uri).version == 1
     t_uri, _ = load_dsir_ratio(spark, uri)
     assert t_uri == table
 
@@ -374,8 +372,8 @@ def test_dsir_sink_kill_restart_exactly_once(
     equals a crash-free twin — every doc scored once, identical
     weights, a retried batch replaces its own partition. Scores come
     from the frozen artifact both before and after the restart — on a
-    plain local path AND a file:// URI, both the r14 versioned pointer
-    layout (the restart re-resolves _CURRENT; unchanged artifact ->
+    plain local path AND a file:// URI, both the manifest layout (the
+    restart re-reads the newest version; unchanged artifact ->
     identical re-scores, the object-store story's exactly-once leg)."""
     import glob as globmod
 
@@ -581,10 +579,7 @@ def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
 
     import pytest as _pytest
 
-    from tern_ep_data_pipeline_spark.sources.artifacts import (
-        _write_small_file,
-        current_artifact_dir,
-    )
+    from tern_ep_data_pipeline_spark.operators import index_log
     from tern_ep_data_pipeline_spark.streaming.curation import (
         dsir_scored_stream,
         write_dsir_ratio_artifact,
@@ -595,10 +590,12 @@ def test_dsir_scorer_refuses_mismatched_artifact(spark, tmp_path):
     meta = write_dsir_ratio_artifact(docs, docs, path, buckets=64)
     assert meta["hash"] == "md5-60bit"
 
+    # the next version keeps the ratio table and swaps in a doctored meta
     doctored = dict(meta, hash="xxhash-64")
-    _write_small_file(
-        spark, current_artifact_dir(spark, path) + "/meta.json",
-        json.dumps(doctored).encode(),
+    del doctored["version"]
+    row = spark.createDataFrame([(json.dumps(doctored),)], "json string")
+    index_log.commit(
+        spark, path, None, [index_log.write(row, path, "meta")], op="overwrite"
     )
     with _pytest.raises(ValueError, match="mismatched buckets"):
         dsir_scored_stream(docs, path)

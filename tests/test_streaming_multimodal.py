@@ -1933,21 +1933,29 @@ def test_match_batch_races_a_commit(spark, tmp_path, monkeypatch, competitor):
     assert bands.count() == bands.dropDuplicates().count()
 
 
-def test_index_code_never_renames(spark, tmp_path, monkeypatch):
+def test_index_code_never_renames(spark, tmp_path, monkeypatch, sf_dir):
     """No index write path renames anything: with ``os.rename``,
     ``os.replace`` and ``shutil.move`` raising, two match-sink passes
-    and two span-sink passes, each compacting after every batch, and the
-    maintenance task all run, and the sinks decide like the batch
-    operators."""
+    and two span-sink passes, each compacting after every batch, the
+    maintenance task, two publishes of each frozen-model artifact and
+    both artifact refresh tasks all run, and the sinks decide like the
+    batch operators."""
     import importlib
     import os
 
     import tern_ep_data_pipeline_spark.tasks_builtin as builtin_mod
     from tern_ep_data_pipeline_spark import tasks as task_mod
     from tern_ep_data_pipeline_spark.operators.dedup import release_staged
+    from tern_ep_data_pipeline_spark.operators.quality_model import (
+        HEURISTIC_FEATURES,
+    )
     from tern_ep_data_pipeline_spark.streaming.curation import (
+        load_dsir_ratio,
+        load_quality_model,
         match_deduped_stream_sink,
         span_deduped_stream_sink,
+        write_dsir_ratio_artifact,
+        write_quality_model_artifact,
     )
 
     importlib.reload(builtin_mod)
@@ -1998,6 +2006,27 @@ def test_index_code_never_renames(spark, tmp_path, monkeypatch):
     res = task_mod.run_task(spark, "compact_dedup_indexes", matrix)
     assert res[0].ok, res[0].error
     assert set(res[0].result) == {"path", "grams", "match"}
+
+    n = len(HEURISTIC_FEATURES)
+    weights = {"cols": list(HEURISTIC_FEATURES), "mean": [0.0] * n,
+               "std": [1.0] * n, "w": [0.5] * n, "b": 0.0}
+    for v in (1, 2):
+        assert write_dsir_ratio_artifact(
+            docs, docs, str(tmp_path / "ratio"), buckets=64, vocab_top_k=v
+        )["version"] == v
+        assert write_quality_model_artifact(
+            weights, str(tmp_path / "qm"), spark=spark
+        )["version"] == v
+    assert load_dsir_ratio(spark, str(tmp_path / "ratio"))[1]["version"] == 2
+    assert load_quality_model(str(tmp_path / "qm"), spark=spark)["version"] == 2
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_DSIR_RATIO_DIR", str(tmp_path / "ratio"))
+    monkeypatch.setenv("SPARK_GRAFT_DSIR_BUCKETS", "64")
+    monkeypatch.setenv("SPARK_GRAFT_QM_MODEL_DIR", str(tmp_path / "qm"))
+    for task in ("refresh_dsir_ratio", "refresh_quality_model"):
+        matrix = task_mod.SiteTaskMatrix({"TestSite": {task: True}})
+        res = task_mod.run_task(spark, task, matrix)
+        assert res[0].ok and res[0].result["version"] == 3, res[0].error
 
 
 def test_span_dedup_batch_auto_bloom_regime_gate(spark, tmp_path):

@@ -179,11 +179,16 @@ def test_refresh_dsir_ratio_task(spark, tmp_path, monkeypatch):
     assert len(results) == 1 and results[0].ok, results[0].error
     out = results[0].result
     assert out["buckets"] == 512 and out["target_lang"] == "en"
+    assert out["version"] == 1
     table, meta = load_dsir_ratio(spark, ratio)
     assert len(table) == meta["n_ratio_rows"] > 0
+    assert meta["version"] == 1
 
-    # a second run is a clean refresh (the next version goes live)
+    # a second run is a clean refresh (the next version goes live) and
+    # reports the version its own commit created
     results = task_mod.run_task(spark, "refresh_dsir_ratio", matrix)
     assert results[0].ok, results[0].error
-    table2, _ = load_dsir_ratio(spark, ratio)
+    assert results[0].result["version"] == 2
+    table2, meta2 = load_dsir_ratio(spark, ratio)
     assert table2 == table  # same inputs -> same frozen model
+    assert meta2["version"] == 2
